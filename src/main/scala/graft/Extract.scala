@@ -258,9 +258,8 @@ object Extract {
     // set) unless the caller names one
     val batchId =
       if (a.batchId != null) a.batchId
-      else "batch-" + java.security.MessageDigest.getInstance("MD5")
-        .digest(s"${pstat.getString(1)}|${pstat.getString(2)}|$nPending".getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(16)
+      else "batch-" + graft.pdf.Crypto.hex(graft.pdf.Crypto.md5(
+        s"${pstat.getString(1)}|${pstat.getString(2)}|$nPending".getBytes("UTF-8"))).take(16)
 
     val parts = if (a.partitions > 0) a.partitions else spark.sparkContext.defaultParallelism
     // default path: skew-aware (salted repartition + dedicated big-payload

@@ -10,7 +10,8 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Same engineering rules as [[HtmlExtract]]: one deterministic byte-level
   * pass, no regexes, no DOM, total on arbitrary bytes (garbage in, empty
-  * out — never a throw).
+  * out — never a throw), and no local def captures a `var` (scalac would
+  * box it into a heap `IntRef`).
   */
 object HtmlLinks {
 

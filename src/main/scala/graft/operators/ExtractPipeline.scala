@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pdf.PdfExtract
+import graft.pdf.{Crypto, PdfExtract}
 import graft.html.HtmlExtract
 import graft.sources.CrawlRow
 
@@ -85,8 +85,7 @@ object ExtractPipeline {
       (if (parts.nonEmpty && parts.last.isEmpty) parts.dropRight(1) else parts).toSeq
     }
 
-  private def md5hex(b: Array[Byte]): String =
-    graft.pdf.Crypto.md5(b).map(x => f"$x%02x").mkString
+  private def md5hex(b: Array[Byte]): String = Crypto.hex(Crypto.md5(b))
 
   /** Extract a single row. Pure; never throws. */
   def extractOne(row: CrawlRow, password: String): ExtractedDoc =
@@ -103,6 +102,7 @@ object ExtractPipeline {
     val payload = if (row.html == null) Array.emptyByteArray else row.html
     if (isPdf(row.url, payload)) {
       val r = PdfExtract.parse(payload, password, objectStreams)
+      val errors = splitLines(r.errors)
       // budget in extraction order: an entry that would push the running
       // total past the cap is nulled (md5/name stay), later small ones may
       // still fit — deterministic, index-aligned
@@ -122,7 +122,7 @@ object ExtractPipeline {
         urls = splitLines(r.urls),
         files = splitLines(r.files),
         commands = splitLines(r.commands),
-        errors = splitLines(r.errors),
+        errors = errors,
         embedded_md5 = r.embedded.map(_.md5),
         embedded_name = r.embedded.map(_.name),
         embedded_data = embeddedData,
@@ -133,7 +133,7 @@ object ExtractPipeline {
         n_objects = r.nObjects,
         n_streams = r.nStreams,
         n_filters = r.filtersApplied.valuesIterator.sum,
-        n_errors = splitLines(r.errors).size.toLong,
+        n_errors = errors.size.toLong,
         raw = if (includeRaw) r.raw else null)
     } else {
       // per-document isolation, same contract as the pdf kernel: an

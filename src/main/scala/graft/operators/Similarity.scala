@@ -404,7 +404,7 @@ object Similarity {
           bb.clear(); bb.putLong(row.length.toLong); md.update(bb.array())
           row.foreach { v => bb.clear(); bb.putDouble(v); md.update(bb.array()) }
         }
-        "ivf-" + md.digest().map(b => f"$b%02x").mkString.take(16)
+        "ivf-" + graft.pdf.Crypto.hex(md.digest()).take(16)
       }
     new graft.sources.ParquetManifestTable(tableRoot).commit(
       centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }

@@ -21,6 +21,20 @@ object Crypto {
     d.digest()
   }
 
+  private val HexDigits = "0123456789abcdef".toCharArray
+
+  /** Lowercase hex, two digits per byte (md5 manifest names, batch ids). */
+  def hex(bytes: Array[Byte]): String = {
+    val out = new Array[Char](bytes.length * 2)
+    var i = 0
+    while (i < bytes.length) {
+      out(2 * i) = HexDigits((bytes(i) >> 4) & 0xf)
+      out(2 * i + 1) = HexDigits(bytes(i) & 0xf)
+      i += 1
+    }
+    new String(out)
+  }
+
   /** In-place RC4 XOR keystream (encryption.go:139-142). */
   def rc4(key: Array[Byte], data: Array[Byte]): Unit = {
     val s = new Array[Int](256)

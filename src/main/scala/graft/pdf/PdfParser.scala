@@ -30,7 +30,7 @@ final class DocSink {
 
   /** output.go:93-104: manifest line "md5:name" + blob stored under md5. */
   def dumpFile(name: String, data: Array[Byte]): Unit = {
-    val md5sum = Crypto.md5(data).map(b => f"$b%02x").mkString
+    val md5sum = Crypto.hex(Crypto.md5(data))
     writeLine(files, md5sum + ":" + name)
     embedded += ((md5sum, name, data))
   }

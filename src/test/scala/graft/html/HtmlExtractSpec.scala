@@ -60,4 +60,19 @@ class HtmlExtractSpec extends AnyFunSuite {
     assert(t1 == t2 && t1.nonEmpty)
     assert(!t1.contains("not content"))
   }
+
+  test("frozen digest of the synthesized corpus (seeds 1/42, scales 1/20)") {
+    // count, total bytes and xor of md5-prefix longs over 800 pages; pins the
+    // kernel's output independently of any reference implementation
+    var count = 0L
+    var bytes = 0L
+    var xor = 0L
+    for (seed <- Seq(1L, 42L); scale <- Seq(1, 20); id <- 0 until 200) {
+      val out = HtmlExtract.extractBytes(graft.sources.CrawlCorpus.genHtml(id, seed, scale).getBytes("UTF-8"))
+      count += 1
+      bytes += out.length
+      xor ^= java.nio.ByteBuffer.wrap(graft.pdf.Crypto.md5(out)).getLong
+    }
+    assert((count, bytes, xor) == ((800L, 10672264L, 0xb547b215ebd556fdL)))
+  }
 }
