@@ -303,7 +303,7 @@ object Extract {
         includeRaw = a.includeRaw, objectStreams = a.objectStreams,
         includeEmbedded = a.includeEmbedded)
 
-    docsTable.commit(docs.toDF(), batchId)
+    docsTable.commit(docs.toDF(), batchId, "ok_rows" -> count_if(col("ok")))
     // downstream stages read the COMMITTED batch back instead of
     // re-running the extraction plan (the dominant cost) per consumer
     val committedBatch = docsTable.readBatch(spark, batchId)
@@ -427,8 +427,17 @@ object Extract {
       }
     }
 
-    val stats = docsTable.read(spark)
-      .agg(count(lit(1)), sum(when(col("ok"), 1L).otherwise(0L))).head()
-    println(s"""{"job":"graft-extract","batch_id":"$batchId","pending":$nPending,"committed_rows":${stats.getLong(0)},"ok_rows":${stats.getLong(1)},"batches":${docsTable.committedBatches.size}}""")
+    // the summary counts are the manifest's commit-time counts; a table
+    // with an entry that recorded none (an older commit) is scanned instead
+    val counts = docsTable.committedCounts.getOrElse(Map.empty)
+    val (committedRows, okRows) =
+      (counts.get(ParquetManifestTable.Rows), counts.get("ok_rows")) match {
+        case (Some(rows), Some(ok)) => (rows, ok)
+        case _ =>
+          val stats = docsTable.read(spark)
+            .agg(count(lit(1)), sum(when(col("ok"), 1L).otherwise(0L))).head()
+          (stats.getLong(0), stats.getLong(1))
+      }
+    println(s"""{"job":"graft-extract","batch_id":"$batchId","pending":$nPending,"committed_rows":$committedRows,"ok_rows":$okRows,"batches":${docsTable.committedBatches.size}}""")
   }
 }

@@ -28,7 +28,7 @@ object ExtractKernel {
 
   def graftText(url: UTF8String, payload: Array[Byte]): Array[Byte] =
     if (payload == null) null
-    else if (graft.operators.ExtractPipeline.isPdf(if (url == null) "" else url.toString, payload))
+    else if (graft.operators.ExtractPipeline.isPdf(if (url == null) null else url.toString, payload))
       pdfText(payload)
     else htmlText(payload)
 

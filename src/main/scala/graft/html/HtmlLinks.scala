@@ -263,16 +263,14 @@ object HtmlLinks {
     * (multiplicity = edge weight downstream). PDF payloads yield no links
     * (the [[graft.operators.ExtractPipeline.isPdf]] dispatch rule). */
   def links(html: Array[Byte], baseUrl: String): Vector[String] =
-    if (html == null || graft.operators.ExtractPipeline.isPdf(
-        if (baseUrl == null) "" else baseUrl, html)) Vector.empty
+    if (html == null || graft.operators.ExtractPipeline.isPdf(baseUrl, html)) Vector.empty
     else rawHrefs(html).flatMap(h => Option(resolve(baseUrl, h)))
 
   /** Resolved (dst url, anchor text) pairs — [[links]] with the linking
     * text kept. Same dispatch and resolution rules; non-navigational
     * hrefs drop with their text. */
   def anchors(html: Array[Byte], baseUrl: String): Vector[(String, String)] =
-    if (html == null || graft.operators.ExtractPipeline.isPdf(
-        if (baseUrl == null) "" else baseUrl, html)) Vector.empty
+    if (html == null || graft.operators.ExtractPipeline.isPdf(baseUrl, html)) Vector.empty
     else rawAnchors(html).flatMap { case (h, t) =>
       Option(resolve(baseUrl, h)).map(r => (r, t))
     }

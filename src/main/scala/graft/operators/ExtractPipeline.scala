@@ -69,11 +69,12 @@ object ExtractPipeline {
   /** Payload router: the reference parses everything as PDF; the north rule
     * adds an HTML-boilerplate-strip fallback for non-PDF payloads. A row is
     * PDF if the payload carries the PDF magic or the url says .pdf (the
-    * fixture corpus includes header-less PDFs, so magic alone is wrong). */
+    * fixture corpus includes header-less PDFs, so magic alone is wrong). A
+    * null url leaves the decision to the magic. */
   def isPdf(url: String, payload: Array[Byte]): Boolean = {
     val magic = payload.length >= 5 && payload(0) == '%' && payload(1) == 'P' &&
       payload(2) == 'D' && payload(3) == 'F' && payload(4) == '-'
-    magic || url.toLowerCase.endsWith(".pdf")
+    magic || (url != null && url.regionMatches(true, url.length - 4, ".pdf", 0, 4))
   }
 
   private def splitLines(b: Array[Byte]): Seq[String] =
@@ -208,9 +209,12 @@ object ExtractPipeline {
 
   /** Salted url-hash repartition (north rule): spreads url-clustered inputs
     * evenly before the map-local extraction. `salt` rotates the hash per
-    * round so retries land on different executors. */
+    * round so retries land on different executors. The salted hash is the
+    * partitioning key itself: hash partitioning hashes its key again, so a
+    * key already reduced mod n would have only n values to spread, and
+    * they collide (half the partitions empty at n = 8). */
   def saltedRepartitionByUrl(ds: Dataset[CrawlRow], numPartitions: Int, salt: Int = 0): Dataset[CrawlRow] =
-    ds.repartition(numPartitions, pmod(xxhash64(col("url"), lit(salt)), lit(numPartitions)))
+    ds.repartition(numPartitions, xxhash64(col("url"), lit(salt)))
 
   /** Skew handling for pathological multi-GB payloads: rows above the size
     * threshold go through a dedicated pass with one doc per partition-ish

@@ -1,7 +1,11 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s.{JInt, JObject}
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import scala.jdk.CollectionConverters._
 
 /** Snapshot-committed table storage with exact resume.
@@ -17,9 +21,14 @@ import scala.jdk.CollectionConverters._
   * ACID Table Storage over Cloud Object Stores", VLDB 2020) reduced to the
   * append-only case. An Iceberg-backed implementation slots behind the same
   * trait unchanged.
+  *
+  * As in Delta Lake's log, each commit also records its batch's schema and
+  * record counts, so readers never open data files to learn them: `counts`
+  * names extra whole-number aggregates (e.g. `count_if(ok)`) recorded
+  * next to the row count.
   */
 trait TableIO {
-  def commit(df: DataFrame, batchId: String): Unit
+  def commit(df: DataFrame, batchId: String, counts: (String, Column)*): Unit
   def read(spark: SparkSession): DataFrame
   def committedBatches: Seq[String]
   def exists: Boolean
@@ -54,23 +63,34 @@ final class ParquetManifestTable(rootDir: String, format: String = "parquet") ex
     }
 
   /** Write staging parquet, atomic-rename into data/, then atomic-create the
-    * manifest entry. The manifest entry is the commit point. */
-  def commit(df: DataFrame, batchId: String): Unit = {
+    * manifest entry. The manifest entry is the commit point; it holds the
+    * batch's schema and its counts as one JSON object. The counts come from
+    * an `Observation` that the write job itself fills, so recording them
+    * costs no extra Spark job. */
+  def commit(df: DataFrame, batchId: String, counts: (String, Column)*): Unit = {
     require(!batchId.contains('/') && batchId.nonEmpty, s"bad batchId: $batchId")
+    require(!counts.exists(_._1 == ParquetManifestTable.Rows),
+      s"count name '${ParquetManifestTable.Rows}' is reserved for the row count")
     Files.createDirectories(stagingDir)
     Files.createDirectories(dataDir)
     Files.createDirectories(manifestDir)
     val staged = stagingDir.resolve(batchId)
     val committed = dataDir.resolve(batchId)
     if (committedBatches.contains(batchId)) return // idempotent re-commit
-    df.write.mode(SaveMode.Overwrite).format(format).save(staged.toString)
+    val observed = Observation()
+    df.observe(observed, count(lit(1)).as(ParquetManifestTable.Rows),
+        counts.map { case (name, agg) => agg.as(name) }: _*)
+      .write.mode(SaveMode.Overwrite).format(format).save(staged.toString)
+    val recorded = observed.get.collect { case (name, n: Number) => name -> JInt(n.longValue) }
     // a writer that died between the data-dir move and the manifest move
     // leaves an orphaned (uncommitted, invisible to readers) data dir; a
     // retried commit must be able to replace it, not fail forever
     if (Files.exists(committed)) deleteRecursively(committed)
     Files.move(staged, committed, StandardCopyOption.ATOMIC_MOVE)
     val tmp = manifestDir.resolve(batchId + ".tmp")
-    Files.writeString(tmp, batchId)
+    Files.writeString(tmp, compact(render(JObject(
+      "schema" -> parse(df.schema.json),
+      "counts" -> JObject(recorded.toList)))))
     Files.move(tmp, manifestDir.resolve(batchId + ".committed"), StandardCopyOption.ATOMIC_MOVE)
   }
 
@@ -81,10 +101,49 @@ final class ParquetManifestTable(rootDir: String, format: String = "parquet") ex
     finally walk.close()
   }
 
+  /** What a manifest entry recorded about its batch. An entry written
+    * before commit-time metadata holds only the batch id: no schema and no
+    * counts. */
+  private def entry(batchId: String): (Option[StructType], Map[String, Long]) = {
+    val text = Files.readString(manifestDir.resolve(batchId + ".committed"))
+    if (!text.startsWith("{")) (None, Map.empty)
+    else {
+      val json = parse(text)
+      val schema = DataType.fromJson(compact(render(json \ "schema"))).asInstanceOf[StructType]
+      val counts = json \ "counts" match {
+        case JObject(fields) => fields.collect { case (name, JInt(n)) => name -> n.toLong }.toMap
+        case _ => Map.empty[String, Long]
+      }
+      (Some(schema), counts)
+    }
+  }
+
+  /** Loads the given committed batches. When every one recorded the same
+    * schema the reader gets it and infers nothing (schema inference is a
+    * Spark job per read); otherwise it infers, as for old entries. */
+  private def load(spark: SparkSession, batches: Seq[String]): DataFrame = {
+    val reader = batches.map(entry(_)._1).distinct match {
+      case Seq(Some(schema)) => spark.read.format(format).schema(schema)
+      case _ => spark.read.format(format)
+    }
+    reader.load(batches.map(b => dataDir.resolve(b).toString): _*)
+  }
+
   def read(spark: SparkSession): DataFrame = {
-    val batches = committedBatches.map(b => dataDir.resolve(b).toString)
+    val batches = committedBatches
     require(batches.nonEmpty, s"no committed batches under $rootDir")
-    spark.read.format(format).load(batches: _*)
+    load(spark, batches)
+  }
+
+  /** The row count (`rows`) and the named counts of every committed batch,
+    * summed, from the manifest alone. Only names every entry recorded are
+    * summed; None when some entry recorded no counts (written before
+    * commit-time metadata), so the caller knows to scan instead. */
+  def committedCounts: Option[Map[String, Long]] = {
+    val perBatch = committedBatches.map(entry(_)._2)
+    if (perBatch.exists(_.isEmpty)) None
+    else Some(perBatch.map(_.keySet).reduceOption(_ intersect _).getOrElse(Set.empty)
+      .map(name => name -> perBatch.map(_(name)).sum).toMap)
   }
 
   /** The newest committed batch only — the read shape for REPLACE-style
@@ -101,13 +160,13 @@ final class ParquetManifestTable(rootDir: String, format: String = "parquet") ex
       (Files.getLastModifiedTime(manifestDir.resolve(b + ".committed"))
         .to(java.util.concurrent.TimeUnit.NANOSECONDS), b)
     }
-    spark.read.format(format).load(dataDir.resolve(latest).toString)
+    load(spark, Seq(latest))
   }
 
   /** One specific committed batch. */
   def readBatch(spark: SparkSession, batchId: String): DataFrame = {
     require(committedBatches.contains(batchId), s"batch $batchId not committed under $rootDir")
-    spark.read.format(format).load(dataDir.resolve(batchId).toString)
+    load(spark, Seq(batchId))
   }
 }
 
@@ -116,6 +175,9 @@ object ParquetManifestTable {
     * carries natively. Iceberg remains the production target behind the
     * same trait (no runtime jar here). */
   val Formats: Set[String] = Set("parquet", "orc")
+
+  /** The count every commit records: the batch's row count. */
+  val Rows = "rows"
 }
 
 object Resume {

@@ -309,6 +309,51 @@ class ExtractMainSpec extends AnyFunSuite {
     assert(docs.read(spark).count() == 16)
   }
 
+  /** `Extract.main`'s JSON summary line, numeric fields only. */
+  def summaryOf(args: String*): Map[String, Long] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(Extract.main(args.toArray))
+    val last = new String(buf.toByteArray, "UTF-8").linesIterator.filter(_.startsWith("{")).toSeq.last
+    "\"([a-z_]+)\":(-?\\d+)".r.findAllMatchIn(last).map(m => m.group(1) -> m.group(2).toLong).toMap
+  }
+
+  test("summary counts equal a scan after fresh, incremental and --recrawl runs, and for older manifest entries") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft_sum_out").toString
+    val docs = new graft.sources.ParquetManifestTable(s"$outDir/documents")
+    def assertMatchesScan(summary: Map[String, Long], rows: Long): Unit = {
+      val scan = docs.read(spark).agg(count(lit(1)), count_if(col("ok"))).head()
+      assert(summary("committed_rows") == rows && scan.getLong(0) == rows, summary)
+      assert(summary("ok_rows") == scan.getLong(1), summary)
+      assert(summary("batches") == docs.committedBatches.size, summary)
+    }
+    def crawlDir(n: Int, recrawl: Boolean = false): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_sum_in").toString
+      val df = CrawlCorpus.crawl(spark, n, 9L).toDF()
+      (if (!recrawl) df
+       else df.withColumn("warc_ts", col("warc_ts") + expr("INTERVAL 1 DAY"))
+         .withColumn("html", when(col("url") === "test://crawl/3/page.html",
+           concat(col("html"), lit("<p>fresh paragraph</p>".getBytes("UTF-8")))).otherwise(col("html"))))
+        .write.mode("overwrite").parquet(dir)
+      dir
+    }
+    // a wrong password fails encrypted.pdf, so ok_rows < committed_rows
+    val first = summaryOf(crawlDir(10), outDir, "--partitions", "2", "--password", "wrong")
+    assertMatchesScan(first, 10)
+    assert(first("ok_rows") < 10, first)
+    val grown = crawlDir(16)
+    assertMatchesScan(summaryOf(grown, outDir, "--partitions", "2", "--password", "wrong"), 16)
+    // one changed page re-extracts as a second version row, two new urls
+    assertMatchesScan(summaryOf(crawlDir(18, recrawl = true), outDir, "--recrawl", grown,
+      "--partitions", "2", "--password", "wrong"), 19)
+    assert(docs.committedCounts.isDefined)
+    // entries in the format before commit-time counts (the batch id only):
+    // the summary falls back to scanning the table
+    docs.committedBatches.foreach(b => java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$outDir/documents/_manifest/$b.committed"), b))
+    assertMatchesScan(summaryOf(crawlDir(21), outDir, "--partitions", "2", "--password", "wrong"), 22)
+    assert(docs.committedCounts.isEmpty)
+  }
+
   test("--recrawl tolerates duplicate-url base snapshots and skips (loudly) null-ts changed urls") {
     val baseDir = java.nio.file.Files.createTempDirectory("graft_rcb_base").toString
     val inDir = java.nio.file.Files.createTempDirectory("graft_rcb_in").toString

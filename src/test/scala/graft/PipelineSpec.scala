@@ -112,6 +112,151 @@ class PipelineSpec extends AnyFunSuite {
     assert(t.read(spark).count() == 2) // append view unions both
   }
 
+  /** Spark jobs started on this thread while `body` runs. The jobs carry a
+    * job group of their own; a sentinel job in a second group follows, and
+    * the listener bus delivers events in order, so once the listener has
+    * seen the sentinel start it has seen every job `body` started. */
+  def jobsStartedBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = "jobs-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "under test")
+      body
+      sc.setJobGroup(group + "-sentinel", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(group + "-sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(group + "-sentinel"), "listener never saw the sentinel job")
+      seen.toArray.count(_ == group)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Every row of `df` as JSON, sorted: binary and nested columns compare
+    * by value. */
+  def rowsAsJson(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0)).toSeq.sorted
+
+  test("TableIO: a read with the recorded schema equals the inferred read (parquet, orc)") {
+    import spark.implicits._
+    val docs = ExtractPipeline.extractDocs(corpus(12)).toDF()
+    // encoder-made non-nullable fields, nested ones included
+    val nested = Seq((1L, Seq(1L, 2L), Map("a" -> 1), (1, "x")),
+      (2L, Seq.empty[Long], Map.empty[String, Int], (2, null))).toDF("id", "xs", "m", "s")
+    for (fmt <- Seq("parquet", "orc"); (name, df) <- Seq("docs" -> docs, "nested" -> nested)) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_tio_schema_$fmt").toString
+      val t = new ParquetManifestTable(dir, fmt)
+      t.commit(df, "b1")
+      t.commit(df, "b2")
+      val inferred = spark.read.format(fmt).load(s"$dir/data/b1", s"$dir/data/b2")
+      val recorded = t.read(spark)
+      assert(recorded.schema == inferred.schema, s"$fmt/$name")
+      assert(rowsAsJson(recorded) == rowsAsJson(inferred), s"$fmt/$name")
+      val inferredOne = spark.read.format(fmt).load(s"$dir/data/b1")
+      assert(t.readBatch(spark, "b1").schema == inferredOne.schema, s"$fmt/$name")
+      assert(rowsAsJson(t.readLatest(spark)) == rowsAsJson(inferredOne), s"$fmt/$name")
+      assert(t.committedCounts == Some(Map(ParquetManifestTable.Rows -> 2L * df.count())))
+    }
+  }
+
+  test("TableIO: read and readBatch start no Spark job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tio_jobs").toString
+    val t = new ParquetManifestTable(dir)
+    t.commit(Seq(("a", 1), ("b", 2)).toDF("v", "n"), "b1")
+    t.commit(Seq(("c", 3)).toDF("v", "n"), "b2")
+    assert(jobsStartedBy(t.read(spark)) == 0)
+    assert(jobsStartedBy(t.readBatch(spark, "b1")) == 0)
+    assert(jobsStartedBy(t.readLatest(spark)) == 0)
+    // the counter does see the inference job a read without a recorded
+    // schema pays
+    assert(jobsStartedBy(spark.read.parquet(s"$dir/data/b1")) > 0)
+  }
+
+  test("TableIO: commit records row and named counts; an empty frame records 0 without hanging") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tio_counts").toString
+    val t = new ParquetManifestTable(dir)
+    val df = Seq(("a", true), ("b", false), ("c", true)).toDF("v", "ok")
+    t.commit(df, "b1", "ok_rows" -> count_if(col("ok")))
+    assert(t.committedCounts == Some(Map("rows" -> 3L, "ok_rows" -> 2L)))
+    // no rows in no partitions, and no rows in some partitions
+    Await.result(Future(t.commit(Seq.empty[(String, Boolean)].toDF("v", "ok"), "b2",
+      "ok_rows" -> count_if(col("ok")))), 120.seconds)
+    Await.result(Future(t.commit(df.where(col("v") === "none").repartition(3), "b3",
+      "ok_rows" -> count_if(col("ok")))), 120.seconds)
+    // empty only at run time, behind a shuffle: adaptive execution sees the
+    // empty stage and may rewrite what sits above it
+    Await.result(Future(t.commit(spark.range(100).where(col("id") > 1000).repartition(3)
+      .select(col("id").cast("string").as("v"), (col("id") > 0).as("ok")), "b3r",
+      "ok_rows" -> count_if(col("ok")))), 120.seconds)
+    assert(t.committedCounts == Some(Map("rows" -> 3L, "ok_rows" -> 2L)))
+    assert(t.readBatch(spark, "b2").count() == 0 && t.readBatch(spark, "b3").count() == 0)
+    assert(t.readBatch(spark, "b2").schema == t.readBatch(spark, "b1").schema)
+    // only names every entry recorded are summed
+    t.commit(df, "b4")
+    assert(t.committedCounts == Some(Map("rows" -> 6L)))
+    intercept[IllegalArgumentException] { t.commit(df, "b5", "rows" -> count(lit(1))) }
+  }
+
+  test("TableIO: entries without recorded metadata still read; mixed schemas infer") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_tio_old").toString
+    val t = new ParquetManifestTable(dir)
+    t.commit(Seq(("a", 1), ("b", 2)).toDF("v", "n"), "b1")
+    // the entry format before commit-time metadata: just the batch id
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/_manifest/b1.committed"), "b1")
+    assert(t.committedCounts.isEmpty)
+    assert(t.read(spark).orderBy("n").as[(String, Int)].collect().toSeq == Seq(("a", 1), ("b", 2)))
+    assert(t.readBatch(spark, "b1").count() == 2)
+    t.commit(Seq(("c", 3)).toDF("v", "n"), "b2")
+    assert(t.committedCounts.isEmpty, "one entry without counts: the sum is unknown")
+    assert(t.read(spark).count() == 3)
+    // two recorded schemas that differ: the reader infers, as before
+    val u = new ParquetManifestTable(java.nio.file.Files.createTempDirectory("graft_tio_mixed").toString)
+    u.commit(Seq(("a", 1)).toDF("v", "n"), "b1")
+    u.commit(Seq(("b", 2L)).toDF("v", "m"), "b2")
+    assert(u.read(spark).count() == 2)
+  }
+
+  test("saltedRepartitionByUrl spreads urls over every partition") {
+    val urls = corpus(4000)
+    for (n <- Seq(4, 8, 16, 32)) {
+      val sizes = ExtractPipeline.saltedRepartitionByUrl(urls, n).toDF()
+        .groupBy(spark_partition_id().as("p")).count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val all = (0 until n).map(sizes.getOrElse(_, 0L))
+      assert(all.sum == 4000)
+      assert(all.min > 0, s"n=$n: empty partition in $all")
+      assert(all.max / (4000.0 / n) <= 1.5, s"n=$n: max/mean over 1.5 in $all")
+    }
+  }
+
+  test("extractDocs: a null-url HTML row extracts as one ok row") {
+    import spark.implicits._
+    val page = "<html><body><p>plain page text</p></body></html>".getBytes(UTF_8)
+    val out = ExtractPipeline.extractDocs(Seq(
+      graft.sources.CrawlRow(null, new java.sql.Timestamp(0L), page, "", "en")).toDS()).collect()
+    assert(out.length == 1)
+    assert(out.head.url == null && out.head.kind == "html" && out.head.ok, String.valueOf(out.head.failure))
+    // with a null url the magic alone decides; the suffix match ignores case
+    assert(ExtractPipeline.isPdf(null, "%PDF-1.4".getBytes(ISO_8859_1)))
+    assert(!ExtractPipeline.isPdf(null, page))
+    assert(ExtractPipeline.isPdf("test://a/X.PdF", page))
+    assert(!ExtractPipeline.isPdf("pdf", page) && !ExtractPipeline.isPdf("test://a/x.pdfx", page))
+  }
+
   test("includeRaw materializes the reference's raw sink; md5(raw) == raw_md5") {
     import spark.implicits._
     val docs = ExtractPipeline.extractDocs(corpus(20), includeRaw = true).collect()
