@@ -20,7 +20,7 @@ import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
   * }}}
   *
   * Per run: resume-filter the input against the committed output (exactly
-  * once per url, crash-safe — see TableIO), skew-aware salted extraction,
+  * once per url, crash-safe — see TableIO), salted-repartition extraction,
   * one atomic snapshot commit of the documents batch, a metrics-table
   * append of the per-partition lineage rows, and (with `--sinks`) the
   * seven per-sink tables; with `--curate` the whole training-data
@@ -96,6 +96,8 @@ object Extract {
     }
     require(a.input != null && a.outRoot != null,
       "usage: graft.Extract <input parquet dir | synth:N> <output root> [flags]")
+    require(a.passwordColumn == null || !a.input.startsWith("synth:"),
+      "--password-column requires a parquet input")
     require(!a.stripBoilerplate || a.curate,
       "--strip-boilerplate only affects the curated snapshot: pass --curate too")
     require(a.decontaminate == null || a.curate,
@@ -113,21 +115,25 @@ object Extract {
     a
   }
 
+  private val crawlCols = Seq("url", "warc_ts", "html", "text", "lang")
+
   /** One row per url, deterministic winner: lexicographic max of
-    * (warc_ts, md5(html), md5(text), lang) — null fields sort smallest,
-    * full-key ties are content-identical copies (md5-as-identity, as
-    * everywhere). A max_by AGGREGATE, not a row_number window: a window
-    * would sort every copy of a hot url (WITH its html payload) inside
-    * one task — a url recrawled millions of times OOMs it; the partial
-    * aggregate keeps ONE winner payload per url per partition map-side.
-    * Shared by the duplicate-input dedup and the recrawl base collapse. */
-  private def dedupCrawlByUrl(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    * (warc_ts, md5(html), md5(text), lang, then any other column, e.g.
+    * the row's password) — null fields sort smallest, full-key ties are
+    * identical copies (md5-as-identity, as everywhere). A max_by
+    * AGGREGATE, not a row_number window: a window would sort every copy
+    * of a hot url (WITH its html payload) inside one task — a url
+    * recrawled millions of times OOMs it; the partial aggregate keeps ONE
+    * winner payload per url per partition map-side. Shared by the
+    * duplicate-input dedup and the recrawl base collapse. */
+  private def dedupCrawlByUrl(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val extra = df.columns.toSeq.filterNot(crawlCols.contains).map(col)
     df.groupBy(col("url"))
-      .agg(max_by(
-        struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")),
-        struct(col("warc_ts"), md5(col("html")), md5(col("text")), col("lang"))).as("r"))
-      .select(col("r.url").as("url"), col("r.warc_ts").as("warc_ts"),
-        col("r.html").as("html"), col("r.text").as("text"), col("r.lang").as("lang"))
+      .agg(max_by(struct(df.columns.map(col): _*),
+        struct(Seq(col("warc_ts"), md5(col("html")), md5(col("text")), col("lang")) ++ extra: _*))
+        .as("r"))
+      .select(df.columns.map(c => col("r." + c).as(c)): _*)
+  }
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
@@ -143,7 +149,9 @@ object Extract {
     val input =
       if (raw == null)
         CrawlCorpus.crawl(spark, a.input.stripPrefix("synth:").toLong, seed = 42L)
-      else raw.select("url", "warc_ts", "html", "text", "lang").as[CrawlRow]
+      // a per-row password rides with its row through resume, the recrawl
+      // semi-join and the duplicate-url dedup into the extraction
+      else raw.select((crawlCols ++ Option(a.passwordColumn)).map(col): _*).as[CrawlRow]
 
     val docsTable = new ParquetManifestTable(s"${a.outRoot}/documents", a.tableFormat)
     val metricsTable = new ParquetManifestTable(s"${a.outRoot}/metrics", a.tableFormat)
@@ -164,8 +172,7 @@ object Extract {
         // applies to its own input — real crawl parquets carry duplicate
         // urls, and the diff's one-row-per-url guard must not kill the
         // documented usage (--recrawl <the previous run's input dir>)
-        val base = dedupCrawlByUrl(spark.read.parquet(a.recrawl)
-          .select("url", "warc_ts", "html", "text", "lang"))
+        val base = dedupCrawlByUrl(spark.read.parquet(a.recrawl).select(crawlCols.map(col): _*))
         val contentKey = md5(concat_ws("|",
           coalesce(md5(col("html")), lit("")), coalesce(md5(col("text")), lit(""))))
         val delta = graft.operators.WebCuration.incrementalDeltaBy(
@@ -223,12 +230,17 @@ object Extract {
     // one input scan answers the pending count, batch identity, the
     // url-uniqueness check the once-per-url commit contract needs, AND
     // the null-url count (the distinct count shuffles urls only, never
-    // payloads). Null urls have no identity in a url-keyed pipeline —
-    // they can never resume-match (left_anti on null keeps them pending
-    // forever = re-extracted every run) — so they are dropped LOUDLY, and
-    // all duplicate/"nothing to do" accounting uses non-null counts.
+    // payloads). The batch identity folds in an order-independent digest
+    // of every pending (url, warc_ts): a recrawl that re-delivers exactly
+    // an earlier batch's urls, newer, must not reuse that batch's id (the
+    // commit would skip it as already committed). Null urls have no
+    // identity in a url-keyed pipeline — they can never resume-match
+    // (left_anti on null keeps them pending forever = re-extracted every
+    // run) — so they are dropped LOUDLY, and all duplicate/"nothing to do"
+    // accounting uses non-null counts.
     val pstat = pending0.agg(count(lit(1)), min(col("url")), max(col("url")),
-      countDistinct(col("url")), count(col("url"))).head()
+      countDistinct(col("url")), count(col("url")),
+      bit_xor(xxhash64(col("url"), col("warc_ts")))).head()
     val nRaw = pstat.getLong(0)
     val nNonNull = if (nRaw == 0) 0L else pstat.getLong(4)
     val nNull = nRaw - nNonNull
@@ -242,11 +254,10 @@ object Extract {
     val pendingNonNull =
       if (nNull == 0) pending0 else pending0.where(col("url").isNotNull)
     // duplicate urls in the input would commit (and extract) a document
-    // once per copy — and with --password-column the pending×raw join
-    // would square that. Dedup DETERMINISTICALLY (latest crawl wins; md5
-    // tiebreaks make the pick stable under any partitioning) — but only
-    // when dups exist, so the clean path pays nothing beyond the distinct
-    // count above
+    // once per copy. Dedup DETERMINISTICALLY (latest crawl wins; md5
+    // tiebreaks make the pick stable under any partitioning, and the
+    // winner keeps its own password) — but only when dups exist, so the
+    // clean path pays nothing beyond the distinct count above
     val pending =
       if (nPending == nNonNull) pendingNonNull
       else {
@@ -259,49 +270,12 @@ object Extract {
     val batchId =
       if (a.batchId != null) a.batchId
       else "batch-" + graft.pdf.Crypto.hex(graft.pdf.Crypto.md5(
-        s"${pstat.getString(1)}|${pstat.getString(2)}|$nPending".getBytes("UTF-8"))).take(16)
+        s"${pstat.getString(1)}|${pstat.getString(2)}|$nPending|${pstat.getLong(5)}"
+          .getBytes("UTF-8"))).take(16)
 
-    val parts = if (a.partitions > 0) a.partitions else spark.sparkContext.defaultParallelism
-    // default path: skew-aware (salted repartition + dedicated big-payload
-    // pass); the opt-in columns and per-row passwords ride the plain
-    // salted path
-    val docs =
-      if (a.passwordColumn != null) {
-        // per-document passwords ride with the row (the reference takes -p
-        // per invocation; at corpus scale it is a column); null falls back
-        // to the corpus default
-        require(raw != null, "--password-column requires a parquet input")
-        // join against a DEDUPLICATED url->password map: if the input
-        // parquet carries duplicate urls, a plain join would fan each
-        // pending row out once per copy and extract/commit documents
-        // multiple times, breaking the once-per-url batch contract. The
-        // winning password is picked by the SAME (warc_ts, md5 tiebreak)
-        // ordering as the row dedup above — the kept row's own password,
-        // deterministically, never a discarded copy's (a null winner
-        // falls back to the corpus default downstream, as a null column
-        // value always does)
-        val pwMap = raw.groupBy(col("url"))
-          .agg(max_by(col(a.passwordColumn),
-            struct(col("warc_ts"), md5(col("html")), md5(col("text")), col("lang"),
-              // last tiebreak: copies identical in every row field but the
-              // password still resolve deterministically (non-null wins)
-              col(a.passwordColumn))).as("__pw"))
-        val salted = ExtractPipeline.saltedRepartitionByUrl(pending, parts)
-          .toDF().join(pwMap, Seq("url"), "left")
-        ExtractPipeline.extractDocsWithPasswords(
-          salted.select(
-              struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as("_1"),
-              col("__pw").as("_2"))
-            .as[(CrawlRow, String)],
-          defaultPassword = a.password,
-          objectStreams = a.objectStreams,
-          includeRaw = a.includeRaw, includeEmbedded = a.includeEmbedded)
-      } else if (!a.includeRaw && !a.includeEmbedded && !a.objectStreams)
-        ExtractPipeline.extractDocsSkewAware(pending, a.password, numPartitions = parts)
-      else ExtractPipeline.extractDocs(
-        ExtractPipeline.saltedRepartitionByUrl(pending, parts), a.password,
-        includeRaw = a.includeRaw, objectStreams = a.objectStreams,
-        includeEmbedded = a.includeEmbedded)
+    val docs = ExtractPipeline.extractDocsSkewAware(pending, a.password,
+      numPartitions = a.partitions, includeRaw = a.includeRaw, objectStreams = a.objectStreams,
+      includeEmbedded = a.includeEmbedded, passwordColumn = a.passwordColumn)
 
     docsTable.commit(docs.toDF(), batchId, "ok_rows" -> count_if(col("ok")))
     // downstream stages read the COMMITTED batch back instead of

@@ -51,13 +51,6 @@ object Dedup {
       .otherwise(array(textCol))
   }
 
-  /** Character n-gram shingles. */
-  def charShingles(textCol: Column, n: Int): Column =
-    when(length(textCol) >= n,
-      transform(sequence(lit(0), length(textCol) - n),
-        i => textCol.substr(i + 1, lit(n))))
-      .otherwise(array(textCol))
-
   // ---------- MinHash + LSH ----------
 
   /** MinHash signature (array<bigint> of length k) over a shingle array.

@@ -166,6 +166,21 @@ object ExtractPipeline {
     }
   }
 
+  /** The per-partition body of every extraction transform: one HTML
+    * scratch per task, one `extractOne` per row. `password` reads a row's
+    * own password; null falls back to `defaultPassword`. */
+  private def extractPartition[T](rows: Iterator[T], row: T => CrawlRow, password: T => String,
+                                  defaultPassword: String, includeRaw: Boolean,
+                                  objectStreams: Boolean, includeEmbedded: Boolean,
+                                  maxEmbeddedBytes: Long): Iterator[ExtractedDoc] = {
+    val scratch = new HtmlExtract.Scratch
+    rows.map { t =>
+      val pw = password(t)
+      extractOne(row(t), if (pw == null) defaultPassword else pw, scratch, includeRaw,
+        objectStreams, includeEmbedded, maxEmbeddedBytes)
+    }
+  }
+
   /** The flagship transform: one ExtractedDoc per CrawlRow, shuffle-free.
     * Equivalent of one `pdf.Parse` call per document (pdf/pdf.go:8).
     * `includeRaw = true` materializes the reference's raw.pdf sink as a
@@ -179,11 +194,8 @@ object ExtractPipeline {
                   includeEmbedded: Boolean = false,
                   maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val scratch = new HtmlExtract.Scratch // one per task
-      it.map(row => extractOne(row, password, scratch, includeRaw, objectStreams,
-        includeEmbedded, maxEmbeddedBytes))
-    }
+    ds.mapPartitions(extractPartition(_, identity[CrawlRow], (_: CrawlRow) => password, password,
+      includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes))
   }
 
   /** Per-document password variant: the reference takes `-p` per invocation
@@ -198,13 +210,8 @@ object ExtractPipeline {
                                includeEmbedded: Boolean = false,
                                maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      val scratch = new HtmlExtract.Scratch
-      it.map { case (row, pw) =>
-        extractOne(row, if (pw == null) defaultPassword else pw, scratch, includeRaw,
-          objectStreams, includeEmbedded, maxEmbeddedBytes)
-      }
-    }
+    ds.mapPartitions(extractPartition(_, (_: (CrawlRow, String))._1, (_: (CrawlRow, String))._2,
+      defaultPassword, includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes))
   }
 
   /** Salted url-hash repartition (north rule): spreads url-clustered inputs
@@ -216,22 +223,29 @@ object ExtractPipeline {
   def saltedRepartitionByUrl(ds: Dataset[CrawlRow], numPartitions: Int, salt: Int = 0): Dataset[CrawlRow] =
     ds.repartition(numPartitions, xxhash64(col("url"), lit(salt)))
 
-  /** Skew handling for pathological multi-GB payloads: rows above the size
-    * threshold go through a dedicated pass with one doc per partition-ish
-    * granularity; the rest stay on the fast path. Union preserves the
-    * one-row-per-url contract. */
+  /** Salted-repartition extraction, the production entry `graft.Extract`
+    * runs for every flag combination: `saltedRepartitionByUrl` into
+    * `numPartitions` (0 = default parallelism), then one extraction pass.
+    * `passwordColumn` names a column of `ds` beyond the CrawlRow fields
+    * that carries each row's own password (null = `password`). */
   def extractDocsSkewAware(ds: Dataset[CrawlRow], password: String = "",
-                           bigPayloadBytes: Long = 64L * 1024 * 1024,
-                           numPartitions: Int = 0): Dataset[ExtractedDoc] = {
+                           numPartitions: Int = 0,
+                           includeRaw: Boolean = false,
+                           objectStreams: Boolean = false,
+                           includeEmbedded: Boolean = false,
+                           passwordColumn: String = null): Dataset[ExtractedDoc] = {
     val spark = ds.sparkSession
+    import spark.implicits._
     val parts = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
-    // coalesce: a null payload must stay on the small path (extractOne
-    // handles it as empty), not be dropped by a null predicate on both sides
-    val payloadLen = coalesce(length(col("html")), lit(0))
-    val small = ds.filter(payloadLen <= bigPayloadBytes)
-    val big = ds.filter(payloadLen > bigPayloadBytes)
-    extractDocs(saltedRepartitionByUrl(small, parts), password)
-      .unionByName(extractDocs(big.repartition(parts * 4, xxhash64(col("url"))), password))
+    val salted = saltedRepartitionByUrl(ds, parts)
+    if (passwordColumn == null)
+      extractDocs(salted, password, includeRaw, objectStreams, includeEmbedded)
+    else extractDocsWithPasswords(
+      salted.select(
+          struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as("_1"),
+          col(passwordColumn).as("_2"))
+        .as[(CrawlRow, String)],
+      password, includeRaw, objectStreams, includeEmbedded)
   }
 
   /** Per-partition extraction metrics + lineage rows, appended to the

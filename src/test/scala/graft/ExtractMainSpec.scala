@@ -309,6 +309,73 @@ class ExtractMainSpec extends AnyFunSuite {
     assert(docs.read(spark).count() == 16)
   }
 
+  test("--recrawl that changes every url of an earlier batch commits a second batch") {
+    val baseDir = java.nio.file.Files.createTempDirectory("graft_rcall_base").toString
+    val reDir = java.nio.file.Files.createTempDirectory("graft_rcall_re").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_rcall_out").toString
+    val base = CrawlCorpus.crawl(spark, 6, 13L).toDF()
+    base.write.mode("overwrite").parquet(baseDir)
+    Extract.main(Array(baseDir, outDir, "--partitions", "2"))
+    val docs = new graft.sources.ParquetManifestTable(s"$outDir/documents")
+    val firstBatch = docs.committedBatches
+    assert(firstBatch.size == 1 && docs.read(spark).count() == 6)
+    // every url recaptured a day later with new text: the pending set has
+    // the first batch's url range and count, only its captures differ
+    base.withColumn("warc_ts", col("warc_ts") + expr("INTERVAL 1 DAY"))
+      .withColumn("text", concat(coalesce(col("text"), lit("")), lit(" recrawled")))
+      .write.mode("overwrite").parquet(reDir)
+    Extract.main(Array(reDir, outDir, "--recrawl", baseDir, "--partitions", "2"))
+    assert(docs.committedBatches.size == 2, "the recrawl batch must not take the first batch's id")
+    assert(docs.read(spark).count() == 12)
+    Extract.main(Array(reDir, outDir, "--recrawl", baseDir, "--partitions", "2"))
+    assert(docs.committedBatches.size == 2, "idempotent recrawl re-run")
+    // a retried batch keeps its id: the same pending rows in another order
+    // and partitioning into a fresh table name the same batch
+    val shuffledDir = java.nio.file.Files.createTempDirectory("graft_rcall_shuf").toString
+    base.orderBy(col("url").desc).repartition(3).write.mode("overwrite").parquet(shuffledDir)
+    val outDir2 = java.nio.file.Files.createTempDirectory("graft_rcall_out2").toString
+    Extract.main(Array(shuffledDir, outDir2, "--partitions", "3"))
+    assert(new graft.sources.ParquetManifestTable(s"$outDir2/documents").committedBatches == firstBatch)
+  }
+
+  test("--password-column with --recrawl: a changed encrypted.pdf decrypts with its own row's password") {
+    import spark.implicits._
+    val baseDir = java.nio.file.Files.createTempDirectory("graft_rcpw_base").toString
+    val reDir = java.nio.file.Files.createTempDirectory("graft_rcpw_re").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_rcpw_out").toString
+    val enc = graft.pdf.Fixtures.bytes("encrypted.pdf")
+    val t0 = new java.sql.Timestamp(0L)
+    val t1 = new java.sql.Timestamp(86400000L)
+    val noPw = null.asInstanceOf[String]
+    // the corpus default password is wrong: a row decrypts only with its own
+    Seq(("test://rcpw/encrypted.pdf", t0, enc, "", "en", "wrong"),
+        ("test://rcpw/same.pdf", t0, enc, "", "en", ""))
+      .toDF("url", "warc_ts", "html", "text", "lang", "pw")
+      .write.mode("overwrite").parquet(baseDir)
+    val pwArgs = Array("--password-column", "pw", "--password", "wrong", "--partitions", "2")
+    Extract.main(Array(baseDir, outDir) ++ pwArgs)
+    val docs = new graft.sources.ParquetManifestTable(s"$outDir/documents")
+    assert(docs.read(spark).where(col("ok")).select("url").as[String].collect().toSeq ==
+      Seq("test://rcpw/same.pdf"))
+    // recrawl: encrypted.pdf changed (its text) with the right password; a
+    // new url with a null password falls back to the wrong default
+    Seq(("test://rcpw/encrypted.pdf", t1, enc, "edited", "en", ""),
+        ("test://rcpw/same.pdf", t0, enc, "", "en", ""),
+        ("test://rcpw/new.pdf", t1, enc, "", "en", noPw))
+      .toDF("url", "warc_ts", "html", "text", "lang", "pw")
+      .write.mode("overwrite").parquet(reDir)
+    Extract.main(Array(reDir, outDir, "--recrawl", baseDir) ++ pwArgs)
+    assert(docs.read(spark).count() == 4, "2 originals + the changed version + the new url")
+    val current = graft.sources.Resume.currentPerUrl(docs.read(spark))
+      .select("url", "warc_ts", "ok", "failure").orderBy("url").collect()
+    assert(current.map(_.getString(0)).toSeq ==
+      Seq("test://rcpw/encrypted.pdf", "test://rcpw/new.pdf", "test://rcpw/same.pdf"))
+    assert(current(0).getTimestamp(1) == t1 && current(0).getBoolean(2),
+      s"the changed row must decrypt with its own password: ${current(0)}")
+    assert(!current(1).getBoolean(2) && current(1).getString(3) == "incorrect password")
+    assert(current(2).getBoolean(2))
+  }
+
   /** `Extract.main`'s JSON summary line, numeric fields only. */
   def summaryOf(args: String*): Map[String, Long] = {
     val buf = new java.io.ByteArrayOutputStream()

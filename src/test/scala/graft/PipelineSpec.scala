@@ -60,7 +60,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("skew-aware extraction preserves the one-row-per-url contract") {
-    val docs = ExtractPipeline.extractDocsSkewAware(corpus(40), bigPayloadBytes = 2000, numPartitions = 4)
+    val docs = ExtractPipeline.extractDocsSkewAware(corpus(40), numPartitions = 4)
     assert(docs.count() == 40)
     assert(docs.select("url").distinct().count() == 40)
   }
@@ -345,7 +345,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val withNull = corpus(10).map(r =>
       if (r.url.split("/")(3).toLong == 1L) r.copy(html = null) else r)
-    val docs = ExtractPipeline.extractDocsSkewAware(withNull, bigPayloadBytes = 2000, numPartitions = 4)
+    val docs = ExtractPipeline.extractDocsSkewAware(withNull, numPartitions = 4)
     assert(docs.count() == 10) // the null-html row is extracted (as empty), not dropped
     assert(docs.select("url").distinct().count() == 10)
   }

@@ -60,6 +60,64 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("MapPartitions"), p)
   }
 
+  /** Walks adaptive plans: into the adaptive root and its query stages. */
+  val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** The executed plan of the documents commit of one fresh
+    * `Extract.main` run with `flags`, taken from a QueryExecutionListener
+    * (listener events arrive asynchronously, so it polls with a deadline). */
+  def extractCommitPlan(flags: String*): org.apache.spark.sql.execution.SparkPlan = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val inDir = java.nio.file.Files.createTempDirectory("graft_plan_in").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_plan_out").toString
+    CrawlCorpus.crawl(spark, 24, 42L).toDF().withColumn("pw", lit("").cast("string"))
+      .write.mode("overwrite").parquet(inDir)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // the write command sits under the adaptive root
+    def docsCommit: Option[SparkPlan] = plans.toArray(Array.empty[SparkPlan]).find { p =>
+      aqe.collect(p) {
+        case w: DataWritingCommandExec => w.cmd
+      }.exists {
+        case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString.contains(s"$outDir/documents/")
+        case _ => false
+      }
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Extract.main(Array(inDir, outDir, "--partitions", "4") ++ flags)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (docsCommit.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      docsCommit.getOrElse(fail("no documents commit plan observed"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("Extract.main: every flag path extracts over one input scan and one salted exchange") {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    for (flags <- Seq(Seq.empty, Seq("--include-raw"), Seq("--password-column", "pw"))) {
+      val p = extractCommitPlan(flags: _*)
+      val scans = aqe.collect(p) { case s: FileSourceScanExec => s }
+      val exchanges = aqe.collect(p) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      val maps = aqe.collect(p) { case m: MapPartitionsExec => m }
+      val shape = s"$flags: ${scans.size} scans, ${maps.size} mapPartitions, exchanges $exchanges"
+      assert(scans.size == 1 && maps.size == 1, shape)
+      assert(exchanges.size == 1, shape)
+      assert(exchanges.head match {
+        case h: HashPartitioning => h.expressions.exists(_.isInstanceOf[XxHash64])
+        case _ => false
+      }, shape)
+    }
+  }
+
   test("extraction + aggregate: exactly the partial-agg exchange, nothing else") {
     val docs = ExtractPipeline.extractDocs(CrawlCorpus.crawl(spark, 100, 42L)).toDF()
     val agg = docs.agg(sum(length(col("contents"))))
