@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{ExtractPipeline, SinkTables}
 import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
@@ -22,8 +23,10 @@ import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
   * Per run: resume-filter the input against the committed output (exactly
   * once per url, crash-safe — see TableIO), salted-repartition extraction,
   * one atomic snapshot commit of the documents batch, a metrics-table
-  * append of the per-partition lineage rows, and (with `--sinks`) the
-  * seven per-sink tables; with `--curate` the whole training-data
+  * append of the per-partition lineage rows the extraction tasks fold
+  * while that commit writes (the batch is not read back for them), and
+  * (with `--sinks`) the seven per-sink tables, derived from the committed
+  * batch read back; with `--curate` the whole training-data
   * curation stage runs over everything committed so far and lands as a
   * replace-style `curated` snapshot (quality/langid gates, exact +
   * near-dup dedup, token packing). A re-run over the same input is a
@@ -273,17 +276,19 @@ object Extract {
         s"${pstat.getString(1)}|${pstat.getString(2)}|$nPending|${pstat.getLong(5)}"
           .getBytes("UTF-8"))).take(16)
 
+    // the extraction tasks fold their partitions' lineage rows into this
+    // run's accumulator while the documents commit writes them
+    val partitionRows = spark.sparkContext.collectionAccumulator[Row]
     val docs = ExtractPipeline.extractDocsSkewAware(pending, a.password,
       numPartitions = a.partitions, includeRaw = a.includeRaw, objectStreams = a.objectStreams,
-      includeEmbedded = a.includeEmbedded, passwordColumn = a.passwordColumn)
+      includeEmbedded = a.includeEmbedded, passwordColumn = a.passwordColumn,
+      metrics = partitionRows)
 
     docsTable.commit(docs.toDF(), batchId, "ok_rows" -> count_if(col("ok")))
-    // downstream stages read the COMMITTED batch back instead of
-    // re-running the extraction plan (the dominant cost) per consumer
-    val committedBatch = docsTable.readBatch(spark, batchId)
     metricsTable.commit(
-      ExtractPipeline.partitionMetrics(committedBatch.as[graft.operators.ExtractedDoc])
-        .withColumn("batch_id", lit(batchId)),
+      spark.createDataFrame(partitionRows.value.asScala.sortBy(_.getInt(0)).asJava,
+          ExtractPipeline.PartitionMetricsSchema)
+        .coalesce(1).withColumn("batch_id", lit(batchId)),
       batchId)
 
     if (a.linkGraph) {
@@ -394,7 +399,10 @@ object Extract {
 
     if (a.sinks) {
       // sink tables are APPEND tables: derive them from THIS batch only,
-      // so read()'s union-of-batches never duplicates earlier batches
+      // so read()'s union-of-batches never duplicates earlier batches. They
+      // read the COMMITTED batch back instead of re-running the extraction
+      // plan (the dominant cost) per sink
+      val committedBatch = docsTable.readBatch(spark, batchId)
       SinkTables.all(committedBatch.as[graft.operators.ExtractedDoc]).foreach {
         case (name, sinkDf) =>
           new ParquetManifestTable(s"${a.outRoot}/$name", a.tableFormat).commit(sinkDf, batchId)

@@ -2,8 +2,11 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.util.CollectionAccumulator
 import graft.pdf.{Crypto, PdfExtract}
 import graft.html.HtmlExtract
 import graft.sources.CrawlRow
@@ -62,7 +65,7 @@ final case class ExtractedDoc(
   * `MapPartitionsExec` over the scan — zero shuffles. Column pruning happens
   * in the scan because the `select` runs BEFORE the opaque lambda. Shuffles
   * appear only where explicitly requested (salted repartition for skew,
-  * metrics groupBy, resume anti-join).
+  * resume anti-join).
   */
 object ExtractPipeline {
 
@@ -168,16 +171,29 @@ object ExtractPipeline {
 
   /** The per-partition body of every extraction transform: one HTML
     * scratch per task, one `extractOne` per row. `password` reads a row's
-    * own password; null falls back to `defaultPassword`. */
+    * own password; null falls back to `defaultPassword`. With `metrics`,
+    * the partition's lineage row goes there once the partition is
+    * exhausted (see `PartitionMetricsFold`). */
   private def extractPartition[T](rows: Iterator[T], row: T => CrawlRow, password: T => String,
                                   defaultPassword: String, includeRaw: Boolean,
                                   objectStreams: Boolean, includeEmbedded: Boolean,
-                                  maxEmbeddedBytes: Long): Iterator[ExtractedDoc] = {
+                                  maxEmbeddedBytes: Long,
+                                  metrics: CollectionAccumulator[Row]): Iterator[ExtractedDoc] = {
     val scratch = new HtmlExtract.Scratch
-    rows.map { t =>
+    val docs = rows.map { t =>
       val pw = password(t)
       extractOne(row(t), if (pw == null) defaultPassword else pw, scratch, includeRaw,
         objectStreams, includeEmbedded, maxEmbeddedBytes)
+    }
+    if (metrics == null) docs
+    else new Iterator[ExtractedDoc] {
+      private val fold = new PartitionMetricsFold(TaskContext.getPartitionId())
+      private var open = true
+      def hasNext: Boolean = docs.hasNext || {
+        if (open) { open = false; fold.row.foreach(metrics.add) }
+        false
+      }
+      def next(): ExtractedDoc = { val d = docs.next(); fold.add(d); d }
     }
   }
 
@@ -187,15 +203,18 @@ object ExtractPipeline {
     * binary column (off by default — see ExtractedDoc.raw);
     * `objectStreams = true` opts into /ObjStm (type-2) expansion (off by
     * default: the reference resolves compressed objects to null and the
-    * byte-identity gate holds to that). */
+    * byte-identity gate holds to that). `metrics` collects each
+    * partition's lineage row as the extraction runs (see
+    * `extractDocsSkewAware`). */
   def extractDocs(ds: Dataset[CrawlRow], password: String = "",
                   includeRaw: Boolean = false,
                   objectStreams: Boolean = false,
                   includeEmbedded: Boolean = false,
-                  maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes): Dataset[ExtractedDoc] = {
+                  maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes,
+                  metrics: CollectionAccumulator[Row] = null): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions(extractPartition(_, identity[CrawlRow], (_: CrawlRow) => password, password,
-      includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes))
+      includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes, metrics))
   }
 
   /** Per-document password variant: the reference takes `-p` per invocation
@@ -208,10 +227,11 @@ object ExtractPipeline {
                                includeRaw: Boolean = false,
                                objectStreams: Boolean = false,
                                includeEmbedded: Boolean = false,
-                               maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes): Dataset[ExtractedDoc] = {
+                               maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes,
+                               metrics: CollectionAccumulator[Row] = null): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions(extractPartition(_, (_: (CrawlRow, String))._1, (_: (CrawlRow, String))._2,
-      defaultPassword, includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes))
+      defaultPassword, includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes, metrics))
   }
 
   /** Salted url-hash repartition (north rule): spreads url-clustered inputs
@@ -227,42 +247,101 @@ object ExtractPipeline {
     * runs for every flag combination: `saltedRepartitionByUrl` into
     * `numPartitions` (0 = default parallelism), then one extraction pass.
     * `passwordColumn` names a column of `ds` beyond the CrawlRow fields
-    * that carries each row's own password (null = `password`). */
+    * that carries each row's own password (null = `password`).
+    *
+    * `metrics` (a fresh accumulator per run) receives one
+    * `PartitionMetricsSchema` row per non-empty extraction partition, as
+    * its task exhausts the partition. Spark applies a result task's
+    * accumulator update once per partition and drops failed attempts', so
+    * when the extraction runs in the result stage of one action (the
+    * documents write) every partition is counted exactly once. */
   def extractDocsSkewAware(ds: Dataset[CrawlRow], password: String = "",
                            numPartitions: Int = 0,
                            includeRaw: Boolean = false,
                            objectStreams: Boolean = false,
                            includeEmbedded: Boolean = false,
-                           passwordColumn: String = null): Dataset[ExtractedDoc] = {
+                           passwordColumn: String = null,
+                           metrics: CollectionAccumulator[Row] = null): Dataset[ExtractedDoc] = {
     val spark = ds.sparkSession
     import spark.implicits._
     val parts = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
     val salted = saltedRepartitionByUrl(ds, parts)
     if (passwordColumn == null)
-      extractDocs(salted, password, includeRaw, objectStreams, includeEmbedded)
+      extractDocs(salted, password, includeRaw, objectStreams, includeEmbedded, metrics = metrics)
     else extractDocsWithPasswords(
       salted.select(
           struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as("_1"),
           col(passwordColumn).as("_2"))
         .as[(CrawlRow, String)],
-      password, includeRaw, objectStreams, includeEmbedded)
+      password, includeRaw, objectStreams, includeEmbedded, metrics = metrics)
   }
 
-  /** Per-partition extraction metrics + lineage rows, appended to the
-    * metrics table each batch (objects decoded, streams, filters, failures,
-    * url range) — the corpus analogue of the reference's error channel. */
+  /** Schema of the per-partition lineage rows: the names, types and
+    * nullability a `groupBy(spark_partition_id())` aggregate gives them
+    * (`count` non-null; `sum`, `min` and `max` nullable), which is what
+    * metrics batches were written with before the extraction tasks folded
+    * them. A table mixing both kinds of batch then reads with its recorded
+    * schema. */
+  val PartitionMetricsSchema: StructType = StructType(
+    Seq(StructField("partition_id", IntegerType, nullable = false),
+      StructField("n_docs", LongType, nullable = false)) ++
+      Seq("n_ok", "n_failed", "n_objects", "n_streams", "n_filters", "n_errors")
+        .map(StructField(_, LongType)) ++
+      Seq("url_min", "url_max").map(StructField(_, StringType)))
+
+  /** One partition's lineage row, folded one document at a time. `row` is
+    * None for a partition that held no document, which a group-by never
+    * reports either. The url bounds skip null urls and compare in
+    * code-point order, as Spark's `min`/`max` do over UTF-8 bytes. */
+  private final class PartitionMetricsFold(partitionId: Int) {
+    private var nDocs, nOk, nObjects, nStreams, nFilters, nErrors = 0L
+    private var urlMin, urlMax: String = null
+
+    def add(d: ExtractedDoc): Unit = {
+      nDocs += 1
+      if (d.ok) nOk += 1
+      nObjects += d.n_objects
+      nStreams += d.n_streams
+      nFilters += d.n_filters
+      nErrors += d.n_errors
+      if (d.url != null) {
+        if (urlMin == null || codePointCompare(d.url, urlMin) < 0) urlMin = d.url
+        if (urlMax == null || codePointCompare(d.url, urlMax) > 0) urlMax = d.url
+      }
+    }
+
+    def row: Option[Row] =
+      if (nDocs == 0) None
+      else Some(Row(partitionId, nDocs, nOk, nDocs - nOk, nObjects, nStreams, nFilters, nErrors,
+        urlMin, urlMax))
+  }
+
+  /** `String.compareTo` in code-point order: UTF-16 order differs only
+    * where a surrogate meets U+E000..U+FFFF, so at the first differing unit
+    * surrogates are moved above that range. */
+  private def codePointCompare(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    def key(c: Char): Int = if (c < 0xD800) c else if (c >= 0xE000) c - 0x800 else c + 0x2000
+    if (i == n) a.length - b.length else key(a.charAt(i)) - key(b.charAt(i))
+  }
+
+  /** Per-partition extraction metrics + lineage rows (objects decoded,
+    * streams, filters, failures, url range) — the corpus analogue of the
+    * reference's error channel — in `PartitionMetricsSchema`. The fold
+    * `extractDocsSkewAware` runs inside the extraction tasks, here run over
+    * `docs` as a map-only pass: `partition_id` is the partition of `docs`
+    * that held the rows, and no exchange is added. `graft.Extract` takes its
+    * metrics from the extraction tasks themselves, so there `partition_id`
+    * is the extraction task's partition, not a split of the committed
+    * batch read back. */
   def partitionMetrics(docs: Dataset[ExtractedDoc]): DataFrame =
-    docs.groupBy(spark_partition_id().as("partition_id"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("n_ok"),
-        sum(when(col("ok"), 0L).otherwise(1L)).as("n_failed"),
-        sum(col("n_objects")).as("n_objects"),
-        sum(col("n_streams")).as("n_streams"),
-        sum(col("n_filters")).as("n_filters"),
-        sum(col("n_errors")).as("n_errors"),
-        min(col("url")).as("url_min"),
-        max(col("url")).as("url_max"))
+    docs.mapPartitions { it =>
+      val fold = new PartitionMetricsFold(TaskContext.getPartitionId())
+      it.foreach(fold.add)
+      fold.row.iterator
+    }(Encoders.row(PartitionMetricsSchema))
 
   /** Corpus-level abnormality profile: exploded error-channel lines with
     * counts (the 14 exact reference message strings become group keys). */

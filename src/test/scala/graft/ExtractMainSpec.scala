@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sources.CrawlCorpus
 
@@ -419,6 +420,81 @@ class ExtractMainSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$outDir/documents/_manifest/$b.committed"), b))
     assertMatchesScan(summaryOf(crawlDir(21), outDir, "--partitions", "2", "--password", "wrong"), 22)
     assert(docs.committedCounts.isEmpty)
+  }
+
+  /** A committed batch's manifest entry (`{"schema": …, "counts": …}`). */
+  def manifestEntry(tableDir: String, batch: String): org.json4s.JValue =
+    org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$tableDir/_manifest/$batch.committed")))
+
+  test("metrics rows reconcile with their batch: fresh, incremental, --password-column and --recrawl") {
+    import org.json4s.JInt
+    val outDir = java.nio.file.Files.createTempDirectory("graft_mrec_out").toString
+    val docs = new graft.sources.ParquetManifestTable(s"$outDir/documents")
+    val metrics = new graft.sources.ParquetManifestTable(s"$outDir/metrics")
+    def crawlDir(n: Int, recrawl: Boolean = false): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_mrec_in").toString
+      val df = CrawlCorpus.crawl(spark, n, 9L).toDF().withColumn("pw", lit(""))
+      (if (!recrawl) df
+       else df.withColumn("warc_ts", col("warc_ts") + expr("INTERVAL 1 DAY"))
+         .withColumn("html", when(col("url") === "test://crawl/3/page.html",
+           concat(col("html"), lit("<p>fresh paragraph</p>".getBytes("UTF-8")))).otherwise(col("html"))))
+        .write.mode("overwrite").parquet(dir)
+      dir
+    }
+    def reconcile(args: String*): Unit = {
+      val before = docs.committedBatches.toSet
+      // the wrong default password fails encrypted.pdf, so n_ok < n_docs
+      Extract.main((args ++ Seq("--partitions", "4", "--password", "wrong")).toArray)
+      val Seq(batch) = docs.committedBatches.filterNot(before)
+      val counts = manifestEntry(s"$outDir/documents", batch) \ "counts"
+      val rows = (counts \ "rows").asInstanceOf[JInt].num.toLong
+      val okRows = (counts \ "ok_rows").asInstanceOf[JInt].num.toLong
+      val m = metrics.read(spark).where(col("batch_id") === batch)
+        .agg(sum("n_docs"), sum("n_ok"), sum("n_errors"), sum("n_objects"), sum("n_filters"),
+          count(lit(1)), countDistinct(col("partition_id")), min("partition_id"), max("partition_id"))
+        .head()
+      val d = docs.readBatch(spark, batch)
+        .agg(count(lit(1)), sum("n_errors"), sum("n_objects"), sum("n_filters")).head()
+      assert(m.getLong(0) == rows && d.getLong(0) == rows, s"$batch: $m vs $rows")
+      assert(m.getLong(1) == okRows, s"$batch: $m vs $okRows")
+      assert((m.getLong(2), m.getLong(3), m.getLong(4)) == (d.getLong(1), d.getLong(2), d.getLong(3)),
+        s"$batch: $m vs $d")
+      assert(m.getLong(5) == m.getLong(6) && m.getInt(7) >= 0 && m.getInt(8) < 4, s"$batch: $m")
+      // one task, one file
+      val files = java.nio.file.Files.list(java.nio.file.Paths.get(s"$outDir/metrics/data/$batch"))
+      try assert(files.iterator().asScala.count(_.getFileName.toString.startsWith("part-")) == 1)
+      finally files.close()
+    }
+    reconcile(crawlDir(10), outDir)
+    assert(docs.read(spark).where(!col("ok")).count() > 0)
+    reconcile(crawlDir(16), outDir)
+    val pwInput = crawlDir(22)
+    reconcile(pwInput, outDir, "--password-column", "pw")
+    reconcile(crawlDir(24, recrawl = true), outDir, "--recrawl", pwInput)
+    assert(metrics.committedBatches == docs.committedBatches)
+  }
+
+  test("metrics batches keep the group-by form's schema, so a table mixing both reads its recorded schema") {
+    val inDir = java.nio.file.Files.createTempDirectory("graft_mschema_in").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_mschema_out").toString
+    CrawlCorpus.crawl(spark, 12, 5L).toDF().write.mode("overwrite").parquet(inDir)
+    Extract.main(Array(inDir, outDir, "--partitions", "2"))
+    val docs = new graft.sources.ParquetManifestTable(s"$outDir/documents")
+    val metrics = new graft.sources.ParquetManifestTable(s"$outDir/metrics")
+    val Seq(batch) = docs.committedBatches
+    // a batch in the format metrics were written in before: the group-by
+    // form over the committed batch read back
+    import spark.implicits._
+    metrics.commit(
+      graft.operators.PartitionMetricsReference
+        .partitionMetrics(docs.readBatch(spark, batch).as[graft.operators.ExtractedDoc])
+        .withColumn("batch_id", lit("parent-format")),
+      "parent-format")
+    val schema = manifestEntry(s"$outDir/metrics", batch) \ "schema"
+    assert(schema == manifestEntry(s"$outDir/metrics", "parent-format") \ "schema")
+    assert(metrics.read(spark).groupBy("batch_id").agg(sum("n_docs")).collect()
+      .map(_.getLong(1)).toSeq == Seq(12L, 12L))
   }
 
   test("--recrawl tolerates duplicate-url base snapshots and skips (loudly) null-ts changed urls") {

@@ -406,6 +406,34 @@ class PipelineSpec extends AnyFunSuite {
       intercept[IllegalArgumentException] { new ParquetManifestTable(dir, bad) }
   }
 
+  test("partitionMetrics: the per-partition fold equals the group-by reference, schema included") {
+    import spark.implicits._
+    import graft.operators.PartitionMetricsReference
+    def check(docs: org.apache.spark.sql.Dataset[graft.operators.ExtractedDoc]): Seq[org.apache.spark.sql.Row] = {
+      val fold = ExtractPipeline.partitionMetrics(docs)
+      val ref = PartitionMetricsReference.partitionMetrics(docs)
+      assert(fold.schema == ref.schema)
+      val rows = fold.orderBy("partition_id").collect().toSeq
+      assert(rows == ref.orderBy("partition_id").collect().toSeq)
+      rows
+    }
+    // 12 urls over 8 salted partitions leave some empty (no row, as in a
+    // group-by); the wrong password fails encrypted.pdf
+    val salted = ExtractPipeline.extractDocs(
+      ExtractPipeline.saltedRepartitionByUrl(corpus(12), 8), password = "wrong")
+    val rows = check(salted)
+    assert(rows.size < 8 && rows.map(_.getAs[Long]("n_docs")).sum == 12, rows)
+    assert(rows.map(_.getAs[Long]("n_failed")).sum > 0, rows)
+    // url bounds in Spark's string order (code points, not UTF-16 units)
+    // and with null urls skipped
+    val page = "<p>x</p>".getBytes(UTF_8)
+    val urls = Seq("test://u/\uFF01", "test://u/\uD83D\uDE00", "test://u/a", null)
+    check(ExtractPipeline.extractDocs(urls.map(u =>
+      graft.sources.CrawlRow(u, null, page, "", "en")).toDS().repartition(1)))
+    check(ExtractPipeline.extractDocs(Seq(graft.sources.CrawlRow(null, null, page, "", "en"))
+      .toDS().repartition(1)))
+  }
+
   test("metrics + error profile") {
     val docs = ExtractPipeline.extractDocs(
       ExtractPipeline.saltedRepartitionByUrl(corpus(72), 8))

@@ -63,39 +63,53 @@ class PlanSpec extends AnyFunSuite {
   /** Walks adaptive plans: into the adaptive root and its query stages. */
   val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
 
-  /** The executed plan of the documents commit of one fresh
-    * `Extract.main` run with `flags`, taken from a QueryExecutionListener
-    * (listener events arrive asynchronously, so it polls with a deadline). */
-  def extractCommitPlan(flags: String*): org.apache.spark.sql.execution.SparkPlan = {
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+  /** Whether `p` writes to a path containing `path`; the write command
+    * sits under the adaptive root. */
+  def writesTo(p: org.apache.spark.sql.execution.SparkPlan, path: String): Boolean = {
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    val inDir = java.nio.file.Files.createTempDirectory("graft_plan_in").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_plan_out").toString
-    CrawlCorpus.crawl(spark, 24, 42L).toDF().withColumn("pw", lit("").cast("string"))
-      .write.mode("overwrite").parquet(inDir)
+    aqe.collect(p) {
+      case w: DataWritingCommandExec => w.cmd
+    }.exists {
+      case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString.contains(path)
+      case _ => false
+    }
+  }
+
+  /** The executed plans of the queries one `Extract.main(args)` call runs,
+    * from a QueryExecutionListener, up to the one writing to `until`.
+    * Listener events arrive asynchronously but in order, so it polls with a
+    * deadline for that write; every earlier query's plan has arrived by
+    * then. */
+  def extractPlans(args: Seq[String], until: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    // the write command sits under the adaptive root
-    def docsCommit: Option[SparkPlan] = plans.toArray(Array.empty[SparkPlan]).find { p =>
-      aqe.collect(p) {
-        case w: DataWritingCommandExec => w.cmd
-      }.exists {
-        case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString.contains(s"$outDir/documents/")
-        case _ => false
-      }
-    }
+    def seen: Seq[SparkPlan] = plans.toArray(Array.empty[SparkPlan]).toSeq
     spark.listenerManager.register(listener)
     try {
-      Extract.main(Array(inDir, outDir, "--partitions", "4") ++ flags)
+      Extract.main(args.toArray)
       val deadline = System.nanoTime() + 60L * 1000000000L
-      while (docsCommit.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-      docsCommit.getOrElse(fail("no documents commit plan observed"))
+      while (!seen.exists(writesTo(_, until)) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.exists(writesTo(_, until)), s"no plan writing to $until observed")
+      seen
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The executed plan of the documents commit of one fresh
+    * `Extract.main` run with `flags`. */
+  def extractCommitPlan(flags: String*): org.apache.spark.sql.execution.SparkPlan = {
+    val inDir = java.nio.file.Files.createTempDirectory("graft_plan_in").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_plan_out").toString
+    CrawlCorpus.crawl(spark, 24, 42L).toDF().withColumn("pw", lit("").cast("string"))
+      .write.mode("overwrite").parquet(inDir)
+    val docsCommit = s"$outDir/documents/"
+    extractPlans(Seq(inDir, outDir, "--partitions", "4") ++ flags, docsCommit)
+      .find(writesTo(_, docsCommit)).get
   }
 
   test("Extract.main: every flag path extracts over one input scan and one salted exchange") {
@@ -116,6 +130,41 @@ class PlanSpec extends AnyFunSuite {
         case _ => false
       }, shape)
     }
+  }
+
+  test("Extract.main without --sinks reads no documents back: a fresh call scans none, an incremental one only resume's urls") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val inDir = java.nio.file.Files.createTempDirectory("graft_readback_in").toString
+    val grownDir = java.nio.file.Files.createTempDirectory("graft_readback_grown").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_readback_out").toString
+    CrawlCorpus.crawl(spark, 24, 42L).toDF().write.mode("overwrite").parquet(inDir)
+    CrawlCorpus.crawl(spark, 36, 42L).toDF().write.mode("overwrite").parquet(grownDir)
+    // the metrics commit is the call's last query
+    def docsScans(input: String): Seq[FileSourceScanExec] =
+      extractPlans(Seq(input, outDir, "--partitions", "4"), s"$outDir/metrics/").flatMap { p =>
+        aqe.collect(p) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.contains(s"$outDir/documents/")) => s
+        }
+      }
+    val fresh = docsScans(inDir)
+    assert(fresh.isEmpty, fresh.map(_.requiredSchema.simpleString))
+    val incremental = docsScans(grownDir)
+    val read = incremental.map(_.requiredSchema.fieldNames.toSeq)
+    assert(read.nonEmpty && read.forall(_ == Seq("url")), read)
+  }
+
+  test("q26: per-partition metrics add no exchange; only the query's salted repartition and sort shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+    val parts = collectShuffles(SparkEntry.queries("q26_extract_metrics")(spark, sfDir))
+      .map(_.outputPartitioning)
+    assert(parts.size == 2, parts)
+    assert(parts.exists {
+      case h: HashPartitioning => h.expressions.exists(_.isInstanceOf[XxHash64])
+      case _ => false
+    }, parts)
+    assert(parts.exists(_.isInstanceOf[RangePartitioning]), parts)
   }
 
   test("extraction + aggregate: exactly the partial-agg exchange, nothing else") {
