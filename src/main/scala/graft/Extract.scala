@@ -254,6 +254,11 @@ object Extract {
       println(s"""{"job":"graft-extract","pending":0,"committed":${docsTable.committedBatches.size},"note":"nothing to do: all input urls already committed"}""")
       return
     }
+    // commit skips a known batch id (the idempotent retry), so reusing a
+    // committed --batch-id for new documents would drop them silently
+    require(a.batchId == null || !docsTable.committedBatches.contains(a.batchId),
+      s"--batch-id ${a.batchId} is already committed; its $nPending pending " +
+        "documents would be dropped. Pass a new --batch-id or omit it.")
     val pendingNonNull =
       if (nNull == 0) pending0 else pending0.where(col("url").isNotNull)
     // duplicate urls in the input would commit (and extract) a document

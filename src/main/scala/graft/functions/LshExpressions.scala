@@ -9,13 +9,14 @@ import org.apache.spark.sql.types._
 
 /** Native random-hyperplane LSH signatures.
   *
-  * Computes the identical values to the declarative formulation in
-  * graft.operators.Similarity (coeff(plane, dim) = pmod(xxhash64(plane,
-  * dim), 1e5)/1e5 - 0.5 over int children, ordered double fold, bit p of
-  * table t set iff dot(vec, plane_{t*nBits+p}) >= 0 — asserted in
-  * LshExpressionsSpec), but in a tight JIT'd loop over a per-(shape)
-  * memoized coefficient matrix instead of nTables x nBits x dim interpreted
-  * expression evaluations per row.
+  * Computes the identical values to the declarative formulation in the
+  * test reference graft.operators.SimilarityReference (src/test;
+  * coeff(plane, dim) = pmod(xxhash64(plane, dim), 1e5)/1e5 - 0.5 over int
+  * children, ordered double fold, bit p of table t set iff
+  * dot(vec, plane_{t*nBits+p}) >= 0 — asserted in LshExpressionsSpec), but
+  * in a tight JIT'd loop over a per-(shape) memoized coefficient matrix
+  * instead of nTables x nBits x dim interpreted expression evaluations per
+  * row.
   */
 object LshKernel {
   private val Seed = 42L

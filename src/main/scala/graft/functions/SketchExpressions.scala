@@ -10,7 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the document sketches.
   *
-  * The declarative higher-order-function formulations (graft.operators.Dedup)
+  * The declarative higher-order-function formulations (the test references
+  * graft.operators.DedupReference and TextAnalysisReference in src/test)
   * are correct but evaluate on the interpreted expression path (~ms per
   * document); these expressions compute the identical values in tight eval
   * loops with zero-copy hashing over the UTF8String bytes (XXH64 with
@@ -62,7 +63,7 @@ object SketchKernel {
   /** Oracle-portable 60-bit md5 SimHash: per-token hash = the top 60 bits
     * of md5(token) (== `conv(substring(md5(t),1,15),16,10)` — 15 hex chars,
     * big-endian, positive in a signed long), per-bit +/-1 votes over bits
-    * 0..59. Bit-identical to Dedup.simhashMd5Declarative
+    * 0..59. Bit-identical to DedupReference.simhashMd5Declarative
     * (SketchExpressionsSpec) and to the DuckDB
     * `CAST('0x' || substring(md5(t),1,15) AS BIGINT)` oracle arithmetic. */
   def simhashMd5(s: UTF8String): Long = {
@@ -124,7 +125,8 @@ object SketchKernel {
     * tokens joined by single spaces is exactly the source byte range from
     * token i's start to token (i+n-1)'s end (split boundaries are single
     * spaces), so shingles hash zero-copy. Matches the declarative
-    * minhashSignature(wordShingles(text, n), k) bit-for-bit:
+    * DedupReference.minhashSignatureDeclarative(wordShingles(text, n), k)
+    * bit-for-bit:
     * base hashes h1/h2 = xxhash64(shingle, 1|2) = hashLong(seed',
     * hashUTF8-bytes); sig[j] = h1 XOR (h2 >>> j | h2 << (64-j)), j=1..k. */
   def minhashSignature(s: UTF8String, shingleWords: Int, k: Int): Array[Long] = {
@@ -416,7 +418,7 @@ object SketchKernel {
   }
 
   /** The composite [0,1] quality score in ONE byte pass — bit-identical to
-    * TextAnalysis.qualityScoreDeclarative (the q15/q38/q50 oracle formula):
+    * TextAnalysisReference.qualityScoreDeclarative (the q15/q38/q50 oracle formula):
     * every intermediate double op replays the declarative expression's
     * exact IEEE order (ratios as double divisions, min-with-1 clamps, the
     * 0.4/0.3/0.3 blend). Counting rules replicated exactly:

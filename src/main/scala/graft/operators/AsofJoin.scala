@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** As-of (most-recent-at-or-before) join — the temporal join Spark has no
   * built-in operator for (DuckDB: ASOF JOIN, which is exactly the q37
@@ -128,66 +127,4 @@ object AsofJoin {
       .withColumn("__carried", coalesce(col("__in"), col("__before"))),
       rightCols)
   }
-
-  /** The as-of join as EXECUTABLE SPARK SQL — the SQL surface for
-    * SQL-first users (DuckDB spells this `ASOF LEFT JOIN`; Spark has no
-    * such syntax, so the recipe expands to the identical union-sort
-    * carry-forward formulation the Scala API plans). `leftTable` /
-    * `rightTable` are table or temp-view names resolved through the
-    * session catalog (needed to type the cross-side NULL structs and
-    * enumerate output columns). Run the returned string with
-    * `spark.sql(...)`; rows are identical to [[asofJoin]]
-    * (AsofJoinSpec parity case). */
-  def sqlRecipe(spark: org.apache.spark.sql.SparkSession,
-                leftTable: String, rightTable: String, keys: Seq[String],
-                leftTs: String, rightTs: String,
-                rightCols: Seq[String]): String = {
-    import SqlIdent.{col => q, table => qt}
-    val left = spark.table(leftTable)
-    val right = spark.table(rightTable)
-    require(rightCols.nonEmpty, "asofJoin needs at least one right value column")
-    val collide = left.columns.toSet.intersect(rightCols.toSet)
-    require(collide.isEmpty, s"right value columns collide with left columns: $collide")
-    val reserved = Set("__ts", "__side", "__lval", "__rval", "__carried")
-    val taken = (left.columns ++ right.columns).toSet.intersect(reserved)
-    require(taken.isEmpty, s"inputs use asofJoin-reserved column names: $taken")
-    val lType = StructType(left.schema.fields)
-    val rType = StructType(rightCols.map(c => right.schema(c)).toArray)
-    val keyList = keys.map(q).mkString(", ")
-    val lStruct = left.columns.map(c => s"${SqlIdent.strLit(c)}, ${q(c)}")
-      .mkString("named_struct(", ", ", ")")
-    val rStruct = rightCols.map(c => s"${SqlIdent.strLit(c)}, ${q(c)}")
-      .mkString("named_struct(", ", ", ")")
-    val rNotNull = (keys :+ rightTs).map(c => s"${q(c)} IS NOT NULL").mkString(" AND ")
-    val outCols = (left.columns.map(c => s"__lval.${q(c)} AS ${q(c)}") ++
-      rightCols.map(c => s"__carried.${q(c)} AS ${q(c)}")).mkString(", ")
-    s"""WITH __u AS (
-       |  SELECT $keyList, ${q(leftTs)} AS __ts, 1 AS __side,
-       |         $lStruct AS __lval, CAST(NULL AS ${rType.sql}) AS __rval
-       |  FROM ${qt(leftTable)}
-       |  UNION ALL
-       |  SELECT $keyList, ${q(rightTs)} AS __ts, 0 AS __side,
-       |         CAST(NULL AS ${lType.sql}) AS __lval, $rStruct AS __rval
-       |  FROM ${qt(rightTable)} WHERE $rNotNull
-       |), __c AS (
-       |  SELECT *, last_value(__rval, true) OVER (
-       |    PARTITION BY $keyList ORDER BY __ts ASC, __side ASC, __rval ASC
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __carried
-       |  FROM __u
-       |)
-       |SELECT $outCols FROM __c WHERE __side = 1""".stripMargin
-  }
-
-  /** Register the as-of join as a named temp view — the pure-SQL entry
-    * point: after one call, SQL-only users query `SELECT * FROM viewName`
-    * (and compose it further in SQL) with the exact union-sort
-    * carry-forward plan [[asofJoin]] declares; no Scala at query time.
-    * The view re-resolves its source tables on every query, so it stays
-    * live as the underlying tables change. */
-  def registerView(spark: org.apache.spark.sql.SparkSession, viewName: String,
-                   leftTable: String, rightTable: String, keys: Seq[String],
-                   leftTs: String, rightTs: String,
-                   rightCols: Seq[String]): Unit =
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${SqlIdent.table(viewName)} AS\n" +
-      sqlRecipe(spark, leftTable, rightTable, keys, leftTs, rightTs, rightCols))
 }

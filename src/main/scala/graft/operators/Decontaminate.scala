@@ -122,7 +122,7 @@ object Decontaminate {
     * the filter takes one count() over the reduced set (driver action on
     * the small side); the built filter is pulled to the driver as ONE
     * row of `numBits/8` bytes, capped by [[graft.functions.BloomFunctions.shape]]'s
-    * 128 MB guard — the IVF-centroid-pull discipline. */
+    * 128 MB guard. */
   def flagBloom(corpus: DataFrame, benchmark: DataFrame,
                 idCol: String, textCol: String,
                 w: Int = 13, minOverlap: Long = 3L,
@@ -335,54 +335,6 @@ object Decontaminate {
         coalesce(col("n_leaky_docs"), lit(0L)).as("n_leaky_docs"),
         coalesce(col("max_overlap"), lit(0L)).as("max_overlap"),
         coalesce(col("total_overlap"), lit(0L)).as("total_overlap"))
-  }
-
-  /** [[flag]] as ONE executable Spark-SQL statement over the registered
-    * natives (`token_chunks` — call `GraftFunctions.register(spark)`
-    * once per session) — the SQL surface of the decontamination gate,
-    * mirroring the keep-first recipe family. Same plan shape as the
-    * operator: distinct (id, shingle-md5) pairs left-join the benchmark's
-    * distinct shingle set, counts re-anchor on the corpus id set with a
-    * null-safe LEFT JOIN so null-text docs report (0, 0, false). The
-    * Scala API's duplicate-id raise_error is the one part SQL can't
-    * express cheaply; the recipe documents the ids-unique precondition
-    * instead (the keepFirst recipes' documented delta). */
-  def flagSqlRecipe(corpusTable: String, benchTable: String,
-                    idCol: String, textCol: String,
-                    w: Int = 13, minOverlap: Long = 3L): String = {
-    require(w >= 1, s"shingle width must be >= 1, got $w")
-    require(minOverlap >= 1, s"minOverlap must be >= 1, got $minOverlap")
-    import SqlIdent.{col => q, table => qt}
-    val (id, text) = (q(idCol), q(textCol))
-    s"""WITH __c AS (
-       |  SELECT $id AS id, $text AS text FROM ${qt(corpusTable)}
-       |), __csh AS (
-       |  SELECT DISTINCT id, md5(c.chunk) AS sh
-       |  FROM __c LATERAL VIEW explode(token_chunks(text, $w, 1)) AS c
-       |  WHERE text IS NOT NULL AND size(split(c.chunk, ' ')) = $w
-       |), __bsh AS (
-       |  SELECT DISTINCT md5(c.chunk) AS sh
-       |  FROM ${qt(benchTable)} LATERAL VIEW explode(token_chunks($text, $w, 1)) AS c
-       |  WHERE $text IS NOT NULL AND size(split(c.chunk, ' ')) = $w
-       |), __m AS (
-       |  SELECT c.id, count(1) AS n_shingles, count(b.sh) AS n_matched
-       |  FROM __csh c LEFT JOIN __bsh b ON c.sh = b.sh GROUP BY c.id
-       |)
-       |SELECT d.id, coalesce(m.n_shingles, 0L) AS n_shingles,
-       |       coalesce(m.n_matched, 0L) AS n_matched,
-       |       coalesce(m.n_matched, 0L) >= $minOverlap AS contaminated
-       |FROM (SELECT DISTINCT id FROM __c) d LEFT JOIN __m m ON d.id <=> m.id""".stripMargin
-  }
-
-  /** Register [[flagSqlRecipe]] as a named temp view — the pure-SQL
-    * entry point mirroring the keep-first views. */
-  def registerFlagView(spark: org.apache.spark.sql.SparkSession,
-                       viewName: String, corpusTable: String, benchTable: String,
-                       idCol: String, textCol: String,
-                       w: Int = 13, minOverlap: Long = 3L): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${SqlIdent.table(viewName)} AS\n" +
-      flagSqlRecipe(corpusTable, benchTable, idCol, textCol, w, minOverlap))
   }
 
   /** Shared excision tail for the span-strike operators ([[excise]] and

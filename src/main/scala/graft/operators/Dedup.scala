@@ -40,42 +40,7 @@ object Dedup {
   def normalizedDedup(df: DataFrame, idCol: String, textCol: String): DataFrame =
     exactDedupBy(df, idCol, md5(TextAnalysis.normalizeText(col(textCol))), "norm_md5")
 
-  // ---------- shingles ----------
-
-  /** Word n-gram shingles (array<string>) of the whitespace tokens. */
-  def wordShingles(textCol: Column, n: Int): Column = {
-    val tokens = split(textCol, " ")
-    when(size(tokens) >= n,
-      transform(sequence(lit(0), size(tokens) - n),
-        i => array_join(slice(tokens, i + 1, lit(n)), " ")))
-      .otherwise(array(textCol))
-  }
-
   // ---------- MinHash + LSH ----------
-
-  /** MinHash signature (array<bigint> of length k) over a shingle array.
-    * Hash family: two xxhash64 draws per shingle combined by bit rotation —
-    * h_j(s) = h1(s) XOR rot(h2(s), j) — the standard two-hash construction,
-    * ANSI-safe (no overflowing arithmetic) and k/2 x fewer hash evaluations
-    * than one xxhash64 per (shingle, j). One pass, map-local. */
-  def minhashSignatureDeclarative(shinglesCol: Column, k: Int): Column = {
-    // hash each shingle exactly twice (materialized via the struct array so
-    // Catalyst cannot re-evaluate xxhash64 inside the k-wide inner loop)
-    val hashed = transform(shinglesCol,
-      s => struct(xxhash64(s, lit(1)).as("h1"), xxhash64(s, lit(2)).as("h2")))
-    aggregate(
-      hashed,
-      transform(sequence(lit(1), lit(k)), _ => lit(Long.MaxValue)),
-      (acc, h) =>
-        zip_with(
-          acc,
-          transform(sequence(lit(1), lit(k)), j => {
-            val rot = call_function("shiftrightunsigned", h.getField("h2"), j)
-              .bitwiseOR(call_function("shiftleft", h.getField("h2"), lit(64) - j))
-            h.getField("h1").bitwiseXOR(rot)
-          }),
-          (a, b) => least(a, b)))
-  }
 
   /** LSH band keys: the signature split into `bands` bands of k/bands rows,
     * each hashed to one bigint. Docs sharing any (band_idx, band_hash) are
@@ -157,34 +122,6 @@ object Dedup {
     (under, starred)
   }
 
-  /** MinHash-LSH near-duplicate candidate pairs, verified by estimated
-    * jaccard (signature agreement ratio).
-    * Output: (id_a, id_b, est_jaccard) with id_a < id_b. Deterministic:
-    * est_jaccard is a function of the two signatures.
-    *
-    * Scale shape: candidates come from `minhashLshCandidates` (compact
-    * band-key self-join, frequency-capped); the signatures join BACK by id
-    * for the estimate, so the k-long signature arrays never ride the band
-    * exchange. */
-  def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-                      shingleWords: Int = 3, k: Int = 64, bands: Int = 16,
-                      minJaccard: Double = 0.5,
-                      maxBlock: Long = DefaultMaxBlock,
-                      materialize: Boolean = true,
-                      reliableCheckpoint: Boolean = false): DataFrame = {
-    // ONE materialized signature table feeds candidate generation AND both
-    // verify join-backs — the minhash sketch is evaluated exactly once
-    val sigs = materializedSigs(df, idCol, textCol, shingleWords, k,
-      materialize, reliableCheckpoint)
-    candidatesFromSigs(sigs, k, bands, maxBlock)
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (aggregate(zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / lit(k)).as("est_jaccard"))
-      .where(col("est_jaccard") >= minJaccard)
-  }
-
   /** NULL-SAFE left join of a per-id result frame onto the checked id
     * anchor — the shared tail of the flag/keep-first operators. A
     * (necessarily unique — the anchor raise_errors on duplicates) null-id
@@ -212,38 +149,16 @@ object Dedup {
   private def materialized(df: DataFrame, on: Boolean, reliable: Boolean): DataFrame =
     if (on) checkpointDf(df, reliable) else df
 
-  /** The (id, sig) minhash table, checkpointed once so the sketch is
-    * evaluated exactly once no matter how many plan consumers read it. */
-  private def materializedSigs(df: DataFrame, idCol: String, textCol: String,
-                               shingleWords: Int, k: Int,
-                               materialize: Boolean, reliable: Boolean): DataFrame =
-    materialized(
-      df.select(
-        col(idCol).as("id"),
-        graft.functions.SketchFunctions.minhashSig(col(textCol), shingleWords, k).as("sig")),
-      materialize, reliable)
-
-  /** Banded-LSH candidate pairs (id_a < id_b) — the shared candidate
-    * generator for the exact-verified dedup operators. Only
-    * (band_idx, band_hash, id) triples cross the self-join exchange: 3
-    * bigints per (row, band), never signatures, shingles, or text.
-    * Over-popular (band_idx, band_hash) blocks — boilerplate pages whose
-    * shared band would make the pair count quadratic — degrade to LINEAR
-    * star candidates against the block's min id (`splitBlocks`; ON by
-    * default, `maxBlock = 0` disables). `materialize` checkpoints the
-    * (id, sig) table so the signatures are computed once, not once per
-    * plan consumer; the banded explode re-derives from it cheaply. */
-  def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String,
-                           shingleWords: Int, k: Int, bands: Int,
-                           maxBlock: Long = DefaultMaxBlock,
-                           materialize: Boolean = true,
-                           reliableCheckpoint: Boolean = false): DataFrame =
-    candidatesFromSigs(
-      materializedSigs(df, idCol, textCol, shingleWords, k, materialize, reliableCheckpoint),
-      k, bands, maxBlock)
-
-  private def candidatesFromSigs(sigs: DataFrame, k: Int, bands: Int,
-                                 maxBlock: Long): DataFrame = {
+  /** Banded-LSH candidate pairs (id_a < id_b) over an (id, sig) minhash
+    * table — the shared candidate generator for the exact-verified dedup
+    * operators. Only (band_idx, band_hash, id) triples cross the self-join
+    * exchange: 3 bigints per (row, band), never signatures, shingles, or
+    * text. Over-popular (band_idx, band_hash) blocks — boilerplate pages
+    * whose shared band would make the pair count quadratic — degrade to
+    * LINEAR star candidates against the block's min id (`splitBlocks`; ON
+    * by default, `maxBlock = 0` disables). */
+  private[operators] def candidatesFromSigs(sigs: DataFrame, k: Int, bands: Int,
+                                            maxBlock: Long): DataFrame = {
     val banded = sigs
       .select(col("id"), posexplode(lshBands(col("sig"), k, bands)).as(Seq("band_idx", "band_hash")))
     val keys = Seq("band_idx", "band_hash")
@@ -268,28 +183,10 @@ object Dedup {
   // ---------- SimHash ----------
 
   /** 64-bit SimHash over whitespace tokens: per-bit vote of xxhash64(token),
-    * folded into one bigint. Map-local, native expressions. */
-  /** Fast path: native Catalyst expression (bit-identical to the
-    * declarative formulation — see SketchExpressionsSpec). */
+    * folded into one bigint. Native Catalyst expression, bit-identical to
+    * the declarative reference in `DedupReference` (SketchExpressionsSpec). */
   def simhash(textCol: Column): Column =
     graft.functions.SketchFunctions.simhash64(textCol)
-
-  def simhashDeclarative(textCol: Column): Column = {
-    // hash each token once; the 64-bit vote loop then only shifts
-    val tokenHashes = transform(split(textCol, " "), t => xxhash64(t))
-    val votes = aggregate(
-      tokenHashes,
-      transform(sequence(lit(0), lit(63)), _ => lit(0L)),
-      (acc, h) => zip_with(
-        acc,
-        transform(sequence(lit(0), lit(63)),
-          b => when(call_function("shiftright", h, b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)),
-        (a, v) => a + v))
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(63)),
-        (v, b) => when(v > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
-  }
 
   /** SimHash near-duplicate pairs within a hamming radius, using 16-bit
     * chunk blocking (any pair at distance <= 3 shares one of 4 chunks —
@@ -311,34 +208,10 @@ object Dedup {
       materialize = materialize)
   }
 
-  /** Oracle-portable simhash: the same per-bit vote, but the per-token hash
-    * is the top 60 bits of md5(token) — expressible in ANSI SQL
-    * (`CAST('0x' || substring(md5(t),1,15) AS BIGINT)`), unlike xxhash64.
-    * 60 bits so the value stays positive in a signed BIGINT on both
-    * engines. The production path stays the native codegen'd
-    * `simhash` (xxhash64); this variant exists so the simhash FAMILY is
-    * hash-exact checkable against an external engine (q18). */
-  def simhashMd5Declarative(textCol: Column, nBits: Int = 60): Column = {
-    val tokenHashes = transform(split(textCol, " "),
-      t => conv(substring(md5(t), 1, 15), 16, 10).cast("long"))
-    val votes = aggregate(
-      tokenHashes,
-      transform(sequence(lit(0), lit(nBits - 1)), _ => lit(0L)),
-      (acc, h) => zip_with(
-        acc,
-        transform(sequence(lit(0), lit(nBits - 1)),
-          b => when(call_function("shiftright", h, b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)),
-        (a, v) => a + v))
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(nBits - 1)),
-        (v, b) => when(v > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
-  }
-
   /** `simhashPairs` over the oracle-portable md5 simhash (60 bits, 4 chunks
     * of 15 — the radius-3 pigeonhole guarantee is unchanged). Hot path is
-    * the native codegen'd SimHashMd5 expression (bit-identical to
-    * `simhashMd5Declarative`; SketchExpressionsSpec). */
+    * the native codegen'd SimHashMd5 expression, bit-identical to the
+    * declarative reference in `DedupReference` (SketchExpressionsSpec). */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            maxHamming: Int = 3, maxBlock: Long = 0L,
                            materialize: Boolean = true): DataFrame =
@@ -355,7 +228,7 @@ object Dedup {
     * `materialize` (default true) checkpoints the compact (id, sh) sketch
     * frame once — both self-join sides (and, with the cap on, the block
     * stats) otherwise re-run the simhash pass over the full corpus text
-    * per consumer (the materializedSigs rationale; r6). */
+    * per consumer (the `materialized` rationale; r6). */
   private def simhashPairsOn(hashed0: DataFrame, nBits: Int,
                              maxHamming: Int, maxBlock: Long,
                              materialize: Boolean = true): DataFrame = {
@@ -624,7 +497,7 @@ object Dedup {
     * Scale shape (replaces the old single-min-shingle blocking, which put
     * every document sharing one popular min-shingle into one quadratic
     * block and shuffled full shingle arrays with the rows):
-    *  1. candidates from `minhashLshCandidates` — the self-join exchange
+    *  1. candidates from `candidatesFromSigs` — the self-join exchange
     *     carries only (band_idx, band_hash, id) triples;
     *  2. the (small) candidate pair set joins back to the per-id distinct
     *     shingle-hash arrays (broadcast when candidates fit, one O(N) hash

@@ -14,10 +14,10 @@ final case class MediaRow(
     bytes: Array[Byte]
 )
 
-/** Decoded/derived features. The decode itself is STUBBED (this container
-  * has no codec libraries); the Spark-side plumbing — schema, typed Dataset
-  * transform, partition-sized batching, deterministic output — is real and
-  * tested. A production deployment swaps `decodeStub` for a real codec
+/** Decoded/derived features. The decode itself is STUBBED (no codec library
+  * is a dependency); the Spark-side plumbing — schema, typed Dataset
+  * transform, deterministic output — is real and run by q28 and q29.
+  * A production deployment swaps `decodeStub` for a real codec
   * (JavaCPP/FFmpeg or an Arrow-batched Python worker) without touching the
   * plan shape. */
 final case class MediaFeatures(
@@ -34,12 +34,19 @@ final case class MediaFeatures(
 
 object Multimodal {
 
-  /** Deterministic fake decode: dimensions and an 8-dim feature vector
-    * derived from a 64-bit content hash. Marker for the real codec. */
-  def decodeStub(kind: String, bytes: Array[Byte]): (Int, Int, Int, Seq[Float]) = {
+  /** FNV-1a over the payload: the content identity every feature row
+    * carries, and the seed of the stub decode. */
+  def contentHash(bytes: Array[Byte]): Long = {
     var h = 0xcbf29ce484222325L
     var i = 0
     while (i < bytes.length) { h = (h ^ (bytes(i) & 0xffL)) * 0x100000001b3L; i += 1 }
+    h
+  }
+
+  /** Deterministic fake decode: dimensions and an 8-dim feature vector
+    * derived from the payload's [[contentHash]] `h`. Marker for the real
+    * codec, which reads the payload bytes instead. */
+  def decodeStub(kind: String, h: Long): (Int, Int, Int, Seq[Float]) = {
     val w = 64 + (math.abs(splitmix64(h ^ 1)) % 1024).toInt
     val ht = 64 + (math.abs(splitmix64(h ^ 2)) % 1024).toInt
     val frames = kind match {
@@ -53,13 +60,6 @@ object Multimodal {
     (w, ht, frames, emb)
   }
 
-  def contentHash(bytes: Array[Byte]): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) { h = (h ^ (bytes(i) & 0xffL)) * 0x100000001b3L; i += 1 }
-    h
-  }
-
   /** Feature extraction as a typed mapPartitions (the Scala analogue of a
     * mapInPandas batch UDF): map-local, shuffle-free; the binary column is
     * pruned at the scan when downstream selects drop it. */
@@ -68,48 +68,12 @@ object Multimodal {
     ds.mapPartitions { it =>
       it.map { row =>
         val bytes = if (row.bytes == null) Array.emptyByteArray else row.bytes
-        val (w, h, frames, emb) = decodeStub(row.kind, bytes)
+        val hash = contentHash(bytes)
+        val (w, h, frames, emb) = decodeStub(row.kind, hash)
         MediaFeatures(row.media_id, row.url, row.kind, bytes.length.toLong,
-          contentHash(bytes), w, h, frames, emb)
+          hash, w, h, frames, emb)
       }
     }
-  }
-
-  /** Batch-shaped decode plumbing: rows flow to the (stub) codec in
-    * fixed-size record batches — the shape a real Arrow-batched codec
-    * worker (mapInPandas / JavaCPP-FFmpeg) consumes, so swapping the stub
-    * for a real decoder changes one function, not the plan. Output is
-    * row-identical to `extractFeatures` for every batch size
-    * (MultimodalSpec). */
-  def extractFeaturesBatched(ds: Dataset[MediaRow], batchSize: Int = 64): Dataset[MediaFeatures] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(decodeStubBatch)
-    }
-  }
-
-  /** The batch entry point a real codec would implement (one upload/DMA or
-    * one Arrow RecordBatch per call). */
-  def decodeStubBatch(batch: Seq[MediaRow]): Seq[MediaFeatures] =
-    batch.map { row =>
-      val bytes = if (row.bytes == null) Array.emptyByteArray else row.bytes
-      val (w, h, frames, emb) = decodeStub(row.kind, bytes)
-      MediaFeatures(row.media_id, row.url, row.kind, bytes.length.toLong,
-        contentHash(bytes), w, h, frames, emb)
-    }
-
-  /** Resize plumbing (decode side stubbed): clamps target dims to the
-    * source aspect box and derives a deterministic fake resized-content
-    * hash — schema, pruning and determinism are the real parts. */
-  def resizeStub(features: Dataset[MediaFeatures], targetW: Int, targetH: Int): DataFrame = {
-    val scale = least(
-      lit(targetW.toDouble) / greatest(col("width"), lit(1)).cast("double"),
-      lit(targetH.toDouble) / greatest(col("height"), lit(1)).cast("double"))
-    features.toDF()
-      .withColumn("resized_w", greatest(floor(col("width") * scale), lit(1)).cast("int"))
-      .withColumn("resized_h", greatest(floor(col("height") * scale), lit(1)).cast("int"))
-      .withColumn("resized_hash",
-        xxhash64(col("content_hash"), col("resized_w"), col("resized_h")))
   }
 
   /** Deterministic synthetic media table (payload = hashed filler bytes). */

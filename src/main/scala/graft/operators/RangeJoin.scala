@@ -49,50 +49,4 @@ object RangeJoin {
       .where(col(ptTs) >= col(startTs) && col(ptTs) <= col(endTs))
       .drop("__bucket")
   }
-
-  /** The range join as EXECUTABLE SPARK SQL — same bucketized equi-join
-    * plan the Scala API declares, for SQL-first users (a raw BETWEEN join
-    * in SQL degenerates on hot keys; this recipe does not). Table/view
-    * names resolve through the session catalog to enumerate output
-    * columns. Rows identical to [[rangeJoin]] (RangeJoinSpec parity). */
-  def sqlRecipe(spark: org.apache.spark.sql.SparkSession,
-                pointsTable: String, intervalsTable: String, keys: Seq[String],
-                ptTs: String, startTs: String, endTs: String,
-                bucketSeconds: Long = 86400L): String = {
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
-    import SqlIdent.{col => q, table => qt}
-    val points = spark.table(pointsTable)
-    val intervals = spark.table(intervalsTable)
-    val collide = points.columns.toSet.intersect(intervals.columns.toSet) -- keys.toSet
-    require(collide.isEmpty, s"non-key columns present on both sides: $collide")
-    require(!(points.columns ++ intervals.columns).contains("__bucket"),
-      "inputs use the rangeJoin-reserved column name __bucket")
-    val keyList = keys.map(q).mkString(", ")
-    val ptRest = points.columns.filterNot(keys.contains).map(c => s"__pt.${q(c)}")
-    val ivRest = intervals.columns.filterNot(keys.contains).map(c => s"__iv.${q(c)}")
-    val outCols = (keys.map(q) ++ ptRest ++ ivRest).mkString(", ")
-    s"""WITH __iv AS (
-       |  SELECT *, explode(sequence(
-       |      CAST(floor(unix_timestamp(${q(startTs)}) / $bucketSeconds) AS BIGINT),
-       |      CAST(floor(unix_timestamp(${q(endTs)}) / $bucketSeconds) AS BIGINT))) AS __bucket
-       |  FROM ${qt(intervalsTable)} WHERE ${q(endTs)} >= ${q(startTs)}
-       |), __pt AS (
-       |  SELECT *, CAST(floor(unix_timestamp(${q(ptTs)}) / $bucketSeconds) AS BIGINT) AS __bucket
-       |  FROM ${qt(pointsTable)}
-       |)
-       |SELECT $outCols
-       |FROM __pt JOIN __iv USING ($keyList, __bucket)
-       |WHERE __pt.${q(ptTs)} >= __iv.${q(startTs)} AND __pt.${q(ptTs)} <= __iv.${q(endTs)}""".stripMargin
-  }
-
-  /** Register the range join as a named temp view — the pure-SQL entry
-    * point mirroring [[AsofJoin.registerView]]: one call, then SQL-only
-    * users query `SELECT * FROM viewName` and get the bucketized equi-join
-    * plan instead of the hot-key-degenerate raw BETWEEN join. */
-  def registerView(spark: org.apache.spark.sql.SparkSession, viewName: String,
-                   pointsTable: String, intervalsTable: String, keys: Seq[String],
-                   ptTs: String, startTs: String, endTs: String,
-                   bucketSeconds: Long = 86400L): Unit =
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${SqlIdent.table(viewName)} AS\n" +
-      sqlRecipe(spark, pointsTable, intervalsTable, keys, ptTs, startTs, endTs, bucketSeconds))
 }

@@ -35,7 +35,4 @@ private[graft] object ScorePack {
 
   def unpackScore(packed: Column): Column =
     floor(packed / MaxId).cast("long")
-
-  def unpackId(packed: Column): Column =
-    (lit(MaxId - 1) - (packed % MaxId)).cast("long")
 }

@@ -23,54 +23,22 @@ object Similarity {
 
   private def asDouble(a: Column): Column = a.cast("array<double>")
 
-  /** dot(a, b): ordered left fold in double precision. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => x * y),
-      lit(0.0d), (acc, v) => acc + v)
-
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Native codegen'd cosine — bit-identical to `cosineDeclarative`
-    * (LshExpressionsSpec) and to the DuckDB oracle arithmetic. */
+  /** Native codegen'd cosine — bit-identical to the interpreted-HOF
+    * reference in `SimilarityReference` (LshExpressionsSpec) and to the
+    * DuckDB oracle arithmetic. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.LshFunctions.cosineSim(a, b)
 
-  /** The interpreted-HOF formulation `cosine` is verified against. */
-  def cosineDeclarative(a: Column, b: Column): Column =
-    dot(a, b) / (l2norm(a) * l2norm(b))
-
-  /** Deterministic pseudo-random hyperplane coefficient for (plane, dim):
-    * xxhash64 folded to [-0.5, 0.5). Same value on every executor/JVM. */
-  private def coeff(plane: Column, dim: Column): Column =
-    (pmod(xxhash64(plane, dim), lit(100000L)).cast("double") / lit(100000.0d)) - lit(0.5d)
-
-  /** nBits-bit random-hyperplane signature of a vector for hash table
-    * `table`: bit p is the sign of dot(vec, plane_{table*nBits+p}). Buckets
-    * collide for nearby directions (Charikar's cosine LSH; the multi-table
-    * scheme is the standard E2LSH construction: L independent tables, union
-    * of candidates). Declarative formulation — the hot path uses the native
-    * codegen'd HyperplaneSigs expression (bit-identical; see
-    * LshExpressionsSpec). */
-  def hyperplaneSignature(vec: Column, nBits: Int, table: Int = 0): Column =
-    aggregate(
-      transform(sequence(lit(0), lit(nBits - 1)), p => {
-        val plane = p + lit(table * nBits)
-        val d = aggregate(
-          zip_with(asDouble(vec), sequence(lit(0), size(vec) - 1), (x, i) => x * coeff(plane, i)),
-          lit(0.0d), (acc, v) => acc + v)
-        when(d >= 0, call_function("shiftleft", lit(1L), p)).otherwise(lit(0L))
-      }),
-      lit(0L), (acc, x) => acc + x)
-
-  /** The L independent table signatures as one array (posexplode to
-    * (table_idx, bucket)) — native expression with a memoized per-shape
-    * coefficient matrix. */
+  /** The L independent nBits-bit random-hyperplane signatures of a vector
+    * as one array (posexplode to (table_idx, bucket)): bit p of table t is
+    * the sign of dot(vec, plane_{t*nBits+p}), so buckets collide for nearby
+    * directions (Charikar's cosine LSH; the multi-table scheme is the
+    * standard E2LSH construction: L independent tables, union of
+    * candidates). Native expression with a memoized per-shape coefficient
+    * matrix, bit-identical to the declarative reference in
+    * `SimilarityReference` (LshExpressionsSpec). */
   def signatures(vec: Column, nBits: Int, nTables: Int): Column =
     graft.functions.LshFunctions.hyperplaneSigs(vec, nBits, nTables)
-
-  /** The interpreted-HOF formulation `signatures` is verified against. */
-  def signaturesDeclarative(vec: Column, nBits: Int, nTables: Int): Column =
-    array((0 until nTables).map(t => hyperplaneSignature(vec, nBits, t)): _*)
 
   /** Bucket-occupancy sizing: nBits = ceil(log2(n / targetOccupancy)), so
     * the expected bucket population stays ~constant as the corpus grows
@@ -176,248 +144,6 @@ object Similarity {
     explodeTopK(
       scored.groupBy(col("query_id")).agg(topKByScore(col("cos"), col("id"), k).as("top")))
   }
-
-  // ---------- IVF (inverted-file index, k-means coarse quantizer) ----------
-
-  /** Deterministic IVF centroid training: Lloyd iterations where the
-    * assignment runs map-local against broadcast (closure) centroids and
-    * the update accumulates INTEGER-scaled components (x * 2^20 rounded to
-    * long) — integer addition commutes exactly, so the trained centroids
-    * are bit-identical under any partitioning or executor count (a
-    * floating-point mean is not). Init: the nlist vectors with the
-    * smallest md5(id) — a deterministic, order-free sample.
-    *
-    * Scale shape per iteration: one corpus scan, map-local partial sums
-    * (nlist x dim longs per partition), one tiny shuffle of those
-    * partials; centroids (nlist x dim doubles) live on the driver and ship
-    * in the task closure. */
-  /** Driver-memory ceiling for the closure-shipped centroid matrix:
-    * nlist x dim doubles live on the driver and ride in every task closure,
-    * so the trainer refuses matrices above ~16M cells (~128 MB) — at dim
-    * 1024 that is nlist <= 16384, comfortably past the sqrt(n) sizing for
-    * n = 10^8 vectors. Beyond that an IVF index wants its centroids in a
-    * broadcast joined table, not a closure — out of scope here, guarded
-    * loudly instead of failing as an executor OOM mid-run. */
-  val MaxCentroidCells: Long = 1L << 24
-
-  /** sqrt(n) nlist auto-sizing (the standard IVF rule: probe cost and
-    * in-list scan cost balance at nlist ~ sqrt(n)), clamped to [1, maxNlist]. */
-  def ivfAutoNlist(n: Long, maxNlist: Int = 16384): Int =
-    math.max(1L, math.min(maxNlist.toLong, math.round(math.sqrt(math.max(n, 0L).toDouble)))).toInt
-
-  /** Rows a distributed vector consumer can use: id and vec non-null and no
-    * null elements inside the array. The per-row degradation contract:
-    * corrupt rows are DROPPED from index training/assignment (mirroring
-    * CosineSim, which scores corrupt rows as null) — never a task failure. */
-  private def cleanVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<double>").as("vec"))
-      .where(col("id").isNotNull && col("vec").isNotNull &&
-        !exists(col("vec"), _.isNull))
-
-  def trainIvfCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                        nlist: Int, iters: Int = 5): Array[Array[Double]] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val Scale = (1L << 20).toDouble
-
-    val vecs = cleanVectors(corpus, idCol, vecCol).as[(Long, Seq[Double])]
-
-    val sampled: Array[Array[Double]] = vecs.toDF()
-      .orderBy(md5(col("id").cast("string")), col("id"))
-      .limit(nlist).as[(Long, Seq[Double])]
-      .collect().map(_._2.toArray)
-    if (sampled.isEmpty) return sampled // empty corpus: nothing to train
-    // the trained dimension is the WIDEST sampled vector, and shorter
-    // sampled vectors are zero-padded: `cs(0).length` alone would let a
-    // single ragged row that happens to md5-sort first silently truncate
-    // every centroid (and every later sum/score loop) to its length
-    val dim = sampled.iterator.map(_.length).max
-    var centroids: Array[Array[Double]] = sampled.map(a =>
-      if (a.length == dim) a else java.util.Arrays.copyOf(a, dim))
-    require(nlist.toLong * dim <= MaxCentroidCells,
-      s"IVF centroid matrix nlist=$nlist x dim=$dim exceeds " +
-        s"$MaxCentroidCells cells — the closure-shipped driver-held centroids " +
-        "would dominate task size; lower nlist (ivfAutoNlist) or shard the index")
-
-    for (_ <- 1 to iters) {
-      val cs = centroids
-      // per-partition integer-scaled partial sums per centroid
-      val partials = vecs.mapPartitions { it =>
-        val dim = cs(0).length
-        val sums = Array.ofDim[Long](cs.length, dim)
-        val counts = new Array[Long](cs.length)
-        it.foreach { case (_, v) =>
-          val cid = nearestCentroid(v, cs)
-          // ragged rows (shorter than the trained dim) accumulate their
-          // prefix — same degradation as centroidScore's min-length dot
-          var d = 0
-          val n = math.min(dim, v.length)
-          while (d < n) { sums(cid)(d) += math.round(v(d) * Scale); d += 1 }
-          counts(cid) += 1
-        }
-        (0 until cs.length).iterator
-          .filter(c => counts(c) > 0)
-          .map(c => (c, counts(c), sums(c).toSeq))
-      }
-      val merged = partials
-        .groupByKey(_._1)
-        .reduceGroups((a, b) => (a._1, a._2 + b._2, a._3.zip(b._3).map(t => t._1 + t._2)))
-        .map(_._2)
-        .collect()
-      val next = centroids.map(_.clone())
-      merged.foreach { case (cid, n, sums) =>
-        next(cid) = sums.map(s => s.toDouble / Scale / n).toArray
-      }
-      centroids = next
-    }
-    centroids
-  }
-
-  /** cosine(v, centroid c) — the ONE scoring rule assignment and probing
-    * share (zero-norm degrades below every real score). */
-  private def centroidScore(v: Seq[Double], cv: Array[Double]): Double = {
-    var dot = 0.0
-    var nc = 0.0
-    var nv = 0.0
-    var d = 0
-    val n = math.min(cv.length, v.length)
-    while (d < n) { dot += v(d) * cv(d); nc += cv(d) * cv(d); nv += v(d) * v(d); d += 1 }
-    if (nc == 0 || nv == 0) Double.NegativeInfinity
-    else dot / (math.sqrt(nc) * math.sqrt(nv))
-  }
-
-  /** argmax over centroids of cosine(v, c) — deterministic ties to the
-    * lower centroid id. */
-  private def nearestCentroid(v: Seq[Double], cs: Array[Array[Double]]): Int = {
-    var best = 0
-    var bestScore = Double.NegativeInfinity
-    var c = 0
-    while (c < cs.length) {
-      val score = centroidScore(v, cs(c))
-      if (score > bestScore) { bestScore = score; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** The nprobe centroid ids nearest to v (cosine, deterministic order). */
-  private def probeLists(v: Seq[Double], cs: Array[Array[Double]], nprobe: Int): Seq[Int] = {
-    cs.indices.map(c => (centroidScore(v, cs(c)), c))
-      .sortBy(t => (-t._1, t._2)).take(nprobe).map(_._2)
-  }
-
-  /** IVF approximate top-k: corpus rows are bucketed by nearest centroid
-    * (one map-local pass, closure-shipped centroids); each query probes its
-    * `nprobe` nearest lists; matches are scored exactly and reduced by the
-    * bounded top-k aggregate. Complements LSH: the index adapts to the
-    * data distribution (clustered corpora get balanced lists where fixed
-    * hyperplanes do not). Candidate volume per query ~ nprobe/nlist of the
-    * corpus; size nlist ~ sqrt(n) at scale and raise nprobe for recall. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame,
-              idCol: String, vecCol: String, k: Int,
-              nlist: Int = 16, nprobe: Int = 4, trainIters: Int = 5): DataFrame =
-    ivfTopKWith(corpus, queries, idCol, vecCol, k,
-      trainIvfCentroids(corpus, idCol, vecCol, nlist, trainIters), nprobe)
-
-  /** IVF search against a PRE-TRAINED coarse quantizer — at corpus scale
-    * the index is trained once (hours of k-means over billions of
-    * vectors), persisted ([[saveIvfCentroids]]/[[loadIvfCentroids]]), and
-    * reused by every query batch; re-training per call would dominate
-    * query cost and silently shift bucket boundaries between runs.
-    *
-    * This variant still ASSIGNS the corpus per call (one map-local pass).
-    * A static corpus serving many query batches should also persist the
-    * inverted lists: write [[assignIvf]]'s output once (ideally
-    * partitioned/bucketed by `cid`) and search it with
-    * [[ivfTopKAssigned]] — then per-batch work is proportional to the
-    * probed lists, not the corpus. */
-  def ivfTopKWith(corpus: DataFrame, queries: DataFrame,
-                  idCol: String, vecCol: String, k: Int,
-                  centroids: Array[Array[Double]], nprobe: Int = 4): DataFrame =
-    ivfTopKAssigned(assignIvf(corpus, idCol, vecCol, centroids),
-      queries, idCol, vecCol, k, centroids, nprobe)
-
-  /** The inverted-list assignment: (cid, id, vec), one map-local pass
-    * with closure-shipped centroids. Persist this (partitioned by `cid`)
-    * to make the IVF index fully materialized. Empty centroids (an empty
-    * training corpus) yield an empty frame. */
-  def assignIvf(corpus: DataFrame, idCol: String, vecCol: String,
-                centroids: Array[Array[Double]]): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cs = centroids
-    if (cs.isEmpty)
-      cleanVectors(corpus, idCol, vecCol).limit(0)
-        .select(lit(0).as("cid"), col("id"), col("vec"))
-    else
-      cleanVectors(corpus, idCol, vecCol).as[(Long, Seq[Double])]
-        .mapPartitions(it => it.map { case (id, v) => (nearestCentroid(v, cs), id, v) })
-        .toDF("cid", "id", "vec")
-  }
-
-  /** Search a pre-assigned inverted-list frame (the [[assignIvf]]
-    * schema). With `assigned` read from storage partitioned by `cid`,
-    * the probe join prunes to the probed lists. */
-  def ivfTopKAssigned(assigned: DataFrame, queries: DataFrame,
-                      idCol: String, vecCol: String, k: Int,
-                      centroids: Array[Array[Double]], nprobe: Int = 4): DataFrame = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val cs = centroids
-
-    val probes = cleanVectors(queries, idCol, vecCol)
-      .withColumnRenamed("id", "query_id").as[(Long, Seq[Double])]
-      .flatMap { case (qid, v) => probeLists(v, cs, nprobe).map(c => (c, qid, v)) }
-      .toDF("cid", "query_id", "query_vec")
-
-    val scored = assigned.join(broadcast(probes), Seq("cid"))
-      .where(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id"),
-        cosine(col("vec"), col("query_vec")).as("cos"))
-    explodeTopK(
-      scored.groupBy(col("query_id")).agg(topKByScore(col("cos"), col("id"), k).as("top")))
-  }
-
-  /** Persist a trained quantizer as one snapshot batch of (centroid_id,
-    * centroid) rows through the same crash-safe table contract every
-    * other artifact uses (TableIO manifest commits; read with the
-    * matching loader). The default batch id is a CONTENT hash of the
-    * centroid matrix: re-saving the identical quantizer is an idempotent
-    * no-op (commit skips committed ids), while a RETRAINED quantizer gets
-    * a fresh id and becomes the new `readLatest` snapshot — a fixed name
-    * here would make every retrain a silent no-op serving stale
-    * centroids forever. */
-  def saveIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-                       centroids: Array[Array[Double]], tableRoot: String,
-                       batchId: String = null): Unit = {
-    import spark.implicits._
-    val id =
-      if (batchId != null) batchId
-      else {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val bb = java.nio.ByteBuffer.allocate(8)
-        // each row's LENGTH feeds the digest before its values: without
-        // the shape delimiter, [[1,2],[3,4]] and [[1,2,3,4]] flatten to
-        // the same byte stream and a retrain could silently no-op
-        centroids.foreach { row =>
-          bb.clear(); bb.putLong(row.length.toLong); md.update(bb.array())
-          row.foreach { v => bb.clear(); bb.putDouble(v); md.update(bb.array()) }
-        }
-        "ivf-" + graft.pdf.Crypto.hex(md.digest()).take(16)
-      }
-    new graft.sources.ParquetManifestTable(tableRoot).commit(
-      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-        .toSeq.toDF("centroid_id", "centroid"),
-      id)
-  }
-
-  /** Load the newest persisted quantizer (centroid_id order restored). */
-  def loadIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-                       tableRoot: String): Array[Array[Double]] =
-    new graft.sources.ParquetManifestTable(tableRoot).readLatest(spark)
-      .orderBy("centroid_id")
-      .collect().map(_.getSeq[Double](1).toArray)
 
   /** Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >= minCos):
     * multi-table LSH candidates, exactly verified.

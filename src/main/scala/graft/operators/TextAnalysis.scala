@@ -57,20 +57,16 @@ object TextAnalysis {
       regexp_replace(lower(textCol), "\\s", " "), "[^a-z0-9 ]", ""), " +", " "))
 
   /** BPE-ish subword-count estimate: word pieces of <= 4 chars. Native
-    * single-pass expression, bit-identical to [[bpeTokenEstimateDeclarative]]
-    * (SketchExpressionsSpec). */
+    * single-pass expression, bit-identical to the declarative reference in
+    * `TextAnalysisReference` (SketchExpressionsSpec). */
   def bpeTokenEstimate(textCol: Column): Column =
     graft.functions.SketchFunctions.bpeEstimate(textCol)
 
-  def bpeTokenEstimateDeclarative(textCol: Column): Column =
-    aggregate(transform(split(textCol, " "), t => ceil(length(t).cast("double") / 4.0d).cast("long")),
-      lit(0L), (acc, v) => acc + v)
-
-  private def nonAlnumRatioCol(textCol: Column): Column =
+  private[operators] def nonAlnumRatioCol(textCol: Column): Column =
     length(regexp_replace(textCol, "[a-zA-Z0-9 ]", "")).cast("double") /
       greatest(length(textCol), lit(1)).cast("double")
 
-  private def stopRatioCol(textCol: Column): Column = {
+  private[operators] def stopRatioCol(textCol: Column): Column = {
     val tokens = split(textCol, " ")
     val stopHits = aggregate(
       transform(tokens, t => when(lower(t).isin("the", "and", "of", "a", "to", "in", "is"), 1L).otherwise(0L)),
@@ -82,18 +78,10 @@ object TextAnalysis {
     * qualityColumns (q15), Curate's gate, and the q38/q50 oracles. Native
     * single-pass expression (the declarative form runs an interpreted
     * aggregate-over-transform per document for the stopword ratio);
-    * bit-identical to [[qualityScoreDeclarative]], SketchExpressionsSpec. */
+    * bit-identical to the declarative reference in `TextAnalysisReference`
+    * (SketchExpressionsSpec). */
   def qualityScore(textCol: Column): Column =
     graft.functions.SketchFunctions.qualityScore(textCol)
-
-  /** The declarative formulation the native expression replays IEEE-op by
-    * IEEE-op — and the shape every DuckDB oracle recomputes. */
-  def qualityScoreDeclarative(textCol: Column): Column = {
-    val lenScore = least(length(textCol).cast("double") / lit(500.0d), lit(1.0d))
-    (lenScore * lit(0.4d)) +
-      (least(stopRatioCol(textCol) * lit(5.0d), lit(1.0d)) * lit(0.3d)) +
-      ((lit(1.0d) - least(nonAlnumRatioCol(textCol) * lit(5.0d), lit(1.0d))) * lit(0.3d))
-  }
 
   /** Integer-scaled (1e4) quality score: floor of a double is bit-portable
     * and integer sums are order-independent — the aggregation/oracle-safe
@@ -122,26 +110,18 @@ object TextAnalysis {
 
   /** 64-bit rolling document fingerprint: ordered hash-chain fold of token
     * hashes (order-sensitive). Native codegen'd expression; bit-identical to
-    * `fingerprintDeclarative` (asserted in SketchExpressionsSpec). */
+    * the declarative reference in `TextAnalysisReference` (asserted in
+    * SketchExpressionsSpec). */
   def fingerprint(textCol: Column): Column =
     graft.functions.SketchFunctions.fingerprint64(textCol)
-
-  /** The declarative (interpreted-HOF) formulation the native expression is
-    * verified against. ANSI-safe — no overflowing arithmetic. */
-  def fingerprintDeclarative(textCol: Column): Column =
-    aggregate(transform(split(textCol, " "), t => xxhash64(t)),
-      lit(1469598103934665603L), (acc, h) => xxhash64(acc, h))
 
   /** Oracle-portable fingerprint: the md5 hash chain in hex-string space
     * (acc = md5(acc || md5(token))) — same order-sensitivity, but every
     * engine with md5() can recompute it (DuckDB: list_reduce + md5). Native
-    * codegen'd; bit-identical to `fingerprintMd5Declarative`. */
+    * codegen'd; bit-identical to the declarative reference in
+    * `TextAnalysisReference`. */
   def fingerprintMd5(textCol: Column): Column =
     graft.functions.SketchFunctions.fingerprintMd5(textCol)
-
-  def fingerprintMd5Declarative(textCol: Column): Column =
-    aggregate(transform(split(textCol, " "), t => md5(t)),
-      lit(""), (acc, h) => md5(concat(acc, h)))
 
   /** Greedy token-budget packing, two-level: each language is salted into
     * `shards` deterministic sub-shards packed independently, and local pack
@@ -333,23 +313,10 @@ object TextAnalysis {
     * tokens. Returns array<struct<chunk_idx:int, chunk:string>> — a pure
     * map-local NATIVE expression (one boundary pass + one byte-range copy
     * per chunk; explode downstream costs no shuffle). Bit-identical to
-    * [[tokenChunksDeclarative]] (SketchExpressionsSpec). */
+    * the declarative reference in `TextAnalysisReference`
+    * (SketchExpressionsSpec). */
   def tokenChunks(textCol: Column, size: Int, stride: Int): Column =
     graft.functions.SketchFunctions.tokenChunks(textCol, size, stride)
-
-  /** The declarative HOF formulation the native expression is verified
-    * against — and the reason the native one exists: `slice(split(...))`
-    * sits INSIDE the transform lambda, and interpreted HOFs re-evaluate it
-    * per chunk (no CSE), i.e. O(len^2/stride) per document. */
-  def tokenChunksDeclarative(textCol: Column, size: Int, stride: Int): Column = {
-    require(size > 0 && stride > 0 && stride <= size,
-      s"need 0 < stride <= size, got size=$size stride=$stride")
-    val tokens = split(textCol, " ")
-    transform(
-      sequence(lit(0), floor((org.apache.spark.sql.functions.size(tokens) - lit(1)) / lit(stride)).cast("int")),
-      i => struct(i.as("chunk_idx"),
-        array_join(slice(tokens, i * stride + 1, lit(size)), " ").as("chunk")))
-  }
 
   /** Deterministic stratified sample: per stratum, exactly min(k, n) rows —
     * the ones with the SMALLEST 52-bit md5 hash of `hashCol` (52 bits = 13
@@ -412,13 +379,4 @@ object TextAnalysis {
       .select((groupCols.map(col) ++ Seq(col("n_docs"), col("n_tokens"),
         when(col("__nn") > 0, col("__joined")).as("packed_text"))): _*)
   }
-
-  /** Convenience: the documents table with all analysis columns attached. */
-  def analyze(df: DataFrame, textCol: String): DataFrame =
-    df.select((col("*") +:
-      (langId(col(textCol)).as("detected_lang") +:
-        tokenCount(col(textCol)).as("token_count") +:
-        bpeTokenEstimate(col(textCol)).as("bpe_estimate") +:
-        fingerprint(col(textCol)).as("fingerprint") +:
-        qualityColumns(col(textCol)))): _*)
 }

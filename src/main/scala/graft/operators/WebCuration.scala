@@ -256,153 +256,6 @@ object WebCuration {
       "n_spans_struck", "WebCuration.keepFirstSpans")
   }
 
-  /** [[keepFirstSpans]] as EXECUTABLE SPARK SQL — the SQL surface for
-    * SQL-first users, composed entirely from the library's REGISTERED
-    * native functions (`token_chunks`, `excise_spans` — call
-    * `GraftFunctions.register(spark)` once per session) plus built-ins:
-    * same occurrence scan, same min-struct winner aggregate, same
-    * null-safe excision join-back. Two documented deltas vs the Scala
-    * operator: no duplicate-id raise_error (SQL has no clean loud-guard
-    * idiom — the caller guarantees unique ids), and no forced
-    * materialization of the occurrence frame — the `__occ` CTE feeds two
-    * consumers, so on a large corpus `CACHE TABLE`/persist the source (or
-    * use the Scala operator, whose `materialize=true` checkpoints it) to
-    * avoid tokenizing every document twice. Parity-asserted against the
-    * operator (WebCurationSpec). */
-  def keepFirstSpansSqlRecipe(table: String, idCol: String, textCol: String,
-                              w: Int = 13): String = {
-    require(w >= 1, s"shingle width must be >= 1, got $w")
-    import SqlIdent.{col => q, table => qt}
-    val (id, text) = (q(idCol), q(textCol))
-    s"""WITH __docs AS (
-       |  SELECT $id AS id, $text AS text FROM ${qt(table)}
-       |), __occ AS (
-       |  SELECT id, c.chunk_idx AS pos, md5(c.chunk) AS sh
-       |  FROM __docs LATERAL VIEW explode(token_chunks(text, $w, 1)) AS c
-       |  WHERE text IS NOT NULL AND size(split(c.chunk, ' ')) = $w
-       |), __win AS (
-       |  SELECT sh, min(struct(id, pos)) AS w FROM __occ GROUP BY sh
-       |), __struck AS (
-       |  SELECT o.id, count(1) AS n_spans_struck,
-       |         sort_array(collect_list(o.pos)) AS hits
-       |  FROM __occ o JOIN __win ON o.sh = __win.sh
-       |  WHERE struct(o.id, o.pos) != __win.w
-       |  GROUP BY o.id
-       |), __ex AS (
-       |  SELECT d.id,
-       |         excise_spans(d.text, coalesce(s.hits, CAST(array() AS array<int>)), $w) AS ex,
-       |         coalesce(s.n_spans_struck, 0L) AS n_spans_struck
-       |  FROM __docs d LEFT JOIN __struck s ON d.id <=> s.id
-       |)
-       |SELECT id, coalesce(ex.n_tokens, 0L) AS n_tokens, n_spans_struck,
-       |       coalesce(ex.n_kept, 0L) AS n_kept, ex.clean AS clean_text
-       |FROM __ex""".stripMargin
-  }
-
-  /** Register [[keepFirstSpansSqlRecipe]] as a named temp view — the
-    * pure-SQL entry point mirroring `AsofJoin.registerView`. Registers
-    * the graft native functions into the session first. */
-  def registerKeepFirstSpansView(spark: org.apache.spark.sql.SparkSession,
-                                 viewName: String, table: String,
-                                 idCol: String, textCol: String,
-                                 w: Int = 13): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${SqlIdent.table(viewName)} AS\n" +
-      keepFirstSpansSqlRecipe(table, idCol, textCol, w))
-  }
-
-  /** [[keepFirstLines]] as ONE executable Spark-SQL statement over the
-    * registered natives (`token_chunks`) — the pure-SQL twin of
-    * [[keepFirstSpansSqlRecipe]] at line granularity. Same plan shape as
-    * the Scala operator: winner per line md5 is a min-struct AGGREGATE
-    * (no window over the md5 keyspace), reassembly is an ordered
-    * collect per document, and every document re-anchors through a
-    * null-safe LEFT JOIN (null-text docs report 0/0/NULL). The Scala
-    * API's duplicate-id guard is the one part SQL can't express cheaply;
-    * the recipe documents the ids-unique precondition instead. */
-  def keepFirstLinesSqlRecipe(table: String, idCol: String, textCol: String,
-                              chunk: Int = 8): String = {
-    require(chunk >= 1, s"chunk must be >= 1, got $chunk")
-    import SqlIdent.{col => q, table => qt}
-    val (id, text) = (q(idCol), q(textCol))
-    s"""WITH __docs AS (
-       |  SELECT $id AS id, $text AS text FROM ${qt(table)}
-       |), __lines AS (
-       |  SELECT id, c.chunk_idx AS idx, c.chunk AS line, md5(c.chunk) AS lmd5
-       |  FROM __docs LATERAL VIEW explode(token_chunks(text, $chunk, $chunk)) AS c
-       |  WHERE text IS NOT NULL
-       |), __win AS (
-       |  SELECT lmd5, min(struct(id, idx)) AS w FROM __lines GROUP BY lmd5
-       |), __kept AS (
-       |  SELECT l.id, count(1) AS n_lines,
-       |         sum(CASE WHEN struct(l.id, l.idx) = __win.w THEN 1L ELSE 0L END) AS n_kept,
-       |         array_join(transform(array_sort(collect_list(
-       |           CASE WHEN struct(l.id, l.idx) = __win.w THEN struct(l.idx, l.line) END)),
-       |           s -> s.line), '\n') AS joined
-       |  FROM __lines l JOIN __win ON l.lmd5 = __win.lmd5
-       |  GROUP BY l.id
-       |)
-       |SELECT d.id, coalesce(k.n_lines, 0L) AS n_lines,
-       |       coalesce(k.n_kept, 0L) AS n_kept,
-       |       CASE WHEN coalesce(k.n_kept, 0L) > 0 THEN k.joined END AS clean_text
-       |FROM __docs d LEFT JOIN __kept k ON d.id <=> k.id""".stripMargin
-  }
-
-  /** [[keepFirstUnits]] as ONE executable Spark-SQL statement — pure
-    * builtins (no natives needed: the unit split is `split` on the
-    * regex-quoted literal separator with empties removed). Same plan
-    * shape and same documented ids-unique precondition as the line/span
-    * recipes. Parity-asserted against the operator (WebCurationSpec). */
-  def keepFirstUnitsSqlRecipe(table: String, idCol: String, textCol: String,
-                              sep: String): String = {
-    require(sep.nonEmpty, "keepFirstUnitsSqlRecipe needs a non-empty separator")
-    import SqlIdent.{col => q, strLit, table => qt}
-    val (id, text) = (q(idCol), q(textCol))
-    val sepPat = strLit(java.util.regex.Pattern.quote(sep))
-    val sepLit = strLit(sep)
-    s"""WITH __docs AS (
-       |  SELECT $id AS id, $text AS text FROM ${qt(table)}
-       |), __units AS (
-       |  SELECT id, idx, unit, md5(unit) AS um
-       |  FROM __docs
-       |  LATERAL VIEW posexplode(array_remove(split(text, $sepPat), '')) AS idx, unit
-       |  WHERE text IS NOT NULL
-       |), __win AS (
-       |  SELECT um, min(struct(id, idx)) AS w FROM __units GROUP BY um
-       |), __kept AS (
-       |  SELECT u.id, count(1) AS n_units,
-       |         sum(CASE WHEN struct(u.id, u.idx) = __win.w THEN 1L ELSE 0L END) AS n_kept,
-       |         array_join(transform(array_sort(collect_list(
-       |           CASE WHEN struct(u.id, u.idx) = __win.w THEN struct(u.idx, u.unit) END)),
-       |           s -> s.unit), $sepLit) AS joined
-       |  FROM __units u JOIN __win ON u.um = __win.um
-       |  GROUP BY u.id
-       |)
-       |SELECT d.id, coalesce(k.n_units, 0L) AS n_units,
-       |       coalesce(k.n_kept, 0L) AS n_kept,
-       |       CASE WHEN coalesce(k.n_kept, 0L) > 0 THEN k.joined END AS clean_text
-       |FROM __docs d LEFT JOIN __kept k ON d.id <=> k.id""".stripMargin
-  }
-
-  /** Register [[keepFirstUnitsSqlRecipe]] as a named temp view. */
-  def registerKeepFirstUnitsView(spark: org.apache.spark.sql.SparkSession,
-                                 viewName: String, table: String,
-                                 idCol: String, textCol: String,
-                                 sep: String): Unit =
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${SqlIdent.table(viewName)} AS\n" +
-      keepFirstUnitsSqlRecipe(table, idCol, textCol, sep))
-
-  /** Register [[keepFirstLinesSqlRecipe]] as a named temp view — the
-    * pure-SQL entry point mirroring [[registerKeepFirstSpansView]]. */
-  def registerKeepFirstLinesView(spark: org.apache.spark.sql.SparkSession,
-                                 viewName: String, table: String,
-                                 idCol: String, textCol: String,
-                                 chunk: Int = 8): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${SqlIdent.table(viewName)} AS\n" +
-      keepFirstLinesSqlRecipe(table, idCol, textCol, chunk))
-  }
-
   // ---------- PII ----------
 
   /** Conservative ASCII PII patterns, deliberately restricted to syntax
@@ -769,64 +622,4 @@ object WebCuration {
           .when(col("batch_md5") <=> col("base_md5"), lit("unchanged"))
           .otherwise(lit("changed")).as("status"))
   }
-
-  /** [[latestCapture]] as ONE executable Spark-SQL statement — pure
-    * builtins (the argmax is the same `max(struct(ts, id))` aggregate).
-    * Parity-asserted against the operator (WebCurationSpec). */
-  def latestCaptureSqlRecipe(table: String, urlCol: String, tsCol: String,
-                             idCol: String): String = {
-    import SqlIdent.{col => q, table => qt}
-    s"""WITH __caps AS (
-       |  SELECT ${q(urlCol)} AS url, ${q(tsCol)} AS ts, ${q(idCol)} AS id
-       |  FROM ${qt(table)}
-       |), __agg AS (
-       |  SELECT url, count(1) AS n_captures, max(struct(ts, id)) AS w
-       |  FROM __caps GROUP BY url
-       |)
-       |SELECT url, n_captures, w.ts AS ts, w.id AS id FROM __agg""".stripMargin
-  }
-
-  /** Register [[latestCaptureSqlRecipe]] as a named temp view. */
-  def registerLatestCaptureView(spark: org.apache.spark.sql.SparkSession,
-                                viewName: String, table: String,
-                                urlCol: String, tsCol: String,
-                                idCol: String): Unit =
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${SqlIdent.table(viewName)} AS\n" +
-      latestCaptureSqlRecipe(table, urlCol, tsCol, idCol))
-
-  /** [[incrementalDelta]] as ONE executable Spark-SQL statement — same
-    * (url, md5) reduction, null-safe compare, and loud duplicate-base-url
-    * guard. Parity-asserted against the operator (WebCurationSpec). */
-  def incrementalDeltaSqlRecipe(batchTable: String, baseTable: String,
-                                urlCol: String, idCol: String,
-                                textCol: String): String = {
-    import SqlIdent.{col => q, table => qt}
-    val (u, id, text) = (q(urlCol), q(idCol), q(textCol))
-    s"""WITH __base AS (
-       |  SELECT url,
-       |         CASE WHEN count(1) = 1 THEN max(m)
-       |              ELSE raise_error(concat(
-       |                'incrementalDelta: duplicate base url (base must hold one current row per url): ',
-       |                url)) END AS base_md5,
-       |         true AS in_base
-       |  FROM (SELECT $u AS url, md5($text) AS m FROM ${qt(baseTable)}
-       |        WHERE $u IS NOT NULL)
-       |  GROUP BY url
-       |), __batch AS (
-       |  SELECT $id AS id, $u AS url, md5($text) AS bm FROM ${qt(batchTable)}
-       |)
-       |SELECT b.id, b.url,
-       |       CASE WHEN e.in_base IS NULL THEN 'new'
-       |            WHEN b.bm <=> e.base_md5 THEN 'unchanged'
-       |            ELSE 'changed' END AS status
-       |FROM __batch b LEFT JOIN __base e ON b.url = e.url""".stripMargin
-  }
-
-  /** Register [[incrementalDeltaSqlRecipe]] as a named temp view. */
-  def registerIncrementalDeltaView(spark: org.apache.spark.sql.SparkSession,
-                                   viewName: String, batchTable: String,
-                                   baseTable: String, urlCol: String,
-                                   idCol: String, textCol: String): Unit =
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${SqlIdent.table(viewName)} AS\n" +
-      incrementalDeltaSqlRecipe(batchTable, baseTable, urlCol, idCol, textCol))
 }

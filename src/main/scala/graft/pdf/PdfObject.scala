@@ -85,7 +85,6 @@ final case class PNumber(value: Double) extends PdfObject {
 /** raw byte string; prints `(`+bytes+`)` without re-escaping (pdf/string.go:3-7). */
 final case class PString(bytes: Array[Byte]) extends PdfObject {
   def str: String = "(" + new String(bytes, ISO_8859_1) + ")"
-  def asString: String = new String(bytes, ISO_8859_1)
 }
 
 /** identifier newtype; prints "/"+name (pdf/name.go:3-7). */
@@ -184,9 +183,6 @@ final case class PDict(entries: mutable.LinkedHashMap[String, PdfObject]) extend
       case Some(r: PRef) => Some(r.resolveStream())
       case _             => None
     }
-
-  def getReference(key: String): Option[PRef] =
-    entries.get(key).collect { case r: PRef => r }
 
   /** Name-tree flatten with kid cycle guard (pdf/dictionary.go:77-106). */
   def getNameTreeMap(key: String): PArray =

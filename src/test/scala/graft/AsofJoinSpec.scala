@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.AsofJoin
+import graft.operators.{AsofJoin, AsofJoinSql}
 
 class AsofJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -94,7 +94,7 @@ class AsofJoinSpec extends AnyFunSuite {
     val right = Seq((10L, ts("2024-01-01 00:00:03"), 7L)).toDF("user_id", "rt", "v")
     left.createOrReplaceGlobalTempView("asof_q_left")
     right.createOrReplaceGlobalTempView("asof_q_right")
-    val sql = AsofJoin.sqlRecipe(spark, "global_temp.asof_q_left", "global_temp.asof_q_right",
+    val sql = AsofJoinSql.sqlRecipe(spark, "global_temp.asof_q_left", "global_temp.asof_q_right",
       Seq("user_id"), "t", "rt", Seq("v"))
     val out = spark.sql(sql).collect()
     assert(out.length == 1 && out.head.getLong(3) == 7L)
@@ -110,7 +110,7 @@ class AsofJoinSpec extends AnyFunSuite {
       .select(col("user_id"), col("view_ts"), col("view_event_id"))
     purchases.createOrReplaceTempView("asof_sql_left")
     views.createOrReplaceTempView("asof_sql_right")
-    val sql = AsofJoin.sqlRecipe(spark, "asof_sql_left", "asof_sql_right",
+    val sql = AsofJoinSql.sqlRecipe(spark, "asof_sql_left", "asof_sql_right",
       Seq("user_id"), "ts", "view_ts", Seq("view_event_id", "view_ts"))
     val viaSql = spark.sql(sql).orderBy("event_id").collect().map(_.toString).toSeq
     val viaApi = AsofJoin.asofJoin(purchases, views, Seq("user_id"), "ts", "view_ts",
@@ -128,7 +128,7 @@ class AsofJoinSpec extends AnyFunSuite {
     spark.sql("""CREATE OR REPLACE TEMPORARY VIEW asof_v_right AS
       SELECT user_id, ts AS view_ts, max(event_id) AS view_event_id
       FROM asof_ev_sql WHERE event_type = 'view' GROUP BY user_id, ts""")
-    AsofJoin.registerView(spark, "asof_v_joined", "asof_v_left", "asof_v_right",
+    AsofJoinSql.registerView(spark, "asof_v_joined", "asof_v_left", "asof_v_right",
       Seq("user_id"), "ts", "view_ts", Seq("view_event_id", "view_ts"))
     val viaView = spark.sql("SELECT * FROM asof_v_joined ORDER BY event_id")
       .collect().map(_.toString).toSeq
@@ -144,7 +144,7 @@ class AsofJoinSpec extends AnyFunSuite {
     val right = Seq((10L, ts("2024-01-01 00:00:03"), 7L)).toDF("user_id", "rt", "v`x'y")
     left.createOrReplaceTempView("asof_esc_left")
     right.createOrReplaceTempView("asof_esc_right")
-    val sql = AsofJoin.sqlRecipe(spark, "asof_esc_left", "asof_esc_right",
+    val sql = AsofJoinSql.sqlRecipe(spark, "asof_esc_left", "asof_esc_right",
       Seq("user_id"), "t", "rt", Seq("v`x'y"))
     val out = spark.sql(sql).collect()
     assert(out.length == 1 && out.head.getLong(3) == 7L)

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Decontaminate
+import graft.operators.{Decontaminate, DecontaminateSql}
 
 class DecontaminateSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -145,7 +145,7 @@ class DecontaminateSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.createOrReplaceTempView("decon_sql_docs")
     docs.where(col("doc_id") % 50 === 0).createOrReplaceTempView("decon_sql_bench")
-    Decontaminate.registerFlagView(spark, "decon_sql_view",
+    DecontaminateSql.registerFlagView(spark, "decon_sql_view",
       "decon_sql_docs", "decon_sql_bench", "doc_id", "text", w = 5, minOverlap = 3L)
     val viaSql = spark.sql("SELECT * FROM decon_sql_view ORDER BY id")
       .collect().map(_.toString).toSeq

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, DedupReference}
 
 /** Connected components over near-dup pairs: the transitive-closure step
   * that turns pairwise evidence into a dedup decision. */
@@ -92,10 +92,10 @@ class DedupSpec extends AnyFunSuite {
       (201L, "a genuinely unique article body with enough words to shingle cleanly"))
     val docs = (template ++ nearDup).toDF("doc_id", "text")
 
-    val uncapped = Dedup.minhashLshCandidates(docs, "doc_id", "text", 3, 64, 16, maxBlock = 0)
+    val uncapped = DedupReference.minhashLshCandidates(docs, "doc_id", "text", 3, 64, 16, maxBlock = 0)
     assert(uncapped.count() == 60L * 59 / 2 + 1) // the quadratic detonation
 
-    val capped = Dedup.minhashLshCandidates(docs, "doc_id", "text", 3, 64, 16, maxBlock = 10)
+    val capped = DedupReference.minhashLshCandidates(docs, "doc_id", "text", 3, 64, 16, maxBlock = 10)
     val cappedPairs = capped.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the template block's candidates are the LINEAR star against its min
     // id — so the boilerplate group still dedups via verify + components —
@@ -113,7 +113,7 @@ class DedupSpec extends AnyFunSuite {
     assert(metric.get.getAs[Long]("max_block_n") == 60L, metric.get.toString)
 
     // generous default: blocks of honest duplicate-group size pass through
-    val defCap = Dedup.minhashLshCandidates(docs, "doc_id", "text", 3, 64, 16)
+    val defCap = DedupReference.minhashLshCandidates(docs, "doc_id", "text", 3, 64, 16)
     assert(defCap.count() == 60L * 59 / 2 + 1) // 60 << DefaultMaxBlock
   }
 
@@ -156,7 +156,7 @@ class DedupSpec extends AnyFunSuite {
       Seq((900L, "singular content with distinct words in it"),
           (901L, "singular content with distinct words in it"))).toDF("doc_id", "text")
     def run(parts: Int) =
-      Dedup.minhashLshCandidates(docs.repartition(parts), "doc_id", "text", 3, 64, 16, maxBlock = 8)
+      DedupReference.minhashLshCandidates(docs.repartition(parts), "doc_id", "text", 3, 64, 16, maxBlock = 8)
         .orderBy("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(run(2) == run(9))
   }

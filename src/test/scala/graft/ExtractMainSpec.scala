@@ -24,6 +24,25 @@ class ExtractMainSpec extends AnyFunSuite {
     assert(docs.committedBatches.size == 1)
   }
 
+  test("extract job: an explicit --batch-id that is already committed fails instead of dropping documents") {
+    val inDir = java.nio.file.Files.createTempDirectory("graft_job_bid_in").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_job_bid_out").toString
+    val docs = new graft.sources.ParquetManifestTable(s"$outDir/documents")
+    CrawlCorpus.crawl(spark, 12, 7L).toDF().write.mode("overwrite").parquet(inDir)
+    Extract.main(Array(inDir, outDir, "--batch-id", "B", "--partitions", "2"))
+    assert(docs.read(spark).count() == 12)
+    // a retry of the fully committed batch stays a no-op
+    Extract.main(Array(inDir, outDir, "--batch-id", "B", "--partitions", "2"))
+    // 8 new urls under the same id: commit would skip the known id
+    CrawlCorpus.crawl(spark, 20, 7L).toDF().write.mode("overwrite").parquet(inDir)
+    val e = intercept[IllegalArgumentException] {
+      Extract.main(Array(inDir, outDir, "--batch-id", "B", "--partitions", "2"))
+    }
+    assert(e.getMessage.contains("--batch-id B") && e.getMessage.contains("8 pending"), e.getMessage)
+    assert(docs.committedBatches == Seq("B"))
+    assert(docs.read(spark).count() == 12)
+  }
+
   test("extract job: commit, exact resume no-op, incremental delta, sinks") {
     import spark.implicits._
     val inDir = java.nio.file.Files.createTempDirectory("graft_job_in").toString

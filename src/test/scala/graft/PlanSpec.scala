@@ -177,7 +177,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("minhash LSH self-join shuffles band keys, not document text") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", minJaccard = 0.9)
+    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", minJaccard = 0.9)
     val p = plan(pairs)
     // the join keys are the compact band columns (broadcast at this scale,
     // band-keyed shuffle at corpus scale); any shuffle keys on band keys or

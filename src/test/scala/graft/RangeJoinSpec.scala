@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.RangeJoin
+import graft.operators.{RangeJoin, RangeJoinSql}
 
 class RangeJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -61,7 +61,7 @@ class RangeJoinSpec extends AnyFunSuite {
         col("ts").as("s"), (col("ts") + expr("INTERVAL 3 DAYS")).as("e"))
     clicks.createOrReplaceTempView("range_sql_points")
     windows.createOrReplaceTempView("range_sql_intervals")
-    val sql = RangeJoin.sqlRecipe(spark, "range_sql_points", "range_sql_intervals",
+    val sql = RangeJoinSql.sqlRecipe(spark, "range_sql_points", "range_sql_intervals",
       Seq("user_id"), "ts", "s", "e", bucketSeconds = 86400L)
     val viaSql = spark.sql(sql)
       .select(col("event_id"), col("signup_id"), col("user_id"), col("ts"))
@@ -81,7 +81,7 @@ class RangeJoinSpec extends AnyFunSuite {
     spark.sql("""CREATE OR REPLACE TEMPORARY VIEW range_v_intervals AS
       SELECT event_id AS signup_id, user_id, ts AS s, ts + INTERVAL 3 DAYS AS e
       FROM range_ev_sql WHERE event_type = 'signup'""")
-    RangeJoin.registerView(spark, "range_v_joined", "range_v_points", "range_v_intervals",
+    RangeJoinSql.registerView(spark, "range_v_joined", "range_v_points", "range_v_intervals",
       Seq("user_id"), "ts", "s", "e", bucketSeconds = 86400L)
     val viaView = spark.sql(
         "SELECT event_id, signup_id, user_id, ts FROM range_v_joined ORDER BY event_id, signup_id")

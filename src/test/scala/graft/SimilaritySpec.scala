@@ -95,132 +95,6 @@ class SimilaritySpec extends AnyFunSuite {
     assert(t.select("id").collect().map(_.getLong(0)).toSet == Set(3L))
   }
 
-  test("IVF centroids are bit-identical under any partitioning (integer-scaled Lloyd)") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    def train(parts: Int) =
-      Similarity.trainIvfCentroids(emb.repartition(parts), "vec_id", "embedding", nlist = 8, iters = 3)
-        .map(_.toSeq).toSeq
-    assert(train(2) == train(13))
-  }
-
-  test("ivfTopK recall grows with nprobe; >= 0.9 at nprobe=12/16 on isotropic data") {
-    // the synthetic embeddings are near-uniform random — IVF's worst case
-    // (no cluster structure for the quantizer to exploit): recall measured
-    // 0.48-0.64 at nprobe/nlist=1/4 and 0.96 at 3/4. On clustered corpora
-    // the curve is far steeper; the spec pins the worst-case floor.
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val queries = emb.where(col("vec_id") < 5)
-    val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
-      .select("query_id", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def recall(nprobe: Int): Double = {
-      val approx = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", 5, nlist = 16, nprobe = nprobe)
-        .select("query_id", "id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      (exact intersect approx).size.toDouble / exact.size
-    }
-    val r4 = recall(4)
-    val r12 = recall(12)
-    assert(r4 >= 0.4, s"recall@nprobe=4: $r4")
-    assert(r12 >= 0.9, s"recall@nprobe=12: $r12")
-    assert(r12 >= r4)
-  }
-
-  test("IVF training on an empty corpus returns no centroids, search returns no rows") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val empty = emb.where(col("vec_id") < 0)
-    assert(Similarity.trainIvfCentroids(empty, "vec_id", "embedding", nlist = 4).isEmpty)
-    assert(Similarity.ivfTopK(empty, emb.where(col("vec_id") < 2), "vec_id", "embedding", 3).count() == 0)
-  }
-
-  test("IVF drops corrupt rows (null/ragged vectors) instead of failing the job") {
-    import spark.implicits._
-    val good = (0L until 40L).map(i =>
-      (i, Seq.tabulate(8)(d => math.sin(i * 7.0 + d).toFloat)))
-    val corpus = good.toDF("vec_id", "embedding")
-      // a null vector, a ragged (short) vector, and a vector holding a null element
-      .unionByName(Seq((100L, null.asInstanceOf[Seq[Float]])).toDF("vec_id", "embedding"))
-      .unionByName(Seq((101L, Seq(1.0f))).toDF("vec_id", "embedding"))
-      .unionByName(spark.sql("SELECT 102L AS vec_id, array(CAST(1.0 AS FLOAT), CAST(NULL AS FLOAT)) AS embedding"))
-    val queries = corpus.where(col("vec_id") < 2)
-    // ragged row 101 participates (prefix accumulation); 100/102 are dropped
-    val cs = Similarity.trainIvfCentroids(corpus, "vec_id", "embedding", nlist = 4, iters = 2)
-    assert(cs.nonEmpty)
-    val out = Similarity.ivfTopK(corpus, queries, "vec_id", "embedding", k = 3,
-      nlist = 4, nprobe = 4, trainIters = 2)
-    assert(out.count() > 0) // no IndexOutOfBounds / encoder NPE
-    assert(!out.select("id").collect().map(_.getLong(0)).contains(100L))
-  }
-
-  test("a ragged vector sampled FIRST cannot truncate the trained dimension") {
-    import spark.implicits._
-    // the init sample orders by md5(id); plant the ragged row at exactly the
-    // id whose md5 sorts first so it becomes centroids(0)
-    def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    val ids = (0L until 20L)
-    val firstId = ids.minBy(id => md5hex(id.toString))
-    val rows = ids.map { i =>
-      if (i == firstId) (i, Seq(1.0f)) // ragged, sorts first in the sample
-      else (i, Seq.tabulate(8)(d => math.cos(i * 3.0 + d).toFloat))
-    }
-    val corpus = rows.toDF("vec_id", "embedding")
-    val cs = Similarity.trainIvfCentroids(corpus, "vec_id", "embedding", nlist = 4, iters = 2)
-    // dim comes from the WIDEST sampled vector (ragged centroid zero-padded)
-    assert(cs.nonEmpty && cs.forall(_.length == 8), cs.map(_.length).toSeq.toString)
-    val out = Similarity.ivfTopK(corpus, corpus.where(col("vec_id") < 2),
-      "vec_id", "embedding", k = 3, nlist = 4, nprobe = 4, trainIters = 2)
-    assert(out.count() > 0)
-  }
-
-  test("centroid-matrix driver ceiling: oversized nlist x dim fails loudly; auto-sizing stays under it") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val tooMany = (Similarity.MaxCentroidCells / dim + 1).toInt
-    val e = intercept[IllegalArgumentException] {
-      Similarity.trainIvfCentroids(emb, "vec_id", "embedding", nlist = tooMany, iters = 1)
-    }
-    assert(e.getMessage.contains("centroid matrix"), e.getMessage)
-    // sqrt(n) auto-sizing: correct shape and always within the ceiling
-    assert(Similarity.ivfAutoNlist(10000L) == 100)
-    assert(Similarity.ivfAutoNlist(1L << 40) == 16384) // clamped
-    assert(Similarity.ivfAutoNlist(0L) == 1)
-    assert(Similarity.ivfAutoNlist(1L << 40).toLong * 1024 <= Similarity.MaxCentroidCells)
-  }
-
-  test("IVF index persistence: save -> load -> search == inline-trained search") {
-    import org.apache.spark.sql.functions._
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = emb.where(col("vec_id") < 5)
-    val tableRoot = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
-    val trained = Similarity.trainIvfCentroids(emb, "vec_id", "embedding", nlist = 8)
-    Similarity.saveIvfCentroids(spark, trained, tableRoot)
-    val loaded = Similarity.loadIvfCentroids(spark, tableRoot)
-    assert(loaded.length == trained.length)
-    assert(loaded.zip(trained).forall { case (a, b) => a.sameElements(b) },
-      "roundtripped centroids must be value-identical")
-    val inline = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", k = 5, nlist = 8)
-      .orderBy("query_id", "id").collect().map(_.toString).toSeq
-    val reused = Similarity.ivfTopKWith(emb, queries, "vec_id", "embedding", k = 5, loaded)
-      .orderBy("query_id", "id").collect().map(_.toString).toSeq
-    assert(reused == inline, "search against the persisted index must equal inline training")
-    // pre-assigned inverted lists: persisting assignIvf's output and
-    // searching it must equal the assign-per-call path
-    val assignedDir = java.nio.file.Files.createTempDirectory("graft_ivf_asg").toString
-    Similarity.assignIvf(emb, "vec_id", "embedding", loaded)
-      .write.mode("overwrite").parquet(assignedDir)
-    val preAssigned = Similarity.ivfTopKAssigned(
-        spark.read.parquet(assignedDir), queries, "vec_id", "embedding", k = 5, loaded)
-      .orderBy("query_id", "id").collect().map(_.toString).toSeq
-    assert(preAssigned == inline)
-    // a RETRAINED (different) quantizer must become the served snapshot,
-    // not be silently dropped by the idempotent commit
-    Thread.sleep(20) // commit-time tiebreak is mtime-then-name
-    val retrained = trained.map(_.map(_ + 1.0))
-    Similarity.saveIvfCentroids(spark, retrained, tableRoot)
-    val reloaded = Similarity.loadIvfCentroids(spark, tableRoot)
-    assert(reloaded.zip(retrained).forall { case (a, b) => a.sameElements(b) },
-      "retrain save must supersede the old snapshot")
-  }
-
   test("groupCentroidsI4: exact integer means, ragged vectors visible via per-dim n") {
     import spark.implicits._
     val df = Seq(

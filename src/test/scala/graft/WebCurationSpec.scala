@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.WebCuration
+import graft.operators.{WebCuration, WebCurationSql}
 
 class WebCurationSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -139,7 +139,7 @@ class WebCurationSpec extends AnyFunSuite {
       .select(col("doc_id"),
         regexp_replace(col("text"), " the ", "\n\n").as("text"))
     para.createOrReplaceTempView("kfu_sql_docs")
-    WebCuration.registerKeepFirstUnitsView(spark, "kfu_sql_view",
+    WebCurationSql.registerKeepFirstUnitsView(spark, "kfu_sql_view",
       "kfu_sql_docs", "doc_id", "text", sep = "\n\n")
     val viaSql = spark.sql("SELECT * FROM kfu_sql_view ORDER BY id")
       .collect().map(_.toString).toSeq
@@ -192,7 +192,7 @@ class WebCurationSpec extends AnyFunSuite {
   test("keepFirstSpans SQL recipe + registered view reproduce the operator on the documents table") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.createOrReplaceTempView("kfs_sql_docs")
-    WebCuration.registerKeepFirstSpansView(spark, "kfs_sql_view",
+    WebCurationSql.registerKeepFirstSpansView(spark, "kfs_sql_view",
       "kfs_sql_docs", "doc_id", "text", w = 5)
     val viaSql = spark.sql("SELECT * FROM kfs_sql_view ORDER BY id")
       .collect().map(_.toString).toSeq
@@ -204,7 +204,7 @@ class WebCurationSpec extends AnyFunSuite {
   test("keepFirstLines SQL recipe + registered view reproduce the operator on the documents table") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.createOrReplaceTempView("kfl_sql_docs")
-    WebCuration.registerKeepFirstLinesView(spark, "kfl_sql_view",
+    WebCurationSql.registerKeepFirstLinesView(spark, "kfl_sql_view",
       "kfl_sql_docs", "doc_id", "text", chunk = 8)
     val viaSql = spark.sql("SELECT * FROM kfl_sql_view ORDER BY id")
       .collect().map(_.toString).toSeq
@@ -424,7 +424,7 @@ class WebCurationSpec extends AnyFunSuite {
         when(col("doc_id") % 13 === 9, lit(null).cast("long"))
           .otherwise((col("doc_id") * 31L) % 1000L).as("warc_ts"))
     caps.createOrReplaceTempView("lc_sql_caps")
-    WebCuration.registerLatestCaptureView(spark, "lc_sql_view",
+    WebCurationSql.registerLatestCaptureView(spark, "lc_sql_view",
       "lc_sql_caps", "url", "warc_ts", "doc_id")
     val viaSql = spark.sql("SELECT * FROM lc_sql_view ORDER BY url")
       .collect().map(_.toString).toSeq
@@ -443,7 +443,7 @@ class WebCurationSpec extends AnyFunSuite {
         .otherwise(col("text")).as("text"))
     base.createOrReplaceTempView("id_sql_base")
     batch.createOrReplaceTempView("id_sql_batch")
-    WebCuration.registerIncrementalDeltaView(spark, "id_sql_view",
+    WebCurationSql.registerIncrementalDeltaView(spark, "id_sql_view",
       "id_sql_batch", "id_sql_base", "url", "doc_id", "text")
     val viaSql = spark.sql("SELECT * FROM id_sql_view ORDER BY id")
       .collect().map(_.toString).toSeq
@@ -454,7 +454,7 @@ class WebCurationSpec extends AnyFunSuite {
     Seq(("u1", "a"), ("u1", "b")).toDF("url", "text")
       .createOrReplaceTempView("id_sql_dup")
     val e = intercept[Exception] {
-      spark.sql(WebCuration.incrementalDeltaSqlRecipe(
+      spark.sql(WebCurationSql.incrementalDeltaSqlRecipe(
         "id_sql_batch", "id_sql_dup", "url", "doc_id", "text")).collect()
     }
     assert(SparkTestBase.causeMessages(e).exists(_.contains("duplicate base url")))

@@ -3,7 +3,7 @@ package graft.functions
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.operators.Similarity
+import graft.operators.{Similarity, SimilarityReference}
 
 /** Parity: the native hyperplane-signature expression must equal the
   * declarative HOF formulation bit-for-bit on real embeddings. */
@@ -14,7 +14,7 @@ class LshExpressionsSpec extends AnyFunSuite {
   test("native hyperplane_sigs == declarative signatures on all embeddings") {
     for ((nBits, nTables) <- Seq((1, 4), (4, 2), (16, 8))) {
       val cmp = emb.select(
-        Similarity.signaturesDeclarative(col("embedding"), nBits, nTables).as("a"),
+        SimilarityReference.signaturesDeclarative(col("embedding"), nBits, nTables).as("a"),
         Similarity.signatures(col("embedding"), nBits, nTables).as("b"))
       assert(cmp.where(col("a") =!= col("b")).count() == 0, s"nBits=$nBits nTables=$nTables")
     }
@@ -23,7 +23,7 @@ class LshExpressionsSpec extends AnyFunSuite {
   test("double-typed vectors take the non-float path and agree too") {
     val d = emb.select(col("embedding").cast("array<double>").as("v"))
     val cmp = d.select(
-      Similarity.signaturesDeclarative(col("v"), 8, 2).as("a"),
+      SimilarityReference.signaturesDeclarative(col("v"), 8, 2).as("a"),
       Similarity.signatures(col("v"), 8, 2).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
   }
@@ -33,9 +33,9 @@ class LshExpressionsSpec extends AnyFunSuite {
       .crossJoin(emb.select(col("vec_id").as("ib"), col("embedding").as("b")))
       .where(col("ia") < col("ib") && col("ib") < 40)
     val cmp = pairs.select(
-      Similarity.cosineDeclarative(col("a"), col("b")).as("x"),
+      SimilarityReference.cosineDeclarative(col("a"), col("b")).as("x"),
       Similarity.cosine(col("a"), col("b")).as("y"),
-      Similarity.cosineDeclarative(col("a").cast("array<double>"), col("b")).as("xd"),
+      SimilarityReference.cosineDeclarative(col("a").cast("array<double>"), col("b")).as("xd"),
       Similarity.cosine(col("a").cast("array<double>"), col("b")).as("yd"))
     assert(cmp.where(col("x") =!= col("y") || col("xd") =!= col("yd")).count() == 0)
   }
@@ -53,9 +53,9 @@ class LshExpressionsSpec extends AnyFunSuite {
     val df = spark.createDataFrame(rows, schema)
     val out = df.select(
       Similarity.cosine(col("a"), col("b")).as("nat"),
-      Similarity.cosineDeclarative(col("a"), col("b")).as("dec"),
+      SimilarityReference.cosineDeclarative(col("a"), col("b")).as("dec"),
       Similarity.signatures(col("a"), 4, 2).as("sig_nat"),
-      Similarity.signaturesDeclarative(col("a"), 4, 2).as("sig_dec")).collect()
+      SimilarityReference.signaturesDeclarative(col("a"), 4, 2).as("sig_dec")).collect()
     out.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1), r.toString) // cosine null parity
       if (!r.isNullAt(0)) assert(r.getDouble(0) == r.getDouble(1), r.toString)

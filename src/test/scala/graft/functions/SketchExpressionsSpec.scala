@@ -3,7 +3,7 @@ package graft.functions
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.operators.Dedup
+import graft.operators.DedupReference
 
 /** Parity: the native sketch expressions must equal the declarative
   * higher-order-function formulations bit-for-bit on real data. */
@@ -13,21 +13,21 @@ class SketchExpressionsSpec extends AnyFunSuite {
 
   test("native simhash64 == declarative simhash on all documents") {
     val cmp = docs.select(
-      Dedup.simhashDeclarative(col("text")).as("a"),
+      DedupReference.simhashDeclarative(col("text")).as("a"),
       SketchFunctions.simhash64(col("text")).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
   }
 
   test("native simhash_md5 == declarative md5 simhash on all documents + edge cases") {
     val cmp = docs.select(
-      Dedup.simhashMd5Declarative(col("text")).as("a"),
+      DedupReference.simhashMd5Declarative(col("text")).as("a"),
       SketchFunctions.simhashMd5(col("text")).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
     import spark.implicits._
     val edge = Seq("", "word", "a  b", " lead", "trail ", "a b c d e", "ünïcode tökens")
       .toDF("text")
     edge.select(
-        Dedup.simhashMd5Declarative(col("text")).as("a"),
+        DedupReference.simhashMd5Declarative(col("text")).as("a"),
         SketchFunctions.simhashMd5(col("text")).as("b"))
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1), r))
     // the value really is the top-60-bit md5 construction the DuckDB oracle
@@ -41,7 +41,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
 
   test("native minhash_sig == declarative signature on all documents") {
     val cmp = docs.select(
-      Dedup.minhashSignatureDeclarative(Dedup.wordShingles(col("text"), 3), 32).as("a"),
+      DedupReference.minhashSignatureDeclarative(DedupReference.wordShingles(col("text"), 3), 32).as("a"),
       SketchFunctions.minhashSig(col("text"), 3, 32).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
   }
@@ -49,7 +49,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
   test("native shingle_hashes == declarative distinct shingle xxhash64 on all documents") {
     for (n <- Seq(2, 3, 5)) {
       val cmp = docs.select(
-        array_distinct(transform(Dedup.wordShingles(col("text"), n), s => xxhash64(s))).as("a"),
+        array_distinct(transform(DedupReference.wordShingles(col("text"), n), s => xxhash64(s))).as("a"),
         SketchFunctions.shingleHashes(col("text"), n).as("b"))
       assert(cmp.where(col("a") =!= col("b")).count() == 0, s"n=$n")
     }
@@ -127,7 +127,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
   test("native quality_score == declarative formula on all documents + unicode edges") {
     import org.apache.spark.sql.functions._
     val cmp = docs.select(
-      graft.operators.TextAnalysis.qualityScoreDeclarative(col("text")).as("a"),
+      graft.operators.TextAnalysisReference.qualityScoreDeclarative(col("text")).as("a"),
       SketchFunctions.qualityScore(col("text")).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
     import spark.implicits._
@@ -137,7 +137,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
       "x" * 600 + " the", "punct!!! ??? ;;; the", "ＴＨＥ the") // fullwidth THE != stopword
       .toDF("text")
     edge.select(
-        graft.operators.TextAnalysis.qualityScoreDeclarative(col("text")).as("a"),
+        graft.operators.TextAnalysisReference.qualityScoreDeclarative(col("text")).as("a"),
         SketchFunctions.qualityScore(col("text")).as("b"))
       .collect().foreach(r => assert(r.getDouble(0) == r.getDouble(1), r))
   }
@@ -145,14 +145,14 @@ class SketchExpressionsSpec extends AnyFunSuite {
   test("native bpe_estimate == declarative formula on all documents + unicode edges") {
     import org.apache.spark.sql.functions._
     val cmp = docs.select(
-      graft.operators.TextAnalysis.bpeTokenEstimateDeclarative(col("text")).as("a"),
+      graft.operators.TextAnalysisReference.bpeTokenEstimateDeclarative(col("text")).as("a"),
       SketchFunctions.bpeEstimate(col("text")).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
     import spark.implicits._
     Seq("", "a", "abcd", "abcde", "ünïcödé tökens", "a  b", " x ", "😀😀😀😀😀")
       .toDF("text")
       .select(
-        graft.operators.TextAnalysis.bpeTokenEstimateDeclarative(col("text")).as("a"),
+        graft.operators.TextAnalysisReference.bpeTokenEstimateDeclarative(col("text")).as("a"),
         SketchFunctions.bpeEstimate(col("text")).as("b"))
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1), r))
   }
@@ -161,28 +161,28 @@ class SketchExpressionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     for ((size, stride) <- Seq((64, 48), (8, 8), (4, 2), (1, 1))) {
       val cmp = docs.select(
-        graft.operators.TextAnalysis.tokenChunksDeclarative(col("text"), size, stride).as("a"),
+        graft.operators.TextAnalysisReference.tokenChunksDeclarative(col("text"), size, stride).as("a"),
         SketchFunctions.tokenChunks(col("text"), size, stride).as("b"))
       assert(cmp.where(col("a") =!= col("b")).count() == 0, s"size=$size stride=$stride")
     }
     import spark.implicits._
     val edge = Seq("", "one", "a b", "trail ", " lead", "a  b c").toDF("text")
     val cmp = edge.select(
-      graft.operators.TextAnalysis.tokenChunksDeclarative(col("text"), 2, 2).as("a"),
+      graft.operators.TextAnalysisReference.tokenChunksDeclarative(col("text"), 2, 2).as("a"),
       SketchFunctions.tokenChunks(col("text"), 2, 2).as("b"))
     cmp.collect().foreach(r => assert(r.get(0) == r.get(1), r))
   }
 
   test("native fingerprint_md5 == declarative md5 chain on all documents + edge cases") {
     val cmp = docs.select(
-      graft.operators.TextAnalysis.fingerprintMd5Declarative(col("text")).as("a"),
+      graft.operators.TextAnalysisReference.fingerprintMd5Declarative(col("text")).as("a"),
       SketchFunctions.fingerprintMd5(col("text")).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
     import spark.implicits._
     Seq("", "word", "a  b", " lead", "trail ", "ünïcode tökens")
       .toDF("text")
       .select(
-        graft.operators.TextAnalysis.fingerprintMd5Declarative(col("text")).as("a"),
+        graft.operators.TextAnalysisReference.fingerprintMd5Declarative(col("text")).as("a"),
         SketchFunctions.fingerprintMd5(col("text")).as("b"))
       .collect().foreach(r => assert(r.getString(0) == r.getString(1), r))
     // pinned golden for the exact two-token chain (matches hashlib md5 fold)
@@ -193,7 +193,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
 
   test("native fingerprint64 == declarative hash-chain fold on all documents") {
     val cmp = docs.select(
-      graft.operators.TextAnalysis.fingerprintDeclarative(col("text")).as("a"),
+      graft.operators.TextAnalysisReference.fingerprintDeclarative(col("text")).as("a"),
       SketchFunctions.fingerprint64(col("text")).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
   }
@@ -202,11 +202,11 @@ class SketchExpressionsSpec extends AnyFunSuite {
     import spark.implicits._
     val edge = Seq("", "word", "a  b", " lead", "trail ", "a b c d e").toDF("text")
     val cmp = edge.select(
-      Dedup.simhashDeclarative(col("text")).as("a"),
+      DedupReference.simhashDeclarative(col("text")).as("a"),
       SketchFunctions.simhash64(col("text")).as("b"),
-      Dedup.minhashSignatureDeclarative(Dedup.wordShingles(col("text"), 3), 16).as("ma"),
+      DedupReference.minhashSignatureDeclarative(DedupReference.wordShingles(col("text"), 3), 16).as("ma"),
       SketchFunctions.minhashSig(col("text"), 3, 16).as("mb"),
-      graft.operators.TextAnalysis.fingerprintDeclarative(col("text")).as("fa"),
+      graft.operators.TextAnalysisReference.fingerprintDeclarative(col("text")).as("fa"),
       SketchFunctions.fingerprint64(col("text")).as("fb"))
     val rows = cmp.collect()
     rows.foreach { r =>
