@@ -35,6 +35,10 @@ import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
   * committed — changed urls append a NEWER version row, and per-url
   * consumers read through `Resume.currentPerUrl`.
   * Prints one JSON summary line on stdout.
+  *
+  * At scale, run with `--conf spark.checkpoint.dir=<durable path>`: the
+  * checkpoints of `--recrawl`, `--link-graph` and `--curate` then land
+  * there and survive executor loss (`Dedup.checkpointDf`).
   */
 object Extract {
 
@@ -219,7 +223,7 @@ object Extract {
         // diff is a full payload scan of input AND base — without this it
         // would re-run for the null-ts count, the pstat action, and the
         // extraction action
-        val decision = graft.operators.Dedup.checkpointDf(decision0, reliable = false)
+        val decision = graft.operators.Dedup.checkpointDf(decision0)
         val nNullTs = decision.where(col("__nullts")).count()
         if (nNullTs > 0)
           println(s"""{"job":"graft-extract","warn":"recrawl: $nNullTs changed urls have null warc_ts and cannot supersede their committed version; skipped"}""")
@@ -331,8 +335,7 @@ object Extract {
         Resume.currentPerUrl(docsTable.read(spark))
           .select(col("url"), col("warc_ts"),
             xxhash64(col("url")).as("id"),
-            graft.operators.WebCuration.domainOf(col("url")).as("domain")),
-        reliable = false)
+            graft.operators.WebCuration.domainOf(col("url")).as("domain")))
       // current-version links only (url + warc_ts match, null-safe), then
       // drop edges whose target is outside the corpus
       val currentLinks = linksTable.read(spark).alias("l")

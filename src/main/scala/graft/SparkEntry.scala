@@ -455,10 +455,8 @@ object SparkEntry {
     // ppm rarity predicate and (df, tf, md5) ranking — no log(), no
     // collation — so DuckDB replays it exactly
     "q51_tfidf_terms" -> ((s, dir) =>
-      // materialize=true: the compact (id, md5, tf) frame feeds three
-      // consumers — one checkpoint replaces two extra tokenize passes (r6)
       TfIdf.distinctiveTerms(t(s, dir, "documents"), "doc_id", "text",
-          k = 3, maxDfPpm = 900000L, materialize = true)
+          k = 3, maxDfPpm = 900000L)
         .withColumnRenamed("id", "doc_id")
         .orderBy(col("doc_id"), col("rnk"))),
 

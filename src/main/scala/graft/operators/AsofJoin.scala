@@ -88,21 +88,14 @@ object AsofJoin {
     * equality across shard widths). */
   def asofJoinSharded(left: DataFrame, right: DataFrame, keys: Seq[String],
                       leftTs: String, rightTs: String,
-                      rightCols: Seq[String], shardSeconds: Long = 86400L,
-                      materialize: Boolean = true,
-                      reliableCheckpoint: Boolean = false): DataFrame = {
+                      rightCols: Seq[String], shardSeconds: Long = 86400L): DataFrame = {
     require(shardSeconds > 0, "shardSeconds must be positive")
     val keyCols = keys.map(col)
     // the union feeds three plan consumers (within-shard window, per-shard
     // last values, shard list) — materialize it once instead of re-reading
-    // and re-tagging both inputs per consumer (the Dedup sketch-frame rule).
-    // reliableCheckpoint threads the same durability mode every other
-    // materialization site honors: localCheckpoint blocks die with their
-    // executor, so long runs that must survive executor loss switch to
-    // durable df.checkpoint() via the shared helper
-    val u0 = packed(left, right, keys, leftTs, rightTs, rightCols)
-      .withColumn("__shard", floor(unix_timestamp(col("__ts")) / lit(shardSeconds)).cast("long"))
-    val u = if (materialize) Dedup.checkpointDf(u0, reliableCheckpoint) else u0
+    // and re-tagging both inputs per consumer (the Dedup sketch-frame rule)
+    val u = Dedup.checkpointDf(packed(left, right, keys, leftTs, rightTs, rightCols)
+      .withColumn("__shard", floor(unix_timestamp(col("__ts")) / lit(shardSeconds)).cast("long")))
 
     // carry within each (key, shard)
     val wIn = Window.partitionBy((keyCols :+ col("__shard")): _*)

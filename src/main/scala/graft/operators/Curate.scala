@@ -33,8 +33,6 @@ object Curate {
              minQualityI4: Long = 2000, minJaccard: Double = 0.9,
              shingleWords: Int = 3, packBudget: Int = 512,
              sharded: Boolean = false, packShards: Int = 64,
-             reliableCheckpoint: Boolean = false,
-             starsCC: Boolean = false,
              stripBoilerplate: Boolean = false,
              boilerplateChunk: Int = 8, boilerplateMinDocs: Long = 30L,
              decontaminateAgainst: DataFrame = null,
@@ -66,8 +64,7 @@ object Curate {
     // remainder and face the quality gate on that remainder alone.
     val docs0 =
       if (keepFirstSpansW <= 0) docsW
-      else WebCuration.keepFirstSpans(docsW, idCol, textCol,
-          w = keepFirstSpansW, reliableCheckpoint = reliableCheckpoint)
+      else WebCuration.keepFirstSpans(docsW, idCol, textCol, w = keepFirstSpansW)
         .select(col("id").as(idCol), col("clean_text").as(textCol))
     // 0. optional cross-doc boilerplate line removal BEFORE the gates:
     // template lines inflate quality scores and glue unrelated pages into
@@ -96,8 +93,7 @@ object Curate {
         val keep = docs0.groupBy(md5(col(textCol)).as("__md5"))
           .agg(min(col(idCol)).as(idCol)).select(idCol)
         WebCuration.stripBoilerplate(docs0.join(keep, Seq(idCol), "left_semi"),
-            idCol, textCol, chunk = boilerplateChunk, minDocs = boilerplateMinDocs,
-            reliableCheckpoint = reliableCheckpoint)
+            idCol, textCol, chunk = boilerplateChunk, minDocs = boilerplateMinDocs)
           .select(col("id").as(idCol), col("clean_text").as(textCol))
       }
 
@@ -127,7 +123,7 @@ object Curate {
         // frame four times (model train, scoring pass, anchor, semi-join
         // LHS) and the analysis gate is interpreted-HOF work — the same
         // re-execution the stage-2 `uniq` checkpoint exists to prevent
-        val g0 = Dedup.checkpointDf(gated0, reliableCheckpoint)
+        val g0 = Dedup.checkpointDf(gated0)
         // anti against the (small) over-cap set rather than semi against
         // the (corpus-sized) survivor set (r6, guide §3.1): the scoring
         // frame covers every g0 id with a non-null mean (null-text docs
@@ -152,22 +148,14 @@ object Curate {
     // the survivor set feeds candidate generation, the verify join-back,
     // the CC seed AND the final select — materialize it once instead of
     // re-running the (interpreted-HOF) analysis gate per consumer
-    val uniq = Dedup.checkpointDf(
-      gated.join(keepExact, Seq("doc_id"), "left_semi"), reliableCheckpoint)
+    val uniq = Dedup.checkpointDf(gated.join(keepExact, Seq("doc_id"), "left_semi"))
 
-    // 3. near-dup clusters: LSH candidates -> exact verify -> components
-    // (reliableCheckpoint forwarded: the miner's internal materialization
-    // points must honor the same durability mode as the CC rounds)
-    val pairs = Dedup.ngramJaccardPairs(uniq, "doc_id", "text", shingleWords, minJaccard,
-        reliableCheckpoint = reliableCheckpoint)
+    // 3. near-dup clusters: LSH candidates -> exact verify -> components.
+    // Near-dup graphs are dense/shallow, so O(diameter) min-label CC
+    // converges in a few rounds
+    val pairs = Dedup.ngramJaccardPairs(uniq, "doc_id", "text", shingleWords, minJaccard)
       .select(col("id_a"), col("id_b"))
-    // near-dup graphs are dense/shallow, so O(diameter) min-label is the
-    // default; `starsCC` switches to the O(log^2 n) alternating-star path
-    // for corpora with adversarial chain-shaped duplicate graphs
-    val ccIds = uniq.select(col("doc_id").as("id"))
-    val clusters =
-      if (starsCC) Dedup.connectedComponentsStars(pairs, ccIds, reliableCheckpoint = reliableCheckpoint)
-      else Dedup.connectedComponents(pairs, ccIds, reliableCheckpoint = reliableCheckpoint)
+    val clusters = Dedup.connectedComponents(pairs, uniq.select(col("doc_id").as("id")))
     // survivor policy per near-dup cluster: min id (default — the
     // SQL-replayable crawl-order convention) or, with `qualityReps`, the
     // FineWeb-style highest-quality member (ties to min id) so dedup
@@ -207,7 +195,7 @@ object Curate {
         // time — without this, each pass re-executes the whole
         // gates+dedup+CC lineage. Anti-join the (tiny, broadcastable)
         // CONTAMINATED id set rather than semi-joining all clean ids.
-        val kb = Dedup.checkpointDf(kept0, reliableCheckpoint)
+        val kb = Dedup.checkpointDf(kept0)
         val corpus = kb.select(col("doc_id").as(idCol), col("text").as(textCol))
         // deconViaBloom swaps in the bloom-prefiltered plan — output
         // identical by construction (q70 shares q56's oracle verbatim),
@@ -215,8 +203,7 @@ object Curate {
         val flagged =
           if (deconViaBloom)
             Decontaminate.flagBloom(corpus, decontaminateAgainst, idCol, textCol,
-              w = decontaminateW, minOverlap = decontaminateMinOverlap,
-              reliableCheckpoint = reliableCheckpoint)
+              w = decontaminateW, minOverlap = decontaminateMinOverlap)
           else
             Decontaminate.flag(corpus, decontaminateAgainst, idCol, textCol,
               w = decontaminateW, minOverlap = decontaminateMinOverlap)

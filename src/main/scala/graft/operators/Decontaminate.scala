@@ -115,10 +115,9 @@ object Decontaminate {
     *      proportional to true contamination + the FP trickle, not to
     *      corpus size.
     *
-    * The benchmark frame is read twice (filter build + confirm join);
-    * `materialize` (default true) checkpoints the reduced shingle set
-    * once so benchmark text is not re-tokenized per consumer —
-    * `reliableCheckpoint` upgrades that to a durable checkpoint. Sizing
+    * The benchmark frame is read twice (filter build + confirm join),
+    * so the reduced shingle set is checkpointed once and benchmark text
+    * is not re-tokenized per consumer. Sizing
     * the filter takes one count() over the reduced set (driver action on
     * the small side); the built filter is pulled to the driver as ONE
     * row of `numBits/8` bytes, capped by [[graft.functions.BloomFunctions.shape]]'s
@@ -126,11 +125,8 @@ object Decontaminate {
   def flagBloom(corpus: DataFrame, benchmark: DataFrame,
                 idCol: String, textCol: String,
                 w: Int = 13, minOverlap: Long = 3L,
-                bitsPerShingle: Int = 10,
-                materialize: Boolean = true,
-                reliableCheckpoint: Boolean = false): DataFrame = {
-    val bench0 = benchmarkShingles(benchmark, idCol, textCol, w)
-    val bench = if (materialize) Dedup.checkpointDf(bench0, reliableCheckpoint) else bench0
+                bitsPerShingle: Int = 10): DataFrame = {
+    val bench = Dedup.checkpointDf(benchmarkShingles(benchmark, idCol, textCol, w))
     flagAgainstShinglesBloom(corpus, bench, idCol, textCol, w, minOverlap, bitsPerShingle)
   }
 
@@ -254,11 +250,9 @@ object Decontaminate {
                   idCol: String, textCol: String,
                   shingleWords: Int = 3, minJaccard: Double = 0.8,
                   k: Int = 64, bands: Int = 16,
-                  maxBlock: Long = Dedup.DefaultMaxBlock,
-                  materialize: Boolean = true,
-                  reliableCheckpoint: Boolean = false): DataFrame = {
+                  maxBlock: Long = Dedup.DefaultMaxBlock): DataFrame = {
     val pairs = Dedup.ngramJaccardPairsBipartite(corpus, benchmark, idCol, textCol,
-      shingleWords, minJaccard, k, bands, maxBlock, materialize, reliableCheckpoint)
+      shingleWords, minJaccard, k, bands, maxBlock)
     val per = pairs.groupBy(col("id_a"))
       .agg(count(lit(1)).as("n_near_matches"),
         max(floor(col("jaccard") * 10000).cast("long")).as("best_jaccard_i4"))

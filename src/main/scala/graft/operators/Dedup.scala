@@ -138,17 +138,6 @@ object Dedup {
       .select(col("__an.id").as("id") +: rightCols: _*)
   }
 
-  /** Materialization point for the expensive sketch frames: a frame that
-    * feeds several plan consumers (self-join sides, the block-stats
-    * aggregate, verify join-backs) is RE-EXECUTED per consumer — measured
-    * 6-10 full sketch evaluations per candidate query, since exchange
-    * reuse only dedupes canonically-identical stages. One localCheckpoint
-    * bounds it at one evaluation; the stored rows are the compact sketch
-    * projection, never document text. `reliable = true` for production
-    * runs that must survive executor loss (see `checkpointDf`). */
-  private def materialized(df: DataFrame, on: Boolean, reliable: Boolean): DataFrame =
-    if (on) checkpointDf(df, reliable) else df
-
   /** Banded-LSH candidate pairs (id_a < id_b) over an (id, sig) minhash
     * table — the shared candidate generator for the exact-verified dedup
     * operators. Only (band_idx, band_hash, id) triples cross the self-join
@@ -201,11 +190,9 @@ object Dedup {
     * exempting the template group from dedup. AQE's skew-join split
     * handles the residual partition-level imbalance. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, maxBlock: Long = 0L,
-                   materialize: Boolean = true): DataFrame = {
+                   maxHamming: Int = 3, maxBlock: Long = 0L): DataFrame = {
     simhashPairsOn(df.select(col(idCol).as("id"), simhash(col(textCol)).as("sh")),
-      nBits = 64, maxHamming = maxHamming, maxBlock = maxBlock,
-      materialize = materialize)
+      nBits = 64, maxHamming = maxHamming, maxBlock = maxBlock)
   }
 
   /** `simhashPairs` over the oracle-portable md5 simhash (60 bits, 4 chunks
@@ -213,26 +200,23 @@ object Dedup {
     * the native codegen'd SimHashMd5 expression, bit-identical to the
     * declarative reference in `DedupReference` (SketchExpressionsSpec). */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int = 3, maxBlock: Long = 0L,
-                           materialize: Boolean = true): DataFrame =
+                           maxHamming: Int = 3, maxBlock: Long = 0L): DataFrame =
     simhashPairsOn(df.select(col(idCol).as("id"),
         graft.functions.SketchFunctions.simhashMd5(col(textCol)).as("sh")),
-      nBits = 60, maxHamming = maxHamming, maxBlock = maxBlock,
-      materialize = materialize)
+      nBits = 60, maxHamming = maxHamming, maxBlock = maxBlock)
 
   /** Chunk-blocked hamming pair mining over a precomputed (id, sh) frame:
     * 4 chunks of nBits/4, exact for radius <= 3 by pigeonhole. Only
     * (chunk_idx, chunk, id, sh) rows cross the self-join exchange.
     * Over-popular chunk blocks degrade to star candidates against the
     * block's min-id row (hamming-verified like every other candidate).
-    * `materialize` (default true) checkpoints the compact (id, sh) sketch
-    * frame once — both self-join sides (and, with the cap on, the block
-    * stats) otherwise re-run the simhash pass over the full corpus text
-    * per consumer (the `materialized` rationale; r6). */
+    * The compact (id, sh) sketch frame is checkpointed once — both
+    * self-join sides (and, with the cap on, the block stats) otherwise
+    * re-run the simhash pass over the full corpus text per consumer (the
+    * `checkpointDf` rationale; r6). */
   private def simhashPairsOn(hashed0: DataFrame, nBits: Int,
-                             maxHamming: Int, maxBlock: Long,
-                             materialize: Boolean = true): DataFrame = {
-    val hashed = materialized(hashed0, materialize, reliable = false)
+                             maxHamming: Int, maxBlock: Long): DataFrame = {
+    val hashed = checkpointDf(hashed0)
     val chunkBits = nBits / 4
     val mask = (1L << chunkBits) - 1
     val chunked = hashed.select(col("id"), col("sh"),
@@ -263,19 +247,23 @@ object Dedup {
 
   // ---------- duplicate clusters ----------
 
-  /** Per-round plan truncation for the iterative algorithms.
-    * `localCheckpoint` (default) stores blocks on executors — fast, but an
-    * executor loss makes the RDD unrecoverable and aborts the job, so for
-    * the long tail of a 100 TB production run set `reliable = true` (and
-    * `sparkContext.setCheckpointDir` to durable storage first): blocks then
-    * land in the checkpoint dir and survive executor churn. */
-  private[graft] def checkpointDf(df: DataFrame, reliable: Boolean): DataFrame =
-    if (!reliable) df.localCheckpoint()
-    else {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint=true requires sparkContext.setCheckpointDir(<durable path>)")
-      df.checkpoint()
-    }
+  /** Materialization point for the expensive frames, and per-round plan
+    * truncation for the iterative algorithms. A frame that feeds several
+    * plan consumers (self-join sides, the block-stats aggregate, verify
+    * join-backs) is RE-EXECUTED per consumer — measured 6-10 full sketch
+    * evaluations per candidate query, since exchange reuse only dedupes
+    * canonically-identical stages; one eager checkpoint bounds it at one
+    * evaluation, and the stored rows are compact projections, never
+    * document text.
+    *
+    * Durability follows the deployment: when the session has a checkpoint
+    * dir (`spark.checkpoint.dir`, or `sparkContext.setCheckpointDir`) the
+    * blocks land there via `df.checkpoint()` and survive executor loss;
+    * otherwise `localCheckpoint()` keeps them on the executors — fast, but
+    * an executor loss makes the RDD unrecoverable and aborts the job. */
+  private[graft] def checkpointDf(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint()
 
   /** Connected components over a near-duplicate pair set: every document
     * gets the minimum doc id of its component as `cluster_id` (`is_kept`
@@ -296,7 +284,7 @@ object Dedup {
     * tails instead of re-aggregating every edge.
     *
     * Each round is one frontier-filtered shuffle join + partial-agg min;
-    * labels are localCheckpoint'ed so the plan stays O(1) deep, and
+    * labels are checkpointed (`checkpointDf`) so the plan stays O(1) deep, and
     * convergence is the exact changed-node COUNT hitting zero (an observed
     * metric riding the checkpoint materialization — one driver-blocking
     * job per round, no sum-wrap hazards). For adversarial long-chain
@@ -323,8 +311,7 @@ object Dedup {
     * in the metrics_cc table). */
   def lastCcRounds: Seq[CcRound] = lastCcRoundsRef.get()
 
-  def connectedComponents(pairs: DataFrame, ids: DataFrame, maxIter: Int = 50,
-                          reliableCheckpoint: Boolean = false): DataFrame = {
+  def connectedComponents(pairs: DataFrame, ids: DataFrame, maxIter: Int = 50): DataFrame = {
     // both edge directions via ONE explode over the pair frame (r6): the
     // union-of-two-selects form executed the entire upstream pair-miner
     // subtree twice inside the first materializing job — the miner is the
@@ -346,7 +333,7 @@ object Dedup {
         val obs = df.observe(name,
           sum(when(col("changed"), 1L).otherwise(0L)).as("n"),
           count(lit(1)).as("rows"))
-        val ck = checkpointDf(obs, reliableCheckpoint)
+        val ck = checkpointDf(obs)
         obs.queryExecution.observedMetrics.get(name) match {
           case Some(row) =>
             (ck, if (row.isNullAt(0)) 0L else row.getLong(0), row.getLong(1))
@@ -414,8 +401,7 @@ object Dedup {
     * Per round: two grouped minimums + join-backs over the current edge
     * set (compact long pairs only) and one exact set-equality convergence
     * probe — no label sums, no hash fingerprints. */
-  def connectedComponentsStars(pairs: DataFrame, ids: DataFrame, maxIter: Int = 50,
-                               reliableCheckpoint: Boolean = false): DataFrame = {
+  def connectedComponentsStars(pairs: DataFrame, ids: DataFrame, maxIter: Int = 50): DataFrame = {
     // canonical directed edges child u -> parent v with u > v
     def canon(e: DataFrame): DataFrame =
       e.where(col("u") =!= col("v"))
@@ -452,7 +438,7 @@ object Dedup {
     def ckptCounted(df: DataFrame): (DataFrame, Long) = {
       val name = s"cc_stars_${blockMetricSeq.incrementAndGet()}"
       val obs = df.observe(name, count(lit(1)).as("rows"))
-      val ck = checkpointDf(obs, reliableCheckpoint)
+      val ck = checkpointDf(obs)
       val n = obs.queryExecution.observedMetrics.get(name) match {
         case Some(row) => row.getLong(0)
         case None => ck.count()
@@ -510,9 +496,7 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         shingleWords: Int = 3, minJaccard: Double = 0.5,
                         k: Int = 64, bands: Int = 16,
-                        maxBlock: Long = DefaultMaxBlock,
-                        materialize: Boolean = true,
-                        reliableCheckpoint: Boolean = false): DataFrame = {
+                        maxBlock: Long = DefaultMaxBlock): DataFrame = {
     // ONE materialized (id, hashes) frame feeds candidate generation AND
     // both verify join-backs (r6 optimization; was two materializations —
     // sigs AND hashes — i.e. two checkpoint jobs and two tokenize passes):
@@ -523,10 +507,9 @@ object Dedup {
     // checkpoint job runs, and the checkpoint stores only the hash
     // arrays (an RDD scan cannot column-prune, so a combined sig+hashes
     // row would be fully decoded by every consumer).
-    val hashes = materialized(
+    val hashes = checkpointDf(
       df.select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes")),
-      materialize, reliableCheckpoint)
+        graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes")))
     val cand = candidatesFromSigs(
       hashes.select(col("id"),
         graft.functions.SketchFunctions.minhashSigFromHashes(col("hashes"), k).as("sig")),
@@ -571,9 +554,7 @@ object Dedup {
                                  idCol: String, textCol: String,
                                  shingleWords: Int = 3, minJaccard: Double = 0.5,
                                  k: Int = 64, bands: Int = 16,
-                                 maxBlock: Long = DefaultMaxBlock,
-                                 materialize: Boolean = true,
-                                 reliableCheckpoint: Boolean = false): DataFrame = {
+                                 maxBlock: Long = DefaultMaxBlock): DataFrame = {
     val keys = Seq("band_idx", "band_hash")
     def banded(sigs: DataFrame): DataFrame =
       sigs.select(col("id"),
@@ -592,10 +573,9 @@ object Dedup {
     // (parity-asserted idempotence argument in ngramJaccardPairs), so the
     // benchmark text is tokenized once and one checkpoint job runs
     // instead of two.
-    val skR = materialized(
+    val skR = checkpointDf(
       right.select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes")),
-      materialize, reliableCheckpoint)
+        graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes")))
     val bandedR = banded(skR.select(col("id"),
       graft.functions.SketchFunctions.minhashSigFromHashes(col("hashes"), k).as("sig")))
     val rightRows =
@@ -615,11 +595,6 @@ object Dedup {
       .join(rightRows.select(col("band_idx"), col("band_hash"), col("id").as("id_b")), keys)
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-    def shingles(src: DataFrame, mat: Boolean): DataFrame = {
-      val h = src.select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes"))
-      materialized(h, mat, reliableCheckpoint)
-    }
     // the LEFT hash table feeds exactly ONE join-back (contrast the
     // self-join miner, where it feeds both sides), and the candidate set
     // is contamination-sized — AQE broadcasts it, so the corpus-side
@@ -630,8 +605,8 @@ object Dedup {
     // participates fully — flagNearDup's anchor would otherwise report
     // its matches as clean (hash-join keys support <=>, so AQE still
     // broadcasts the candidate set)
-    val shA = shingles(left, mat = false)
-      .select(col("id").as("__ida"), col("hashes").as("sh_a"))
+    val shA = left.select(col(idCol).as("__ida"),
+      graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("sh_a"))
     val shB = skR.select(col("id").as("__idb"), col("hashes").as("sh_b"))
     cand
       .join(shA, col("id_a") <=> col("__ida")).drop("__ida")

@@ -52,13 +52,11 @@ object LinkGraph {
     * data (the only driver-side values are the node COUNT and the two
     * derived constants). The degree-annotated edge frame is persisted
     * once and reused by every iteration, and each iteration's rank frame
-    * is checkpointed (`reliableCheckpoint` for executor-churn-proof
-    * production runs) so lineage stays O(1)-deep exactly like the CC
+    * is checkpointed so lineage stays O(1)-deep exactly like the CC
     * rounds. Output: (id, rank_mass). */
   def pageRank(edges: DataFrame, ids: DataFrame, iters: Int,
                dampingPpm: Long = 850000L,
                totalMass: Long = 1000000000000L,
-               reliableCheckpoint: Boolean = false,
                weightCol: Option[String] = None,
                teleportSeeds: Option[DataFrame] = None): DataFrame = {
     val op = "LinkGraph.pageRank"
@@ -107,7 +105,7 @@ object LinkGraph {
     val cName = s"pr_counts_${Dedup.nextMetricSeq()}"
     val anchorObs = anchorPlan.observe(cName,
       count(lit(1)).as("n"), count(when(col("seed"), 1)).as("nSeeds"))
-    val anchor = Dedup.checkpointDf(anchorObs, reliableCheckpoint)
+    val anchor = Dedup.checkpointDf(anchorObs)
     val (n, nSeeds) = anchorObs.queryExecution.observedMetrics.get(cName) match {
       case Some(row) => (row.getLong(0), row.getLong(1))
       case None =>
@@ -139,8 +137,7 @@ object LinkGraph {
       val baseCol = when(col("seed"), lit(base)).otherwise(lit(0L))
       var r = Dedup.checkpointDf(
         anchor.select(col("id"),
-          when(col("seed"), lit(init)).otherwise(lit(0L)).as("r")),
-        reliableCheckpoint)
+          when(col("seed"), lit(init)).otherwise(lit(0L)).as("r")))
       var i = 0
       while (i < iters) {
         val contrib = edgesOd
@@ -151,8 +148,7 @@ object LinkGraph {
           anchor.join(inbound.withColumnRenamed("dst", "id"), Seq("id"), "left")
             .select(col("id"),
               (baseCol +
-                expr(s"coalesce(s, 0L) * ${dampingPpm}L div 1000000L")).as("r")),
-          reliableCheckpoint)
+                expr(s"coalesce(s, 0L) * ${dampingPpm}L div 1000000L")).as("r")))
         i += 1
       }
       r.select(col("id"), col("r").as("rank_mass"))
@@ -179,8 +175,7 @@ object LinkGraph {
     * broadcast). Output: (id, domain, domain_rank). */
   def domainAuthority(docDomains: DataFrame, edges: DataFrame, iters: Int,
                       dampingPpm: Long = 850000L,
-                      totalMass: Long = 1000000000000L,
-                      reliableCheckpoint: Boolean = false): DataFrame = {
+                      totalMass: Long = 1000000000000L): DataFrame = {
     val op = "LinkGraph.domainAuthority"
     val dd = docDomains.select(col("id").cast("long").as("id"), col("domain"))
     val nid = dd.groupBy(col("domain")).agg(min(col("id")).as("nid"))
@@ -195,8 +190,7 @@ object LinkGraph {
         .join(dd.alias("d")
           .join(broadcast(nid.alias("n")), col("d.domain") <=> col("n.domain"))
           .select(col("d.id").as("id"), col("d.domain").as("domain"), col("nid")),
-          Seq("id")),
-      reliableCheckpoint)
+          Seq("id")))
     val idNode = docNode.select(col("id"), col("nid"))
     // translate both endpoints in ONE pass over the edge list
     val de = edges
@@ -220,7 +214,7 @@ object LinkGraph {
       .groupBy(col("src"), col("dst"))
       .agg(least(count(lit(1)), lit(Long.MaxValue / totalMass)).as("w"))
     val ranks = pageRank(de, nid.select(col("nid").as("id")), iters,
-      dampingPpm, totalMass, reliableCheckpoint, weightCol = Some("w"))
+      dampingPpm, totalMass, weightCol = Some("w"))
     docNode
       .join(broadcast(ranks.withColumnRenamed("id", "nid")), Seq("nid"))
       .select(col("id"), col("domain"), col("rank_mass").as("domain_rank"))

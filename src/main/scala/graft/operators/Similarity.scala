@@ -164,20 +164,16 @@ object Similarity {
     * zero-vector pileup) lands in one bucket regardless of nBits — by
     * degrading it to LINEAR star candidates against the bucket's min id
     * (cosine-verified like every other candidate, components close the
-    * cluster transitively). `materialize` checkpoints the compact
-    * (id, table, bucket) triples so the hyperplane signatures are computed
+    * cluster transitively). The compact (id, table, bucket) triples are
+    * checkpointed so the hyperplane signatures are computed
     * once, not once per plan consumer. */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             minCos: Double = 0.95,
                             nBits: Int = 16, nTables: Int = 4,
-                            maxBlock: Long = Dedup.DefaultMaxBlock,
-                            materialize: Boolean = true,
-                            reliableCheckpoint: Boolean = false): DataFrame = {
+                            maxBlock: Long = Dedup.DefaultMaxBlock): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val buckets0 = base.select(col("id"),
-      posexplode(signatures(col("vec"), nBits, nTables)).as(Seq("table_idx", "bucket")))
-    val buckets =
-      if (materialize) Dedup.checkpointDf(buckets0, reliableCheckpoint) else buckets0
+    val buckets = Dedup.checkpointDf(base.select(col("id"),
+      posexplode(signatures(col("vec"), nBits, nTables)).as(Seq("table_idx", "bucket"))))
     val keys = Seq("table_idx", "bucket")
     def selfJoinPairs(rows: DataFrame): DataFrame = {
       val a = rows.select(col("table_idx"), col("bucket"), col("id").as("id_a"))

@@ -209,25 +209,17 @@ object TextAnalysis {
     * [[hashSplit]] on their own id.
     *
     * Scale shape: the clustering is the existing CC machinery (compact
-    * long frames, per-round checkpoints, `starsCC` for adversarial
-    * diameters); the split assignment itself is MAP-LOCAL on the CC
-    * output (the cluster label is already a column of every member row —
-    * no representative join-back). Output: (id, cluster_id, split). */
+    * long frames, per-round checkpoints); the split assignment itself is
+    * MAP-LOCAL on the CC output (the cluster label is already a column of
+    * every member row — no representative join-back).
+    * Output: (id, cluster_id, split). */
   def clusterConsistentSplit(pairs: DataFrame, ids: DataFrame,
-                             splits: Seq[(String, Long)],
-                             starsCC: Boolean = false,
-                             reliableCheckpoint: Boolean = false): DataFrame = {
-    val cc =
-      if (starsCC) Dedup.connectedComponentsStars(pairs, ids,
-        reliableCheckpoint = reliableCheckpoint)
-      else Dedup.connectedComponents(pairs, ids,
-        reliableCheckpoint = reliableCheckpoint)
+                             splits: Seq[(String, Long)]): DataFrame =
     hashSplit(
-        cc.select(col("id"), col("cluster_id"),
-          col("cluster_id").cast("string").as("__ck")),
+        Dedup.connectedComponents(pairs, ids)
+          .select(col("id"), col("cluster_id"), col("cluster_id").cast("string").as("__ck")),
         "__ck", splits)
       .drop("__ck")
-  }
 
   /** Deterministic WEIGHTED Bernoulli sampling: row kept iff its 48-bit
     * md5 hash is below weight * 2^48 — inclusion probability equals the
@@ -275,19 +267,13 @@ object TextAnalysis {
     * sketch pass shuffles k counters per partition and the exact pass
     * shuffles only candidate tokens (<= k of them). Guard: k must fit the
     * driver, so minFreq must be a meaningful fraction of n (require'd). */
-  def heavyHitterTokens(df: DataFrame, textCol: String, minFreq: Long,
-                        materialize: Boolean = false,
-                        reliableCheckpoint: Boolean = false): DataFrame = {
+  def heavyHitterTokens(df: DataFrame, textCol: String, minFreq: Long): DataFrame = {
     require(minFreq > 0, "minFreq must be positive")
-    // three consumers (count, sketch, exact re-count). Default is to
-    // RE-STREAM the three map-only tokenization passes: checkpointing the
-    // exploded token stream is O(total corpus tokens) rows of executor
-    // storage — a multi-TB cliff at the web scale this operator targets,
-    // and unrecoverable on executor loss. materialize=true trades that
-    // storage for the two extra scans on small/medium corpora
-    val tokens0 = df.select(explode(split(col(textCol), " ")).as("token"))
-    val tokens =
-      if (materialize) Dedup.checkpointDf(tokens0, reliableCheckpoint) else tokens0
+    // three consumers (count, sketch, exact re-count) RE-STREAM the three
+    // map-only tokenization passes: checkpointing the exploded token
+    // stream is O(total corpus tokens) rows of storage — a multi-TB cliff
+    // at the web scale this operator targets
+    val tokens = df.select(explode(split(col(textCol), " ")).as("token"))
     val n = tokens.count()
     // guard BEFORE the Int truncation: a wrapped k would silently
     // undersize the sketch and break the superset guarantee

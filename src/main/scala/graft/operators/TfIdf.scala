@@ -59,15 +59,13 @@ object TfIdf {
     *
     * Output: (id, rnk, token, tf, df), rnk in [1, k].
     *
-    * `materialize` checkpoints the COMPACT (id, md5, tf) frame (three
+    * The COMPACT (id, md5, tf) frame is checkpointed (three
     * consumers; ~40 bytes/row, no strings) instead of re-running the
     * tokenize pass per consumer; the final assembly join re-streams the
     * map-only term-frequency pass either way, so document text is never
     * stored twice. */
   def distinctiveTerms(df: DataFrame, idCol: String, textCol: String,
-                       k: Int = 5, maxDfPpm: Long = 500000L,
-                       materialize: Boolean = false,
-                       reliableCheckpoint: Boolean = false): DataFrame = {
+                       k: Int = 5, maxDfPpm: Long = 500000L): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(maxDfPpm > 0 && maxDfPpm <= 1000000L,
       s"maxDfPpm must lie in (0, 1000000], got $maxDfPpm")
@@ -78,13 +76,13 @@ object TfIdf {
     // ranking exchange (r6, guide §2.3). The semi join against the
     // checked anchor makes duplicate ids loud (copies would inflate df
     // counts and interleave in the per-doc ranking)
-    val tfc0 = tf.select(col("id"), unhex(md5(col("token"))).as("tk"), col("tf"))
-      .join(Dedup.checkedIdAnchor(df, idCol, "TfIdf.distinctiveTerms"), Seq("id"), "left_semi")
-    val tfc = if (materialize) Dedup.checkpointDf(tfc0, reliableCheckpoint) else tfc0
+    val tfc = Dedup.checkpointDf(
+      tf.select(col("id"), unhex(md5(col("token"))).as("tk"), col("tf"))
+        .join(Dedup.checkedIdAnchor(df, idCol, "TfIdf.distinctiveTerms"), Seq("id"), "left_semi"))
     // tf has one row per distinct (doc, token) => count(*) IS the doc freq
     val dfreq = tfc.groupBy(col("tk")).agg(count(lit(1)).as("df"))
-    // corpus size as a 1-row frame (broadcast), not a driver action — the
-    // operator stays lazy/composable
+    // corpus size as a 1-row frame (broadcast), not a separate driver
+    // action over the checkpointed frame
     val nRow = tfc.agg(countDistinct(col("id")).as("n_docs"))
     val wDoc = Window.partitionBy(col("id"))
       .orderBy(col("df").asc, col("tf").desc, col("tk").asc)

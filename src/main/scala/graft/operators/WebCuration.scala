@@ -41,19 +41,13 @@ object WebCuration {
     * exactly once (that is the output itself, not overhead). No stage ever
     * carries a line across the wire to be COUNTED — only to be returned. */
   def stripBoilerplate(df: DataFrame, idCol: String, textCol: String,
-                       chunk: Int = 8, minDocs: Long = 2L,
-                       materialize: Boolean = true,
-                       reliableCheckpoint: Boolean = false): DataFrame = {
+                       chunk: Int = 8, minDocs: Long = 2L): DataFrame = {
     // the exploded frame feeds BOTH the hot-line aggregate and the
-    // reassembly join — materialize it once so the tokenize+hash pass over
-    // the full text does not run twice (the Dedup sketch-frame rule);
-    // reliableCheckpoint switches to durable df.checkpoint() for runs that
-    // must survive executor loss
-    val exploded0 = df
+    // reassembly join — checkpoint it once so the tokenize+hash pass over
+    // the full text does not run twice (the Dedup sketch-frame rule)
+    val exploded = Dedup.checkpointDf(df
       .select(col(idCol).as("id"), posexplode(tokenLines(col(textCol), chunk)).as(Seq("idx", "line")))
-      .withColumn("line_md5", md5(col("line")))
-    val exploded =
-      if (materialize) Dedup.checkpointDf(exploded0, reliableCheckpoint) else exploded0
+      .withColumn("line_md5", md5(col("line"))))
     val hot = exploded
       .select(col("line_md5"), col("id"))
       .groupBy(col("line_md5"))
@@ -131,11 +125,10 @@ object WebCuration {
     * solely on the (id, idx)-keyed flag join-back feeding the reassembly
     * that IS the output (PlanSpec-asserted). */
   def keepFirstLines(df: DataFrame, idCol: String, textCol: String,
-                     chunk: Int = 8, materialize: Boolean = true,
-                     reliableCheckpoint: Boolean = false): DataFrame =
+                     chunk: Int = 8): DataFrame =
     keepFirstExploded(df, idCol,
       posexplode(tokenLines(col(textCol), chunk)).as(Seq("idx", "line")),
-      sep = "\n", op = "WebCuration.keepFirstLines", materialize, reliableCheckpoint)
+      sep = "\n", op = "WebCuration.keepFirstLines")
 
   /** Non-empty units of a LITERAL separator split, in order — the unit
     * extractor for corpora with real structure markers: paragraphs on
@@ -166,27 +159,24 @@ object WebCuration {
     * compact (id, idx, md5) exchanges, unit text shuffling only on the
     * (id, idx)-keyed join-back that feeds the output itself. */
   def keepFirstUnits(df: DataFrame, idCol: String, textCol: String,
-                     sep: String, materialize: Boolean = true,
-                     reliableCheckpoint: Boolean = false): DataFrame =
+                     sep: String): DataFrame =
     keepFirstExploded(df, idCol,
       posexplode(sepUnits(col(textCol), sep)).as(Seq("idx", "line")),
-      sep = sep, op = "WebCuration.keepFirstUnits", materialize, reliableCheckpoint)
+      sep = sep, op = "WebCuration.keepFirstUnits")
       .withColumnRenamed("n_lines", "n_units")
 
   /** ONE copy of the keep-first machinery shared by [[keepFirstLines]]
     * and [[keepFirstUnits]]: explode per `unitsExpr` (must produce
     * (idx, line) columns), pick the lexicographically first (id, idx)
     * occurrence per unit md5 with a map-side-combined min-struct
-    * aggregate, strike the rest, reassemble survivors with `sep`. */
+    * aggregate, strike the rest, reassemble survivors with `sep`. The
+    * exploded frame feeds the winner aggregate and the text join-back, so
+    * it is checkpointed once. */
   private def keepFirstExploded(df: DataFrame, idCol: String,
-                                unitsExpr: Column, sep: String, op: String,
-                                materialize: Boolean,
-                                reliableCheckpoint: Boolean): DataFrame = {
-    val exploded0 = df
+                                unitsExpr: Column, sep: String, op: String): DataFrame = {
+    val exploded = Dedup.checkpointDf(df
       .select(col(idCol).as("id"), unitsExpr)
-      .withColumn("line_md5", md5(col("line")))
-    val exploded =
-      if (materialize) Dedup.checkpointDf(exploded0, reliableCheckpoint) else exploded0
+      .withColumn("line_md5", md5(col("line"))))
     // winner selection runs entirely in compact (id, idx, md5) space —
     // joining the full exploded frame by md5 would drag every copy of a
     // hot template line's TEXT into one join partition
@@ -233,15 +223,15 @@ object WebCuration {
     * affected document; document text rides exactly one id-keyed
     * exchange, into the map-side excision that is the output. */
   def keepFirstSpans(df: DataFrame, idCol: String, textCol: String,
-                     w: Int = 13, materialize: Boolean = true,
-                     reliableCheckpoint: Boolean = false): DataFrame = {
+                     w: Int = 13): DataFrame = {
     // the shingle identity rides every winner exchange as unhex(md5) —
     // 16 raw bytes instead of the 32-char hex string (same md5 identity,
     // injective re-encoding; the key never reaches the output) — halving
-    // the two sh-keyed shuffles' key bytes (r6, guide §2.3 narrower types)
-    val occ0 = Decontaminate.shingleOccurrences(df, idCol, textCol, w)
-      .withColumn("sh", unhex(col("sh")))
-    val occ = if (materialize) Dedup.checkpointDf(occ0, reliableCheckpoint) else occ0
+    // the two sh-keyed shuffles' key bytes (r6, guide §2.3 narrower types);
+    // the occurrence frame feeds the winner aggregate and the struck join,
+    // so it is checkpointed once
+    val occ = Dedup.checkpointDf(Decontaminate.shingleOccurrences(df, idCol, textCol, w)
+      .withColumn("sh", unhex(col("sh"))))
     val winners = occ.groupBy(col("sh"))
       .agg(min(struct(col("id"), col("pos"))).as("w"))
     val struck = occ.join(winners, Seq("sh"))
@@ -445,13 +435,11 @@ object WebCuration {
     * — no text. The decomposition is EXACT: bucket = draw's top bits, so
     * (bucket, draw, id) order == (draw, id) order and the two-level
     * prefix equals the global prefix; the oracle's hash-equality is the
-    * proof. `materialize` checkpoints the compact joined frame (two
-    * consumers: the filter branch and the boundary window). */
+    * proof. The compact joined frame is checkpointed (two consumers: the
+    * filter branch and the boundary window). */
   def tokenBudgetPerDomain(df: DataFrame, domainCol: String, idCol: String,
                            tokensCol: String, budget: Long,
-                           hashCol: String = null,
-                           materialize: Boolean = true,
-                           reliableCheckpoint: Boolean = false): DataFrame = {
+                           hashCol: String = null): DataFrame = {
     require(budget > 0, s"tokenBudgetPerDomain needs budget > 0, got $budget")
     val op = "WebCuration.tokenBudgetPerDomain"
     val hc = if (hashCol == null) idCol else hashCol
@@ -480,16 +468,14 @@ object WebCuration {
       .where(col("before_b") < budget)
     // one null-safe join-back (null domains are legitimate groups), then
     // split: compact longs only, so the checkpoint is cheap
-    val joined0 = base.alias("__b")
+    val joined = Dedup.checkpointDf(base.alias("__b")
       .join(marked.alias("__m"),
         col("__b.domain") <=> col("__m.domain") &&
           col("__b.bucket") === col("__m.bucket"))
       .select(col("__b.domain").as("domain"), col("__b.id").as("id"),
         col("__b.tok").as("tok"), col("__b.draw").as("draw"),
         col("__b.bucket").as("bucket"),
-        col("__m.bt").as("bt"), col("__m.before_b").as("before_b"))
-    val joined =
-      if (materialize) Dedup.checkpointDf(joined0, reliableCheckpoint) else joined0
+        col("__m.bt").as("bt"), col("__m.before_b").as("before_b")))
     val full = joined.where(col("before_b") + col("bt") < budget)
       .select(col("domain"), col("id"), col("tok"), col("draw"))
     val wDoc = Window.partitionBy(col("domain"), col("bucket"))
@@ -560,23 +546,6 @@ object WebCuration {
         max(struct(col(tsCol).as("ts"), col(idCol).as("id"))).as("w"))
       .select(col("url"), col("n_captures"),
         col("w.ts").as("ts"), col("w.id").as("id"))
-
-  /** [[latestCapture]] materialized as full winner ROWS: the input frame
-    * filtered to each url's newest capture (payload columns intact).
-    * The winner set is joined back by id (left_semi — compact key, text
-    * stays put), so ids must be unique; duplicates raise_error loudly via
-    * the shared anchor guard instead of silently emitting copies. Both
-    * semi joins are null-safe (<=>): a url whose winning capture carries
-    * a null id must still emit its winner row — an equality join would
-    * silently DELETE that url from the collapse (the one legal null id
-    * is unique, so <=> matches exactly its row). */
-  def collapseRecrawls(df: DataFrame, urlCol: String, tsCol: String,
-                       idCol: String): DataFrame = {
-    val winners = latestCapture(df, urlCol, tsCol, idCol).select(col("id"))
-    df.join(Dedup.checkedIdAnchor(df, idCol, "WebCuration.collapseRecrawls"),
-        df(idCol) <=> col("id"), "left_semi")
-      .join(winners, df(idCol) <=> winners("id"), "left_semi")
-  }
 
   /** Incremental recrawl ingest (snapshot diff / CDC): classify each batch
     * row against the base corpus as `new` (url absent), `unchanged` (url

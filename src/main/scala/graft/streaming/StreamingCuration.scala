@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.operators.Dedup.checkpointDf
 import graft.operators.WebCuration
 import graft.sources.ParquetManifestTable
 
@@ -43,14 +44,12 @@ object StreamingCuration {
     * (versioned upserts — read with [[readClean]]). */
   def start(docs: DataFrame, stateRoot: String, checkpointDir: String,
             chunk: Int = 8, minDocs: Long = 2L,
-            trigger: Trigger = Trigger.AvailableNow(),
-            reliableCheckpoint: Boolean = false): StreamingQuery =
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, stateRoot, chunk, minDocs, f"b$batchId%08d",
-          reliableCheckpoint)
+        processBatch(batch, stateRoot, chunk, minDocs, f"b$batchId%08d")
       }
       .start()
 
@@ -233,28 +232,24 @@ object StreamingCuration {
     * own first attempt. */
   def startKeepFirstSpans(docs: DataFrame, stateRoot: String, checkpointDir: String,
                           w: Int = 13,
-                          trigger: Trigger = Trigger.AvailableNow(),
-                          reliableCheckpoint: Boolean = false): StreamingQuery =
+                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processKeepFirstSpans(batch, stateRoot, w, f"b$batchId%08d", reliableCheckpoint)
+        processKeepFirstSpans(batch, stateRoot, w, f"b$batchId%08d")
       }
       .start()
 
   private[streaming] def processKeepFirstSpans(batch: DataFrame, stateRoot: String,
-                                               w: Int, batchId: String,
-                                               reliableCheckpoint: Boolean = false): Unit = {
+                                               w: Int, batchId: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     val shT = new ParquetManifestTable(s"$stateRoot/shingles")
     val outT = new ParquetManifestTable(s"$stateRoot/out")
-    def ckpt(df: DataFrame): DataFrame =
-      graft.operators.Dedup.checkpointDf(df, reliableCheckpoint)
 
-    val fresh = ckpt(firstSeen(batch, outT))
-    val occ = ckpt(graft.operators.Decontaminate
+    val fresh = checkpointDf(firstSeen(batch, outT))
+    val occ = checkpointDf(graft.operators.Decontaminate
       .shingleOccurrences(fresh, "id", "text", w))
     // seen = shingles of strictly EARLIER batches (never "all": a
     // crash-retry that already committed this batch's shingles must not
@@ -263,7 +258,7 @@ object StreamingCuration {
     // shingles absent from every prior one — and checkpointed because TWO
     // actions consume it (the anti-join commit and the excision flag join)
     val prior = shT.committedBatches.filter(_ < batchId)
-    val seen = ckpt(
+    val seen = checkpointDf(
       if (prior.isEmpty) Seq.empty[String].toDF("sh")
       else prior.map(shT.readBatch(spark, _)).reduce(_ unionByName _).select("sh"))
 
@@ -293,31 +288,28 @@ object StreamingCuration {
     * the stream's life (the f"b%08d" ids from [[start]] are). */
   private[streaming] def processBatch(batch: DataFrame, stateRoot: String,
                                       chunk: Int, minDocs: Long,
-                                      batchId: String,
-                                      reliableCheckpoint: Boolean = false): Unit = {
+                                      batchId: String): Unit = {
     val spark = batch.sparkSession
     val linesT = new ParquetManifestTable(s"$stateRoot/lines")
     val countsT = new ParquetManifestTable(s"$stateRoot/counts")
     val cleanT = new ParquetManifestTable(s"$stateRoot/clean")
-    // every materialization site honors the engine-wide durability mode
-    // (foreachBatch retries do replay the batch and commits are idempotent,
-    // but a reliable checkpoint keeps the RETRY itself from recomputing the
-    // lineage on executor churn mid-batch)
-    def ckpt(df: DataFrame): DataFrame =
-      graft.operators.Dedup.checkpointDf(df, reliableCheckpoint)
+    // foreachBatch retries replay the batch and commits are idempotent;
+    // with a session checkpoint dir the checkpoints below are durable too,
+    // so executor churn mid-batch does not make the retry recompute the
+    // lineage
 
     // ---- 0: first-seen-wins vs committed ids (shared contract; non-null
     // text preferred among in-batch re-deliveries). Several consumers
-    // below; this is one micro-batch — small — so a local materialization
-    // is the right tool
-    val fresh = ckpt(firstSeen(batch, cleanT))
+    // below; this is one micro-batch — small — so a checkpoint is the
+    // right tool
+    val fresh = checkpointDf(firstSeen(batch, cleanT))
 
     // ---- 1: append the batch's lines (id, idx, line, line_md5)
     val linesB = fresh
       .select(col("id"),
         posexplode(WebCuration.tokenLines(col("text"), chunk)).as(Seq("idx", "line")))
       .withColumn("line_md5", md5(col("line")))
-    val linesCk = ckpt(linesB)
+    val linesCk = checkpointDf(linesB)
     linesT.commit(linesCk, batchId)
 
     // ---- 2: merge counts. The PRE-batch snapshot is the newest batch id
@@ -331,7 +323,7 @@ object StreamingCuration {
       } else countsT.readBatch(spark, prevBatches.max)
     val countsB = linesCk.groupBy(col("line_md5"))
       .agg(countDistinct(col("id")).as("n_b"))
-    val merged = ckpt(old.join(countsB, Seq("line_md5"), "full_outer")
+    val merged = checkpointDf(old.join(countsB, Seq("line_md5"), "full_outer")
       .select(col("line_md5"),
         (coalesce(col("n_docs"), lit(0L)) + coalesce(col("n_b"), lit(0L))).as("n_docs")))
     countsT.commit(merged, batchId)

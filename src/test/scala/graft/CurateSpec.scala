@@ -131,16 +131,6 @@ class CurateSpec extends AnyFunSuite {
     assert(run(2) == run(11))
   }
 
-  test("starsCC path: identical curation output to min-label CC") {
-    val withDups = docs.unionByName(
-      docs.where(col("doc_id") < 20).withColumn("doc_id", col("doc_id") + 100000L))
-    val a = Curate.curate(withDups)
-      .orderBy("detected_lang", "doc_id").collect().map(_.toString).toSeq
-    val b = Curate.curate(withDups, starsCC = true)
-      .orderBy("detected_lang", "doc_id").collect().map(_.toString).toSeq
-    assert(a == b)
-  }
-
   test("sharded packing: same survivor set, budgets hold per pack, globally unique pack ids") {
     val budget = 256
     val plain = Curate.curate(docs, packBudget = budget).cache()

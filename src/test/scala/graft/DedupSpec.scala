@@ -195,18 +195,29 @@ class DedupSpec extends AnyFunSuite {
       Seq.empty[Long].toDF("id")).count() == 0)
   }
 
-  test("reliableCheckpoint: refuses without a checkpoint dir, then matches localCheckpoint with one") {
-    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    val ids = Seq(1L, 2L, 3L, 9L).toDF("id")
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      intercept[IllegalArgumentException] {
-        Dedup.connectedComponents(pairs, ids, reliableCheckpoint = true).collect()
+  test("with a session checkpoint dir, connected components survive losing every cached block") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 7L), (7L, 8L)).toDF("id_a", "id_b")
+      .repartition(3)
+    val ids = Seq(1L, 2L, 3L, 5L, 6L, 7L, 8L, 9L).toDF("id").repartition(3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+    val local = rows(Dedup.connectedComponents(pairs, ids))
+    assert(local == Seq((1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
+      (5L, 5L, true), (6L, 5L, false), (7L, 5L, false), (8L, 5L, false), (9L, 9L, true)))
+    SparkTestBase.withCheckpointDir {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      // the CC rounds run eagerly; the returned frame reads their last
+      // checkpoint. Dropping every block this run cached stands in for
+      // losing the executors that held them: local-checkpoint blocks are
+      // gone for good, reliable ones are re-read from the checkpoint dir
+      val out = Dedup.connectedComponents(pairs, ids)
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before.contains(id)) rdd.unpersist(blocking = true)
       }
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ck").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val out = Dedup.connectedComponents(pairs, ids, reliableCheckpoint = true)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-    assert(out == Seq((1L, 1L, true), (2L, 1L, false), (3L, 1L, false), (9L, 9L, true)))
+      assert(rows(out) == local)
+      assert(SparkTestBase.checkpointFiles().nonEmpty, "reliable checkpoints wrote no files")
+    }
   }
 
   test("clusterRepresentatives: highest score wins, ties to smallest id; duplicate/null inputs loud") {

@@ -642,6 +642,39 @@ class ExtractMainSpec extends AnyFunSuite {
       .read(spark).count() == links.size)
   }
 
+  test("--link-graph --curate under a session checkpoint dir: durable checkpoints, same snapshots") {
+    import spark.implicits._
+    val inDir = java.nio.file.Files.createTempDirectory("graft_ck_in").toString
+    def page(d: String, k: Int, links: Seq[String]): graft.sources.CrawlRow = {
+      // long English body (survives the curate gates); pages k and k + 3
+      // of a domain are exact copies, so dedup and CC have work to do
+      val words = (1 to 40).flatMap(j => Seq("the", s"$d${k % 3}w$j", "and", "of", s"${d}item$j"))
+      val as = links.map(l => s"""<a href="$l">ref</a>""").mkString(" ")
+      graft.sources.CrawlRow(s"http://$d.test/p$k.html", new java.sql.Timestamp(0L),
+        s"<html><head><title>t</title></head><body><article><p>${words.mkString(" ")}.</p>$as</article></body></html>"
+          .getBytes("UTF-8"), "", "en")
+    }
+    val crawl = for (d <- Seq("a", "b", "c"); k <- 1 to 6)
+      yield page(d, k, Seq(s"http://a.test/p1.html", s"http://$d.test/p${k % 6 + 1}.html"))
+    crawl.toDS().toDF().write.mode("overwrite").parquet(inDir)
+    def run(): (Seq[String], Seq[String]) = {
+      val outDir = java.nio.file.Files.createTempDirectory("graft_ck_out").toString
+      Extract.main(Array(inDir, outDir, "--partitions", "2", "--link-graph", "--curate"))
+      def snapshot(name: String) = new graft.sources.ParquetManifestTable(s"$outDir/$name")
+        .readLatest(spark).collect().map(_.toString).sorted.toSeq
+      (snapshot("authority"), snapshot("curated"))
+    }
+    val (authLocal, curatedLocal) = run()
+    assert(authLocal.size == crawl.size && curatedLocal.nonEmpty)
+    SparkTestBase.withCheckpointDir {
+      val (auth, curated) = run()
+      assert(SparkTestBase.checkpointFiles().nonEmpty,
+        "--link-graph --curate wrote no checkpoint files to the session dir")
+      assert(auth == authLocal)
+      assert(curated == curatedLocal)
+    }
+  }
+
   test("--link-graph + --recrawl: authority reads only the CURRENT version's links") {
     import spark.implicits._
     val inDir1 = java.nio.file.Files.createTempDirectory("graft_lgr_in1").toString

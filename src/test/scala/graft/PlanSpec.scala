@@ -76,12 +76,10 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  /** The executed plans of the queries one `Extract.main(args)` call runs,
-    * from a QueryExecutionListener, up to the one writing to `until`.
-    * Listener events arrive asynchronously but in order, so it polls with a
-    * deadline for that write; every earlier query's plan has arrived by
-    * then. */
-  def extractPlans(args: Seq[String], until: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+  /** `f`'s result and the executed plans of every query it ran, from a
+    * QueryExecutionListener. Listener events arrive asynchronously, so
+    * the listener bus is drained before the plans are read. */
+  def executedPlans[T](f: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -89,15 +87,37 @@ class PlanSpec extends AnyFunSuite {
         plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    def seen: Seq[SparkPlan] = plans.toArray(Array.empty[SparkPlan]).toSeq
     spark.listenerManager.register(listener)
     try {
-      Extract.main(args.toArray)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.exists(writesTo(_, until)) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.exists(writesTo(_, until)), s"no plan writing to $until observed")
-      seen
+      val out = f
+      org.apache.spark.graftbridge.SparkContextBridge.drainListenerBus(spark.sparkContext)
+      (out, plans.toArray(Array.empty[SparkPlan]).toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The executed plans of the queries one `Extract.main(args)` call runs;
+    * one of them must write to `until`. */
+  def extractPlans(args: Seq[String], until: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    val (_, plans) = executedPlans(Extract.main(args.toArray))
+    assert(plans.exists(writesTo(_, until)), s"no plan writing to $until observed")
+    plans
+  }
+
+  /** Every plan building `mk` runs (its eager checkpoint and sizing jobs)
+    * followed by the returned frame's own plan, all planned with AQE off.
+    * An operator that checkpoints executes part of its work before
+    * returning; that part never shows in the returned frame's plan, so a
+    * shape assertion must walk these jobs too. */
+  def operatorPlans(mk: => org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = withAqeOff {
+    val (out, plans) = executedPlans(mk)
+    plans :+ out.queryExecution.executedPlan
+  }
+
+  def shufflesOf(plans: Seq[org.apache.spark.sql.execution.SparkPlan])
+      : Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    plans.flatMap(p => aqe.collect(p) { case s: ShuffleExchangeExec => s })
   }
 
   /** The executed plan of the documents commit of one fresh
@@ -387,10 +407,10 @@ class PlanSpec extends AnyFunSuite {
 
   test("bloom decontaminate: text never shuffles; the probe runs map-side over the scan") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val out = graft.operators.Decontaminate.flagBloom(docs,
-      docs.where(col("doc_id") % 50 === 0), "doc_id", "text", w = 5, minOverlap = 3L,
-      materialize = false)
-    val shuffles = collectShuffles(out)
+    val plans = operatorPlans(graft.operators.Decontaminate.flagBloom(docs,
+      docs.where(col("doc_id") % 50 === 0), "doc_id", "text", w = 5, minOverlap = 3L))
+    assert(plans.size > 1, "the benchmark checkpoint and filter build must run as jobs")
+    val shuffles = shufflesOf(plans)
     assert(shuffles.nonEmpty)
     shuffles.foreach { s =>
       val names = s.output.map(_.name)
@@ -400,18 +420,17 @@ class PlanSpec extends AnyFunSuite {
     // the probe expression sits below every exchange: the corpus-side
     // scan feeds bloom_shingle_hits directly, so non-hit shingles die on
     // the executor that read the document
-    val planStr = withAqeOff(plan(out))
-    assert(planStr.contains("bloom_shingle_hits"), "probe must appear in the plan")
+    assert(plans.last.toString.contains("bloom_shingle_hits"), "probe must appear in the plan")
   }
 
   test("keep-first units: winner is an aggregate, never a window over the md5 keyspace") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val out = graft.operators.WebCuration.keepFirstUnits(
+    val plans = operatorPlans(graft.operators.WebCuration.keepFirstUnits(
       docs.select(col("doc_id"), translate(col("text"), " ", "\n").as("text")),
-      "doc_id", "text", sep = "\n", materialize = false)
-    val planStr = withAqeOff(plan(out))
-    assert(!planStr.contains("Window"), "keep-first must not plan a window")
-    val shuffles = collectShuffles(out)
+      "doc_id", "text", sep = "\n"))
+    assert(plans.size > 1, "the exploded-frame checkpoint must run as a job")
+    plans.foreach(p => assert(!p.toString.contains("Window"), "keep-first must not plan a window"))
+    val shuffles = shufflesOf(plans)
     // unit text may only ride exchanges keyed by (id) or (id, idx) — the
     // winner/flag exchanges over the md5 keyspace must be text-free
     shuffles.foreach { s =>
@@ -558,15 +577,6 @@ class PlanSpec extends AnyFunSuite {
       assert(!s.output.map(_.name).contains("text"),
         s"shuffle carries ${s.output.map(_.name).mkString(",")}")
     }
-    // full winner rows: text rides back only on id-keyed exchanges
-    collectShuffles(
-        graft.operators.WebCuration.collapseRecrawls(docs, "url", "warc_ts", "doc_id"))
-      .foreach { s =>
-        if (s.output.map(_.name).contains("text")) {
-          val part = s.outputPartitioning.toString
-          assert(part.contains("doc_id#"), s"text exchange not id-keyed: $part")
-        }
-      }
   }
 
   test("incremental delta: both sides reduce to (url, md5) before the join — text never shuffles") {

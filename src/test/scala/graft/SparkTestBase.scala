@@ -19,12 +19,9 @@ object SparkTestBase {
   }
 
   /** Run `f` with the SparkContext checkpoint dir set to a fresh temp dir,
-    * then restore. A checkpoint dir cannot be UNSET on a live context, so
-    * when none was set before, restore points at this stable session-wide
-    * fallback instead of the test's own (about-to-vanish) directory —
-    * deterministic state regardless of suite ordering. */
-  lazy val fallbackCheckpointDir: String =
-    java.nio.file.Files.createTempDirectory("graft_ckpt_fallback").toString
+    * then restore the previous setting exactly — "no dir" included, so
+    * every later suite keeps local checkpoints (`Dedup.checkpointDf`
+    * turns reliable whenever a dir is set). */
   def withCheckpointDir[T](f: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getCheckpointDir
@@ -32,7 +29,7 @@ object SparkTestBase {
     sc.setCheckpointDir(dir.toString)
     try f
     finally {
-      sc.setCheckpointDir(prev.getOrElse(fallbackCheckpointDir))
+      org.apache.spark.graftbridge.SparkContextBridge.setCheckpointDir(sc, prev)
       // the checkpointed RDD data is only needed while f runs — reclaim it
       try {
         import scala.jdk.CollectionConverters._
@@ -41,6 +38,17 @@ object SparkTestBase {
       } catch { case _: java.io.IOException => () }
     }
   }
+
+  /** Regular files under the session's current checkpoint dir (none when
+    * no dir is set) — what a reliable checkpoint leaves behind. */
+  def checkpointFiles(): Seq[java.nio.file.Path] =
+    spark.sparkContext.getCheckpointDir.toSeq.flatMap { d =>
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(new java.net.URI(d).getPath)
+      if (!java.nio.file.Files.exists(root)) Seq.empty
+      else java.nio.file.Files.walk(root).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+    }
 
   /** All messages down a throwable's cause chain — Spark wraps executor
     * raise_error failures several layers deep, so guard specs search the

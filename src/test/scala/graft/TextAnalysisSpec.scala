@@ -105,10 +105,6 @@ class TextAnalysisSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
     val singles = (0L until 200L).toSet -- Set(1L, 2L, 3L, 40L, 41L)
     assert(singles.forall(i => byId(i)._2 == solo(i)))
-    // the stars variant labels identically
-    val stars = TextAnalysis.clusterConsistentSplit(pairs, ids, splits, starsCC = true)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
-    assert(stars == byId)
   }
 
   test("weightedSample: kept iff h48 under the integer threshold; rate tracks weight") {

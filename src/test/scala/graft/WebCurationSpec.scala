@@ -346,24 +346,6 @@ class WebCurationSpec extends AnyFunSuite {
       ("u3", 2L, -1L, 7L)))
   }
 
-  test("collapseRecrawls returns the full winner rows; duplicate ids raise") {
-    val df = Seq(
-      (1L, "u1", Some(10L), "newest"),
-      (2L, "u1", Some(5L), "stale"),
-      (3L, "u2", None, "only"))
-      .toDF("doc_id", "url", "warc_ts", "text")
-    val out = WebCuration.collapseRecrawls(df, "url", "warc_ts", "doc_id")
-      .orderBy("doc_id").collect()
-    assert(out.map(r => (r.getLong(0), r.getString(3))).toSeq ==
-      Seq((1L, "newest"), (3L, "only")))
-    val dup = Seq((1L, "u1", Some(1L), "a"), (1L, "u1", Some(2L), "b"))
-      .toDF("doc_id", "url", "warc_ts", "text")
-    val e = intercept[Exception] {
-      WebCuration.collapseRecrawls(dup, "url", "warc_ts", "doc_id").collect()
-    }
-    assert(SparkTestBase.causeMessages(e).exists(_.contains("duplicate input id")))
-  }
-
   test("keepFirstSpans duplicate-id guard survives column pruning (Filter, not a projected alias)") {
     val dup = Seq((1L, "aa bb"), (1L, "cc dd")).toDF("doc_id", "text")
     val e = intercept[Exception] {
@@ -373,18 +355,6 @@ class WebCurationSpec extends AnyFunSuite {
         .select("id", "clean_text").collect()
     }
     assert(SparkTestBase.causeMessages(e).exists(_.contains("duplicate input id")))
-  }
-
-  test("collapseRecrawls keeps a url whose winning capture has a null id (null-safe join-back)") {
-    val df = Seq(
-      (Option.empty[Long], "u1", Some(10L), "newest-null-id"),
-      (Option(2L), "u1", Some(5L), "stale"),
-      (Option(3L), "u2", Some(1L), "other"))
-      .toDF("doc_id", "url", "warc_ts", "text")
-    val out = WebCuration.collapseRecrawls(df, "url", "warc_ts", "doc_id")
-      .collect().map(r => (r.getString(1), r.getString(3))).toSet
-    // an equality join would silently DELETE u1 here
-    assert(out == Set(("u1", "newest-null-id"), ("u2", "other")))
   }
 
   test("incrementalDelta classifies new/changed/unchanged; NULL urls and texts are null-safe") {

@@ -87,19 +87,15 @@ object DedupReference {
   }
 
   /** Banded-LSH candidate pairs (id_a < id_b) straight from text: the
-    * (id, sig) minhash table, checkpointed once when `materialize` is set,
-    * fed to `Dedup.candidatesFromSigs` — the generator
-    * `Dedup.ngramJaccardPairs` runs over its stored shingle hashes. */
+    * (id, sig) minhash table, checkpointed once, fed to
+    * `Dedup.candidatesFromSigs` — the generator `Dedup.ngramJaccardPairs`
+    * runs over its stored shingle hashes. */
   def minhashLshCandidates(df: DataFrame, idCol: String, textCol: String,
                            shingleWords: Int, k: Int, bands: Int,
-                           maxBlock: Long = Dedup.DefaultMaxBlock,
-                           materialize: Boolean = true,
-                           reliableCheckpoint: Boolean = false): DataFrame = {
-    val sigs = df.select(
-      col(idCol).as("id"),
-      graft.functions.SketchFunctions.minhashSig(col(textCol), shingleWords, k).as("sig"))
+                           maxBlock: Long = Dedup.DefaultMaxBlock): DataFrame =
     Dedup.candidatesFromSigs(
-      if (materialize) Dedup.checkpointDf(sigs, reliableCheckpoint) else sigs,
+      Dedup.checkpointDf(df.select(
+        col(idCol).as("id"),
+        graft.functions.SketchFunctions.minhashSig(col(textCol), shingleWords, k).as("sig"))),
       k, bands, maxBlock)
-  }
 }

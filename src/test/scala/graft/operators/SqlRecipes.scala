@@ -43,7 +43,7 @@ object WebCurationSql {
     * idiom — the caller guarantees unique ids), and no forced
     * materialization of the occurrence frame — the `__occ` CTE feeds two
     * consumers, so on a large corpus `CACHE TABLE`/persist the source (or
-    * use the Scala operator, whose `materialize=true` checkpoints it) to
+    * use the Scala operator, which checkpoints it) to
     * avoid tokenizing every document twice. Parity-asserted against the
     * operator (WebCurationSpec). */
   def keepFirstSpansSqlRecipe(table: String, idCol: String, textCol: String,

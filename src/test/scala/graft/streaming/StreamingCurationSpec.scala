@@ -67,10 +67,9 @@ class StreamingCurationSpec extends AnyFunSuite {
     SparkTestBase.withCheckpointDir {
       val d1 = Seq((1L, "shared nav body one"), (2L, "solo text here now")).toDF("id", "text")
       val d2 = Seq((3L, "shared nav body three")).toDF("id", "text")
-      StreamingCuration.processBatch(d1, stateRoot, chunk = 2, minDocs = 2L,
-        "b00000000", reliableCheckpoint = true)
-      StreamingCuration.processBatch(d2, stateRoot, chunk = 2, minDocs = 2L,
-        "b00000001", reliableCheckpoint = true)
+      StreamingCuration.processBatch(d1, stateRoot, chunk = 2, minDocs = 2L, "b00000000")
+      StreamingCuration.processBatch(d2, stateRoot, chunk = 2, minDocs = 2L, "b00000001")
+      assert(SparkTestBase.checkpointFiles().nonEmpty, "reliable checkpoints wrote no files")
       val all = d1.unionByName(d2).withColumnRenamed("id", "doc_id")
       assert(cleanRows(stateRoot) == batchRows(all))
     }
