@@ -1,6 +1,7 @@
 package graft
 
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{ExtractPipeline, SinkTables}
@@ -15,9 +16,9 @@ import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
   *   [--batch-id ID] [--password PW] [--include-raw] [--include-embedded] \
   *   [--object-streams] [--sinks] [--curate] [--partitions N] \
   *   [--password-column COL] [--strip-boilerplate] [--decontaminate DIR] \
-  *   [--decontaminate-bloom] [--dedup-spans W] [--keep-first-spans W] \
-  *   [--max-mean-bits B100] [--quality-reps] [--table-format parquet|orc] \
-  *   [--recrawl BASEDIR] [--link-graph]
+  *   [--dedup-spans W] [--keep-first-spans W] [--max-mean-bits B100] \
+  *   [--quality-reps] [--table-format parquet|orc] [--recrawl BASEDIR] \
+  *   [--link-graph]
   * }}}
   *
   * Per run: resume-filter the input against the committed output (exactly
@@ -38,7 +39,8 @@ import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
   *
   * At scale, run with `--conf spark.checkpoint.dir=<durable path>`: the
   * checkpoints of `--recrawl`, `--link-graph` and `--curate` then land
-  * there and survive executor loss (`Dedup.checkpointDf`).
+  * there and survive executor loss (`Dedup.checkpointDf`); the job
+  * deletes the `rdd-*` directories it wrote there when it ends.
   */
 object Extract {
 
@@ -49,7 +51,7 @@ object Extract {
       objectStreams: Boolean = false, sinks: Boolean = false,
       curate: Boolean = false, partitions: Int = 0,
       passwordColumn: String = null, stripBoilerplate: Boolean = false,
-      decontaminate: String = null, deconBloom: Boolean = false,
+      decontaminate: String = null,
       dedupSpansW: Int = 0, keepFirstSpansW: Int = 0,
       maxMeanBitsX100: Long = 0L,
       qualityReps: Boolean = false, tableFormat: String = "parquet",
@@ -75,7 +77,6 @@ object Extract {
         case "--curate"           => a = a.copy(curate = true); i += 1
         case "--strip-boilerplate" => a = a.copy(stripBoilerplate = true); i += 1
         case "--decontaminate"    => a = a.copy(decontaminate = value("--decontaminate")); i += 2
-        case "--decontaminate-bloom" => a = a.copy(deconBloom = true); i += 1
         case "--dedup-spans"      =>
           val w = value("--dedup-spans").toInt
           require(w >= 0, s"--dedup-spans width must be >= 0 (0 disables the stage), got $w")
@@ -109,8 +110,6 @@ object Extract {
       "--strip-boilerplate only affects the curated snapshot: pass --curate too")
     require(a.decontaminate == null || a.curate,
       "--decontaminate only affects the curated snapshot: pass --curate too")
-    require(!a.deconBloom || a.decontaminate != null,
-      "--decontaminate-bloom selects the plan for --decontaminate: pass it too")
     require(a.dedupSpansW == 0 || a.curate,
       "--dedup-spans only affects the curated snapshot: pass --curate too")
     require(a.keepFirstSpansW == 0 || a.curate,
@@ -150,6 +149,22 @@ object Extract {
       .config("spark.sql.session.timeZone", "UTC")
       .master(sys.props.getOrElse("spark.master", "local[*]"))
       .getOrCreate()
+    // reliable checkpoints are read only within the run that wrote them,
+    // and Spark never deletes them: remove the rdd-* directories this run
+    // added to the session checkpoint dir when it ends
+    val dropRunCheckpoints = spark.sparkContext.getCheckpointDir.map { d =>
+      val dir = new Path(d)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def rddDirs(): Set[Path] =
+        Option(fs.globStatus(new Path(dir, "rdd-*"))).fold(Set.empty[Path])(_.map(_.getPath).toSet)
+      val before = rddDirs()
+      () => (rddDirs() -- before).foreach(fs.delete(_, true))
+    }
+    try run(a, spark)
+    finally dropRunCheckpoints.foreach(_())
+  }
+
+  private def run(a: Args, spark: SparkSession): Unit = {
     import spark.implicits._
 
     val raw = if (a.input.startsWith("synth:")) null else spark.read.parquet(a.input)
@@ -386,7 +401,6 @@ object Extract {
           decode(col("contents"), "UTF-8").as("text")),
         stripBoilerplate = a.stripBoilerplate,
         decontaminateAgainst = benchmark,
-        deconViaBloom = a.deconBloom,
         dedupSpansW = a.dedupSpansW,
         keepFirstSpansW = a.keepFirstSpansW,
         maxMeanBitsX100 = a.maxMeanBitsX100,

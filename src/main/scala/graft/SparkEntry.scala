@@ -410,15 +410,13 @@ object SparkEntry {
             .where(col("doc_id") % 50 === 0).select(col("doc_id"), col("text")))
         .orderBy(col("detected_lang"), col("doc_id"))),
 
-    // q56's exact pipeline with the decontamination stage swapped to the
-    // bloom-prefiltered plan — same output by construction, so the oracle
-    // is q56's verbatim (derived in oracleSql); proves the scale path
-    // composes inside the full pipeline, not just standalone
+    // q56's pipeline under its own key (the decontamination stage picks
+    // its plan from the benchmark's size in Decontaminate.flag); the
+    // oracle is q56's verbatim (derived in oracleSql)
     "q70_curate_decon_bloom" -> ((s, dir) =>
       Curate.curate(docsWithDups(s, dir),
           decontaminateAgainst = t(s, dir, "documents")
-            .where(col("doc_id") % 50 === 0).select(col("doc_id"), col("text")),
-          deconViaBloom = true)
+            .where(col("doc_id") % 50 === 0).select(col("doc_id"), col("text")))
         .orderBy(col("detected_lang"), col("doc_id"))),
 
     "q30_html_extract" -> ((s, dir) =>
@@ -830,16 +828,16 @@ object SparkEntry {
         .select(col("doc_id"), col("split"))
         .orderBy(col("doc_id"))),
 
-    // bloom-prefiltered decontamination: the broadcastable-membership
-    // scale path (benchmark as a ~10-bit/shingle filter probed map-side,
-    // exact confirm join on survivors only) — output bit-identical to the
-    // exact flag() by construction, so the oracle is the same brute-force
-    // set-overlap SQL; params differ from q52 (w=4, %40, minOverlap=2) so
-    // the two queries exercise independent shingle spaces
+    // decontamination at q52's operator with independent parameters
+    // (w=4, %40, minOverlap=2), so the two queries exercise separate
+    // shingle spaces; the oracle is the same brute-force set-overlap SQL.
+    // Both run flag's Bloom plan (a ~10-bit/shingle filter probed
+    // map-side, exact confirm join on probable hits only): their
+    // benchmarks are far below the filter cap
     "q69_decon_bloom" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      Decontaminate.flagBloom(docs, docs.where(col("doc_id") % 40 === 0),
-          "doc_id", "text", w = 4, minOverlap = 2L, bitsPerShingle = 9)
+      Decontaminate.flag(docs, docs.where(col("doc_id") % 40 === 0),
+          "doc_id", "text", w = 4, minOverlap = 2L)
         .select(col("id").as("doc_id"), col("n_shingles"), col("n_matched"),
           col("contaminated").cast("long").as("contaminated"))
         .orderBy(col("doc_id"))

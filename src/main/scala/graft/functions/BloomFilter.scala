@@ -259,6 +259,21 @@ object BloomFunctions {
     ColumnBridge.column(BloomShingleHits(
       ColumnBridge.expression(text), ColumnBridge.expression(bloom), w))
 
+  /** The filter-size cap: 2^30 bits (128 MB), the largest filter that
+    * is collected as one row. */
+  private val MaxBits: Long = 1L << 30
+
+  /** numBits for an expected key count at a bits-per-key budget: the
+    * product rounded up to a multiple of 64, at least 64. */
+  private def roundedBits(expectedKeys: Long, bitsPerKey: Int): Long =
+    ((math.max(64L, expectedKeys * bitsPerKey.toLong) + 63L) / 64L) * 64L
+
+  /** Whether a filter of `expectedKeys` keys at `bitsPerKey` fits
+    * [[MaxBits]] — the same arithmetic [[shape]] enforces, so a caller can
+    * choose a plan without catching its failure. */
+  def fits(expectedKeys: Long, bitsPerKey: Int): Boolean =
+    roundedBits(expectedKeys, bitsPerKey) <= MaxBits
+
   /** Filter shape for an expected key count at a bits-per-key budget:
     * (numBits rounded up to a multiple of 64, the FP-optimal k =
     * round(bits/key * ln 2), clamped into BloomBuild's accepted 1..32 —
@@ -268,11 +283,10 @@ object BloomFunctions {
     require(expectedKeys >= 0, s"expectedKeys must be >= 0, got $expectedKeys")
     require(bitsPerKey >= 1 && bitsPerKey <= 64,
       s"bitsPerKey must be in 1..64, got $bitsPerKey")
-    val raw = math.max(64L, expectedKeys * bitsPerKey.toLong)
-    val rounded = ((raw + 63L) / 64L) * 64L
-    require(rounded <= (1L << 30),
+    val rounded = roundedBits(expectedKeys, bitsPerKey)
+    require(fits(expectedKeys, bitsPerKey),
       s"bloom filter of $expectedKeys keys at $bitsPerKey bits/key needs " +
-        s"$rounded bits > 2^30 cap (${(1 << 30) / 8 / 1024 / 1024} MB); " +
+        s"$rounded bits > 2^30 cap (${MaxBits / 8 / 1024 / 1024} MB); " +
         "lower bitsPerKey or partition the key set")
     (rounded.toInt,
       math.min(32, math.max(1, math.round(bitsPerKey * math.log(2)).toInt)))

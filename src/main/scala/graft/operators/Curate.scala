@@ -25,21 +25,25 @@ import org.apache.spark.sql.expressions.Window
   */
 object Curate {
 
+  // Fixed stage thresholds (the q38-family oracles replay these values).
+  private val MinQualityI4 = 2000L
+  private val MinJaccard = 0.9
+  private val ShingleWords = 3
+  private val BoilerplateChunk = 8
+  private val DecontaminateW = 5
+  private val DecontaminateMinOverlap = 3L
+
   /** Returns one row per SURVIVING document:
     * (doc_id, detected_lang, n_tokens, cum_tokens, pack_id).
+    * `docs` carries (doc_id, text); the benchmark frame, when given, too.
     * Rows with a null text evaluate null through the gate predicates and
     * are therefore dropped — the gate semantics, not an accident. */
-  def curate(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-             minQualityI4: Long = 2000, minJaccard: Double = 0.9,
-             shingleWords: Int = 3, packBudget: Int = 512,
+  def curate(docs: DataFrame, packBudget: Int = 512,
              sharded: Boolean = false, packShards: Int = 64,
-             stripBoilerplate: Boolean = false,
-             boilerplateChunk: Int = 8, boilerplateMinDocs: Long = 30L,
+             stripBoilerplate: Boolean = false, boilerplateMinDocs: Long = 30L,
              decontaminateAgainst: DataFrame = null,
-             decontaminateW: Int = 5, decontaminateMinOverlap: Long = 3L,
              dedupSpansW: Int = 0,
              qualityReps: Boolean = false,
-             deconViaBloom: Boolean = false,
              keepFirstSpansW: Int = 0,
              maxMeanBitsX100: Long = 0L): DataFrame = {
     // -1. optional WITHIN-doc repeated-span removal (dedupSpansW > 0) as
@@ -50,8 +54,8 @@ object Curate {
     // must not occupy pack budget
     val docsW =
       if (dedupSpansW <= 0) docs
-      else docs.withColumn(textCol,
-        graft.functions.SketchFunctions.dedupSpans(col(textCol), dedupSpansW))
+      else docs.withColumn("text",
+        graft.functions.SketchFunctions.dedupSpans(col("text"), dedupSpansW))
     // -0.5. optional CROSS-doc keep-first span dedup (keepFirstSpansW > 0)
     // as the first cross-document rewrite: every repeated w-token span
     // keeps only its globally first (id, pos) occurrence (Lee et al.
@@ -64,8 +68,8 @@ object Curate {
     // remainder and face the quality gate on that remainder alone.
     val docs0 =
       if (keepFirstSpansW <= 0) docsW
-      else WebCuration.keepFirstSpans(docsW, idCol, textCol, w = keepFirstSpansW)
-        .select(col("id").as(idCol), col("clean_text").as(textCol))
+      else WebCuration.keepFirstSpans(docsW, "doc_id", "text", w = keepFirstSpansW)
+        .select(col("id").as("doc_id"), col("clean_text").as("text"))
     // 0. optional cross-doc boilerplate line removal BEFORE the gates:
     // template lines inflate quality scores and glue unrelated pages into
     // near-dup clusters, so when enabled the downstream pipeline (scores,
@@ -90,22 +94,22 @@ object Curate {
     val input =
       if (!stripBoilerplate) docs0
       else {
-        val keep = docs0.groupBy(md5(col(textCol)).as("__md5"))
-          .agg(min(col(idCol)).as(idCol)).select(idCol)
-        WebCuration.stripBoilerplate(docs0.join(keep, Seq(idCol), "left_semi"),
-            idCol, textCol, chunk = boilerplateChunk, minDocs = boilerplateMinDocs)
-          .select(col("id").as(idCol), col("clean_text").as(textCol))
+        val keep = docs0.groupBy(md5(col("text")).as("__md5"))
+          .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
+        WebCuration.stripBoilerplate(docs0.join(keep, Seq("doc_id"), "left_semi"),
+            "doc_id", "text", chunk = BoilerplateChunk, minDocs = boilerplateMinDocs)
+          .select(col("id").as("doc_id"), col("clean_text").as("text"))
       }
 
     // 1. analysis gate — one map-local pass
     val analyzed = input.select(
-      col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("text"),
-      TextAnalysis.langId(col(textCol)).as("detected_lang"),
-      TextAnalysis.tokenCount(col(textCol)).as("n_tokens"),
-      TextAnalysis.qualityScoreI4(col(textCol)).as("quality_i4"))
+      col("doc_id").cast("long").as("doc_id"),
+      col("text"),
+      TextAnalysis.langId(col("text")).as("detected_lang"),
+      TextAnalysis.tokenCount(col("text")).as("n_tokens"),
+      TextAnalysis.qualityScoreI4(col("text")).as("quality_i4"))
     val gated0 = analyzed
-      .where(col("quality_i4") >= minQualityI4 && col("detected_lang") =!= "und")
+      .where(col("quality_i4") >= MinQualityI4 && col("detected_lang") =!= "und")
 
     // 1.5. optional LM-surprisal gate (maxMeanBitsX100 > 0): the
     // CCNet/FineWeb "perplexity filter" — train the unigram model on the
@@ -153,7 +157,7 @@ object Curate {
     // 3. near-dup clusters: LSH candidates -> exact verify -> components.
     // Near-dup graphs are dense/shallow, so O(diameter) min-label CC
     // converges in a few rounds
-    val pairs = Dedup.ngramJaccardPairs(uniq, "doc_id", "text", shingleWords, minJaccard)
+    val pairs = Dedup.ngramJaccardPairs(uniq, "doc_id", "text", ShingleWords, MinJaccard)
       .select(col("id_a"), col("id_b"))
     val clusters = Dedup.connectedComponents(pairs, uniq.select(col("doc_id").as("id")))
     // survivor policy per near-dup cluster: min id (default — the
@@ -184,9 +188,8 @@ object Curate {
 
     // 3b. optional test-set decontamination, AFTER dedup (fewer docs to
     // shingle) and BEFORE packing (a removed doc must not occupy pack
-    // budget): docs sharing >= decontaminateMinOverlap distinct w-token
-    // shingles with the benchmark set are dropped. The benchmark frame
-    // must carry the same (idCol, textCol) columns.
+    // budget): docs sharing >= DecontaminateMinOverlap distinct
+    // DecontaminateW-token shingles with the benchmark set are dropped.
     val kept =
       if (decontaminateAgainst == null) kept0
       else {
@@ -196,17 +199,9 @@ object Curate {
         // gates+dedup+CC lineage. Anti-join the (tiny, broadcastable)
         // CONTAMINATED id set rather than semi-joining all clean ids.
         val kb = Dedup.checkpointDf(kept0)
-        val corpus = kb.select(col("doc_id").as(idCol), col("text").as(textCol))
-        // deconViaBloom swaps in the bloom-prefiltered plan — output
-        // identical by construction (q70 shares q56's oracle verbatim),
-        // chosen when the benchmark shingle set is too large to broadcast
-        val flagged =
-          if (deconViaBloom)
-            Decontaminate.flagBloom(corpus, decontaminateAgainst, idCol, textCol,
-              w = decontaminateW, minOverlap = decontaminateMinOverlap)
-          else
-            Decontaminate.flag(corpus, decontaminateAgainst, idCol, textCol,
-              w = decontaminateW, minOverlap = decontaminateMinOverlap)
+        val flagged = Decontaminate.flag(kb.select(col("doc_id"), col("text")),
+          decontaminateAgainst, "doc_id", "text",
+          w = DecontaminateW, minOverlap = DecontaminateMinOverlap)
         val contaminated = flagged
           .where(col("contaminated")).select(col("id").as("doc_id"))
         kb.join(contaminated, Seq("doc_id"), "left_anti")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.SketchFunctions
+import graft.functions.{BloomFunctions, SketchFunctions}
 
 /** Test-set decontamination: flag corpus documents that share at least
   * `minOverlap` distinct word n-gram shingles with ANY benchmark document —
@@ -42,151 +42,102 @@ object Decontaminate {
 
   /** The benchmark reduced to its distinct shingle-hash set — compute
     * (and cache/persist) ONCE when the same benchmark gates many corpora
-    * or many micro-batches, then call [[flagAgainstShingles]]. */
+    * or many micro-batches. */
   def benchmarkShingles(benchmark: DataFrame, idCol: String, textCol: String,
                         w: Int): DataFrame =
     shingleMd5s(benchmark, idCol, textCol, w).select(col("sh")).distinct()
+
+  /** Bits per distinct benchmark shingle in the Bloom prefilter: ~0.9%
+    * false positives at k = 7. */
+  private[graft] val BitsPerShingle = 10
 
   /** One row per corpus document:
     * (id, n_shingles, n_matched, contaminated) — n_shingles the doc's
     * distinct shingle count, n_matched how many of them occur anywhere in
     * the benchmark, contaminated = n_matched >= minOverlap. Null-text /
-    * too-short docs report 0/0/false (nothing to leak). */
+    * too-short docs report 0/0/false (nothing to leak).
+    *
+    * Eager on the benchmark side: it is reduced once ([[prepare]]) before
+    * the corpus plan is returned, and the size of that reduction picks the
+    * plan. While a [[BitsPerShingle]]-bit filter over the benchmark's
+    * distinct shingles fits `BloomFunctions.MaxBits` (~1.07e8 shingles),
+    * the corpus is probed MAP-SIDE against the filter and only probable
+    * hits reach the exact confirm join; past it, every corpus shingle
+    * joins the exact set. Both plans give identical rows (a Bloom filter
+    * has no false negatives, and the confirm join erases its false
+    * positives), so the choice is the code's, never the caller's. */
   def flag(corpus: DataFrame, benchmark: DataFrame,
            idCol: String, textCol: String,
            w: Int = 13, minOverlap: Long = 3L): DataFrame =
-    flagAgainstShingles(corpus, benchmarkShingles(benchmark, idCol, textCol, w),
-      idCol, textCol, w, minOverlap)
+    flagPrepared(corpus, prepare(benchmark, idCol, textCol, w), idCol, textCol, w, minOverlap)
 
-  /** [[flag]] against a PRE-REDUCED benchmark shingle set (one `sh`
-    * column) — the repeated-use path. */
-  def flagAgainstShingles(corpus: DataFrame, benchShingles: DataFrame,
-                          idCol: String, textCol: String,
-                          w: Int, minOverlap: Long): DataFrame = {
+  /** Reduce `benchmark` ONCE to what [[flag]] probes: one job checkpoints
+    * the distinct shingle set and reads its row count as an observed
+    * metric on that checkpoint; a second job builds the filter when it
+    * fits (collected as one row of `numBits/8` bytes).
+    * `bitsPerShingle` is set only by the forced-high-FP spec. */
+  private[graft] def prepare(benchmark: DataFrame, idCol: String, textCol: String, w: Int,
+                             bitsPerShingle: Int = BitsPerShingle): PreparedBenchmark = {
+    val name = s"decon_bench_${Dedup.nextMetricSeq()}"
+    val obs = benchmarkShingles(benchmark, idCol, textCol, w)
+      .observe(name, count(lit(1)).as("rows"))
+    val shingles = Dedup.checkpointDf(obs)
+    val n = obs.queryExecution.observedMetrics.get(name) match {
+      case Some(row) => row.getLong(0)
+      case None => shingles.count()
+    }
+    val filter =
+      if (!BloomFunctions.fits(n, bitsPerShingle)) None
+      else {
+        val (numBits, k) = BloomFunctions.shape(n, bitsPerShingle)
+        Some(shingles.agg(BloomFunctions.bloomBuild(col("sh"), numBits, k))
+          .head().getAs[Array[Byte]](0))
+      }
+    PreparedBenchmark(shingles, n, filter)
+  }
+
+  /** [[flag]] against an already-[[prepare]]d benchmark — the per-use
+    * half, run once per corpus or stream micro-batch. */
+  private[graft] def flagPrepared(corpus: DataFrame, bench: PreparedBenchmark,
+                                  idCol: String, textCol: String,
+                                  w: Int, minOverlap: Long): DataFrame = {
     require(minOverlap >= 1, s"minOverlap must be >= 1, got $minOverlap")
-    // defensive distinct: a caller passing a NON-distinct shingle frame
-    // would silently inflate both counts through the left join (each
-    // match duplicates its corpus row before the aggregate); the
-    // optimizer collapses this into a no-op over an already-distinct
-    // input (adjacent redundant aggregates are removed)
-    // both sides re-encode the md5 identity to 16 raw bytes BEFORE their
-    // distinct/join exchanges (r6, guide §2.3): the corpus side's distinct
-    // shuffles every (id, shingle) pair — halving the key bytes halves the
-    // dominant exchange; injective, and `sh` never reaches the output
-    val bench = benchShingles.select(unhex(col("sh")).as("sh")).distinct()
-      .withColumn("hit", lit(true))
-    val matched = shingleOccurrences(corpus, idCol, textCol, w)
-      .select(col("id"), unhex(col("sh")).as("sh")).distinct()
-      .join(bench, Seq("sh"), "left")
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_shingles"),
-        sum(when(col("hit"), 1L).otherwise(0L)).as("n_matched"))
+    // both sides carry the md5 identity as 16 raw bytes through their
+    // exchanges (r6, guide §2.3): injective, and `sh` never reaches the
+    // output
+    val hits = bench.shingles.select(unhex(col("sh")).as("sh")).withColumn("hit", lit(true))
+    val matched = bench.filter match {
+      case Some(filterBytes) =>
+        // map-side probe: one pass over each document's text; only
+        // probable-hit md5s leave the row, and n_shingles rides every
+        // emitted row (explode_outer keeps zero-hit and zero-shingle docs,
+        // so a clean doc keeps its count)
+        corpus.where(col(textCol).isNotNull)
+          .select(col(idCol).as("id"),
+            BloomFunctions.bloomShingleHits(col(textCol), lit(filterBytes), w).as("p"))
+          .select(col("id"), col("p.n_shingles").cast("long").as("n_shingles"),
+            explode_outer(col("p.hits")).as("sh"))
+          .withColumn("sh", unhex(col("sh")))
+          // exact confirm: a false positive has no row in the exact set
+          .join(hits, Seq("sh"), "left")
+          .groupBy(col("id"))
+          .agg(max(col("n_shingles")).as("n_shingles"),
+            sum(when(col("hit"), 1L).otherwise(0L)).as("n_matched"))
+      case None =>
+        // the large-benchmark path: every distinct corpus shingle joins
+        // the exact set
+        shingleOccurrences(corpus, idCol, textCol, w)
+          .select(col("id"), unhex(col("sh")).as("sh")).distinct()
+          .join(hits, Seq("sh"), "left")
+          .groupBy(col("id"))
+          .agg(count(lit(1)).as("n_shingles"),
+            sum(when(col("hit"), 1L).otherwise(0L)).as("n_matched"))
+    }
     // loud on duplicate corpus ids (copies would silently merge their
     // shingle sets and cross-contaminate each other's stats); null-safe
     // anchor join — a null-id doc's matches must not silently read clean
     Dedup.anchorLeftJoin(
         Dedup.checkedIdAnchor(corpus, idCol, "Decontaminate.flag"), matched)
-      .select(col("id"),
-        coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-        coalesce(col("n_matched"), lit(0L)).as("n_matched"),
-        (coalesce(col("n_matched"), lit(0L)) >= minOverlap).as("contaminated"))
-  }
-
-  /** [[flag]] through a BLOOM-PREFILTERED plan — identical results (q69
-    * oracles it against the same SQL as the exact operator), different
-    * scale envelope. The exact [[flag]] is the right plan while the
-    * benchmark shingle set broadcasts (16-byte md5s; AQE handles it); at
-    * crawl scale against a LARGE benchmark union (every eval suite the
-    * lab gates on — 10^8..10^9 distinct shingles, tens of GB exact) the
-    * exact plan degrades to shuffling every corpus shingle occurrence.
-    * This plan instead:
-    *
-    *   1. reduces the benchmark to a serialized Bloom filter
-    *      (`bitsPerShingle` bits per distinct shingle — 10 bits ~= 0.9%
-    *      FP; 13x smaller than the exact md5 set) via the mergeable
-    *      `bloom_build` aggregate;
-    *   2. probes every corpus document MAP-SIDE with the one-pass native
-    *      `bloom_shingle_hits` (tokenize + md5 + in-row distinct + probe,
-    *      text touched once): only probable-hit md5s plus one count leave
-    *      the row — the filter bytes ride the per-stage broadcast task
-    *      binary, not the shuffle;
-    *   3. confirms survivors against the EXACT shingle set, so false
-    *      positives cannot reach the output: that join's corpus side is
-    *      proportional to true contamination + the FP trickle, not to
-    *      corpus size.
-    *
-    * The benchmark frame is read twice (filter build + confirm join),
-    * so the reduced shingle set is checkpointed once and benchmark text
-    * is not re-tokenized per consumer. Sizing
-    * the filter takes one count() over the reduced set (driver action on
-    * the small side); the built filter is pulled to the driver as ONE
-    * row of `numBits/8` bytes, capped by [[graft.functions.BloomFunctions.shape]]'s
-    * 128 MB guard. */
-  def flagBloom(corpus: DataFrame, benchmark: DataFrame,
-                idCol: String, textCol: String,
-                w: Int = 13, minOverlap: Long = 3L,
-                bitsPerShingle: Int = 10): DataFrame = {
-    val bench = Dedup.checkpointDf(benchmarkShingles(benchmark, idCol, textCol, w))
-    flagAgainstShinglesBloom(corpus, bench, idCol, textCol, w, minOverlap, bitsPerShingle)
-  }
-
-  /** [[flagBloom]] against a PRE-REDUCED (distinct, ideally persisted)
-    * benchmark shingle set — the repeated-use path, mirroring
-    * [[flagAgainstShingles]]. */
-  def flagAgainstShinglesBloom(corpus: DataFrame, benchShingles: DataFrame,
-                               idCol: String, textCol: String,
-                               w: Int, minOverlap: Long,
-                               bitsPerShingle: Int = 10): DataFrame = {
-    val bench = benchShingles.select(col("sh")).distinct()
-    flagWithBloomFilter(corpus, bench,
-      buildShingleFilter(bench, bitsPerShingle), idCol, textCol, w, minOverlap)
-  }
-
-  /** Build the serialized Bloom filter over a (distinct, ideally
-    * persisted) shingle set — two driver actions on the SMALL side: size
-    * the filter, then aggregate it (one row of filter bytes comes back,
-    * bounded by [[graft.functions.BloomFunctions.shape]]'s cap). Build
-    * ONCE when the same benchmark gates many corpora or micro-batches,
-    * then call [[flagWithBloomFilter]] per use. */
-  def buildShingleFilter(benchShingles: DataFrame, bitsPerShingle: Int = 10): Array[Byte] = {
-    import graft.functions.BloomFunctions
-    val bench = benchShingles.select(col("sh"))
-    val (numBits, k) = BloomFunctions.shape(bench.count(), bitsPerShingle)
-    bench.agg(BloomFunctions.bloomBuild(col("sh"), numBits, k))
-      .head().getAs[Array[Byte]](0)
-  }
-
-  /** [[flagAgainstShinglesBloom]] with an ALREADY-BUILT filter — the
-    * repeated-probe path (streaming micro-batches, many corpora against
-    * one benchmark). `filterBytes` MUST have been built over a superset
-    * of `benchShingles` (normally by [[buildShingleFilter]] on exactly
-    * it): the no-false-negative guarantee — and therefore the
-    * output-identical-to-[[flag]] claim — holds only then. */
-  def flagWithBloomFilter(corpus: DataFrame, benchShingles: DataFrame,
-                          filterBytes: Array[Byte],
-                          idCol: String, textCol: String,
-                          w: Int, minOverlap: Long): DataFrame = {
-    require(minOverlap >= 1, s"minOverlap must be >= 1, got $minOverlap")
-    import graft.functions.BloomFunctions
-    val bench = benchShingles.select(col("sh")).distinct()
-    // map-side probe: one pass over each document's text; n_shingles
-    // rides every emitted row (explode_outer keeps zero-hit and
-    // zero-shingle docs, so the count survives even when nothing probes
-    // true — without it a clean doc would lose its n_shingles)
-    val probed = corpus.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        BloomFunctions.bloomShingleHits(col(textCol), lit(filterBytes), w).as("p"))
-      .select(col("id"), col("p.n_shingles").cast("long").as("n_shingles"),
-        explode_outer(col("p.hits")).as("sh"))
-    // exact confirm: a bloom false positive has no row in the exact set
-    // and contributes 0 — output is bit-identical to flag()'s
-    val matched = probed
-      .join(bench.withColumn("hit", lit(true)), Seq("sh"), "left")
-      .groupBy(col("id"))
-      .agg(max(col("n_shingles")).as("n_shingles"),
-        sum(when(col("hit"), 1L).otherwise(0L)).as("n_matched"))
-    Dedup.anchorLeftJoin(
-        Dedup.checkedIdAnchor(corpus, idCol, "Decontaminate.flagBloom"), matched)
       .select(col("id"),
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
         coalesce(col("n_matched"), lit(0L)).as("n_matched"),
@@ -376,3 +327,12 @@ object Decontaminate {
         col("ex.clean").as("clean_text"))
   }
 }
+
+/** The benchmark side of [[Decontaminate.flag]], reduced once: the
+  * distinct shingle-md5 set (checkpointed), its row count, and — when a
+  * filter at `Decontaminate.BitsPerShingle` bits per shingle fits
+  * `BloomFunctions.MaxBits` — the serialized Bloom filter over it. A
+  * stream builds one before it starts and flags every micro-batch against
+  * it. */
+private[graft] final case class PreparedBenchmark(
+    shingles: DataFrame, nShingles: Long, filter: Option[Array[Byte]])

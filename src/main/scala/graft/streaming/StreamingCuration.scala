@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Dedup.checkpointDf
-import graft.operators.WebCuration
+import graft.operators.{Decontaminate, WebCuration}
 import graft.sources.ParquetManifestTable
 
 /** Streaming leg of the boilerplate-strip curation stage: cross-document
@@ -64,16 +64,6 @@ object StreamingCuration {
       .select(col("id"), col("n_lines"), col("n_kept"), col("clean_text"))
   }
 
-  /** Streaming decontamination: flag each arriving document against a
-    * STATIC benchmark frame. Decontamination is per-document independent
-    * (a doc's overlap depends only on its own shingles and the fixed
-    * benchmark set), so unlike the boilerplate strip there is no
-    * cross-document state and no retroactivity — each micro-batch flags
-    * its FIRST-SEEN docs (in-batch and cross-batch re-deliveries drop,
-    * the module's streaming contract) against the benchmark shingle set
-    * (reduced and cached ONCE, not re-derived per batch) and appends one
-    * immutable result batch; the output union equals the batch operator
-    * over the first-seen docs (StreamingCurationSpec). */
   /** The streaming first-seen-wins contract, shared by both legs: one
     * row per id, in-batch re-deliveries resolved by md5 order with
     * NON-NULL text preferred ('~' sorts after every md5 hex digit — a
@@ -90,37 +80,28 @@ object StreamingCuration {
     else inBatch
   }
 
+  /** Streaming decontamination: flag each arriving document against a
+    * STATIC benchmark frame. Decontamination is per-document independent
+    * (a doc's overlap depends only on its own shingles and the fixed
+    * benchmark set), so unlike the boilerplate strip there is no
+    * cross-document state and no retroactivity — each micro-batch flags
+    * its FIRST-SEEN docs (in-batch and cross-batch re-deliveries drop,
+    * the module's streaming contract) against the benchmark, reduced
+    * ONCE before the stream starts exactly as the batch operator reduces
+    * it (shingle set, plus the Bloom filter when it fits), and appends one
+    * immutable result batch; the output union equals the batch operator
+    * over the first-seen docs (StreamingCurationSpec). */
   def startDecontaminate(docs: DataFrame, benchmark: DataFrame,
                          outRoot: String, checkpointDir: String,
                          w: Int = 13, minOverlap: Long = 3L,
-                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startAgainstBenchmark(docs, benchmark, outRoot, checkpointDir, w, trigger) {
-      (fresh, benchSh) =>
-        graft.operators.Decontaminate.flagAgainstShingles(
-          fresh, benchSh, "id", "text", w, minOverlap)
+                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    // prepared ONCE before the stream starts: the benchmark's size picks
+    // the plan (Bloom-probed or exact) exactly as the batch flag does
+    val bench = Decontaminate.prepare(benchmark, "id", "text", w)
+    startAgainstBenchmark(docs, outRoot, checkpointDir, trigger) { fresh =>
+      Decontaminate.flagPrepared(fresh, bench, "id", "text", w, minOverlap)
     }
-
-  /** [[startDecontaminate]] through the bloom-prefiltered plan: the
-    * benchmark reduces to its shingle set AND a serialized Bloom filter
-    * ONCE, before the stream starts; every micro-batch then probes
-    * map-side and exact-confirms only survivors — per-batch work scales
-    * with the batch's contamination, not with batch x benchmark. Output
-    * rows are identical to [[startDecontaminate]]'s by the
-    * no-false-negative + exact-confirm construction (parity-spec'd). */
-  def startDecontaminateBloom(docs: DataFrame, benchmark: DataFrame,
-                              outRoot: String, checkpointDir: String,
-                              w: Int = 13, minOverlap: Long = 3L,
-                              bitsPerShingle: Int = 10,
-                              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startAgainstBenchmark(docs, benchmark, outRoot, checkpointDir, w, trigger) {
-      var filter: Array[Byte] = null // built on first use, after benchSh is cached
-      (fresh, benchSh) => {
-        if (filter == null)
-          filter = graft.operators.Decontaminate.buildShingleFilter(benchSh, bitsPerShingle)
-        graft.operators.Decontaminate.flagWithBloomFilter(
-          fresh, benchSh, filter, "id", "text", w, minOverlap)
-      }
-    }
+  }
 
   /** Streaming SPAN-LEVEL decontamination — the excision sibling of
     * [[startDecontaminate]], same stateless per-batch shape (matched spans
@@ -131,32 +112,29 @@ object StreamingCuration {
   def startExcise(docs: DataFrame, benchmark: DataFrame,
                   outRoot: String, checkpointDir: String,
                   w: Int = 13,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startAgainstBenchmark(docs, benchmark, outRoot, checkpointDir, w, trigger) {
-      (fresh, benchSh) =>
-        graft.operators.Decontaminate.exciseAgainstShingles(
-          fresh, benchSh, "id", "text", w)
+                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val benchSh = Decontaminate.benchmarkShingles(benchmark, "id", "text", w).cache()
+    val q = startAgainstBenchmark(docs, outRoot, checkpointDir, trigger) { fresh =>
+      Decontaminate.exciseAgainstShingles(fresh, benchSh, "id", "text", w)
     }
+    tieCacheToQuery(q, benchSh, docs.sparkSession)
+    q
+  }
 
-  /** Shared plumbing of the stateless benchmark-gated legs: reduce+cache
-    * the benchmark shingle set once, flag/excise each micro-batch's
-    * first-seen docs, commit under the deterministic batch id, and tie the
-    * cached frame's lifetime to the query. */
-  private def startAgainstBenchmark(docs: DataFrame, benchmark: DataFrame,
-      outRoot: String, checkpointDir: String, w: Int, trigger: Trigger)(
-      process: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
+  /** Shared plumbing of the stateless benchmark-gated legs: flag/excise
+    * each micro-batch's first-seen docs and commit under the
+    * deterministic batch id. */
+  private def startAgainstBenchmark(docs: DataFrame, outRoot: String,
+      checkpointDir: String, trigger: Trigger)(
+      process: DataFrame => DataFrame): StreamingQuery = {
     val outT = new ParquetManifestTable(outRoot)
-    val benchSh = graft.operators.Decontaminate
-      .benchmarkShingles(benchmark, "id", "text", w).cache()
-    val q = docs.writeStream
+    docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        outT.commit(process(firstSeen(batch, outT), benchSh), f"b$batchId%08d")
+        outT.commit(process(firstSeen(batch, outT)), f"b$batchId%08d")
       }
       .start()
-    tieCacheToQuery(q, benchSh, docs.sparkSession)
-    q
   }
 
   /** Tie a cached frame's lifetime to a streaming query — without this

@@ -53,15 +53,6 @@ class CurateSpec extends AnyFunSuite {
       }
   }
 
-  test("deconViaBloom: pipeline output row-identical to the exact decontaminate path") {
-    val bench = docs.where(col("doc_id") % 50 === 0).select(col("doc_id"), col("text"))
-    val exact = Curate.curate(docs, decontaminateAgainst = bench)
-      .orderBy("detected_lang", "doc_id").collect().map(_.toString).toSeq
-    val bloom = Curate.curate(docs, decontaminateAgainst = bench, deconViaBloom = true)
-      .orderBy("detected_lang", "doc_id").collect().map(_.toString).toSeq
-    assert(bloom == exact)
-  }
-
   test("dedupSpansW stage: within-doc repeats struck before every gate; off by default") {
     // inject intra-doc repetition: each doc's first 12 tokens appended
     // twice — the span stage must judge the doc on its deduped content

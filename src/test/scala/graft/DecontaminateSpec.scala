@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Decontaminate, DecontaminateSql}
+import graft.operators.{Decontaminate, DecontaminateSql, PreparedBenchmark}
 
 class DecontaminateSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -37,7 +37,7 @@ class DecontaminateSpec extends AnyFunSuite {
       (4L, 0L, 0L, false)))
   }
 
-  test("flagBloom == flag exactly, even with a tiny high-FP filter (exact confirm wins)") {
+  test("Bloom plan with a 2-bit/shingle filter == exact plan (exact confirm wins)") {
     val corpus = Seq(
       (1L, "q w e r t y u i"),
       (2L, "q w e zz yy xx"),
@@ -45,16 +45,17 @@ class DecontaminateSpec extends AnyFunSuite {
       (4L, null.asInstanceOf[String]),
       (5L, "q w e r t y")).toDF("doc_id", "text") // fully contained in bench
     val bench = Seq((100L, "q w e r t y")).toDF("doc_id", "text")
-    val exact = Decontaminate.flag(corpus, bench, "doc_id", "text", w = 3, minOverlap = 2L)
-      .orderBy("id").collect().toSeq
-    // bitsPerShingle = 2 -> ~40%+ false positives at the probe; the exact
-    // confirm join must erase every one of them
-    for (bits <- Seq(2, 10)) {
-      val got = Decontaminate.flagBloom(corpus, bench, "doc_id", "text",
-          w = 3, minOverlap = 2L, bitsPerShingle = bits)
+    def rows(b: PreparedBenchmark) =
+      Decontaminate.flagPrepared(corpus, b, "doc_id", "text", w = 3, minOverlap = 2L)
         .orderBy("id").collect().toSeq
-      assert(got == exact, s"bloom path must be output-identical (bits/key=$bits)")
-    }
+    // bitsPerShingle = 2 -> a high-FP filter at the probe; the exact
+    // confirm join must erase every false positive
+    val prepared = Decontaminate.prepare(bench, "doc_id", "text", w = 3, bitsPerShingle = 2)
+    assert(prepared.filter.isDefined && prepared.nShingles == 4L)
+    val exact = rows(prepared.copy(filter = None))
+    assert(rows(prepared) == exact, "bloom path must be output-identical to the exact path")
+    assert(Decontaminate.flag(corpus, bench, "doc_id", "text", w = 3, minOverlap = 2L)
+      .orderBy("id").collect().toSeq == exact)
   }
 
   test("flagNearDup == brute-force bipartite jaccard; edits below threshold stay clean") {
@@ -130,9 +131,11 @@ class DecontaminateSpec extends AnyFunSuite {
       .where(col("id").isNull).head()
     assert(flg.getLong(2) == 4L && flg.getBoolean(3),
       "null-id doc's 4 matched shingles must not read clean")
-    val blm = Decontaminate.flagBloom(corpus, bench, "doc_id", "text", w = 3, minOverlap = 2L)
+    val exact = Decontaminate.flagPrepared(corpus,
+        Decontaminate.prepare(bench, "doc_id", "text", w = 3).copy(filter = None),
+        "doc_id", "text", w = 3, minOverlap = 2L)
       .where(col("id").isNull).head()
-    assert(blm.getLong(2) == 4L && blm.getBoolean(3))
+    assert(exact.getLong(2) == 4L && exact.getBoolean(3))
     val nd = Decontaminate.flagNearDup(
         corpus.union(Seq((java.lang.Long.valueOf(2L), "x")).toDF("doc_id", "text")),
         Seq((100L, "q w e r t y zz yy")).toDF("doc_id", "text"),
@@ -155,11 +158,11 @@ class DecontaminateSpec extends AnyFunSuite {
     assert(viaSql.nonEmpty && viaSql == viaApi)
   }
 
-  test("flagBloom: empty benchmark -> all clean; zero-shingle docs keep their rows") {
+  test("flag: empty benchmark -> all clean; zero-shingle docs keep their rows") {
     val corpus = Seq((1L, "a b c d"), (2L, "x"), (3L, null.asInstanceOf[String]))
       .toDF("doc_id", "text")
     val bench = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val out = Decontaminate.flagBloom(corpus, bench, "doc_id", "text", w = 3, minOverlap = 1L)
+    val out = Decontaminate.flag(corpus, bench, "doc_id", "text", w = 3, minOverlap = 1L)
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq
     // doc 2 ("x") is shorter than w: zero shingles, still anchored

@@ -197,17 +197,6 @@ class ExtractMainSpec extends AnyFunSuite {
     assert(ids.contains(urlId(1)) && ids.contains(urlId(3)),
       "clean articles must survive")
     assert(!ids.contains(urlId(2)), "the benchmark-leaked article must be dropped")
-
-    // --decontaminate-bloom: same job through the bloom-prefiltered plan
-    // lands an identical curated snapshot (fresh output root so the
-    // resume filter does not dedupe the input away)
-    val outDir2 = java.nio.file.Files.createTempDirectory("graft_decon_out2").toString
-    Extract.main(Array(inDir, outDir2, "--partitions", "2", "--curate",
-      "--decontaminate", benchDir, "--decontaminate-bloom"))
-    val curated2 = new graft.sources.ParquetManifestTable(s"$outDir2/curated")
-      .readLatest(spark)
-    assert(curated2.orderBy("doc_id").collect().map(_.toString).toSeq ==
-      curated.orderBy("doc_id").collect().map(_.toString).toSeq)
   }
 
   test("duplicate urls with different passwords: the LATEST row's password wins, deterministically") {
@@ -667,9 +656,24 @@ class ExtractMainSpec extends AnyFunSuite {
     val (authLocal, curatedLocal) = run()
     assert(authLocal.size == crawl.size && curatedLocal.nonEmpty)
     SparkTestBase.withCheckpointDir {
-      val (auth, curated) = run()
-      assert(SparkTestBase.checkpointFiles().nonEmpty,
-        "--link-graph --curate wrote no checkpoint files to the session dir")
+      // durability is seen DURING the run (jobs end while checkpoint files
+      // exist); the run removes its own rdd-* directories when it ends
+      val sawFiles = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          if (SparkTestBase.checkpointFiles().nonEmpty) sawFiles.set(true)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val (auth, curated) =
+        try run()
+        finally {
+          org.apache.spark.graftbridge.SparkContextBridge.drainListenerBus(spark.sparkContext)
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      assert(sawFiles.get, "--link-graph --curate wrote no checkpoint files to the session dir")
+      val ckDir = new java.io.File(new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+      val left = ckDir.listFiles().toSeq.filter(_.getName.startsWith("rdd-"))
+      assert(left.isEmpty, s"the run left its checkpoints behind: $left")
       assert(auth == authLocal)
       assert(curated == curatedLocal)
     }

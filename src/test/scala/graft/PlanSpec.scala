@@ -394,33 +394,31 @@ class PlanSpec extends AnyFunSuite {
 
   test("decontaminate: every exchange carries shingle md5s and ids, never text or chunks") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val out = graft.operators.Decontaminate.flag(docs,
-      docs.where(col("doc_id") % 50 === 0), "doc_id", "text", w = 5, minOverlap = 3L)
-    val shuffles = collectShuffles(out)
-    assert(shuffles.nonEmpty)
-    shuffles.foreach { s =>
-      val names = s.output.map(_.name)
-      assert(!names.exists(n => n == "text" || n == "c" || n == "chunk"),
-        s"shuffle carries ${names.mkString(",")}")
-    }
-  }
-
-  test("bloom decontaminate: text never shuffles; the probe runs map-side over the scan") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val plans = operatorPlans(graft.operators.Decontaminate.flagBloom(docs,
-      docs.where(col("doc_id") % 50 === 0), "doc_id", "text", w = 5, minOverlap = 3L))
-    assert(plans.size > 1, "the benchmark checkpoint and filter build must run as jobs")
-    val shuffles = shufflesOf(plans)
-    assert(shuffles.nonEmpty)
-    shuffles.foreach { s =>
-      val names = s.output.map(_.name)
-      assert(!names.exists(n => n == "text" || n == "p" || n == "hits"),
-        s"shuffle carries ${names.mkString(",")}")
+    val bench = docs.where(col("doc_id") % 50 === 0)
+    val plans = operatorPlans(graft.operators.Decontaminate.flag(docs, bench,
+      "doc_id", "text", w = 5, minOverlap = 3L))
+    // two jobs before returning: the benchmark checkpoint (its row count
+    // rides it as an observed metric) and the filter build — one fewer
+    // than the separate checkpoint, count() and build of the old Bloom plan
+    assert(plans.init.size == 2, s"${plans.init.size} jobs before flag returned")
+    // the exact join a benchmark past the filter cap takes instead
+    val exactPlans = operatorPlans(graft.operators.Decontaminate.flagPrepared(docs,
+      graft.operators.Decontaminate.prepare(bench, "doc_id", "text", w = 5).copy(filter = None),
+      "doc_id", "text", w = 5, minOverlap = 3L))
+    for (ps <- Seq(plans, exactPlans)) {
+      val shuffles = shufflesOf(ps)
+      assert(shuffles.nonEmpty)
+      shuffles.foreach { s =>
+        val names = s.output.map(_.name)
+        assert(!names.exists(n => Set("text", "c", "chunk", "p", "hits").contains(n)),
+          s"shuffle carries ${names.mkString(",")}")
+      }
     }
     // the probe expression sits below every exchange: the corpus-side
     // scan feeds bloom_shingle_hits directly, so non-hit shingles die on
     // the executor that read the document
     assert(plans.last.toString.contains("bloom_shingle_hits"), "probe must appear in the plan")
+    assert(!exactPlans.last.toString.contains("bloom_shingle_hits"))
   }
 
   test("keep-first units: winner is an aggregate, never a window over the md5 keyspace") {

@@ -123,4 +123,15 @@ class BloomFilterSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("2^30"))
   }
+
+  test("fits: the 2^30-bit cap boundary at 10 bits/key, the arithmetic shape enforces") {
+    // 107374182 keys x 10 bits round up to exactly 2^30 bits; one more
+    // key needs the next multiple of 64
+    assert(BloomFunctions.fits(107374182L, 10))
+    assert(BloomFunctions.shape(107374182L, 10)._1 == (1 << 30))
+    assert(!BloomFunctions.fits(107374183L, 10))
+    intercept[IllegalArgumentException](BloomFunctions.shape(107374183L, 10))
+    assert(BloomFunctions.fits(0L, 10))
+    assert(!BloomFunctions.fits(1L << 40, 10))
+  }
 }
