@@ -68,7 +68,10 @@ object Extract {
       argv(i) match {
         case "--batch-id"         => a = a.copy(batchId = value("--batch-id")); i += 2
         case "--password"         => a = a.copy(password = value("--password")); i += 2
-        case "--partitions"       => a = a.copy(partitions = value("--partitions").toInt); i += 2
+        case "--partitions"       =>
+          val n = value("--partitions").toInt
+          require(n >= 0, s"--partitions must be >= 0 (0 uses the default parallelism), got $n")
+          a = a.copy(partitions = n); i += 2
         case "--password-column"  => a = a.copy(passwordColumn = value("--password-column")); i += 2
         case "--include-raw"      => a = a.copy(includeRaw = true); i += 1
         case "--include-embedded" => a = a.copy(includeEmbedded = true); i += 1

@@ -24,19 +24,16 @@ object SparkEntry {
   private def dec(c: org.apache.spark.sql.Column, scale: Int = 2) =
     c.cast(s"decimal(18,$scale)")
 
+  /** The q35/q63 pack assignment: `TextAnalysis.packShardedOn` with one
+    * shard (per-language running token sum, floor((cum-1)/budget)), so the
+    * materialization query assigns EXACTLY the packs the assignment query
+    * reports, and Curate's stage 4 packs the same way. */
+  private def withPackAssignment(df: DataFrame): DataFrame =
+    TextAnalysis.packShardedOn(df, "lang", "doc_id", budget = 512, shards = 1)
+
   /** Documents table with injected duplicates (first 20 docs copied to
     * doc_id+100000) so the dedup operators always have true positives —
     * fully deterministic. */
-  /** ONE copy of the q35/q63 pack-assignment formula (per-language running
-    * token sum, floor((cum-1)/budget)): the materialization query must
-    * assign EXACTLY the packs the assignment query reports. */
-  private def withPackAssignment(df: DataFrame, budget: Int = 512): DataFrame = {
-    val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-      .withColumn("pack_id", floor((col("cum_tokens") - lit(1)) / lit(budget)).cast("long"))
-  }
-
   private def docsWithDups(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
     d.unionByName(
@@ -333,11 +330,12 @@ object SparkEntry {
         .orderBy(col("doc_id"))),
 
     // token-budget packing: assign docs to fixed-budget context windows via
-    // a running token sum per language shard (greedy sequential packing).
+    // a running token sum per language (greedy sequential packing).
     // NOTE: per-language single window — fine for the oracle demo; at corpus
     // scale one giant language serializes into one partition's window sort.
-    // The pipeline API is TextAnalysis.packTokensSharded (salted two-level
-    // packing, sort parallelism = langs x shards).
+    // The pipeline stage is Curate.curate(packShards > 1) (salted two-level
+    // packing through TextAnalysis.packShardedOn, sort parallelism = langs x
+    // shards).
     "q35_token_packing" -> ((s, dir) =>
       withPackAssignment(
         t(s, dir, "documents")

@@ -4,8 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -104,7 +103,7 @@ object BloomKernel {
     * decontamination: text is tokenized and hashed exactly ONCE, and the
     * only thing that leaves the row is the (tiny) probable-hit list plus
     * one int. */
-  def bloomShingleHits(s: UTF8String, w: Int, ser: Array[Byte]): InternalRow = {
+  def bloomShingleHits(s: UTF8String, ser: Array[Byte], w: Int): InternalRow = {
     val k = readInt(ser, 0)
     val numBits = readInt(ser, 4)
     val starts = SketchKernel.tokenStarts(s)
@@ -201,63 +200,21 @@ case class BloomBuild(child: Expression, numBits: Int, k: Int,
   override def prettyName: String = "bloom_build"
 }
 
-/** `bloom_might_contain(bloom, item)`: probe a serialized filter. True on
-  * every inserted key (no false negatives); false positives at the rate
-  * set by numBits/n and k. */
-case class BloomMightContain(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain requires (binary, string) inputs, got ${l.sql} and ${r.sql}")
-  }
-  override protected def nullSafeEval(bloom: Any, item: Any): Any =
-    BloomKernel.mightContain(bloom.asInstanceOf[Array[Byte]], item.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, s) => s"graft.functions.BloomKernel.mightContain($b, $s)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): BloomMightContain =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "bloom_might_contain"
-}
-
-/** `bloom_shingle_hits(text, bloom, w)`: struct(n_shingles:int,
-  * hits:array<string>) — the document's distinct full-width w-token
-  * shingle-md5 count plus the subset passing the filter. See
-  * [[BloomKernel.bloomShingleHits]]. */
-case class BloomShingleHits(left: Expression, right: Expression, w: Int)
-  extends BinaryExpression {
-  require(w >= 1, s"bloom_shingle_hits needs w >= 1, got $w")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_shingles", IntegerType, nullable = false),
-    StructField("hits", ArrayType(StringType, containsNull = false), nullable = false)))
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, BinaryType) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"bloom_shingle_hits requires (string, binary) inputs, got ${l.sql} and ${r.sql}")
-  }
-  override protected def nullSafeEval(text: Any, bloom: Any): Any =
-    BloomKernel.bloomShingleHits(text.asInstanceOf[UTF8String], w,
-      bloom.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, b) => s"graft.functions.BloomKernel.bloomShingleHits($t, $w, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): BloomShingleHits =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "bloom_shingle_hits"
-}
-
 object BloomFunctions {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
   def bloomBuild(item: Column, numBits: Int, k: Int): Column =
     ColumnBridge.column(
       BloomBuild(ColumnBridge.expression(item), numBits, k).toAggregateExpression())
+  /** `bloom_might_contain(bloom, item)`: probe a serialized filter. True on
+    * every inserted key (no false negatives); false positives at the rate
+    * set by numBits/n and k. */
   def bloomMightContain(bloom: Column, item: Column): Column =
-    ColumnBridge.column(BloomMightContain(
-      ColumnBridge.expression(bloom), ColumnBridge.expression(item)))
+    Natives.bloomMightContain(Seq(bloom, item))
+  /** `bloom_shingle_hits(text, bloom, w)`: struct(n_shingles:int,
+    * hits:array<string>), see [[BloomKernel.bloomShingleHits]]. */
   def bloomShingleHits(text: Column, bloom: Column, w: Int): Column =
-    ColumnBridge.column(BloomShingleHits(
-      ColumnBridge.expression(text), ColumnBridge.expression(bloom), w))
+    Natives.bloomShingleHits(Seq(text, bloom), w)
 
   /** The filter-size cap: 2^30 bits (128 MB), the largest filter that
     * is collected as one row. */

@@ -1,19 +1,17 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the document sketches.
+/** The native document-sketch kernels, called from SQL and the DataFrame
+  * API through their [[Natives]] entries.
   *
   * The declarative higher-order-function formulations (the test references
   * graft.operators.DedupReference and TextAnalysisReference in src/test)
   * are correct but evaluate on the interpreted expression path (~ms per
-  * document); these expressions compute the identical values in tight eval
+  * document); these kernels compute the identical values in tight eval
   * loops with zero-copy hashing over the UTF8String bytes (XXH64 with
   * Spark's seed 42, so outputs match the built-in xxhash64 construction
   * bit-for-bit — asserted in SketchExpressionsSpec).
@@ -129,7 +127,7 @@ object SketchKernel {
     * bit-for-bit:
     * base hashes h1/h2 = xxhash64(shingle, 1|2) = hashLong(seed',
     * hashUTF8-bytes); sig[j] = h1 XOR (h2 >>> j | h2 << (64-j)), j=1..k. */
-  def minhashSignature(s: UTF8String, shingleWords: Int, k: Int): Array[Long] = {
+  def minhashSignature(s: UTF8String, shingleWords: Int, k: Int): ArrayData = {
     val n = s.numBytes
     val starts = tokenStarts(s)
     val nTokens = starts.length - 1
@@ -159,19 +157,19 @@ object SketchKernel {
     } else {
       mix(0, n) // fewer tokens than the shingle width: whole text
     }
-    sig
+    new GenericArrayData(sig)
   }
 
   /** Distinct 64-bit shingle hashes in first-occurrence order —
     * bit-identical to array_distinct(transform(wordShingles(text, n),
     * xxhash64)): same zero-copy byte-range hashing as minhashSignature
     * (a shingle of n tokens joined by single spaces IS the source range). */
-  def shingleHashes(s: UTF8String, shingleWords: Int): Array[Long] = {
+  def shingleHashes(s: UTF8String, shingleWords: Int): ArrayData = {
     val n = s.numBytes
     val starts = tokenStarts(s)
     val nTokens = starts.length - 1
 
-    if (nTokens < shingleWords) return Array(hashRange(s, 0, n))
+    if (nTokens < shingleWords) return new GenericArrayData(Array(hashRange(s, 0, n)))
 
     val seen = new java.util.HashSet[java.lang.Long]()
     val out = new Array[Long](nTokens - shingleWords + 1)
@@ -182,7 +180,7 @@ object SketchKernel {
       if (seen.add(h)) { out(m) = h; m += 1 }
       a += 1
     }
-    if (m == out.length) out else java.util.Arrays.copyOf(out, m)
+    new GenericArrayData(if (m == out.length) out else java.util.Arrays.copyOf(out, m))
   }
 
   /** MinHash signature computed FROM a distinct shingle-hash array —
@@ -507,8 +505,8 @@ object SketchKernel {
     acc
   }
 
-  /** Catalyst-shaped variant of [[tokenChunks]] (also the codegen target):
-    * array<struct<chunk_idx:int, chunk:string>>. */
+  /** Catalyst-shaped variant of [[tokenChunks]] (the `token_chunks`
+    * kernel): array<struct<chunk_idx:int, chunk:string>>. */
   def tokenChunksData(s: UTF8String, size: Int, stride: Int): ArrayData = {
     val chunks = tokenChunks(s, size, stride)
     val rows = new Array[Any](chunks.length)
@@ -665,288 +663,25 @@ object SketchKernel {
   }
 }
 
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"simhash64 requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.simhash(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernel.simhash($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 = copy(child = newChild)
-  override def prettyName: String = "simhash64"
-}
-
-case class SimHashMd5(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"simhash_md5 requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.simhashMd5(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernel.simhashMd5($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHashMd5 = copy(child = newChild)
-  override def prettyName: String = "simhash_md5"
-}
-
-case class MinHashSig(child: Expression, shingleWords: Int, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"minhash_sig requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(SketchKernel.minhashSignature(input.asInstanceOf[UTF8String], shingleWords, k))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.SketchKernel.minhashSignature($c, $shingleWords, $k))")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig = copy(child = newChild)
-  override def prettyName: String = "minhash_sig"
-}
-
-case class MinHashSigFromHashes(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig_from_hashes requires array<bigint> input, got ${t.sql}")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.minhashSigFromHashes(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SketchKernel.minhashSigFromHashes($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigFromHashes = copy(child = newChild)
-  override def prettyName: String = "minhash_sig_from_hashes"
-}
-
-case class ShingleHashes(child: Expression, shingleWords: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"shingle_hashes requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(SketchKernel.shingleHashes(input.asInstanceOf[UTF8String], shingleWords))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.SketchKernel.shingleHashes($c, $shingleWords))")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes = copy(child = newChild)
-  override def prettyName: String = "shingle_hashes"
-}
-
-case class Fingerprint64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"fingerprint64 requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.fingerprint64(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernel.fingerprint64($c)")
-  override protected def withNewChildInternal(newChild: Expression): Fingerprint64 = copy(child = newChild)
-  override def prettyName: String = "fingerprint64"
-}
-
-case class FingerprintMd5(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"fingerprint_md5 requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.fingerprintMd5(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernel.fingerprintMd5($c)")
-  override protected def withNewChildInternal(newChild: Expression): FingerprintMd5 = copy(child = newChild)
-  override def prettyName: String = "fingerprint_md5"
-}
-
-case class TokenChunks(child: Expression, size: Int, stride: Int) extends UnaryExpression {
-  require(size > 0 && stride > 0 && stride <= size,
-    s"token_chunks needs 0 < stride <= size, got size=$size stride=$stride")
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("chunk_idx",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("chunk", StringType, nullable = false))),
-    containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"token_chunks requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.tokenChunksData(input.asInstanceOf[UTF8String], size, stride)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SketchKernel.tokenChunksData($c, $size, $stride)")
-  override protected def withNewChildInternal(newChild: Expression): TokenChunks = copy(child = newChild)
-  override def prettyName: String = "token_chunks"
-}
-
-case class DedupLines(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"dedup_lines requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.dedupLines(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernel.dedupLines($c)")
-  override protected def withNewChildInternal(newChild: Expression): DedupLines = copy(child = newChild)
-  override def prettyName: String = "dedup_lines"
-}
-
-case class DedupSpans(child: Expression, w: Int) extends UnaryExpression {
-  require(w >= 1, s"dedup_spans needs w >= 1, got $w")
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"dedup_spans requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.dedupSpans(input.asInstanceOf[UTF8String], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernel.dedupSpans($c, $w)")
-  override protected def withNewChildInternal(newChild: Expression): DedupSpans = copy(child = newChild)
-  override def prettyName: String = "dedup_spans"
-}
-
-case class ExciseSpans(left: Expression, right: Expression, w: Int)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  require(w >= 1, s"excise_spans needs w >= 1, got $w")
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_tokens", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_kept", LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("clean", StringType, nullable = true)))
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, ArrayType(org.apache.spark.sql.types.IntegerType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"excise_spans requires (string, array<int>) inputs, got ${l.sql} and ${r.sql}")
-  }
-  override protected def nullSafeEval(text: Any, hits: Any): Any =
-    SketchKernel.exciseSpans(text.asInstanceOf[UTF8String], hits.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, h) => s"graft.functions.SketchKernel.exciseSpans($t, $h, $w)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ExciseSpans =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "excise_spans"
-}
-
-case class TokenTf(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("token", StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("tf",
-        org.apache.spark.sql.types.LongType, nullable = false))),
-    containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"token_tf requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.tokenTfData(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernel.tokenTfData($c)")
-  override protected def withNewChildInternal(newChild: Expression): TokenTf = copy(child = newChild)
-  override def prettyName: String = "token_tf"
-}
-
-case class BpeEstimate(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"bpe_estimate requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.bpeEstimate(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernel.bpeEstimate($c)")
-  override protected def withNewChildInternal(newChild: Expression): BpeEstimate = copy(child = newChild)
-  override def prettyName: String = "bpe_estimate"
-}
-
-case class QualityScore(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"quality_score requires string input, got ${child.dataType.sql}")
-  override protected def nullSafeEval(input: Any): Any =
-    SketchKernel.qualityScore(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SketchKernel.qualityScore($c)")
-  override protected def withNewChildInternal(newChild: Expression): QualityScore = copy(child = newChild)
-  override def prettyName: String = "quality_score"
-}
-
-case class DotInt(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(org.apache.spark.sql.types.IntegerType, _),
-          ArrayType(org.apache.spark.sql.types.IntegerType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"dot_int requires two array<int> inputs, got ${l.sql} and ${r.sql}")
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SketchKernel.dotInt(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SketchKernel.dotInt($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotInt =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "dot_int"
-}
-
-case class JaccardSim(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"jaccard_sim requires two array<bigint> inputs, got ${l.sql} and ${r.sql}")
-  }
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SketchKernel.jaccardSim(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SketchKernel.jaccardSim($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): JaccardSim =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "jaccard_sim"
-}
-
+/** DataFrame-API handles for the native sketch kernels ([[Natives]]). */
 object SketchFunctions {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-  /** DataFrame-API handles for the native sketch expressions. */
-  def simhash64(c: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(c)))
-  def simhashMd5(c: Column): Column =
-    ColumnBridge.column(SimHashMd5(ColumnBridge.expression(c)))
+  def simhash64(c: Column): Column = Natives.simhash64(Seq(c))
+  def simhashMd5(c: Column): Column = Natives.simhashMd5(Seq(c))
   def minhashSig(c: Column, shingleWords: Int, k: Int): Column =
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(c), shingleWords, k))
-  def fingerprint64(c: Column): Column =
-    ColumnBridge.column(Fingerprint64(ColumnBridge.expression(c)))
-  def fingerprintMd5(c: Column): Column =
-    ColumnBridge.column(FingerprintMd5(ColumnBridge.expression(c)))
+    Natives.minhashSig(Seq(c), shingleWords, k)
+  def fingerprint64(c: Column): Column = Natives.fingerprint64(Seq(c))
+  def fingerprintMd5(c: Column): Column = Natives.fingerprintMd5(Seq(c))
   def shingleHashes(c: Column, shingleWords: Int): Column =
-    ColumnBridge.column(ShingleHashes(ColumnBridge.expression(c), shingleWords))
-  def minhashSigFromHashes(c: Column, k: Int): Column =
-    ColumnBridge.column(MinHashSigFromHashes(ColumnBridge.expression(c), k))
-  def jaccardSim(a: Column, b: Column): Column =
-    ColumnBridge.column(JaccardSim(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Natives.shingleHashes(Seq(c), shingleWords)
+  def minhashSigFromHashes(c: Column, k: Int): Column = Natives.minhashSigFromHashes(Seq(c), k)
+  def jaccardSim(a: Column, b: Column): Column = Natives.jaccardSim(Seq(a, b))
   def tokenChunks(c: Column, size: Int, stride: Int): Column =
-    ColumnBridge.column(TokenChunks(ColumnBridge.expression(c), size, stride))
-  def qualityScore(c: Column): Column =
-    ColumnBridge.column(QualityScore(ColumnBridge.expression(c)))
-  def bpeEstimate(c: Column): Column =
-    ColumnBridge.column(BpeEstimate(ColumnBridge.expression(c)))
-  def tokenTf(c: Column): Column =
-    ColumnBridge.column(TokenTf(ColumnBridge.expression(c)))
-  def dedupLines(c: Column): Column =
-    ColumnBridge.column(DedupLines(ColumnBridge.expression(c)))
-  def dedupSpans(c: Column, w: Int): Column =
-    ColumnBridge.column(DedupSpans(ColumnBridge.expression(c), w))
-  def exciseSpans(text: Column, hits: Column, w: Int): Column =
-    ColumnBridge.column(ExciseSpans(
-      ColumnBridge.expression(text), ColumnBridge.expression(hits), w))
-  def dotInt(a: Column, b: Column): Column =
-    ColumnBridge.column(DotInt(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Natives.tokenChunks(Seq(c), size, stride)
+  def qualityScore(c: Column): Column = Natives.qualityScore(Seq(c))
+  def bpeEstimate(c: Column): Column = Natives.bpeEstimate(Seq(c))
+  def tokenTf(c: Column): Column = Natives.tokenTf(Seq(c))
+  def dedupLines(c: Column): Column = Natives.dedupLines(Seq(c))
+  def dedupSpans(c: Column, w: Int): Column = Natives.dedupSpans(Seq(c), w)
+  def exciseSpans(text: Column, hits: Column, w: Int): Column = Natives.exciseSpans(Seq(text, hits), w)
+  def dotInt(a: Column, b: Column): Column = Natives.dotInt(Seq(a, b))
 }

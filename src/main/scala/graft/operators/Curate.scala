@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** The end-to-end training-data curation pipeline, composed from the
   * library's operators — the shape a 100 TB pretraining-data run takes
@@ -19,9 +18,9 @@ import org.apache.spark.sql.expressions.Window
   * Every stage is SQL-expressible, so the WHOLE pipeline is covered by one
   * DuckDB oracle (q38) — hash-exact end to end. Shuffle inventory: md5
   * grouping (2), band-hash self-join + candidate joins (3), CC label
-  * rounds (3, candidate-pair-sized), packing window (4). Stage 4 uses the
-  * per-language window for oracle portability; swap in
-  * `TextAnalysis.packTokensSharded` when one language dominates the corpus.
+  * rounds (3, candidate-pair-sized), packing window (4). Stage 4 uses one
+  * window per language by default for oracle portability; pass
+  * `packShards > 1` when one language dominates the corpus.
   */
 object Curate {
 
@@ -38,8 +37,7 @@ object Curate {
     * `docs` carries (doc_id, text); the benchmark frame, when given, too.
     * Rows with a null text evaluate null through the gate predicates and
     * are therefore dropped — the gate semantics, not an accident. */
-  def curate(docs: DataFrame, packBudget: Int = 512,
-             sharded: Boolean = false, packShards: Int = 64,
+  def curate(docs: DataFrame, packBudget: Int = 512, packShards: Int = 1,
              stripBoilerplate: Boolean = false, boilerplateMinDocs: Long = 30L,
              decontaminateAgainst: DataFrame = null,
              dedupSpansW: Int = 0,
@@ -207,27 +205,17 @@ object Curate {
         kb.join(contaminated, Seq("doc_id"), "left_anti")
       }
 
-    // 4. greedy token packing per language. `sharded = false` (default):
-    // one cumulative window per language — oracle-portable exact greedy
-    // packing, but one giant language serializes into a single partition's
-    // window sort. `sharded = true`: salted two-level packing
-    // (TextAnalysis.packTokensSharded semantics, sort parallelism = langs x
-    // packShards; cum_tokens becomes per-(lang, shard), pack ids stay
-    // globally unique and every pack still respects the budget).
-    if (sharded) {
-      TextAnalysis.packShardedOn(
-          kept.select(col("doc_id"), col("detected_lang"), col("n_tokens")),
-          "detected_lang", "doc_id", packBudget, packShards)
-        .select(col("doc_id"), col("detected_lang"), col("n_tokens"),
-          col("cum_tokens"), col("pack_id"))
-    } else {
-      val w = Window.partitionBy(col("detected_lang")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      kept
-        .withColumn("cum_tokens", sum(col("n_tokens").cast("long")).over(w))
-        .withColumn("pack_id", floor((col("cum_tokens") - lit(1)) / lit(packBudget)).cast("long"))
-        .select(col("doc_id"), col("detected_lang"), col("n_tokens"),
-          col("cum_tokens"), col("pack_id"))
-    }
+    // 4. greedy token packing per language (TextAnalysis.packShardedOn).
+    // `packShards = 1` (default): one cumulative window per language —
+    // oracle-portable exact greedy packing, but one giant language
+    // serializes into a single partition's window sort. `packShards > 1`:
+    // salted two-level packing (sort parallelism = langs x packShards;
+    // cum_tokens becomes per-(lang, shard), pack ids stay globally unique
+    // and every pack still respects the budget).
+    TextAnalysis.packShardedOn(
+        kept.select(col("doc_id"), col("detected_lang"), col("n_tokens")),
+        "detected_lang", "doc_id", packBudget, packShards)
+      .select(col("doc_id"), col("detected_lang"), col("n_tokens"),
+        col("cum_tokens"), col("pack_id"))
   }
 }

@@ -197,7 +197,7 @@ object Dedup {
 
   /** `simhashPairs` over the oracle-portable md5 simhash (60 bits, 4 chunks
     * of 15 — the radius-3 pigeonhole guarantee is unchanged). Hot path is
-    * the native codegen'd SimHashMd5 expression, bit-identical to the
+    * the native `SketchKernel.simhashMd5` kernel, bit-identical to the
     * declarative reference in `DedupReference` (SketchExpressionsSpec). */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            maxHamming: Int = 3, maxBlock: Long = 0L): DataFrame =

@@ -138,8 +138,10 @@ object TextAnalysis {
       langCol, idCol, budget, shards)
 
   /** The sharded-packing core over a frame that already carries an
-    * `n_tokens` column (shared by `packTokensSharded` and Curate's sharded
-    * stage — ONE copy of the shard/window/pack_id formula). */
+    * `n_tokens` column (shared by `packTokensSharded`, Curate's stage 4 and
+    * q35/q63 — ONE copy of the shard/window/pack_id formula). With
+    * `shards = 1` every id lands in shard 0 (xxhash64 is never null), so
+    * it is the single per-language window: pack_id = floor((cum - 1) / budget). */
   def packShardedOn(df: DataFrame, langCol: String, idCol: String,
                     budget: Int, shards: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -125,7 +125,7 @@ class CurateSpec extends AnyFunSuite {
   test("sharded packing: same survivor set, budgets hold per pack, globally unique pack ids") {
     val budget = 256
     val plain = Curate.curate(docs, packBudget = budget).cache()
-    val sharded = Curate.curate(docs, packBudget = budget, sharded = true, packShards = 8).cache()
+    val sharded = Curate.curate(docs, packBudget = budget, packShards = 8).cache()
 
     // identical survivor set — sharding only changes pack assignment
     assert(plain.select("doc_id").collect().map(_.getLong(0)).toSet ==
@@ -157,7 +157,7 @@ class CurateSpec extends AnyFunSuite {
 
     // deterministic under repartitioning too
     def run(parts: Int) = Curate.curate(docs.repartition(parts), packBudget = budget,
-        sharded = true, packShards = 8)
+        packShards = 8)
       .orderBy("detected_lang", "doc_id").collect().map(_.toString).toSeq
     assert(run(2) == run(11))
     plain.unpersist(); sharded.unpersist()

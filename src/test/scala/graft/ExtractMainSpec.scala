@@ -43,6 +43,16 @@ class ExtractMainSpec extends AnyFunSuite {
     assert(docs.read(spark).count() == 12)
   }
 
+  test("extract job: a negative --partitions is rejected before any output is written") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft_job_neg_parts").toString
+    val e = intercept[IllegalArgumentException] {
+      Extract.main(Array("synth:4", outDir, "--partitions", "-4"))
+    }
+    assert(e.getMessage.contains("--partitions must be >= 0") && e.getMessage.contains("-4"),
+      e.getMessage)
+    assert(new java.io.File(outDir).list().isEmpty)
+  }
+
   test("extract job: commit, exact resume no-op, incremental delta, sinks") {
     import spark.implicits._
     val inDir = java.nio.file.Files.createTempDirectory("graft_job_in").toString

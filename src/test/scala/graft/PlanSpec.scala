@@ -264,7 +264,9 @@ class PlanSpec extends AnyFunSuite {
         graft.functions.SketchFunctions.shingleHashes(col("text"), 3))
       .queryExecution.executedPlan.toString
     // "*(n) Project [...]" = the project runs inside WholeStageCodegen
-    assert(p1.linesIterator.next().startsWith("*(1) Project [fingerprint64"), p1.take(400))
+    val top1 = p1.linesIterator.next()
+    assert(top1.startsWith("*(1) Project [") && top1.contains("SketchKernel.fingerprint64"),
+      p1.take(400))
     val p2 = emb.select(graft.functions.LshFunctions.hyperplaneSigs(col("embedding"), 8, 2),
         graft.functions.LshFunctions.cosineSim(col("embedding"), col("embedding")))
       .queryExecution.executedPlan.toString
@@ -417,8 +419,8 @@ class PlanSpec extends AnyFunSuite {
     // the probe expression sits below every exchange: the corpus-side
     // scan feeds bloom_shingle_hits directly, so non-hit shingles die on
     // the executor that read the document
-    assert(plans.last.toString.contains("bloom_shingle_hits"), "probe must appear in the plan")
-    assert(!exactPlans.last.toString.contains("bloom_shingle_hits"))
+    assert(plans.last.toString.contains("BloomKernel.bloomShingleHits"), "probe must appear in the plan")
+    assert(!exactPlans.last.toString.contains("BloomKernel.bloomShingleHits"))
   }
 
   test("keep-first units: winner is an aggregate, never a window over the md5 keyspace") {
@@ -554,7 +556,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Batched: true"), p.take(2000))
     assert(p.contains("ReadSchema: struct<text:string>"), p.take(2000))
     // the two base hashes per shingle are materialized once via the struct
-    assert(p.contains("minhash_sig") || p.contains("struct(h1"), p.take(2000))
+    assert(p.contains("minhashSignature") || p.contains("struct(h1"), p.take(2000))
   }
 
   test("latest capture: winner is an aggregate (no window); payloads never ride the winner shuffle") {

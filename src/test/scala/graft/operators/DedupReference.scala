@@ -67,7 +67,7 @@ object DedupReference {
     * is the top 60 bits of md5(token) — expressible in ANSI SQL
     * (`CAST('0x' || substring(md5(t),1,15) AS BIGINT)`), unlike xxhash64.
     * 60 bits so the value stays positive in a signed BIGINT on both
-    * engines. The native SimHashMd5 expression behind
+    * engines. The native `SketchKernel.simhashMd5` kernel behind
     * `Dedup.simhashPairsPortable` replays it (q18). */
   def simhashMd5Declarative(textCol: Column, nBits: Int = 60): Column = {
     val tokenHashes = transform(split(textCol, " "),
