@@ -154,14 +154,18 @@ object Extract {
       .getOrCreate()
     // reliable checkpoints are read only within the run that wrote them,
     // and Spark never deletes them: remove the rdd-* directories this run
-    // added to the session checkpoint dir when it ends
+    // added to the session checkpoint dir when it ends, and the
+    // application directory Spark made for them when nothing else is in it
     val dropRunCheckpoints = spark.sparkContext.getCheckpointDir.map { d =>
       val dir = new Path(d)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def rddDirs(): Set[Path] =
         Option(fs.globStatus(new Path(dir, "rdd-*"))).fold(Set.empty[Path])(_.map(_.getPath).toSet)
       val before = rddDirs()
-      () => (rddDirs() -- before).foreach(fs.delete(_, true))
+      () => {
+        (rddDirs() -- before).foreach(fs.delete(_, true))
+        if (before.isEmpty && fs.exists(dir) && fs.listStatus(dir).isEmpty) fs.delete(dir, false)
+      }
     }
     try run(a, spark)
     finally dropRunCheckpoints.foreach(_())

@@ -198,10 +198,8 @@ object SparkEntry {
           floor(col("jaccard") * 10000).cast("long").as("jaccard_i4"))
         .orderBy(col("id_a"), col("id_b"))),
 
-    // oracle-portable md5-simhash variant (60-bit, same chunk blocking +
-    // bit_count verify) — the production xxhash64 simhash stays proven by
-    // DedupSpec's brute-force-equivalence test; this one is additionally
-    // hash-exact vs a DuckDB all-pairs hamming oracle
+    // oracle-portable md5 simhash (60-bit, 4-chunk blocking + bit_count
+    // verify), hash-exact vs a DuckDB all-pairs hamming oracle
     "q18_simhash" -> ((s, dir) =>
       Dedup.simhashPairsPortable(docsWithDups(s, dir), "doc_id", "text", maxHamming = 3)
         .orderBy(col("id_a"), col("id_b"))),

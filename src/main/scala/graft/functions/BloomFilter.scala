@@ -206,11 +206,6 @@ object BloomFunctions {
   def bloomBuild(item: Column, numBits: Int, k: Int): Column =
     ColumnBridge.column(
       BloomBuild(ColumnBridge.expression(item), numBits, k).toAggregateExpression())
-  /** `bloom_might_contain(bloom, item)`: probe a serialized filter. True on
-    * every inserted key (no false negatives); false positives at the rate
-    * set by numBits/n and k. */
-  def bloomMightContain(bloom: Column, item: Column): Column =
-    Natives.bloomMightContain(Seq(bloom, item))
   /** `bloom_shingle_hits(text, bloom, w)`: struct(n_shingles:int,
     * hits:array<string>), see [[BloomKernel.bloomShingleHits]]. */
   def bloomShingleHits(text: Column, bloom: Column, w: Int): Column =

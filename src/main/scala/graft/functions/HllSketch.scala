@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
@@ -127,11 +126,4 @@ case class HllDistinct(child: Expression, p: Int = 12,
   override protected def withNewChildInternal(newChild: Expression): HllDistinct =
     copy(child = newChild)
   override def prettyName: String = "hll_distinct"
-}
-
-object HllFunctions {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-  def hllDistinct(item: Column, p: Int = 12): Column =
-    ColumnBridge.column(
-      HllDistinct(ColumnBridge.expression(item), p).toAggregateExpression())
 }

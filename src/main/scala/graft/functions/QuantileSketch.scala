@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -316,16 +315,4 @@ object QuantileNames {
   /** Column name for a rank probe: `r_<value>` with '-' spelled 'm'
     * (column names cannot carry a bare minus through every SQL surface). */
   def rName(v: Long): String = s"r_$v".replace("-", "m")
-}
-
-object QuantileFunctions {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-  def approxQuantiles(v: Column, k: Int,
-                      ps: Seq[Double] = Seq(0.5, 0.9, 0.99)): Column =
-    ColumnBridge.column(
-      ApproxQuantiles(ColumnBridge.expression(v), k, ps).toAggregateExpression())
-
-  def approxRanks(v: Column, k: Int, probes: Seq[Long]): Column =
-    ColumnBridge.column(
-      ApproxRanks(ColumnBridge.expression(v), k, probes).toAggregateExpression())
 }

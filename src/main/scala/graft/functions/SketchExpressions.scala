@@ -665,7 +665,6 @@ object SketchKernel {
 
 /** DataFrame-API handles for the native sketch kernels ([[Natives]]). */
 object SketchFunctions {
-  def simhash64(c: Column): Column = Natives.simhash64(Seq(c))
   def simhashMd5(c: Column): Column = Natives.simhashMd5(Seq(c))
   def minhashSig(c: Column, shingleWords: Int, k: Int): Column =
     Natives.minhashSig(Seq(c), shingleWords, k)

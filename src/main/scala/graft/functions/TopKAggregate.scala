@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   */
 final class TopKBuffer(val k: Int) {
   private val ord: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-    def compare(a: (Double, Long), b: (Double, Long)): Int = {
+    override def compare(a: (Double, Long), b: (Double, Long)): Int = {
       val c = java.lang.Double.compare(b._1, a._1) // score desc
       if (c != 0) c else java.lang.Long.compare(a._2, b._2) // id asc
     }

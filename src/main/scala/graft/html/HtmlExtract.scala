@@ -83,10 +83,6 @@ object HtmlExtract {
   private val LinkRatioMax = 2.0 / 3.0
   private val ShortBlockChars = 80
 
-  /** String-in/string-out views (tests, ad-hoc use). */
-  def extract(html: String): String = new String(extractBytes(html.getBytes(UTF_8)), UTF_8)
-  def extract(html: Array[Byte]): String = new String(extractBytes(html), UTF_8)
-
   /** Reusable per-task scratch: the output buffer is reused across the
     * documents of a partition, so a page allocates only its result. */
   final class Scratch { var buf: Array[Byte] = new Array[Byte](64 * 1024) }

@@ -21,14 +21,21 @@ import org.apache.spark.sql.functions._
   */
 object AsofJoin {
 
-  private def packed(left: DataFrame, right: DataFrame, keys: Seq[String],
-                     leftTs: String, rightTs: String,
-                     rightCols: Seq[String]): DataFrame = {
+  /** Output = all left columns ++ `rightCols` (null-filled when no right
+    * row precedes). Ties: right rows sharing the max qualifying timestamp
+    * resolve to the greatest `rightCols` struct (deterministic);
+    * pre-aggregate the right side to one row per (key, ts) when a specific
+    * tie rule matters.
+    *
+    * Scale shape: one hash shuffle on `keys`, one sort per partition. A
+    * single key's whole timeline sorts in one task. */
+  def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
+               leftTs: String, rightTs: String,
+               rightCols: Seq[String]): DataFrame = {
     require(rightCols.nonEmpty, "asofJoin needs at least one right value column")
     val collide = left.columns.toSet.intersect(rightCols.toSet)
     require(collide.isEmpty, s"right value columns collide with left columns: $collide")
-    val reserved = Set("__ts", "__side", "__lval", "__rval", "__carried", "__shard",
-      "__in", "__before", "__last")
+    val reserved = Set("__ts", "__side", "__lval", "__rval", "__carried")
     val taken = (left.columns ++ right.columns).toSet.intersect(reserved)
     require(taken.isEmpty, s"inputs use asofJoin-reserved column names: $taken")
     val keyCols = keys.map(col)
@@ -48,76 +55,14 @@ object AsofJoin {
     val lPacked = left.select((keyCols :+ col(leftTs).as("__ts") :+
       struct(left.columns.map(col): _*).as("__lval")): _*)
     val lType = lPacked.schema("__lval").dataType
-    lPacked.withColumn("__side", lit(1)).withColumn("__rval", lit(null).cast(rType))
+    val u = lPacked.withColumn("__side", lit(1)).withColumn("__rval", lit(null).cast(rType))
       .unionByName(
         rPacked.withColumn("__side", lit(0)).withColumn("__lval", lit(null).cast(lType)))
-  }
-
-  private def project(u: DataFrame, rightCols: Seq[String]): DataFrame =
-    u.where(col("__side") === 1)
+    val w = Window.partitionBy(keyCols: _*)
+      .orderBy(col("__ts").asc, col("__side").asc, col("__rval").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    u.withColumn("__carried", last(col("__rval"), ignoreNulls = true).over(w))
+      .where(col("__side") === 1)
       .select((col("__lval.*") +: rightCols.map(c => col(s"__carried.$c").as(c))): _*)
-
-  /** Single-window as-of join. Output = all left columns ++ `rightCols`
-    * (null-filled when no right row precedes). Ties: right rows sharing the
-    * max qualifying timestamp resolve to the greatest `rightCols` struct
-    * (deterministic); pre-aggregate the right side to one row per (key, ts)
-    * when a specific tie rule matters.
-    *
-    * Scale shape: one hash shuffle on `keys`, one sort per partition. A
-    * single key's whole timeline sorts in one task — for keys carrying
-    * millions of rows use [[asofJoinSharded]]. */
-  def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-               leftTs: String, rightTs: String,
-               rightCols: Seq[String]): DataFrame = {
-    val u = packed(left, right, keys, leftTs, rightTs, rightCols)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__ts").asc, col("__side").asc, col("__rval").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    project(u.withColumn("__carried", last(col("__rval"), ignoreNulls = true).over(w)),
-      rightCols)
-  }
-
-  /** Time-sharded as-of join for skewed keys (the packTokensSharded trick
-    * applied to time): the timeline of each key is cut into contiguous
-    * `shardSeconds` intervals, the carry-forward window runs per
-    * (key, shard) — sort parallelism = keys x shards — and the value
-    * entering each shard from the past is reconstructed with a SECOND,
-    * tiny window over the per-(key, shard) LAST right values (one row per
-    * key-shard, strictly-preceding frame), joined back and coalesced.
-    * Result is row-identical to [[asofJoin]] (AsofJoinSpec asserts
-    * equality across shard widths). */
-  def asofJoinSharded(left: DataFrame, right: DataFrame, keys: Seq[String],
-                      leftTs: String, rightTs: String,
-                      rightCols: Seq[String], shardSeconds: Long = 86400L): DataFrame = {
-    require(shardSeconds > 0, "shardSeconds must be positive")
-    val keyCols = keys.map(col)
-    // the union feeds three plan consumers (within-shard window, per-shard
-    // last values, shard list) — materialize it once instead of re-reading
-    // and re-tagging both inputs per consumer (the Dedup sketch-frame rule)
-    val u = Dedup.checkpointDf(packed(left, right, keys, leftTs, rightTs, rightCols)
-      .withColumn("__shard", floor(unix_timestamp(col("__ts")) / lit(shardSeconds)).cast("long")))
-
-    // carry within each (key, shard)
-    val wIn = Window.partitionBy((keyCols :+ col("__shard")): _*)
-      .orderBy(col("__ts").asc, col("__side").asc, col("__rval").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = u.withColumn("__in", last(col("__rval"), ignoreNulls = true).over(wIn))
-
-    // one row per (key, shard): the last right value the shard ends with;
-    // then the boundary carry = last such value over all STRICTLY earlier
-    // shards (keys x shards rows — tiny relative to the data)
-    val shardLast = u.where(col("__side") === 0)
-      .groupBy((keyCols :+ col("__shard")): _*)
-      .agg(max_by(col("__rval"), struct(col("__ts"), col("__rval"))).as("__last"))
-    val wAcross = Window.partitionBy(keyCols: _*).orderBy(col("__shard").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val boundary = u.select((keyCols :+ col("__shard")): _*).distinct()
-      .join(shardLast, keys :+ "__shard", "left")
-      .withColumn("__before", last(col("__last"), ignoreNulls = true).over(wAcross))
-      .select((keyCols :+ col("__shard") :+ col("__before")): _*)
-
-    project(within.join(boundary, keys :+ "__shard", "left")
-      .withColumn("__carried", coalesce(col("__in"), col("__before"))),
-      rightCols)
   }
 }

@@ -40,9 +40,7 @@ object Decontaminate {
   def shingleMd5s(df: DataFrame, idCol: String, textCol: String, w: Int): DataFrame =
     shingleOccurrences(df, idCol, textCol, w).select(col("id"), col("sh")).distinct()
 
-  /** The benchmark reduced to its distinct shingle-hash set — compute
-    * (and cache/persist) ONCE when the same benchmark gates many corpora
-    * or many micro-batches. */
+  /** The benchmark reduced to its distinct shingle-hash set. */
   def benchmarkShingles(benchmark: DataFrame, idCol: String, textCol: String,
                         w: Int): DataFrame =
     shingleMd5s(benchmark, idCol, textCol, w).select(col("sh")).distinct()
@@ -96,8 +94,7 @@ object Decontaminate {
     PreparedBenchmark(shingles, n, filter)
   }
 
-  /** [[flag]] against an already-[[prepare]]d benchmark — the per-use
-    * half, run once per corpus or stream micro-batch. */
+  /** [[flag]] against an already-[[prepare]]d benchmark. */
   private[graft] def flagPrepared(corpus: DataFrame, bench: PreparedBenchmark,
                                   idCol: String, textCol: String,
                                   w: Int, minOverlap: Long): DataFrame = {
@@ -161,15 +158,9 @@ object Decontaminate {
     * twice, both map-side: the chunking pass and the final `excise_spans`
     * reassembly after the hits join back by id. */
   def excise(corpus: DataFrame, benchmark: DataFrame,
-             idCol: String, textCol: String, w: Int = 13): DataFrame =
-    exciseAgainstShingles(corpus, benchmarkShingles(benchmark, idCol, textCol, w),
-      idCol, textCol, w)
-
-  /** [[excise]] against a PRE-REDUCED benchmark shingle set. */
-  def exciseAgainstShingles(corpus: DataFrame, benchShingles: DataFrame,
-                            idCol: String, textCol: String, w: Int): DataFrame = {
+             idCol: String, textCol: String, w: Int = 13): DataFrame = {
     val hitsPerDoc = shingleOccurrences(corpus, idCol, textCol, w)
-      .join(benchShingles.select(col("sh")), Seq("sh"), "left_semi")
+      .join(benchmarkShingles(benchmark, idCol, textCol, w), Seq("sh"), "left_semi")
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_spans_hit"),
         sort_array(collect_list(col("pos"))).as("hits"))
@@ -331,8 +322,6 @@ object Decontaminate {
 /** The benchmark side of [[Decontaminate.flag]], reduced once: the
   * distinct shingle-md5 set (checkpointed), its row count, and — when a
   * filter at `Decontaminate.BitsPerShingle` bits per shingle fits
-  * `BloomFunctions.MaxBits` — the serialized Bloom filter over it. A
-  * stream builds one before it starts and flags every micro-batch against
-  * it. */
+  * `BloomFunctions.MaxBits` — the serialized Bloom filter over it. */
 private[graft] final case class PreparedBenchmark(
     shingles: DataFrame, nShingles: Long, filter: Option[Array[Byte]])

@@ -102,23 +102,20 @@ object Dedup {
     * node — visible to any QueryExecutionListener / `Observation` without
     * forcing an extra job.
     *
-    * Returns (under-cap rows, over-popular rows annotated with the block
-    * representative as `rep_*` copies of `repCols`). */
+    * Returns (under-cap rows, over-popular rows annotated with the block's
+    * minimum `id` as `rep_id`). */
   private[operators] def splitBlocks(rows: DataFrame, keys: Seq[String],
-                                     maxBlock: Long, metric: String,
-                                     repCols: Seq[String]): (DataFrame, DataFrame) = {
+                                     maxBlock: Long, metric: String): (DataFrame, DataFrame) = {
     val keyCols = keys.map(col)
-    val repAggs = repCols.map(c => min_by(col(c), col(repCols.head)).as(s"rep_$c"))
     val stats = rows.groupBy(keyCols: _*)
-      .agg(count(lit(1)).as("block_n"), repAggs: _*)
+      .agg(count(lit(1)).as("block_n"), min(col("id")).as("rep_id"))
       .observe(s"${metric}_${blockMetricSeq.incrementAndGet()}",
         sum(when(col("block_n") > maxBlock, 1L).otherwise(0L)).as("over_blocks"),
         max(col("block_n")).as("max_block_n"))
       .where(col("block_n") > maxBlock)
-    val over = stats.select((keyCols ++ repCols.map(c => col(s"rep_$c"))): _*)
+    val over = stats.select((keyCols :+ col("rep_id")): _*)
     val under = rows.join(over.select(keyCols: _*), keys, "left_anti")
-    val starred = rows.join(over, keys)
-      .where(col(repCols.head) =!= col(s"rep_${repCols.head}"))
+    val starred = rows.join(over, keys).where(col("id") =!= col("rep_id"))
     (under, starred)
   }
 
@@ -161,7 +158,7 @@ object Dedup {
     val pairs =
       if (maxBlock <= 0) selfJoinPairs(banded)
       else {
-        val (under, starred) = splitBlocks(banded, keys, maxBlock, "minhash_lsh_blocks", Seq("id"))
+        val (under, starred) = splitBlocks(banded, keys, maxBlock, "minhash_lsh_blocks")
         selfJoinPairs(under).unionByName(
           starred.select(least(col("rep_id"), col("id")).as("id_a"),
             greatest(col("rep_id"), col("id")).as("id_b")))
@@ -171,78 +168,33 @@ object Dedup {
 
   // ---------- SimHash ----------
 
-  /** 64-bit SimHash over whitespace tokens: per-bit vote of xxhash64(token),
-    * folded into one bigint. Native Catalyst expression, bit-identical to
-    * the declarative reference in `DedupReference` (SketchExpressionsSpec). */
-  def simhash(textCol: Column): Column =
-    graft.functions.SketchFunctions.simhash64(textCol)
-
-  /** SimHash near-duplicate pairs within a hamming radius, using 16-bit
-    * chunk blocking (any pair at distance <= 3 shares one of 4 chunks —
-    * pigeonhole) and bit_count verification.
-    *
-    * Skew: on template-heavy corpora one chunk value can dominate (e.g. a
-    * boilerplate prefix fixing 16 simhash bits) and its block goes
-    * quadratic. `maxBlock > 0` splits on block frequency: (chunk_idx,
-    * chunk) blocks larger than maxBlock degrade to linear star candidates
-    * against the block's min-id row (hamming-verified; see `splitBlocks`),
-    * bounding the pair COUNT — which no join strategy can — without
-    * exempting the template group from dedup. AQE's skew-join split
-    * handles the residual partition-level imbalance. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3, maxBlock: Long = 0L): DataFrame = {
-    simhashPairsOn(df.select(col(idCol).as("id"), simhash(col(textCol)).as("sh")),
-      nBits = 64, maxHamming = maxHamming, maxBlock = maxBlock)
-  }
-
-  /** `simhashPairs` over the oracle-portable md5 simhash (60 bits, 4 chunks
-    * of 15 — the radius-3 pigeonhole guarantee is unchanged). Hot path is
-    * the native `SketchKernel.simhashMd5` kernel, bit-identical to the
-    * declarative reference in `DedupReference` (SketchExpressionsSpec). */
-  def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int = 3, maxBlock: Long = 0L): DataFrame =
-    simhashPairsOn(df.select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.simhashMd5(col(textCol)).as("sh")),
-      nBits = 60, maxHamming = maxHamming, maxBlock = maxBlock)
-
-  /** Chunk-blocked hamming pair mining over a precomputed (id, sh) frame:
-    * 4 chunks of nBits/4, exact for radius <= 3 by pigeonhole. Only
-    * (chunk_idx, chunk, id, sh) rows cross the self-join exchange.
-    * Over-popular chunk blocks degrade to star candidates against the
-    * block's min-id row (hamming-verified like every other candidate).
-    * The compact (id, sh) sketch frame is checkpointed once — both
-    * self-join sides (and, with the cap on, the block stats) otherwise
-    * re-run the simhash pass over the full corpus text per consumer (the
+  /** SimHash near-duplicate pairs within a hamming radius over the
+    * oracle-portable md5 simhash (60 bits), using 15-bit chunk blocking
+    * (any pair at distance <= 3 shares one of 4 chunks — pigeonhole) and
+    * bit_count verification. Hot path is the native
+    * `SketchKernel.simhashMd5` kernel, bit-identical to the declarative
+    * reference in `DedupReference` (SketchExpressionsSpec). Only
+    * (chunk_idx, chunk, id, sh) rows cross the self-join exchange. The
+    * compact (id, sh) sketch frame is checkpointed once — both self-join
+    * sides otherwise re-run the simhash pass over the full corpus text (the
     * `checkpointDf` rationale; r6). */
-  private def simhashPairsOn(hashed0: DataFrame, nBits: Int,
-                             maxHamming: Int, maxBlock: Long): DataFrame = {
-    val hashed = checkpointDf(hashed0)
-    val chunkBits = nBits / 4
+  def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
+                           maxHamming: Int = 3): DataFrame = {
+    val hashed = checkpointDf(df.select(col(idCol).as("id"),
+      graft.functions.SketchFunctions.simhashMd5(col(textCol)).as("sh")))
+    val chunkBits = 15
     val mask = (1L << chunkBits) - 1
     val chunked = hashed.select(col("id"), col("sh"),
       posexplode(transform(sequence(lit(0), lit(3)),
         c => call_function("shiftrightunsigned", col("sh"), c * chunkBits).bitwiseAND(lit(mask)))).as(Seq("chunk_idx", "chunk")))
     val keys = Seq("chunk_idx", "chunk")
-    def verified(pairs: DataFrame): DataFrame = pairs
+    val a = chunked.select(col("chunk_idx"), col("chunk"), col("id").as("id_a"), col("sh").as("sh_a"))
+    val b = chunked.select(col("chunk_idx"), col("chunk"), col("id").as("id_b"), col("sh").as("sh_b"))
+    a.join(b, keys).where(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("hamming"))
       .where(col("hamming") <= maxHamming)
-    def selfJoinPairs(rows: DataFrame): DataFrame = {
-      val a = rows.select(col("chunk_idx"), col("chunk"), col("id").as("id_a"), col("sh").as("sh_a"))
-      val b = rows.select(col("chunk_idx"), col("chunk"), col("id").as("id_b"), col("sh").as("sh_b"))
-      verified(a.join(b, keys).where(col("id_a") < col("id_b")))
-    }
-    val pairs =
-      if (maxBlock <= 0) selfJoinPairs(chunked)
-      else {
-        val (under, starred) = splitBlocks(chunked, keys, maxBlock, "simhash_blocks", Seq("id", "sh"))
-        selfJoinPairs(under).unionByName(verified(
-          starred.select(
-            least(col("rep_id"), col("id")).as("id_a"),
-            greatest(col("rep_id"), col("id")).as("id_b"),
-            col("rep_sh").as("sh_a"), col("sh").as("sh_b"))))
-      }
-    pairs.dropDuplicates("id_a", "id_b")
+      .dropDuplicates("id_a", "id_b")
   }
 
   // ---------- duplicate clusters ----------

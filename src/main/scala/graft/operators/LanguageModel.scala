@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Corpus-trained unigram language-model scoring — the CCNet/FineWeb-style
   * "perplexity" quality filter re-expressed for a distributed engine: train
-  * token statistics on a (reference) corpus, then score every document by
-  * how surprising its tokens are under that model. Low-surprisal documents
+  * token statistics on the corpus, then score every document by how
+  * surprising its tokens are under that model. Low-surprisal documents
   * read like the training corpus; high-surprisal documents are gibberish,
   * boilerplate hash soup, or another language.
   *
@@ -48,26 +48,6 @@ object LanguageModel {
         (floorLog2(col("total")) - floorLog2(col("cnt"))).as("bits"))
   }
 
-  /** The 1-row `oov_bits = max(bits) + 1` broadcast frame, RAISING on an
-    * empty model instead of yielding NULL: an empty model would make
-    * `coalesce(bits, oov_bits)` NULL and the summed surprisal silently 0 —
-    * a quality gate built on it would pass everything, the exact inversion
-    * of the documented OOV charge. A SELF-TRAINED caller sets
-    * `selfTrained = true` instead: its model is empty exactly when its
-    * scoring set is empty (no OOV lookup can ever happen), and an empty
-    * input must produce an empty output, not a job abort. */
-  private def emptyCheckedOov(model: DataFrame, op: String,
-                              selfTrained: Boolean = false): DataFrame = {
-    val agg = model.agg((max(col("bits")) + 1L).as("__oov"))
-    if (selfTrained) agg.select(coalesce(col("__oov"), lit(0L)).as("oov_bits"))
-    else agg.select(when(col("__oov").isNotNull, col("__oov"))
-      .otherwise(raise_error(
-        lit(s"$op: the model is EMPTY (zero rows) — every lookup would " +
-          "be OOV with an undefined charge; train on a non-empty corpus"))
-        .cast("long"))
-      .as("oov_bits"))
-  }
-
   /** `floor(log2(n))` for n >= 1 as an exact integer: the bit length of n
     * minus one, via the binary-string rendering both engines share
     * (`bin(5) = '101'` in Spark AND DuckDB — no float log2 whose boundary
@@ -75,10 +55,9 @@ object LanguageModel {
   private[graft] def floorLog2(n: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     (length(bin(n)) - 1).cast("long")
 
-  /** Score `df` against a trained model (any corpus — self or reference).
-    * Tokens ABSENT from the model (OOV) are charged `oovBits(model) =
-    * floor(log2(total)) + 1` — one bit beyond the rarest in-model token,
-    * the integer analogue of add-one smoothing.
+  /** Self-scored unigram surprisal: train on `df` and score `df` — the
+    * single-corpus quality signal. Every token `df` scores is in its own
+    * model, so no out-of-vocabulary charge is ever needed.
     *
     * Output: (id, n_tokens, surprisal_bits, mean_bits_x100) —
     * n_tokens counts token OCCURRENCES, surprisal_bits = sum of per-token
@@ -86,25 +65,17 @@ object LanguageModel {
     * n_tokens (pure integer division, cross-engine exact). Null-text
     * documents report (0, 0, 0). Ids must be unique (checked anchor
     * raise_errors on duplicates — copies would silently merge token
-    * streams). */
-  def surprisalStats(df: DataFrame, idCol: String, textCol: String,
-                     model: DataFrame): DataFrame =
-    surprisalStatsImpl(df, idCol, textCol, model, selfTrained = false)
-
-  private def surprisalStatsImpl(df: DataFrame, idCol: String, textCol: String,
-                                 model: DataFrame, selfTrained: Boolean): DataFrame = {
-    val tfc = TfIdf.termFrequencies(df, idCol, textCol)
+    * streams). Spark plans the tokenize pass twice (once for the model
+    * aggregate, once for the scoring frame). */
+  def selfSurprisal(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val model = unigramModel(df, idCol, textCol)
+    val scored = TfIdf.termFrequencies(df, idCol, textCol)
       .select(col("id"), md5(col("token")).as("tk"), col("tf"))
-    // OOV charge derived from the model itself: 1-row broadcast of
-    // max(bits) + 1 == floor(log2(total)) + 1 (cnt = 1 rows carry the max)
-    val oovRow = emptyCheckedOov(model, "LanguageModel.surprisalStats", selfTrained)
-    val scored = tfc
-      .join(model.select(col("tk"), col("bits")), Seq("tk"), "left")
-      .crossJoin(broadcast(oovRow))
+      .join(model.select(col("tk"), col("bits")), Seq("tk"))
       .groupBy(col("id"))
       .agg(sum(col("tf")).as("n_tokens"),
-        sum(col("tf") * coalesce(col("bits"), col("oov_bits"))).as("surprisal_bits"))
-    Dedup.checkedIdAnchor(df, idCol, "LanguageModel.surprisalStats")
+        sum(col("tf") * col("bits")).as("surprisal_bits"))
+    Dedup.checkedIdAnchor(df, idCol, "LanguageModel.selfSurprisal")
       .join(scored, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
@@ -112,16 +83,6 @@ object LanguageModel {
         when(col("n_tokens") > 0,
           expr("surprisal_bits * 100 div n_tokens")).otherwise(lit(0L)).as("mean_bits_x100"))
   }
-
-  /** Self-scored convenience: train on `df` and score `df` — the
-    * single-corpus quality signal (no OOV possible: every token is in its
-    * own model). The model frame feeds one join; Spark plans the
-    * tokenize pass twice (once for the model aggregate, once for the
-    * scoring frame) — on a large corpus train once, persist the compact
-    * model, and call [[surprisalStats]] directly. */
-  def selfSurprisal(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    surprisalStatsImpl(df, idCol, textCol, unigramModel(df, idCol, textCol),
-      selfTrained = true)
 
   /** Train the order-2 model: one row per distinct token BIGRAM with its
     * corpus count and CONDITIONAL surprisal in whole bits,
@@ -142,7 +103,7 @@ object LanguageModel {
     * prefix re-aggregation on a (bigram-vocab-sized input, not corpus),
     * and the prefix join runs vocab-to-vocab. A hot bigram is one model
     * row; skew lands only on the scoring join, where AQE's skew split
-    * applies (same property [[surprisalStats]] ships with). */
+    * applies (same property [[selfSurprisal]] ships with). */
   def bigramModel(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val counts = bigramOccurrences(df, idCol, textCol)
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cnt"))
@@ -169,34 +130,27 @@ object LanguageModel {
       .drop("sp")
 
   /** (id, a, b) per bigram OCCURRENCE, md5 keys — the shared map-only
-    * extraction behind [[bigramModel]] and [[bigramSurprisal]]. */
+    * extraction behind [[bigramModel]] and [[selfBigramSurprisal]]. */
   private def bigramOccurrences(df: DataFrame, idCol: String, textCol: String): DataFrame =
     rawBigrams(df.select(col(idCol).as("id"), col(textCol)), textCol, Seq("id"))
       .select(col("id"), md5(col("ta")).as("a"), md5(col("tb")).as("b"))
 
-  /** Score each document's TRANSITIONS against a trained bigram model —
-    * the order-2 quality filter. Bigrams absent from the model are charged
-    * `max(bits) + 1` (one bit beyond the rarest in-model transition, the
-    * [[surprisalStats]] smoothing convention). Output: (id, n_bigrams,
-    * surprisal_bits, mean_bits_x100); documents with fewer than two
-    * non-empty tokens (or null text) report (0, 0, 0). Ids must be unique
-    * (checked anchor). */
-  def bigramSurprisal(df: DataFrame, idCol: String, textCol: String,
-                      model: DataFrame): DataFrame =
-    bigramSurprisalImpl(df, idCol, textCol, model, selfTrained = false)
-
-  private def bigramSurprisalImpl(df: DataFrame, idCol: String, textCol: String,
-                                  model: DataFrame, selfTrained: Boolean): DataFrame = {
-    val occ = bigramOccurrences(df, idCol, textCol)
+  /** Self-scored bigram surprisal — the order-2 quality filter: train on
+    * `df`, score each document's TRANSITIONS against that model (every
+    * transition is in it, so none is out of vocabulary). Output: (id,
+    * n_bigrams, surprisal_bits, mean_bits_x100); documents with fewer than
+    * two non-empty tokens (or null text) report (0, 0, 0). Ids must be
+    * unique (checked anchor). The tokenize pass plans twice, as in
+    * [[selfSurprisal]]. */
+  def selfBigramSurprisal(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val model = bigramModel(df, idCol, textCol)
+    val scored = bigramOccurrences(df, idCol, textCol)
       .groupBy(col("id"), col("a"), col("b")).agg(count(lit(1)).as("tf"))
-    val oovRow = emptyCheckedOov(model, "LanguageModel.bigramSurprisal", selfTrained)
-    val scored = occ
-      .join(model.select(col("a"), col("b"), col("bits")), Seq("a", "b"), "left")
-      .crossJoin(broadcast(oovRow))
+      .join(model.select(col("a"), col("b"), col("bits")), Seq("a", "b"))
       .groupBy(col("id"))
       .agg(sum(col("tf")).as("n_bigrams"),
-        sum(col("tf") * coalesce(col("bits"), col("oov_bits"))).as("surprisal_bits"))
-    Dedup.checkedIdAnchor(df, idCol, "LanguageModel.bigramSurprisal")
+        sum(col("tf") * col("bits")).as("surprisal_bits"))
+    Dedup.checkedIdAnchor(df, idCol, "LanguageModel.selfBigramSurprisal")
       .join(scored, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
@@ -204,13 +158,6 @@ object LanguageModel {
         when(col("n_bigrams") > 0,
           expr("surprisal_bits * 100 div n_bigrams")).otherwise(lit(0L)).as("mean_bits_x100"))
   }
-
-  /** Self-scored bigram convenience (train on `df`, score `df`; no OOV
-    * possible) — the [[selfSurprisal]] caveat applies: the tokenize pass
-    * plans twice, so on a large corpus train once and persist the model. */
-  def selfBigramSurprisal(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    bigramSurprisalImpl(df, idCol, textCol, bigramModel(df, idCol, textCol),
-      selfTrained = true)
 
   /** Collocation mining — the corpus's top-k most ASSOCIATED adjacent
     * token pairs ("strongly glued" phrases: named entities, technical
@@ -277,7 +224,7 @@ object LanguageModel {
     * corpus's own unigram model, and the integer delta
     * `delta_bits = bits_b - bits_a` (positive = rarer in B). A token
     * absent from one side is charged that side's OOV surprisal
-    * (`floor(log2(total)) + 1`, the [[surprisalStats]] convention) — so
+    * (`floor(log2(total)) + 1`, one bit beyond its rarest token) — so
     * brand-new and vanished tokens surface with the largest deltas.
     *
     * Output: (token, cnt_a, cnt_b, bits_a, bits_b, delta_bits), filtered
@@ -287,8 +234,8 @@ object LanguageModel {
     *
     * Scale shape: both sides aggregate map-only `token_tf` rows by
     * md5(token) (one representative string rides each vocab-sized model
-    * row, the [[TfIdf.docFrequencies]] discipline); the drift join is
-    * vocab x vocab on 16-byte keys; totals are 1-row broadcast frames.
+    * row); the drift join is vocab x vocab on 16-byte keys; totals are
+    * 1-row broadcast frames.
     * Integer end to end — the q77 oracle replays it bit-for-bit. */
   def tokenDrift(a: DataFrame, b: DataFrame, idCol: String, textCol: String,
                  minCnt: Long = 1L, minAbsDelta: Long = 1L): DataFrame = {

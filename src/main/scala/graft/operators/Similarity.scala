@@ -184,7 +184,7 @@ object Similarity {
       if (maxBlock <= 0) selfJoinPairs(buckets)
       else {
         val (under, starred) =
-          Dedup.splitBlocks(buckets, keys, maxBlock, "embedding_lsh_blocks", Seq("id"))
+          Dedup.splitBlocks(buckets, keys, maxBlock, "embedding_lsh_blocks")
         selfJoinPairs(under).unionByName(
           starred.select(least(col("rep_id"), col("id")).as("id_a"),
             greatest(col("rep_id"), col("id")).as("id_b")))

@@ -108,13 +108,6 @@ object TextAnalysis {
       qualityScoreI4(textCol).as("quality_score_i4"))
   }
 
-  /** 64-bit rolling document fingerprint: ordered hash-chain fold of token
-    * hashes (order-sensitive). Native codegen'd expression; bit-identical to
-    * the declarative reference in `TextAnalysisReference` (asserted in
-    * SketchExpressionsSpec). */
-  def fingerprint(textCol: Column): Column =
-    graft.functions.SketchFunctions.fingerprint64(textCol)
-
   /** Oracle-portable fingerprint: the md5 hash chain in hex-string space
     * (acc = md5(acc || md5(token))) — same order-sensitivity, but every
     * engine with md5() can recompute it (DuckDB: list_reduce + md5). Native
@@ -123,23 +116,16 @@ object TextAnalysis {
   def fingerprintMd5(textCol: Column): Column =
     graft.functions.SketchFunctions.fingerprintMd5(textCol)
 
-  /** Greedy token-budget packing, two-level: each language is salted into
-    * `shards` deterministic sub-shards packed independently, and local pack
-    * ids are interleaved (pack_id = local * shards + shard) so they stay
-    * globally unique. The single-window formulation (SparkEntry q35)
-    * serializes a giant language shard into ONE partition's window sort at
-    * corpus scale; here the sort parallelism is langs x shards while packing
-    * quality is unchanged (any greedy sequential packing is equally valid —
-    * at most `shards` extra partially-filled tail packs per language). */
-  def packTokensSharded(df: DataFrame, langCol: String, idCol: String,
-                        textCol: String, budget: Int = 512, shards: Int = 64): DataFrame =
-    packShardedOn(
-      df.select(col(idCol), col(langCol), tokenCount(col(textCol)).as("n_tokens")),
-      langCol, idCol, budget, shards)
-
-  /** The sharded-packing core over a frame that already carries an
-    * `n_tokens` column (shared by `packTokensSharded`, Curate's stage 4 and
-    * q35/q63 — ONE copy of the shard/window/pack_id formula). With
+  /** Greedy token-budget packing, two-level, over a frame that already
+    * carries an `n_tokens` column (Curate's stage 4 and q35/q63 share this
+    * one copy of the shard/window/pack_id formula): each language is
+    * salted into `shards` deterministic sub-shards packed independently,
+    * and local pack ids are interleaved (pack_id = local * shards + shard)
+    * so they stay globally unique. A single per-language window serializes
+    * a giant language into ONE partition's window sort at corpus scale;
+    * here the sort parallelism is langs x shards while packing quality is
+    * unchanged (any greedy sequential packing is equally valid — at most
+    * `shards` extra partially-filled tail packs per language). With
     * `shards = 1` every id lands in shard 0 (xxhash64 is never null), so
     * it is the single per-language window: pack_id = floor((cum - 1) / budget). */
   def packShardedOn(df: DataFrame, langCol: String, idCol: String,

@@ -40,17 +40,6 @@ object TfIdf {
       .select(col(idCol).as("id"), explode(SketchFunctions.tokenTf(col(textCol))).as("t"))
       .select(col("id"), col("t.token").as("token"), col("t.tf").as("tf"))
 
-  /** Per-token document frequency, keyed by md5(token) with a
-    * representative token string: (token, df). The counting shuffle is
-    * md5-keyed and map-side combined; the string rides along as the
-    * grouping representative (min = the only value — md5 collisions
-    * aside, one md5 = one token). */
-  def docFrequencies(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    termFrequencies(df, idCol, textCol)
-      .groupBy(md5(col("token")).as("tk"))
-      .agg(min(col("token")).as("token"), count(lit(1)).as("df"))
-      .select(col("token"), col("df"))
-
   /** Top-k most DISTINCTIVE terms per document: among tokens appearing in
     * at most `maxDfPpm` parts-per-million of documents (stopword
     * exclusion), rank by (df asc — rarest first, tf desc — then most

@@ -29,7 +29,7 @@ object Vocab {
     * Scale shape: per-doc term frequencies are MAP-ONLY via the native
     * `token_tf` (strings collapse in-row before any exchange); the global
     * count groups by md5(token) with the string riding as the one
-    * representative per key (the [[TfIdf.docFrequencies]] discipline).
+    * representative per key.
     * The top-`vocabSize` cut is a TakeOrdered (per-partition top-V,
     * merged once — never a global sort of the vocabulary), and only the
     * id assignment itself is a single-partition window, over a frame the

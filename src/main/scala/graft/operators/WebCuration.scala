@@ -54,7 +54,8 @@ object WebCuration {
       .agg(countDistinct(col("id")).as("n_docs"))
       .where(col("n_docs") >= minDocs)
       .select(col("line_md5"), lit(true).as("hot"))
-    val agg = reassemble(exploded, hot)
+    val agg = reassembleKept(exploded.join(hot, Seq("line_md5"), "left")
+      .withColumn("keep", col("hot").isNull))
     // one row per input doc even when text is NULL (posexplode of a null
     // array emits nothing): re-anchor on the id set. Ids MUST be unique —
     // with duplicates the per-copy texts are lost and line counts mix the
@@ -73,15 +74,6 @@ object WebCuration {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         when(col("n_kept") > 0, col("joined")).as("clean_text"))
   }
-
-  /** Shared reassembly of surviving lines — ONE copy of the strike/order/
-    * rejoin expressions for the batch operator above and the streaming leg
-    * (graft.streaming.StreamingCuration). `exploded` = (id, idx, line,
-    * line_md5) rows; `hot` = (line_md5, hot) boilerplate set. Returns one
-    * row per id present in `exploded`: (id, n_lines, n_kept, joined). */
-  private[graft] def reassemble(exploded: DataFrame, hot: DataFrame): DataFrame =
-    reassembleKept(exploded.join(hot, Seq("line_md5"), "left")
-      .withColumn("keep", col("hot").isNull))
 
   /** ONE copy of the collect/sort-by-key/strip-key/rejoin idiom shared by
     * [[reassembleKept]] and `TextAnalysis.materializePacks`: `entries` is

@@ -51,43 +51,10 @@ class AsofJoinSpec extends AnyFunSuite {
       (Option.empty[Long], Option(ts("2024-01-01 00:00:01")), 43L), // null key: must NOT match null-key left
       (Option(10L), Option(ts("2024-01-01 00:00:03")), 44L)
     ).toDF("user_id", "rts", "view_id")
-    for (sharded <- Seq(false, true)) {
-      val out = (if (sharded)
-          AsofJoin.asofJoinSharded(left, right, Seq("user_id"), "ts", "rts", Seq("view_id"), 3600L)
-        else AsofJoin.asofJoin(left, right, Seq("user_id"), "ts", "rts", Seq("view_id")))
-        .orderBy("event_id").collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(3)) -1L else r.getLong(3)))
-      assert(out.toSeq == Seq((1L, 44L), (2L, -1L), (3L, -1L)), s"sharded=$sharded")
-    }
-  }
-
-  test("asofJoinSharded == asofJoin on the events table across shard widths") {
-    val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-    val views = ev.where(col("event_type") === "view")
-      .groupBy(col("user_id"), col("ts").as("view_ts"))
-      .agg(max(col("event_id")).as("view_event_id"))
-      .select(col("user_id"), col("view_ts"), col("view_event_id"))
-    val plain = AsofJoin.asofJoin(purchases, views, Seq("user_id"), "ts", "view_ts",
-      Seq("view_event_id", "view_ts")).orderBy("event_id").collect()
-    assert(plain.nonEmpty && plain.exists(!_.isNullAt(4)) && plain.exists(_.isNullAt(4)),
-      "fixture must exercise both matched and unmatched rows")
-    // shard boundaries at 1h, 1d, and 1 week: carries must cross shards
-    for (shardSec <- Seq(3600L, 86400L, 604800L)) {
-      val sharded = AsofJoin.asofJoinSharded(purchases, views, Seq("user_id"), "ts", "view_ts",
-        Seq("view_event_id", "view_ts"), shardSeconds = shardSec).orderBy("event_id").collect()
-      assert(sharded.toSeq == plain.toSeq, s"shardSeconds=$shardSec")
-    }
-    // with a session checkpoint dir the shard frame takes the durable
-    // df.checkpoint() path: files land in the dir, rows are unchanged
-    SparkTestBase.withCheckpointDir {
-      val reliable = AsofJoin.asofJoinSharded(purchases, views, Seq("user_id"), "ts", "view_ts",
-        Seq("view_event_id", "view_ts"), shardSeconds = 86400L)
-        .orderBy("event_id").collect()
-      assert(SparkTestBase.checkpointFiles().nonEmpty, "reliable checkpoint wrote no files")
-      assert(reliable.toSeq == plain.toSeq, "the reliable checkpoint must be row-identical")
-    }
+    val out = AsofJoin.asofJoin(left, right, Seq("user_id"), "ts", "rts", Seq("view_id"))
+      .orderBy("event_id").collect()
+      .map(r => (r.getLong(0), if (r.isNullAt(3)) -1L else r.getLong(3)))
+    assert(out.toSeq == Seq((1L, 44L), (2L, -1L), (3L, -1L)))
   }
 
   test("SQL recipe handles catalog-qualified table names (global_temp.x)") {

@@ -50,36 +50,20 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("simhashPairs == brute-force all-pairs hamming (pigeonhole: 4-chunk blocking is EXACT for radius 3)") {
+  test("simhashPairsPortable == brute-force all-pairs hamming (pigeonhole: 4-chunk blocking is EXACT for radius 3)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val withDups = docs.unionByName(
       docs.where(col("doc_id") < 20).withColumn("doc_id", col("doc_id") + 100000L))
-    val blocked = Dedup.simhashPairs(withDups, "doc_id", "text", maxHamming = 3)
+    val blocked = Dedup.simhashPairsPortable(withDups, "doc_id", "text", maxHamming = 3)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hashed = withDups.select(col("doc_id").as("id"), Dedup.simhash(col("text")).as("sh"))
+    val hashed = withDups.select(col("doc_id").as("id"),
+      graft.functions.SketchFunctions.simhashMd5(col("text")).as("sh"))
     val brute = hashed.as("a").crossJoin(hashed.as("b"))
       .where(col("a.id") < col("b.id") &&
         bit_count(col("a.sh").bitwiseXOR(col("b.sh"))) <= 3)
       .select(col("a.id"), col("b.id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(blocked == brute, s"missing=${brute diff blocked} extra=${blocked diff brute}")
-  }
-
-  test("simhash frequency cap drops only over-popular blocks") {
-    // 60 docs sharing a template prefix (popular chunks) + 2 true dups
-    val docs = ((0 until 60).map(i => (i.toLong, s"shared template header words $i unique tail $i")) ++
-      Seq((100L, "totally distinct duplicate pair body text"),
-          (101L, "totally distinct duplicate pair body text")))
-      .toDF("doc_id", "text")
-    val uncapped = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val capped = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3, maxBlock = 10)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the exact-dup pair shares ALL four chunks; its block (size 2) is under
-    // the cap, so the cap must keep it while pruning template-block pairs
-    assert(uncapped.contains((100L, 101L)))
-    assert(capped.contains((100L, 101L)))
-    assert(capped.subsetOf(uncapped))
   }
 
   test("minhash band cap: over-popular blocks degrade to LINEAR star candidates, under-cap blocks self-join") {
@@ -135,14 +119,6 @@ class DedupSpec extends AnyFunSuite {
         .select(col("id_a"), col("id_b")),
       docs.select(col("doc_id").as("id")))
     assert(cc.where(col("cluster_id") === 0L).count() == 40L)
-  }
-
-  test("simhashPairs star path: an over-popular chunk block still pairs against its representative") {
-    val template = (0 until 30).map(i => (i.toLong, "same text every time"))
-    val docs = template.toDF("doc_id", "text")
-    val out = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3, maxBlock = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(out == (1 until 30).map(i => (0L, i.toLong, 0L)).toSet, out.take(5).toString)
   }
 
   test("deterministic across partitionings") {

@@ -682,8 +682,11 @@ class ExtractMainSpec extends AnyFunSuite {
         }
       assert(sawFiles.get, "--link-graph --curate wrote no checkpoint files to the session dir")
       val ckDir = new java.io.File(new java.net.URI(spark.sparkContext.getCheckpointDir.get))
-      val left = ckDir.listFiles().toSeq.filter(_.getName.startsWith("rdd-"))
-      assert(left.isEmpty, s"the run left its checkpoints behind: $left")
+      val left = Option(ckDir.listFiles()).toSeq.flatten
+      assert(!left.exists(_.getName.startsWith("rdd-")), s"the run left its checkpoints behind: $left")
+      // the application directory Spark made under the session dir held
+      // nothing before the run, so the run removes it too
+      assert(!ckDir.exists(), s"the run left its empty checkpoint directory $ckDir behind")
       assert(auth == authLocal)
       assert(curated == curatedLocal)
     }

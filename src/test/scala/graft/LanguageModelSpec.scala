@@ -40,47 +40,42 @@ class LanguageModelSpec extends AnyFunSuite {
     assert(got.values.map(_._3).toSet.size > 1)
   }
 
-  test("external model: OOV tokens charge max(bits) + 1") {
-    val model = LanguageModel.unigramModel(
-      Seq((1L, "a a a a b b c"), (2L, "a b c d")).toDF("id", "text"), "id", "text")
-    val m = model.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+  test("unigram model: hand-computed whole bits; self-scoring sums them per occurrence") {
+    val docs = Seq((1L, "a a a a b b c"), (2L, "a b c d"), (3L, null.asInstanceOf[String]))
+      .toDF("id", "text")
+    val m = LanguageModel.unigramModel(docs, "id", "text")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     // total = 11 occurrences -> floor(log2 11) = 3; a:5 -> 3-2=1 bit,
     // b:3 -> 3-1=2, c:2 -> 3-1=2, d:1 -> 3-0=3
     assert(m.map(x => (x._2, x._3)).sorted.toSeq ==
       Seq((1L, 3L), (2L, 2L), (3L, 2L), (5L, 1L)))
 
-    val scored = LanguageModel.surprisalStats(
-      Seq((10L, "a zz"), (11L, null.asInstanceOf[String])).toDF("id", "text"),
-      "id", "text", model)
+    val scored = LanguageModel.selfSurprisal(docs, "id", "text")
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    // oov = max bits + 1 = 4; doc 10 = a(1) + zz(4) = 5 bits over 2 tokens
-    assert(scored(10L) == ((2L, 5L, 250L)))
-    assert(scored(11L) == ((0L, 0L, 0L)))
+    // doc 1: 4 a(1) + 2 b(2) + c(2) = 10 bits over 7; doc 2: 1 + 2 + 2 + 3
+    assert(scored == Map(1L -> ((7L, 10L, 142L)), 2L -> ((4L, 8L, 200L)),
+      3L -> ((0L, 0L, 0L))))
   }
 
-  test("empty models raise loudly instead of scoring everything 0") {
-    val docs = Seq((1L, "a b")).toDF("id", "text")
-    val emptyUni = LanguageModel.unigramModel(
-      Seq((9L, null.asInstanceOf[String])).toDF("id", "text"), "id", "text")
-    val e1 = intercept[Exception] {
-      LanguageModel.surprisalStats(docs, "id", "text", emptyUni).collect()
-    }
-    assert(e1.getMessage.contains("EMPTY"), e1.getMessage)
-    val emptyBi = LanguageModel.bigramModel(
-      Seq((9L, "solo")).toDF("id", "text"), "id", "text")
-    val e2 = intercept[Exception] {
-      LanguageModel.bigramSurprisal(docs, "id", "text", emptyBi).collect()
-    }
-    assert(e2.getMessage.contains("EMPTY"), e2.getMessage)
+  test("self-scoring a corpus without tokens reports zeros instead of failing") {
+    // its own model is empty, so nothing is scored and no lookup misses
+    val docs = Seq((1L, ""), (2L, null.asInstanceOf[String]), (3L, "  ")).toDF("id", "text")
+    val zeros = Seq(1L, 2L, 3L).map(id => (id, 0L, 0L, 0L))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(rows(LanguageModel.selfSurprisal(docs, "id", "text")) == zeros)
+    // one-token documents have no transition, so the bigram model is empty
+    val solo = Seq((1L, "solo"), (2L, null.asInstanceOf[String]), (3L, "a  b")).toDF("id", "text")
+    assert(rows(LanguageModel.selfBigramSurprisal(solo, "id", "text")) == zeros)
+    assert(LanguageModel.selfSurprisal(docs.limit(0), "id", "text").count() == 0L)
   }
 
-  test("surprisalStats raise_errors on duplicate ids") {
+  test("selfSurprisal raise_errors on duplicate ids") {
     val dup = Seq((1L, "a b"), (1L, "c d")).toDF("id", "text")
-    val model = LanguageModel.unigramModel(dup.limit(1), "id", "text")
     val ex = intercept[Exception] {
-      LanguageModel.surprisalStats(dup, "id", "text", model).collect()
+      LanguageModel.selfSurprisal(dup, "id", "text").collect()
     }
-    assert(ex.getMessage.contains("LanguageModel.surprisalStats"))
+    assert(ex.getMessage.contains("LanguageModel.selfSurprisal"))
   }
 
   test("deterministic across partitionings") {
@@ -117,20 +112,12 @@ class LanguageModelSpec extends AnyFunSuite {
       3L -> ((0L, 0L, 0L)), 4L -> ((0L, 0L, 0L)), 5L -> ((0L, 0L, 0L))))
   }
 
-  test("bigramSurprisal: OOV transitions charge max(bits) + 1; duplicate ids raise") {
-    val model = LanguageModel.bigramModel(
-      Seq((1L, "a b a b c"), (2L, "a a")).toDF("id", "text"), "id", "text")
-    val scored = LanguageModel.bigramSurprisal(
-        Seq((10L, "q q a b"), (11L, "")).toDF("id", "text"), "id", "text", model)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    // oov = max bits + 1 = 2; doc 10: qq(2) + qa(2) + ab(0) = 4 over 3
-    assert(scored(10L) == ((3L, 4L, 133L)))
-    assert(scored(11L) == ((0L, 0L, 0L)))
+  test("selfBigramSurprisal raise_errors on duplicate ids") {
     val dup = Seq((1L, "a b"), (1L, "c d")).toDF("id", "text")
     val ex = intercept[Exception] {
-      LanguageModel.bigramSurprisal(dup, "id", "text", model).collect()
+      LanguageModel.selfBigramSurprisal(dup, "id", "text").collect()
     }
-    assert(ex.getMessage.contains("LanguageModel.bigramSurprisal"))
+    assert(ex.getMessage.contains("LanguageModel.selfBigramSurprisal"))
   }
 
   test("bigram scoring is deterministic across partitionings") {

@@ -367,25 +367,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(table.read(spark).count() == 6)
   }
 
-  test("streaming facade: AvailableNow ingestion commits atomic batches") {
-    import spark.implicits._
-    val inDir = java.nio.file.Files.createTempDirectory("graft_in").toString
-    val tblDir = java.nio.file.Files.createTempDirectory("graft_stbl").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_ck").toString
-    corpus(20).toDF().write.mode("overwrite").parquet(inDir)
-
-    val q = graft.streaming.StreamingExtract.start(spark, inDir, tblDir, ckDir)
-    q.awaitTermination(60000)
-    val table = new ParquetManifestTable(tblDir)
-    assert(table.committedBatches.nonEmpty)
-    assert(table.read(spark).count() == 20)
-
-    // restart with same checkpoint: no new data, no duplicate commits
-    val q2 = graft.streaming.StreamingExtract.start(spark, inDir, tblDir, ckDir)
-    q2.awaitTermination(60000)
-    assert(table.read(spark).count() == 20)
-  }
-
   test("manifest table formats: orc round-trips binary columns; text formats rejected") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_tbl_orc").toString

@@ -260,7 +260,7 @@ class PlanSpec extends AnyFunSuite {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val p1 = docs.select(
         graft.functions.SketchFunctions.fingerprint64(col("text")),
-        graft.functions.SketchFunctions.simhash64(col("text")),
+        graft.functions.Natives.simhash64(Seq(col("text"))),
         graft.functions.SketchFunctions.shingleHashes(col("text"), 3))
       .queryExecution.executedPlan.toString
     // "*(n) Project [...]" = the project runs inside WholeStageCodegen
@@ -546,7 +546,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("sketch expressions are native Catalyst (no UDF nodes, batched scan)") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val sketched = docs.select(Dedup.simhash(col("text")).as("sh"),
+    val sketched = docs.select(graft.functions.Natives.simhash64(Seq(col("text"))).as("sh"),
       graft.functions.SketchFunctions.minhashSig(col("text"), 3, 16).as("sig"))
     val p = plan(sketched)
     // higher-order functions evaluate interpreted (no whole-stage codegen),
@@ -616,8 +616,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("bigram LM: extraction is map-only; model and scoring exchanges carry md5 keys, never text or raw tokens") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val model = graft.operators.LanguageModel.bigramModel(docs, "doc_id", "text")
-    val out = graft.operators.LanguageModel.bigramSurprisal(docs, "doc_id", "text", model)
+    val out = graft.operators.LanguageModel.selfBigramSurprisal(docs, "doc_id", "text")
     val shuffles = collectShuffles(out)
     assert(shuffles.nonEmpty)
     shuffles.foreach { s =>

@@ -45,22 +45,4 @@ class SinkTablesSpec extends AnyFunSuite {
     assert(!readSchema.contains("contents"), readSchema)
     assert(urls.columns.toSeq == Seq("url", "line_no", "line"))
   }
-
-  test("watermarked hourly metrics over a file stream") {
-    import spark.implicits._
-    val inDir = java.nio.file.Files.createTempDirectory("graft_hm_in").toString
-    CrawlCorpus.crawl(spark, 50, 42L).toDF().write.mode("append").parquet(inDir)
-    val stream = graft.streaming.StreamingExtract.readCrawlStream(spark, inDir)
-    // update mode: append would hold rows until the watermark passes the
-    // window end, which never happens without a subsequent batch
-    val q = graft.streaming.StreamingExtract.hourlyMetrics(stream)
-      .writeStream.format("memory").queryName("hourly_metrics")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(60000)
-    val rows = spark.table("hourly_metrics").collect()
-    assert(rows.nonEmpty)
-    assert(rows.map(_.getAs[Long]("n_pages")).sum == 50)
-  }
 }

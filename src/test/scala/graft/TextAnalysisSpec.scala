@@ -10,10 +10,12 @@ import graft.operators.TextAnalysis
 class TextAnalysisSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+  private def counted(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("doc_id"), col("lang"), TextAnalysis.tokenCount(col("text")).as("n_tokens"))
 
-  test("packTokensSharded: complete, unique ids, budget respected per pack") {
+  test("packShardedOn: complete, unique ids, budget respected per pack") {
     val budget = 512
-    val packed = TextAnalysis.packTokensSharded(docs, "lang", "doc_id", "text",
+    val packed = TextAnalysis.packShardedOn(counted(docs), "lang", "doc_id",
       budget = budget, shards = 8).cache()
 
     // every document lands in exactly one pack
@@ -38,9 +40,10 @@ class TextAnalysisSpec extends AnyFunSuite {
     packed.unpersist()
   }
 
-  test("packTokensSharded is deterministic across partitionings") {
+  test("packShardedOn is deterministic across partitionings") {
     def fp(parts: Int) =
-      TextAnalysis.packTokensSharded(docs.repartition(parts), "lang", "doc_id", "text")
+      TextAnalysis.packShardedOn(counted(docs.repartition(parts)), "lang", "doc_id",
+          budget = 512, shards = 64)
         .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getAs[Long]("pack_id"))).toSeq
     assert(fp(2) == fp(9))
   }

@@ -70,14 +70,6 @@ class TfIdfSpec extends AnyFunSuite {
     assert(run(2) == run(13))
   }
 
-  test("docFrequencies: df counts distinct docs, not occurrences") {
-    val df = Seq((1L, "x x y"), (2L, "x z"), (3L, Option.empty[String].orNull))
-      .toDF("doc_id", "text")
-    val out = TfIdf.docFrequencies(df, "doc_id", "text")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(out == Map("x" -> 2L, "y" -> 1L, "z" -> 1L))
-  }
-
   test("token_tf SQL registration matches the DataFrame API") {
     graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)

@@ -21,7 +21,7 @@ class BloomFilterSpec extends AnyFunSuite {
     val (numBits, k) = BloomFunctions.shape(members.size.toLong, 10)
     val ser = build(members.toDF("v"), numBits, k)
     val misses = members.toDF("v")
-      .where(!BloomFunctions.bloomMightContain(lit(ser), col("v")))
+      .where(!Natives.bloomMightContain(Seq(lit(ser), col("v"))))
       .count()
     assert(misses == 0L, "a Bloom filter must never produce a false negative")
   }
@@ -31,7 +31,7 @@ class BloomFilterSpec extends AnyFunSuite {
     val ser = build(members.toDF("v"), numBits, k)
     val probes = 20000
     val fps = (1 to probes).map(i => s"absent-$i").toDF("v")
-      .where(BloomFunctions.bloomMightContain(lit(ser), col("v")))
+      .where(Natives.bloomMightContain(Seq(lit(ser), col("v"))))
       .count()
     val rate = fps.toDouble / probes
     assert(rate < 0.03, s"fp rate $rate should be ~0.009 at 10 bits/key, allow < 3%")
@@ -60,7 +60,7 @@ class BloomFilterSpec extends AnyFunSuite {
     val empty = build(Seq.empty[String].toDF("v"), numBits, k)
     assert(empty.drop(8).forall(_ == 0), "empty build = header + zero bits")
     val hits = members.toDF("v")
-      .where(BloomFunctions.bloomMightContain(lit(empty), col("v"))).count()
+      .where(Natives.bloomMightContain(Seq(lit(empty), col("v")))).count()
     assert(hits == 0L, "an empty filter contains nothing")
   }
 

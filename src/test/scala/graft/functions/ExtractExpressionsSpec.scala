@@ -48,7 +48,7 @@ class ExtractExpressionsSpec extends AnyFunSuite {
          FROM sql_docs ORDER BY doc_id""").collect()
     import org.apache.spark.sql.functions.col
     val viaApi = spark.table("sql_docs").select(col("doc_id"),
-        SketchFunctions.simhash64(col("text")).as("sh"),
+        Natives.simhash64(Seq(col("text"))).as("sh"),
         SketchFunctions.fingerprint64(col("text")).as("fp"),
         SketchFunctions.minhashSig(col("text"), 3, 16).as("sig"),
         SketchFunctions.shingleHashes(col("text"), 3).as("hs"))

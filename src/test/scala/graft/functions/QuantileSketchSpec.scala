@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.SparkTestBase
 
 /** Property gate for the quantile sketch (approximate by nature, no
@@ -11,6 +13,12 @@ import graft.SparkTestBase
 class QuantileSketchSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
+
+  private def approxQuantiles(v: Column, k: Int,
+                              ps: Seq[Double] = Seq(0.5, 0.9, 0.99)): Column =
+    ColumnBridge.column(ApproxQuantiles(ColumnBridge.expression(v), k, ps).toAggregateExpression())
+  private def approxRanks(v: Column, k: Int, probes: Seq[Long]): Column =
+    ColumnBridge.column(ApproxRanks(ColumnBridge.expression(v), k, probes).toAggregateExpression())
 
   private val K = 256
   private val Ps = Seq(0.1, 0.5, 0.9, 0.99)
@@ -38,7 +46,7 @@ class QuantileSketchSpec extends AnyFunSuite {
 
   private def checkErrors(values: Seq[Long], parts: Int, tag: String): Unit = {
     val out = values.toDF("v").repartition(parts)
-      .agg(QuantileFunctions.approxQuantiles(col("v"), K, Ps).as("q"))
+      .agg(approxQuantiles(col("v"), K, Ps).as("q"))
       .select("q.*").head()
     val sorted = values.sorted.toArray
     val n = sorted.length.toLong
@@ -65,7 +73,7 @@ class QuantileSketchSpec extends AnyFunSuite {
   test("small inputs are EXACT (everything fits in level 0 buffers)") {
     val vs = Seq(5L, 1L, 9L, 3L, 7L)
     val out = Seq(5L, 1L, 9L, 3L, 7L).toDF("v").coalesce(1)
-      .agg(QuantileFunctions.approxQuantiles(col("v"), K, Seq(0.5, 1.0)).as("q"))
+      .agg(approxQuantiles(col("v"), K, Seq(0.5, 1.0)).as("q"))
       .select("q.*").head()
     assert(out.getLong(0) == 5L)
     assert(out.getLong(1) == 5L) // p50 of {1,3,5,7,9}
@@ -74,11 +82,11 @@ class QuantileSketchSpec extends AnyFunSuite {
 
   test("nulls ignored; empty input reports n=0") {
     val out = Seq(Some(1L), None, Some(3L)).toDF("v")
-      .agg(QuantileFunctions.approxQuantiles(col("v"), K, Seq(1.0)).as("q"))
+      .agg(approxQuantiles(col("v"), K, Seq(1.0)).as("q"))
       .select("q.*").head()
     assert(out.getLong(0) == 2L && out.getLong(1) == 3L)
     val empty = Seq.empty[Long].toDF("v")
-      .agg(QuantileFunctions.approxQuantiles(col("v"), K, Seq(0.5)).as("q"))
+      .agg(approxQuantiles(col("v"), K, Seq(0.5)).as("q"))
       .select("q.*").head()
     assert(empty.getLong(0) == 0L)
   }
@@ -86,7 +94,7 @@ class QuantileSketchSpec extends AnyFunSuite {
   test("grouped usage tracks per-group exact quantiles on the documents table") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val approx = docs.groupBy("lang")
-      .agg(QuantileFunctions.approxQuantiles(col("n_chars"), K, Seq(0.5)).as("q"))
+      .agg(approxQuantiles(col("n_chars"), K, Seq(0.5)).as("q"))
       .select(col("lang"), col("q.n"), col("q.p50"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val exact = graft.operators.Stats.exactQuantiles(docs, "lang", "n_chars", Seq(0.5))
@@ -107,7 +115,7 @@ class QuantileSketchSpec extends AnyFunSuite {
     val viaSql = spark.sql(s"SELECT approx_quantiles(v, $K) AS q FROM aq_items")
       .select("q.*").head()
     val viaApi = (1L to 9999L).toDF("v")
-      .agg(QuantileFunctions.approxQuantiles(col("v"), K).as("q"))
+      .agg(approxQuantiles(col("v"), K).as("q"))
       .select("q.*").head()
     // same single-partition insertion order -> identical deterministic result
     assert(viaSql.toSeq == viaApi.toSeq)
@@ -132,7 +140,7 @@ class QuantileSketchSpec extends AnyFunSuite {
       val probes = Seq(sorted(0) - 1, sorted(n.toInt / 10), sorted(n.toInt / 2),
         sorted(n.toInt - n.toInt / 100), sorted.last + 1).distinct.sorted
       val out = values.toDF("v").repartition(parts)
-        .agg(QuantileFunctions.approxRanks(col("v"), K, probes).as("r"))
+        .agg(approxRanks(col("v"), K, probes).as("r"))
         .select("r.*").head()
       assert(out.getLong(0) == n)
       probes.zipWithIndex.foreach { case (x, i) =>
@@ -151,11 +159,11 @@ class QuantileSketchSpec extends AnyFunSuite {
   test("approx_ranks: small inputs exact; nulls ignored; SQL form matches the API") {
     val vs = Seq(5L, 1L, 9L, 3L, 7L)
     val out = vs.toDF("v").coalesce(1)
-      .agg(QuantileFunctions.approxRanks(col("v"), K, Seq(0L, 3L, 9L)).as("r"))
+      .agg(approxRanks(col("v"), K, Seq(0L, 3L, 9L)).as("r"))
       .select("r.*").head()
     assert(out.toSeq == Seq(5L, 0L, 2L, 5L))
     val withNulls = Seq(Some(1L), None, Some(3L)).toDF("v")
-      .agg(QuantileFunctions.approxRanks(col("v"), K, Seq(2L)).as("r"))
+      .agg(approxRanks(col("v"), K, Seq(2L)).as("r"))
       .select("r.*").head()
     assert(withNulls.toSeq == Seq(2L, 1L))
     GraftFunctions.register(spark)
@@ -163,26 +171,26 @@ class QuantileSketchSpec extends AnyFunSuite {
     val viaSql = spark.sql(s"SELECT approx_ranks(v, $K, 5000L) AS r FROM ar_items")
       .select("r.*").head()
     val viaApi = (1L to 9999L).toDF("v")
-      .agg(QuantileFunctions.approxRanks(col("v"), K, Seq(5000L)).as("r"))
+      .agg(approxRanks(col("v"), K, Seq(5000L)).as("r"))
       .select("r.*").head()
     assert(viaSql.toSeq == viaApi.toSeq)
     // negative probes name with 'm' (no bare minus in a struct field)
     val neg = Seq(-5L, 0L, 5L).toDF("v")
-      .agg(QuantileFunctions.approxRanks(col("v"), K, Seq(-5L)).as("r"))
+      .agg(approxRanks(col("v"), K, Seq(-5L)).as("r"))
       .select("r.*")
     assert(neg.columns.toSeq == Seq("n", "r_m5"))
     assert(neg.head().toSeq == Seq(3L, 1L))
     intercept[IllegalArgumentException] {
-      Seq(1L).toDF("v").agg(QuantileFunctions.approxRanks(col("v"), K, Seq(3L, 1L))).head()
+      Seq(1L).toDF("v").agg(approxRanks(col("v"), K, Seq(3L, 1L))).head()
     }
   }
 
   test("k bounds and p bounds are require-guarded") {
     intercept[IllegalArgumentException] {
-      Seq(1L).toDF("v").agg(QuantileFunctions.approxQuantiles(col("v"), 4)).head()
+      Seq(1L).toDF("v").agg(approxQuantiles(col("v"), 4)).head()
     }
     intercept[IllegalArgumentException] {
-      Seq(1L).toDF("v").agg(QuantileFunctions.approxQuantiles(col("v"), K, Seq(1.5))).head()
+      Seq(1L).toDF("v").agg(approxQuantiles(col("v"), K, Seq(1.5))).head()
     }
   }
 }

@@ -14,7 +14,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
   test("native simhash64 == declarative simhash on all documents") {
     val cmp = docs.select(
       DedupReference.simhashDeclarative(col("text")).as("a"),
-      SketchFunctions.simhash64(col("text")).as("b"))
+      Natives.simhash64(Seq(col("text"))).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
   }
 
@@ -203,7 +203,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
     val edge = Seq("", "word", "a  b", " lead", "trail ", "a b c d e").toDF("text")
     val cmp = edge.select(
       DedupReference.simhashDeclarative(col("text")).as("a"),
-      SketchFunctions.simhash64(col("text")).as("b"),
+      Natives.simhash64(Seq(col("text"))).as("b"),
       DedupReference.minhashSignatureDeclarative(DedupReference.wordShingles(col("text"), 3), 16).as("ma"),
       SketchFunctions.minhashSig(col("text"), 3, 16).as("mb"),
       graft.operators.TextAnalysisReference.fingerprintDeclarative(col("text")).as("fa"),
