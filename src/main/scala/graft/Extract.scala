@@ -1,11 +1,11 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{ExtractPipeline, SinkTables}
 import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
+import graft.exec.Exec
 
 /** The production job — the corpus-scale equivalent of the reference CLI's
   * `pdf extract <file> -o <outdir>` (main.go:44-55), run via spark-submit:
@@ -39,7 +39,7 @@ import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
   *
   * At scale, run with `--conf spark.checkpoint.dir=<durable path>`: the
   * checkpoints of `--recrawl`, `--link-graph` and `--curate` then land
-  * there and survive executor loss (`Dedup.checkpointDf`); the job
+  * there and survive executor loss (`Exec.checkpoint`); the job
   * deletes the `rdd-*` directories it wrote there when it ends.
   */
 object Extract {
@@ -152,23 +152,7 @@ object Extract {
       .config("spark.sql.session.timeZone", "UTC")
       .master(sys.props.getOrElse("spark.master", "local[*]"))
       .getOrCreate()
-    // reliable checkpoints are read only within the run that wrote them,
-    // and Spark never deletes them: remove the rdd-* directories this run
-    // added to the session checkpoint dir when it ends, and the
-    // application directory Spark made for them when nothing else is in it
-    val dropRunCheckpoints = spark.sparkContext.getCheckpointDir.map { d =>
-      val dir = new Path(d)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def rddDirs(): Set[Path] =
-        Option(fs.globStatus(new Path(dir, "rdd-*"))).fold(Set.empty[Path])(_.map(_.getPath).toSet)
-      val before = rddDirs()
-      () => {
-        (rddDirs() -- before).foreach(fs.delete(_, true))
-        if (before.isEmpty && fs.exists(dir) && fs.listStatus(dir).isEmpty) fs.delete(dir, false)
-      }
-    }
-    try run(a, spark)
-    finally dropRunCheckpoints.foreach(_())
+    Exec.withRunCheckpoints(spark)(run(a, spark))
   }
 
   private def run(a: Args, spark: SparkSession): Unit = {
@@ -245,7 +229,7 @@ object Extract {
         // diff is a full payload scan of input AND base — without this it
         // would re-run for the null-ts count, the pstat action, and the
         // extraction action
-        val decision = graft.operators.Dedup.checkpointDf(decision0)
+        val decision = Exec.checkpoint(decision0)
         val nNullTs = decision.where(col("__nullts")).count()
         if (nNullTs > 0)
           println(s"""{"job":"graft-extract","warn":"recrawl: $nNullTs changed urls have null warc_ts and cannot supersede their committed version; skipped"}""")
@@ -353,7 +337,7 @@ object Extract {
       // ONE materialization: the current-per-url collapse is a full
       // payload-table aggregate and feeds the edge semi-join, the
       // domain-authority input AND the rank join-back
-      val docMap = graft.operators.Dedup.checkpointDf(
+      val docMap = Exec.checkpoint(
         Resume.currentPerUrl(docsTable.read(spark))
           .select(col("url"), col("warc_ts"),
             xxhash64(col("url")).as("id"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.exec.Exec
 
 /** The end-to-end training-data curation pipeline, composed from the
   * library's operators — the shape a 100 TB pretraining-data run takes
@@ -125,7 +126,7 @@ object Curate {
         // frame four times (model train, scoring pass, anchor, semi-join
         // LHS) and the analysis gate is interpreted-HOF work — the same
         // re-execution the stage-2 `uniq` checkpoint exists to prevent
-        val g0 = Dedup.checkpointDf(gated0)
+        val g0 = Exec.checkpoint(gated0)
         // anti against the (small) over-cap set rather than semi against
         // the (corpus-sized) survivor set (r6, guide §3.1): the scoring
         // frame covers every g0 id with a non-null mean (null-text docs
@@ -150,7 +151,7 @@ object Curate {
     // the survivor set feeds candidate generation, the verify join-back,
     // the CC seed AND the final select — materialize it once instead of
     // re-running the (interpreted-HOF) analysis gate per consumer
-    val uniq = Dedup.checkpointDf(gated.join(keepExact, Seq("doc_id"), "left_semi"))
+    val uniq = Exec.checkpoint(gated.join(keepExact, Seq("doc_id"), "left_semi"))
 
     // 3. near-dup clusters: LSH candidates -> exact verify -> components.
     // Near-dup graphs are dense/shallow, so O(diameter) min-label CC
@@ -196,7 +197,7 @@ object Curate {
         // time — without this, each pass re-executes the whole
         // gates+dedup+CC lineage. Anti-join the (tiny, broadcastable)
         // CONTAMINATED id set rather than semi-joining all clean ids.
-        val kb = Dedup.checkpointDf(kept0)
+        val kb = Exec.checkpoint(kept0)
         val flagged = Decontaminate.flag(kb.select(col("doc_id"), col("text")),
           decontaminateAgainst, "doc_id", "text",
           w = DecontaminateW, minOverlap = DecontaminateMinOverlap)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{BloomFunctions, SketchFunctions}
+import graft.exec.Exec
 
 /** Test-set decontamination: flag corpus documents that share at least
   * `minOverlap` distinct word n-gram shingles with ANY benchmark document —
@@ -76,14 +77,9 @@ object Decontaminate {
     * `bitsPerShingle` is set only by the forced-high-FP spec. */
   private[graft] def prepare(benchmark: DataFrame, idCol: String, textCol: String, w: Int,
                              bitsPerShingle: Int = BitsPerShingle): PreparedBenchmark = {
-    val name = s"decon_bench_${Dedup.nextMetricSeq()}"
-    val obs = benchmarkShingles(benchmark, idCol, textCol, w)
-      .observe(name, count(lit(1)).as("rows"))
-    val shingles = Dedup.checkpointDf(obs)
-    val n = obs.queryExecution.observedMetrics.get(name) match {
-      case Some(row) => row.getLong(0)
-      case None => shingles.count()
-    }
+    val (shingles, counts) = Exec.checkpointCounted(
+      benchmarkShingles(benchmark, idCol, textCol, w), "decon_bench", count(lit(1)).as("rows"))
+    val n = counts.getLong(0)
     val filter =
       if (!BloomFunctions.fits(n, bitsPerShingle)) None
       else {
@@ -133,8 +129,8 @@ object Decontaminate {
     // loud on duplicate corpus ids (copies would silently merge their
     // shingle sets and cross-contaminate each other's stats); null-safe
     // anchor join — a null-id doc's matches must not silently read clean
-    Dedup.anchorLeftJoin(
-        Dedup.checkedIdAnchor(corpus, idCol, "Decontaminate.flag"), matched)
+    Exec.anchorLeftJoin(
+        Exec.checkedIdAnchor(corpus, idCol, "Decontaminate.flag"), matched)
       .select(col("id"),
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
         coalesce(col("n_matched"), lit(0L)).as("n_matched"),
@@ -199,8 +195,8 @@ object Decontaminate {
       .agg(count(lit(1)).as("n_near_matches"),
         max(floor(col("jaccard") * 10000).cast("long")).as("best_jaccard_i4"))
       .withColumnRenamed("id_a", "id")
-    Dedup.anchorLeftJoin(
-        Dedup.checkedIdAnchor(corpus, idCol, "Decontaminate.flagNearDup"), per)
+    Exec.anchorLeftJoin(
+        Exec.checkedIdAnchor(corpus, idCol, "Decontaminate.flagNearDup"), per)
       .select(col("id"),
         coalesce(col("n_near_matches"), lit(0L)).as("n_near_matches"),
         coalesce(col("best_jaccard_i4"), lit(0L)).as("best_jaccard_i4"),
@@ -235,7 +231,7 @@ object Decontaminate {
     // loud on duplicate CORPUS ids too (shingleMd5s' distinct would merge
     // copies into one "document" and under-report both the df cap inputs
     // and the leak counts); null-safe so a null-id doc still audits
-    val corpusAnchor = Dedup
+    val corpusAnchor = Exec
       .checkedIdAnchor(corpus, idCol, "Decontaminate.leakReport corpus").alias("__ca")
     // the corpus shingle frame feeds BOTH the df-cap aggregate and the
     // pair join; it stays UNMATERIALIZED deliberately — an interleaved
@@ -248,7 +244,7 @@ object Decontaminate {
       .select(col("id"), unhex(col("sh")).as("sh")).distinct().alias("__cs")
       .join(corpusAnchor, col("__cs.id") <=> col("__ca.id"), "left_semi")
     val under = c.groupBy(col("sh")).agg(count(lit(1)).as("__df"))
-      .observe(s"leak_report_${Dedup.nextMetricSeq()}",
+      .observe(Exec.metricName("leak_report"),
         sum(when(col("__df") > maxShingleDf, 1L).otherwise(0L)).as("n_shingles_over_cap"))
       .where(col("__df") <= maxShingleDf)
       .select(col("sh"))
@@ -263,7 +259,7 @@ object Decontaminate {
         max(col("overlap")).as("max_overlap"),
         sum(col("overlap")).as("total_overlap"))
     val nSh = bSh.groupBy(col("bid")).agg(count(lit(1)).as("n_shingles"))
-    Dedup.checkedIdAnchor(benchmark, idCol, "Decontaminate.leakReport")
+    Exec.checkedIdAnchor(benchmark, idCol, "Decontaminate.leakReport")
       .join(nSh.withColumnRenamed("bid", "id"), Seq("id"), "left")
       .join(perBench.withColumnRenamed("bid", "id"), Seq("id"), "left")
       .select(col("id"),
@@ -280,29 +276,20 @@ object Decontaminate {
     * must keep its row AND its struck spans — an equality join would
     * silently skip its excision, the unsafe direction for a
     * decontamination gate. The duplicate-id guard rides the COMPACT side:
-    * per-id row counts join the (id-keyed, text-free) hits frame first and
-    * raise_error in the output projection, so the text-carrying corpus
-    * crosses exactly ONE exchange — anchoring the full corpus against a
-    * checked-id frame cost a second text-wide null-safe join (measured 2x
-    * on q59/q60). `hitsPerDoc` carries (id, countCol, hits:array<int>). */
+    * the checked id anchor ([[Exec.checkedIdAnchor]], a Filter no
+    * projection can prune) joins the (id-keyed, text-free) hits frame
+    * first, so the text-carrying corpus crosses exactly ONE exchange —
+    * anchoring the full corpus against a checked-id frame cost a second
+    * text-wide null-safe join (measured 2x on q59/q60). `hitsPerDoc`
+    * carries (id, countCol, hits:array<int>). */
   private[graft] def exciseJoinBack(corpus: DataFrame, idCol: String,
       textCol: String, hitsPerDoc: DataFrame, w: Int, countCol: String,
       op: String): DataFrame = {
     val ex = SketchFunctions.exciseSpans(col("text"),
       coalesce(col("hits"), array().cast("array<int>")), w)
-    // (id, __copies) covers every corpus id (null ids group together, like
-    // the checked anchor); left-joined with hits it becomes the one
-    // compact per-id metadata frame
-    // the guard is a FILTER on the compact frame, not a projected column:
-    // a projection alias the consumer never selects would be pruned away
-    // (guard silently gone); Catalyst never prunes a Filter
-    val meta = corpus.select(col(idCol).as("id")).groupBy(col("id"))
-      .agg(count(lit(1)).as("__copies"))
-      .where(when(col("__copies") === 1, lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"$op: duplicate input id (ids must be unique): "),
-          coalesce(col("id").cast("string"), lit("null")))).cast("boolean")))
-      .alias("__c")
+    // the checked anchor covers every corpus id (null ids group together);
+    // left-joined with hits it becomes the one compact per-id metadata frame
+    val meta = Exec.checkedIdAnchor(corpus, idCol, op).alias("__c")
       .join(hitsPerDoc.alias("__h"), col("__c.id") <=> col("__h.id"), "left")
       .select(col("__c.id").as("id"),
         col(s"__h.$countCol").as(countCol), col("__h.hits").as("hits"))

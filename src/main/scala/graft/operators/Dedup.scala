@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.exec.Exec
 
 /** Deduplication operators for large-scale training-data pipelines.
   * Everything below is built from native Catalyst expressions
@@ -58,27 +59,6 @@ object Dedup {
     * pair count at 100x scale. */
   val DefaultMaxBlock: Long = 4096L
 
-  private val blockMetricSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Process-unique suffix for observed-metric node names (CollectMetrics
-    * names must be unique per query) — shared by the other operators. */
-  private[operators] def nextMetricSeq(): Int = blockMetricSeq.incrementAndGet()
-
-  /** One row per DISTINCT id of `df`, raise_error'ing loudly (naming the
-    * id and operator) when any id appears more than once — the shared
-    * anchor for per-document operators whose outputs would otherwise
-    * silently merge duplicate-id copies (the stripBoilerplate guard
-    * pattern, factored for TfIdf/Decontaminate). The grouped count rides
-    * the id shuffle a distinct() would have taken anyway. */
-  private[operators] def checkedIdAnchor(df: DataFrame, idCol: String, op: String): DataFrame =
-    df.select(col(idCol).as("id")).groupBy(col("id"))
-      .agg(count(lit(1)).as("__copies"))
-      .where(when(col("__copies") === 1, lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"$op: duplicate input id (ids must be unique): "),
-          coalesce(col("id").cast("string"), lit("null")))).cast("boolean")))
-      .select(col("id"))
-
   /** Blocking-key frequency handling shared by every pair miner, as a
     * split: blocks (grouped by `keys`) with at most `maxBlock` member rows
     * go through the normal all-pairs self-join; OVER-popular blocks degrade
@@ -109,7 +89,7 @@ object Dedup {
     val keyCols = keys.map(col)
     val stats = rows.groupBy(keyCols: _*)
       .agg(count(lit(1)).as("block_n"), min(col("id")).as("rep_id"))
-      .observe(s"${metric}_${blockMetricSeq.incrementAndGet()}",
+      .observe(Exec.metricName(metric),
         sum(when(col("block_n") > maxBlock, 1L).otherwise(0L)).as("over_blocks"),
         max(col("block_n")).as("max_block_n"))
       .where(col("block_n") > maxBlock)
@@ -117,22 +97,6 @@ object Dedup {
     val under = rows.join(over.select(keyCols: _*), keys, "left_anti")
     val starred = rows.join(over, keys).where(col("id") =!= col("rep_id"))
     (under, starred)
-  }
-
-  /** NULL-SAFE left join of a per-id result frame onto the checked id
-    * anchor — the shared tail of the flag/keep-first operators. A
-    * (necessarily unique — the anchor raise_errors on duplicates) null-id
-    * document groups its own rows under id = null in the aggregate, and
-    * an equality join would silently drop that match — the unsafe
-    * direction for a contamination gate (the exciseJoinBack rationale,
-    * factored). `right` must carry an `id` column; the join returns
-    * anchor.id as `id` plus right's other columns (null for unmatched
-    * anchors). */
-  private[operators] def anchorLeftJoin(anchor: DataFrame, right: DataFrame): DataFrame = {
-    val rightCols = right.columns.filter(_ != "id").map(c => col(s"__rt.$c").as(c)).toSeq
-    anchor.alias("__an")
-      .join(right.alias("__rt"), col("__an.id") <=> col("__rt.id"), "left")
-      .select(col("__an.id").as("id") +: rightCols: _*)
   }
 
   /** Banded-LSH candidate pairs (id_a < id_b) over an (id, sig) minhash
@@ -177,10 +141,10 @@ object Dedup {
     * (chunk_idx, chunk, id, sh) rows cross the self-join exchange. The
     * compact (id, sh) sketch frame is checkpointed once — both self-join
     * sides otherwise re-run the simhash pass over the full corpus text (the
-    * `checkpointDf` rationale; r6). */
+    * `Exec.checkpoint` rationale; r6). */
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            maxHamming: Int = 3): DataFrame = {
-    val hashed = checkpointDf(df.select(col(idCol).as("id"),
+    val hashed = Exec.checkpoint(df.select(col(idCol).as("id"),
       graft.functions.SketchFunctions.simhashMd5(col(textCol)).as("sh")))
     val chunkBits = 15
     val mask = (1L << chunkBits) - 1
@@ -199,23 +163,24 @@ object Dedup {
 
   // ---------- duplicate clusters ----------
 
-  /** Materialization point for the expensive frames, and per-round plan
-    * truncation for the iterative algorithms. A frame that feeds several
-    * plan consumers (self-join sides, the block-stats aggregate, verify
-    * join-backs) is RE-EXECUTED per consumer — measured 6-10 full sketch
-    * evaluations per candidate query, since exchange reuse only dedupes
-    * canonically-identical stages; one eager checkpoint bounds it at one
-    * evaluation, and the stored rows are compact projections, never
-    * document text.
-    *
-    * Durability follows the deployment: when the session has a checkpoint
-    * dir (`spark.checkpoint.dir`, or `sparkContext.setCheckpointDir`) the
-    * blocks land there via `df.checkpoint()` and survive executor loss;
-    * otherwise `localCheckpoint()` keeps them on the executors — fast, but
-    * an executor loss makes the RDD unrecoverable and aborts the job. */
-  private[graft] def checkpointDf(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
+  /** One convergence round of a [[connectedComponents]] run: `frontier`
+    * is the changed-label node count entering the next round. */
+  final case class CcRound(round: Int, frontier: Long)
+
+  // Per-process observability for the MOST RECENT min-label CC run (it is
+  // EAGER — it drives its rounds as jobs before returning — so the stats
+  // are complete the moment the call returns). A monitoring hook, not a
+  // correctness channel: concurrent CC runs in one driver overwrite each
+  // other's entry, last-writer-wins.
+  private val lastCcRoundsRef =
+    new java.util.concurrent.atomic.AtomicReference[Seq[CcRound]](Seq.empty)
+
+  /** Per-round frontier sizes + rounds-to-convergence of the most recent
+    * [[connectedComponents]] run — what a 100 TB operator persists to
+    * watch CC behavior (Extract --curate lands these in the metrics_cc
+    * table). Only the min-label variant records here;
+    * [[connectedComponentsStars]] leaves the ledger untouched. */
+  def lastCcRounds: Seq[CcRound] = lastCcRoundsRef.get()
 
   /** Connected components over a near-duplicate pair set: every document
     * gets the minimum doc id of its component as `cluster_id` (`is_kept`
@@ -236,33 +201,14 @@ object Dedup {
     * tails instead of re-aggregating every edge.
     *
     * Each round is one frontier-filtered shuffle join + partial-agg min;
-    * labels are checkpointed (`checkpointDf`) so the plan stays O(1) deep, and
-    * convergence is the exact changed-node COUNT hitting zero (an observed
-    * metric riding the checkpoint materialization — one driver-blocking
-    * job per round, no sum-wrap hazards). For adversarial long-chain
-    * graphs the published alternating large-star/small-star scheme
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) drops the round count to O(log^2 n); dedup graphs do not
-    * need it. */
-  /** One convergence round of a CC run: `frontier` is the changed-label
-    * node count (min-label variant) or the active edge count (stars
-    * variant) entering the next round. */
-  final case class CcRound(round: Int, frontier: Long)
-
-  // Per-process observability for the MOST RECENT CC run (both variants
-  // are EAGER — they drive their rounds as jobs before returning — so the
-  // stats are complete the moment the call returns). A monitoring hook,
-  // not a correctness channel: concurrent CC runs in one driver overwrite
-  // each other's entry, last-writer-wins.
-  private val lastCcRoundsRef =
-    new java.util.concurrent.atomic.AtomicReference[Seq[CcRound]](Seq.empty)
-
-  /** Per-round frontier sizes + rounds-to-convergence of the most recent
-    * connectedComponents / connectedComponentsStars run — what a 100 TB
-    * operator persists to watch CC behavior (Extract --curate lands these
-    * in the metrics_cc table). */
-  def lastCcRounds: Seq[CcRound] = lastCcRoundsRef.get()
-
+    * labels are checkpointed (`Exec.checkpoint`) so the plan stays O(1)
+    * deep, and convergence is the exact changed-node COUNT hitting zero
+    * (an observed metric riding the checkpoint materialization — one
+    * driver-blocking job per round, no sum-wrap hazards). For adversarial
+    * long-chain graphs the published alternating large-star/small-star
+    * scheme (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", SoCC 2014) drops the round count to O(log^2 n); dedup graphs
+    * do not need it. */
   def connectedComponents(pairs: DataFrame, ids: DataFrame, maxIter: Int = 50): DataFrame = {
     // both edge directions via ONE explode over the pair frame (r6): the
     // union-of-two-selects form executed the entire upstream pair-miner
@@ -275,24 +221,13 @@ object Dedup {
       .persist()
     val rounds = Seq.newBuilder[CcRound]
     try {
-      // Checkpoint the (id, label, changed) state and read back the changed
-      // count (and row count, for the round-0 ledger entry) as observed
-      // metrics; empty frames observe null -> 0 (an empty id set must yield
-      // an empty result, not an NPE). If a checkpoint mode ever stops
-      // reporting metrics, a plain count fallback keeps correctness.
-      def checkpointWithChanged(df: DataFrame): (DataFrame, Long, Long) = {
-        val name = s"cc_changed_${blockMetricSeq.incrementAndGet()}"
-        val obs = df.observe(name,
-          sum(when(col("changed"), 1L).otherwise(0L)).as("n"),
-          count(lit(1)).as("rows"))
-        val ck = checkpointDf(obs)
-        obs.queryExecution.observedMetrics.get(name) match {
-          case Some(row) =>
-            (ck, if (row.isNullAt(0)) 0L else row.getLong(0), row.getLong(1))
-          case None =>
-            (ck, ck.where(col("changed")).count(), ck.count())
-        }
-      }
+      // Each round checkpoints the (id, label, changed) state and reads
+      // the changed count (and row count, for the round-0 ledger entry)
+      // off that job; empty frames observe null -> 0 (an empty id set must
+      // yield an empty result, not an NPE)
+      val counted = Seq(sum(when(col("changed"), 1L).otherwise(0L)).as("n"),
+        count(lit(1)).as("rows"))
+      def changedOf(row: Row): Long = if (row.isNullAt(0)) 0L else row.getLong(0)
 
       // Round 1 FUSED with initialization (r6 optimization): labels start
       // at label(x) = x, so the first propagation's neighbor minimum is
@@ -303,25 +238,28 @@ object Dedup {
       // riding (and being re-checkpointed with) every round's state. The
       // first round's aggregate also materializes the persisted edge frame
       // as a side effect — the separate edges.count() job is gone.
-      var (labels, frontierN, nNodes) = checkpointWithChanged(
+      var (labels, row0) = Exec.checkpointCounted(
         edges.groupBy(col("src")).agg(min(col("dst")).as("nbr_min"))
           .select(col("src").cast("long").as("id"),
             least(col("src").cast("long"), col("nbr_min").cast("long")).as("label"),
-            (col("nbr_min").cast("long") < col("src").cast("long")).as("changed")))
-      rounds += CcRound(0, nNodes) // nodes entering propagation
+            (col("nbr_min").cast("long") < col("src").cast("long")).as("changed")),
+        "cc_changed", counted: _*)
+      var frontierN = changedOf(row0)
+      rounds += CcRound(0, row0.getLong(1)) // nodes entering propagation
       var iter = 1
       rounds += CcRound(iter, frontierN)
       while (frontierN > 0 && iter < maxIter) {
         val nbrMin = edges
           .join(labels.where(col("changed")).select(col("id").as("dst"), col("label")), Seq("dst"))
           .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-        val (next, n, _) = checkpointWithChanged(labels
+        val (next, row) = Exec.checkpointCounted(labels
           .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
           .select(col("id"),
             least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"),
-            (coalesce(col("nbr_min"), col("label")) < col("label")).as("changed")))
+            (coalesce(col("nbr_min"), col("label")) < col("label")).as("changed")),
+          "cc_changed", counted: _*)
         labels = next
-        frontierN = n
+        frontierN = changedOf(row)
         iter += 1
         rounds += CcRound(iter, frontierN)
       }
@@ -387,31 +325,20 @@ object Dedup {
 
     // each round's edge count rides its checkpoint materialization as an
     // observed metric (r6): one job per round instead of checkpoint+count
-    def ckptCounted(df: DataFrame): (DataFrame, Long) = {
-      val name = s"cc_stars_${blockMetricSeq.incrementAndGet()}"
-      val obs = df.observe(name, count(lit(1)).as("rows"))
-      val ck = checkpointDf(obs)
-      val n = obs.queryExecution.observedMetrics.get(name) match {
-        case Some(row) => row.getLong(0)
-        case None => ck.count()
-      }
-      (ck, n)
-    }
-    var (edges, cnt) = ckptCounted(
-      canon(pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))))
+    val rows = count(lit(1)).as("rows")
+    var (edges, row0) = Exec.checkpointCounted(
+      canon(pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))),
+      "cc_stars", rows)
+    var cnt = row0.getLong(0)
     var iter = 0
-    val rounds = Seq.newBuilder[CcRound]
-    rounds += CcRound(iter, cnt)
     var converged = cnt == 0L
     while (!converged && iter < maxIter) {
-      val (next, nextCount) = ckptCounted(smallStar(largeStar(edges)))
-      converged = same(next, edges, nextCount, cnt)
+      val (next, row) = Exec.checkpointCounted(smallStar(largeStar(edges)), "cc_stars", rows)
+      converged = same(next, edges, row.getLong(0), cnt)
       edges = next
-      cnt = nextCount
+      cnt = row.getLong(0)
       iter += 1
-      rounds += CcRound(iter, if (converged) 0L else nextCount)
     }
-    lastCcRoundsRef.set(rounds.result())
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStars did not converge in $maxIter alternating rounds")
@@ -459,7 +386,7 @@ object Dedup {
     // checkpoint job runs, and the checkpoint stores only the hash
     // arrays (an RDD scan cannot column-prune, so a combined sig+hashes
     // row would be fully decoded by every consumer).
-    val hashes = checkpointDf(
+    val hashes = Exec.checkpoint(
       df.select(col(idCol).as("id"),
         graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes")))
     val cand = candidatesFromSigs(
@@ -525,23 +452,14 @@ object Dedup {
     // (parity-asserted idempotence argument in ngramJaccardPairs), so the
     // benchmark text is tokenized once and one checkpoint job runs
     // instead of two.
-    val skR = checkpointDf(
+    val skR = Exec.checkpoint(
       right.select(col(idCol).as("id"),
         graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes")))
     val bandedR = banded(skR.select(col("id"),
       graft.functions.SketchFunctions.minhashSigFromHashes(col("hashes"), k).as("sig")))
     val rightRows =
       if (maxBlock <= 0) bandedR
-      else {
-        val over = bandedR.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("block_n"))
-          .observe(s"bipartite_lsh_blocks_${nextMetricSeq()}",
-            sum(when(col("block_n") > maxBlock, 1L).otherwise(0L)).as("over_blocks"),
-            max(col("block_n")).as("max_block_n"))
-          .where(col("block_n") > maxBlock)
-          .select(keys.map(col): _*)
-        bandedR.join(over, keys, "left_anti")
-      }
+      else splitBlocks(bandedR, keys, maxBlock, "bipartite_lsh_blocks")._1
     val cand = bandedL
       .select(col("band_idx"), col("band_hash"), col("id").as("id_a"))
       .join(rightRows.select(col("band_idx"), col("band_hash"), col("id").as("id_b")), keys)
@@ -607,7 +525,7 @@ object Dedup {
           coalesce(col("id").cast("string"), lit("null")),
           lit(" cluster="), coalesce(col("cluster_id").cast("string"), lit("null")),
           lit(" score="), coalesce(col("score").cast("string"), lit("null")))).cast("boolean")))
-      .join(checkedIdAnchor(df, idCol, "Dedup.clusterRepresentatives"),
+      .join(Exec.checkedIdAnchor(df, idCol, "Dedup.clusterRepresentatives"),
         Seq("id"), "left_semi")
     val winners = base.groupBy(col("cluster_id"))
       .agg(max(struct(col("score"), bitwise_not(col("id")).as("nid"))).as("w"))

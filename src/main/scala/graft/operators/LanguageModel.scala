@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.exec.Exec
 
 /** Corpus-trained unigram language-model scoring — the CCNet/FineWeb-style
   * "perplexity" quality filter re-expressed for a distributed engine: train
@@ -75,7 +76,7 @@ object LanguageModel {
       .groupBy(col("id"))
       .agg(sum(col("tf")).as("n_tokens"),
         sum(col("tf") * col("bits")).as("surprisal_bits"))
-    Dedup.checkedIdAnchor(df, idCol, "LanguageModel.selfSurprisal")
+    Exec.checkedIdAnchor(df, idCol, "LanguageModel.selfSurprisal")
       .join(scored, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
@@ -150,7 +151,7 @@ object LanguageModel {
       .groupBy(col("id"))
       .agg(sum(col("tf")).as("n_bigrams"),
         sum(col("tf") * col("bits")).as("surprisal_bits"))
-    Dedup.checkedIdAnchor(df, idCol, "LanguageModel.selfBigramSurprisal")
+    Exec.checkedIdAnchor(df, idCol, "LanguageModel.selfBigramSurprisal")
       .join(scored, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.exec.Exec
 
 /** Link-graph centrality over the crawl's hyperlink structure — the
   * crawl-prioritization / source-weighting signal a web-scale pipeline
@@ -66,7 +67,7 @@ object LinkGraph {
     // dampingPpm * inbound_sum <= 1e6 * totalMass must fit a signed long
     require(totalMass > 0L && totalMass <= Long.MaxValue / 1000000L,
       s"$op: totalMass must be in (0, ${Long.MaxValue / 1000000L}], got $totalMass")
-    val anchor0 = Dedup.checkedIdAnchor(ids, "id", op)
+    val anchor0 = Exec.checkedIdAnchor(ids, "id", op)
     // teleportSeeds: the PERSONALIZED / TrustRank variant — mass teleports
     // only to the seed set (hand-curated trusted domains), so spam farms
     // far from any seed decay toward ZERO instead of holding a uniform
@@ -83,7 +84,7 @@ object LinkGraph {
     val anchorPlan = teleportSeeds match {
       case None => anchor0.select(col("id"), lit(true).as("seed"))
       case Some(s) =>
-        val sd = Dedup.checkedIdAnchor(s, "id", s"$op teleport seeds")
+        val sd = Exec.checkedIdAnchor(s, "id", s"$op teleport seeds")
         // null-safe membership end to end (r6, ADVICE fix): a legitimate
         // null-id node named in the seed set must match — both the
         // membership check and the flag join use <=>, and matched-ness
@@ -102,15 +103,9 @@ object LinkGraph {
     // the node/seed counts ride the checkpoint materialization as observed
     // metrics (r6): one action materializes the anchor AND yields both
     // counts — the separate counting head() job is gone
-    val cName = s"pr_counts_${Dedup.nextMetricSeq()}"
-    val anchorObs = anchorPlan.observe(cName,
+    val (anchor, counts) = Exec.checkpointCounted(anchorPlan, "pr_counts",
       count(lit(1)).as("n"), count(when(col("seed"), 1)).as("nSeeds"))
-    val anchor = Dedup.checkpointDf(anchorObs)
-    val (n, nSeeds) = anchorObs.queryExecution.observedMetrics.get(cName) match {
-      case Some(row) => (row.getLong(0), row.getLong(1))
-      case None =>
-        (anchor.count(), anchor.where(col("seed")).count())
-    }
+    val (n, nSeeds) = (counts.getLong(0), counts.getLong(1))
     require(n > 0L, s"$op: needs at least one node")
     require(nSeeds > 0L, s"$op: needs at least one teleport seed")
     val init = totalMass / nSeeds
@@ -135,7 +130,7 @@ object LinkGraph {
     val edgesOd = e.join(deg, Seq("src")).persist()
     try {
       val baseCol = when(col("seed"), lit(base)).otherwise(lit(0L))
-      var r = Dedup.checkpointDf(
+      var r = Exec.checkpoint(
         anchor.select(col("id"),
           when(col("seed"), lit(init)).otherwise(lit(0L)).as("r")))
       var i = 0
@@ -144,7 +139,7 @@ object LinkGraph {
           .join(r.withColumnRenamed("id", "src"), Seq("src"))
           .select(col("dst"), expr("(r * w) div od").as("c"))
         val inbound = contrib.groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        r = Dedup.checkpointDf(
+        r = Exec.checkpoint(
           anchor.join(inbound.withColumnRenamed("dst", "id"), Seq("id"), "left")
             .select(col("id"),
               (baseCol +
@@ -185,8 +180,8 @@ object LinkGraph {
     // joins AND the final per-page output join — without the checkpoint
     // the id-check aggregate + domain-broadcast join re-executed per
     // consumer (three doc-cardinality recomputations per call)
-    val docNode = Dedup.checkpointDf(
-      Dedup.checkedIdAnchor(dd, "id", op)
+    val docNode = Exec.checkpoint(
+      Exec.checkedIdAnchor(dd, "id", op)
         .join(dd.alias("d")
           .join(broadcast(nid.alias("n")), col("d.domain") <=> col("n.domain"))
           .select(col("d.id").as("id"), col("d.domain").as("domain"), col("nid")),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.exec.Exec
 
 /** Range (interval-containment) join: points joined to the intervals of the
   * same key that contain them. Spark plans a raw `p.key = i.key AND p.ts
@@ -39,7 +40,7 @@ object RangeJoin {
     val eB = floor(unix_timestamp(col(endTs)) / lit(bucketSeconds)).cast("long")
     val iv = intervals
       .where(col(endTs) >= col(startTs))
-      .observe(s"range_join_${Dedup.nextMetricSeq()}",
+      .observe(Exec.metricName("range_join"),
         count(lit(1)).as("n_intervals"),
         max(eB - sB + 1).as("max_buckets_per_interval"))
       .withColumn("__bucket", explode(sequence(sB, eB)))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TopKFunctions.topKByScore
+import graft.exec.Exec
 
 /** Similarity search over an embedding column (array<float>): brute-force
   * cosine top-k as the exact baseline, plus multi-table random-hyperplane
@@ -172,7 +173,7 @@ object Similarity {
                             nBits: Int = 16, nTables: Int = 4,
                             maxBlock: Long = Dedup.DefaultMaxBlock): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val buckets = Dedup.checkpointDf(base.select(col("id"),
+    val buckets = Exec.checkpoint(base.select(col("id"),
       posexplode(signatures(col("vec"), nBits, nTables)).as(Seq("table_idx", "bucket"))))
     val keys = Seq("table_idx", "bucket")
     def selfJoinPairs(rows: DataFrame): DataFrame = {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.exec.Exec
 
 /** Exact distributed order statistics.
   *
@@ -107,7 +108,7 @@ object Stats {
     // internal __ndv column is dropped after the CollectMetrics node)
     cum.groupBy(col("g"))
       .agg(max(col("n")).as("n"), (picks :+ count(lit(1)).as("__ndv")): _*)
-      .observe(s"exact_quantiles_${Dedup.nextMetricSeq()}",
+      .observe(Exec.metricName("exact_quantiles"),
         max(col("__ndv")).as("max_distinct_values_per_group"))
       .drop("__ndv")
   }
@@ -164,7 +165,7 @@ object Stats {
       .withColumn("cum", sum(col("c")).over(wCum))
       .agg(min(when(col("cum") >= expr(s"n * ${dropPpm}L div 1000000L") + lit(1L),
         col("v"))).as("thr"))
-    Dedup.checkedIdAnchor(df, idCol, "Stats.relativeGate")
+    Exec.checkedIdAnchor(df, idCol, "Stats.relativeGate")
       .join(scores, Seq("id"), "left")
       .crossJoin(broadcast(thrRow))
       .select(col("id"), col("score"), col("thr"),

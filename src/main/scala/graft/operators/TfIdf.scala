@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SketchFunctions
+import graft.exec.Exec
 
 /** TF-IDF document-frequency statistics — the standard distinctive-term /
   * quality signal for web-corpus curation (the one filter primitive the
@@ -65,9 +66,9 @@ object TfIdf {
     // ranking exchange (r6, guide §2.3). The semi join against the
     // checked anchor makes duplicate ids loud (copies would inflate df
     // counts and interleave in the per-doc ranking)
-    val tfc = Dedup.checkpointDf(
+    val tfc = Exec.checkpoint(
       tf.select(col("id"), unhex(md5(col("token"))).as("tk"), col("tf"))
-        .join(Dedup.checkedIdAnchor(df, idCol, "TfIdf.distinctiveTerms"), Seq("id"), "left_semi"))
+        .join(Exec.checkedIdAnchor(df, idCol, "TfIdf.distinctiveTerms"), Seq("id"), "left_semi"))
     // tf has one row per distinct (doc, token) => count(*) IS the doc freq
     val dfreq = tfc.groupBy(col("tk")).agg(count(lit(1)).as("df"))
     // corpus size as a 1-row frame (broadcast), not a separate driver
@@ -114,7 +115,7 @@ object TfIdf {
       .agg(sum(col("tf")).as("n_tokens"),
         sum(when(col("df") <= maxDf, col("tf")).otherwise(0L)).as("n_rare"))
     // loud on duplicate ids (copies would silently merge token streams)
-    Dedup.checkedIdAnchor(df, idCol, "TfIdf.rareTokenStats")
+    Exec.checkedIdAnchor(df, idCol, "TfIdf.rareTokenStats")
       .join(stats, Seq("id"), "left")
       .select(col("id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.SketchFunctions
+import graft.exec.Exec
 
 /** Tokenizer-vocabulary construction and corpus encoding — the step a
   * pretraining pipeline runs between curation and tensorization: freeze a
@@ -84,8 +85,8 @@ object Vocab {
       .agg(sort_array(collect_list(struct(col("pos"), col("vid")))).as("pv"))
       .select(col("id"), size(col("pv")).cast("long").as("n_tokens"),
         col("pv.vid").as("ids"))
-    Dedup.anchorLeftJoin(
-        Dedup.checkedIdAnchor(df, idCol, "Vocab.encode"), agg)
+    Exec.anchorLeftJoin(
+        Exec.checkedIdAnchor(df, idCol, "Vocab.encode"), agg)
       .select(col("id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         col("ids"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.exec.Exec
 
 /** Web-corpus curation operators beyond the per-document kernel: cross-doc
   * boilerplate line removal, PII detection/redaction, intra-doc repetition
@@ -45,7 +46,7 @@ object WebCuration {
     // the exploded frame feeds BOTH the hot-line aggregate and the
     // reassembly join — checkpoint it once so the tokenize+hash pass over
     // the full text does not run twice (the Dedup sketch-frame rule)
-    val exploded = Dedup.checkpointDf(df
+    val exploded = Exec.checkpoint(df
       .select(col(idCol).as("id"), posexplode(tokenLines(col(textCol), chunk)).as(Seq("idx", "line")))
       .withColumn("line_md5", md5(col("line"))))
     val hot = exploded
@@ -59,18 +60,12 @@ object WebCuration {
     // one row per input doc even when text is NULL (posexplode of a null
     // array emits nothing): re-anchor on the id set. Ids MUST be unique —
     // with duplicates the per-copy texts are lost and line counts mix the
-    // copies — so the anchor counts copies in the same shuffle the old
-    // distinct() took and raise_error's loudly instead of silently
-    // collapsing rows (Curate's pre-dedup guarantees uniqueness; direct
-    // callers get the guard for free)
-    df.select(col(idCol).as("id")).groupBy(col("id"))
-      .agg(count(lit(1)).as("__copies"))
+    // copies — so the anchor raise_errors loudly instead of silently
+    // collapsing rows, whichever output columns the consumer selects
+    Exec.checkedIdAnchor(df, idCol, "WebCuration.stripBoilerplate")
       .join(agg, Seq("id"), "left")
       .select(col("id"),
-        when(col("__copies") === 1, coalesce(col("n_lines"), lit(0L)))
-          .otherwise(raise_error(concat(
-            lit("stripBoilerplate: duplicate input id (ids must be unique): "),
-            coalesce(col("id").cast("string"), lit("null"))))).as("n_lines"),
+        coalesce(col("n_lines"), lit(0L)).as("n_lines"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         when(col("n_kept") > 0, col("joined")).as("clean_text"))
   }
@@ -166,7 +161,7 @@ object WebCuration {
     * it is checkpointed once. */
   private def keepFirstExploded(df: DataFrame, idCol: String,
                                 unitsExpr: Column, sep: String, op: String): DataFrame = {
-    val exploded = Dedup.checkpointDf(df
+    val exploded = Exec.checkpoint(df
       .select(col(idCol).as("id"), unitsExpr)
       .withColumn("line_md5", md5(col("line"))))
     // winner selection runs entirely in compact (id, idx, md5) space —
@@ -183,8 +178,8 @@ object WebCuration {
     // doc's rows all carry idx ints and rejoin below — but the ANCHOR
     // join must be null-safe or that doc's reassembly is silently lost
     val flagged = exploded.join(flags, Seq("id", "idx"))
-    Dedup.anchorLeftJoin(
-        Dedup.checkedIdAnchor(df, idCol, op), reassembleKept(flagged, sep))
+    Exec.anchorLeftJoin(
+        Exec.checkedIdAnchor(df, idCol, op), reassembleKept(flagged, sep))
       .select(col("id"),
         coalesce(col("n_lines"), lit(0L)).as("n_lines"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
@@ -222,7 +217,7 @@ object WebCuration {
     // the two sh-keyed shuffles' key bytes (r6, guide §2.3 narrower types);
     // the occurrence frame feeds the winner aggregate and the struck join,
     // so it is checkpointed once
-    val occ = Dedup.checkpointDf(Decontaminate.shingleOccurrences(df, idCol, textCol, w)
+    val occ = Exec.checkpoint(Decontaminate.shingleOccurrences(df, idCol, textCol, w)
       .withColumn("sh", unhex(col("sh"))))
     val winners = occ.groupBy(col("sh"))
       .agg(min(struct(col("id"), col("pos"))).as("w"))
@@ -338,7 +333,7 @@ object WebCuration {
       // a repeated id would silently occupy several of its domain's k
       // slots and emit duplicate rows (no null ids here: the range guard
       // already raise_errors on them, so a plain semi join suffices)
-      .join(Dedup.checkedIdAnchor(df, idCol, "WebCuration.capPerDomain"),
+      .join(Exec.checkedIdAnchor(df, idCol, "WebCuration.capPerDomain"),
         Seq("id"), "left_semi")
     base.groupBy(col("domain"))
       .agg(graft.functions.TopKFunctions.topKByScore(
@@ -447,7 +442,7 @@ object WebCuration {
           coalesce(col("id").cast("string"), lit("null")), lit(" tok="),
           coalesce(col("tok").cast("string"), lit("null")), lit(" draw="),
           coalesce(col("draw").cast("string"), lit("null")))).cast("boolean")))
-      .join(Dedup.checkedIdAnchor(df, idCol, op), Seq("id"), "left_semi")
+      .join(Exec.checkedIdAnchor(df, idCol, op), Seq("id"), "left_semi")
       .withColumn("bucket", shiftright(col("draw"), 28))
     val bstats = base.groupBy(col("domain"), col("bucket"))
       .agg(sum(col("tok")).as("bt"))
@@ -460,7 +455,7 @@ object WebCuration {
       .where(col("before_b") < budget)
     // one null-safe join-back (null domains are legitimate groups), then
     // split: compact longs only, so the checkpoint is cheap
-    val joined = Dedup.checkpointDf(base.alias("__b")
+    val joined = Exec.checkpoint(base.alias("__b")
       .join(marked.alias("__m"),
         col("__b.domain") <=> col("__m.domain") &&
           col("__b.bucket") === col("__m.bucket"))

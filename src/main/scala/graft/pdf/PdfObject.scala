@@ -99,14 +99,11 @@ final case class PKeyword(word: String) extends PdfObject {
 
 object PKeyword {
   val Xref = PKeyword("xref")
-  val Trailer = PKeyword("trailer")
   val Obj = PKeyword("obj")
   val Stream = PKeyword("stream")
   val R = PKeyword("R")
   val N = PKeyword("n")
   val Null = PKeyword("null")
-  val True = PKeyword("true")
-  val False = PKeyword("false")
   val BT = PKeyword("BT")
   val ET = PKeyword("ET")
   val Tf = PKeyword("Tf")

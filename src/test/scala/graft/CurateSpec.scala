@@ -188,6 +188,15 @@ class CurateSpec extends AnyFunSuite {
     // re-run compare would be vacuous)
   }
 
+  test("stripBoilerplate stage: duplicate input ids raise instead of merging the copies") {
+    val twoCopies = docs.where(col("doc_id") < 40).orderBy("doc_id").limit(2)
+      .withColumn("doc_id", lit(7L))
+    val e = intercept[Exception] {
+      Curate.curate(twoCopies, stripBoilerplate = true, boilerplateMinDocs = 2).collect()
+    }
+    assert(SparkTestBase.causeMessages(e).exists(_.contains("duplicate input id")))
+  }
+
   test("qualityReps: near-dup cluster keeps the higher-quality member instead of the min id") {
     import spark.implicits._
     // two near-dups (jaccard ~0.995 on 3-word shingles): id 1 carries

@@ -423,6 +423,25 @@ class PlanSpec extends AnyFunSuite {
     assert(!exactPlans.last.toString.contains("BloomKernel.bloomShingleHits"))
   }
 
+  test("checkpoint counts ride the checkpoint job: no extra count jobs in CC or PageRank") {
+    import spark.implicits._
+    // two chains, so min-label propagation needs several rounds
+    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
+    val ids = spark.range(0, 20).toDF("id")
+    val ccPlans = operatorPlans(Dedup.connectedComponents(pairs, ids))
+    val rounds = Dedup.lastCcRounds
+    assert(rounds.length > 3, rounds)
+    // one job per checkpointed round; round 0's node count rides round 1
+    assert(ccPlans.init.size == rounds.length - 1,
+      s"${ccPlans.init.size} jobs before connectedComponents returned, ledger $rounds")
+    val iters = 3
+    val prPlans = operatorPlans(graft.operators.LinkGraph.pageRank(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst")), ids, iters))
+    // the anchor checkpoint (its node and seed counts ride it), the rank
+    // initialization and one checkpoint per iteration
+    assert(prPlans.init.size == iters + 2, s"${prPlans.init.size} jobs before pageRank returned")
+  }
+
   test("keep-first units: winner is an aggregate, never a window over the md5 keyspace") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val plans = operatorPlans(graft.operators.WebCuration.keepFirstUnits(

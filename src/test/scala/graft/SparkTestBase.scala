@@ -20,7 +20,7 @@ object SparkTestBase {
 
   /** Run `f` with the SparkContext checkpoint dir set to a fresh temp dir,
     * then restore the previous setting exactly — "no dir" included, so
-    * every later suite keeps local checkpoints (`Dedup.checkpointDf`
+    * every later suite keeps local checkpoints (`Exec.checkpoint`
     * turns reliable whenever a dir is set). */
   def withCheckpointDir[T](f: => T): T = {
     val sc = spark.sparkContext

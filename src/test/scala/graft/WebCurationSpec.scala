@@ -63,6 +63,13 @@ class WebCurationSpec extends AnyFunSuite {
       WebCuration.stripBoilerplate(df, "doc_id", "text", chunk = 2, minDocs = 2).collect()
     }
     assert(SparkTestBase.causeMessages(e).exists(_.contains("duplicate input id")))
+    // a consumer that selects only (id, clean_text), as Curate's boilerplate
+    // stage does, must still run the guard
+    val projected = intercept[Exception] {
+      WebCuration.stripBoilerplate(df, "doc_id", "text", chunk = 2, minDocs = 2)
+        .select("id", "clean_text").collect()
+    }
+    assert(SparkTestBase.causeMessages(projected).exists(_.contains("duplicate input id")))
   }
 
   test("keepFirstLines: first (id, idx) occurrence survives, later copies struck everywhere") {

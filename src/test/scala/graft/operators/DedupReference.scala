@@ -94,7 +94,7 @@ object DedupReference {
                            shingleWords: Int, k: Int, bands: Int,
                            maxBlock: Long = Dedup.DefaultMaxBlock): DataFrame =
     Dedup.candidatesFromSigs(
-      Dedup.checkpointDf(df.select(
+      graft.exec.Exec.checkpoint(df.select(
         col(idCol).as("id"),
         graft.functions.SketchFunctions.minhashSig(col(textCol), shingleWords, k).as("sig"))),
       k, bands, maxBlock)

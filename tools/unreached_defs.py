@@ -1,16 +1,20 @@
 #!/usr/bin/env python3
-"""List every `def` in src/main that no production code reaches.
+"""List every definition in src/main that no production code reaches.
+
+The audited definitions are every `def`, every `val` that is a member of an
+`object`, and every `object` nested in another object.
 
 Run from the repository root, with no arguments:
 
     python3 tools/unreached_defs.py
 
 Reaching code is every non-comment line of src/main plus perfbench/src (the
-benchmark calls into the library). A def is reached when reaching
-code outside the def's own body (so plain recursion does not count) names it:
+benchmark calls into the library). A definition is reached when reaching
+code outside its own body (so plain recursion does not count) names it:
 
-- a member of an `object Obj` by a qualified reference `Obj.name`, or by the
-  bare name in its own file or in a file that imports `Obj._` / `Obj.name`;
+- a member of an `object Obj` (a def, a val or a nested object) by a
+  qualified reference `Obj.name`, or by the bare name in its own file or in
+  a file that imports `Obj._` / `Obj.name`;
 - any other def (a class, trait or anonymous-class member, or a local def)
   by its bare name anywhere;
 - a member of `Obj` by a string literal whose whole text is its name, in a
@@ -21,13 +25,13 @@ Comments are stripped first, and string literals count only as a whole:
 an error label such as "LanguageModel.bigramSurprisal" reaches nothing,
 while the `$x` / `${...}` parts of an interpolated string are code.
 Overloads share a name and are reached together. Entry points (`main`),
-`apply`/`unapply` (called by syntax) and `override` defs (called by the
-framework) are never listed.
+`apply`/`unapply` (called by syntax), `override` members (called by the
+framework) and `implicit` vals (used by the compiler) are never listed.
 
-Each unreached def is printed as `path:line  Owner.name`, followed by the
-src/test files that mention it, or by its KEEP reason. A KEEP entry is a def
-that is reached from outside the build. The exit status is 1 when any def
-outside KEEP is listed, 0 otherwise.
+Each unreached definition is printed as `path:line  Owner.name`, followed by
+the src/test files that mention it, or by its KEEP reason. A KEEP entry is a
+definition that is reached from outside the build. The exit status is 1 when
+any definition outside KEEP is listed, 0 otherwise.
 """
 import bisect
 import re
@@ -46,7 +50,7 @@ KEEP = {
         "reads back the replace-style tables that graft.Extract writes",
 }
 
-DEF_RE = re.compile(r"^(\s*)((?:[\w\[\]]+\s+)*)def\s+([A-Za-z_][A-Za-z0-9_]*)")
+DEF_RE = re.compile(r"^(\s*)((?:[\w\[\]]+\s+)*)(def|val|object)\s+([A-Za-z_][A-Za-z0-9_]*)")
 IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 ALWAYS_REACHED = {"main", "apply", "unapply"}
 # the keyword nearest before a `{` says what the brace opens
@@ -252,10 +256,14 @@ def main():
             continue
         for k, line in enumerate(src.lines):
             m = DEF_RE.match(line)
-            if not m or "override" in m.group(2).split() or m.group(3) in ALWAYS_REACHED:
+            if not m or {"override", "implicit"} & set(m.group(2).split()) \
+                    or m.group(4) in ALWAYS_REACHED:
                 continue
             kind, owner = src.scope[k] or (None, None)
-            groups.setdefault((src.path, kind, owner, m.group(3)), []).append(
+            # vals and objects are audited only as members of an object
+            if m.group(3) != "def" and kind != "object":
+                continue
+            groups.setdefault((src.path, kind, owner, m.group(4)), []).append(
                 (k, body_end(src.lines, k, len(m.group(1)))))
 
     tests = {p: scrub(p.read_text())[0] for p in sorted(TEST.rglob("*.scala"))}
