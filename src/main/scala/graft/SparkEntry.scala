@@ -617,7 +617,7 @@ object SparkEntry {
         .orderBy(col("token"))),
 
     // fixed-QUOTA stratified sampling (q34 is fixed-RATE): k docs per
-    // language by smallest 52-bit md5 hash, via the bounded TopKByScore
+    // language by smallest 52-bit md5 hash, via the bounded topk_by_score
     // aggregate instead of a per-stratum window sort
     "q45_stratified_sample" -> ((s, dir) =>
       TextAnalysis.stratifiedSample(t(s, dir, "documents"), "lang", "doc_id", "text", k = 10)
@@ -705,7 +705,7 @@ object SparkEntry {
 
     // per-domain document cap (anti-spam source balancing): keep the 3
     // highest-quality docs per q43-synthesized domain, ties to the
-    // smallest id — the BOUNDED TopKByScore aggregate, not a per-domain
+    // smallest id — the BOUNDED topk_by_score aggregate, not a per-domain
     // window (a hot link-farm domain costs k map-side slots, not a
     // single-partition sort); integer 1e-4 quality = q15's formula
     "q62_domain_cap" -> ((s, dir) =>
@@ -1043,7 +1043,7 @@ object SparkEntry {
 
     // per-target anchor-text aggregation (what the web SAYS each page is):
     // top-3 most frequent anchor texts per target over a deterministic
-    // (dst, anchor) link frame — bounded TopKByScore per dst, never a
+    // (dst, anchor) link frame — bounded topk_by_score per dst, never a
     // window over the target keyspace; h48 tiebreaks are engine-exact
     "q89_anchor_texts" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
@@ -2222,7 +2222,7 @@ object SparkEntry {
          ORDER BY rnk LIMIT 30""",
 
     // the bounded per-target top-k replayed as the naive per-dst window:
-    // (cnt desc, h48 asc) rank — hash-equality IS the proof the TopKByScore
+    // (cnt desc, h48 asc) rank — hash-equality IS the proof the topk_by_score
     // aggregate + h48 join-back equals the window semantics
     "q89_anchor_texts" ->
       """WITH n AS (SELECT count(*) AS c FROM documents),

@@ -2,12 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, XXH64}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable Bloom filter over a string key column — the broadcastable
@@ -131,81 +127,43 @@ object BloomKernel {
   }
 }
 
-/** Aggregation buffer: the raw bit array plus its shape. */
-final class BloomAggBuffer(val numBits: Int, val k: Int) {
+/** `bloom_build(item, numBits, k)` ([[Natives.bloomBuild]]): aggregate a
+  * string column into a serialized Bloom filter (binary). numBits must be a
+  * positive multiple of 8 (<= 2^30, i.e. 128 MB of filter); k the number of
+  * probe bits per key (1..32). Merge is byte-OR, so the result is
+  * bit-identical under any partitioning — and duplicates are free
+  * (idempotent insert). The buffer is the raw bit array plus its shape. */
+final class BloomAggBuffer(val numBits: Int, val k: Int) extends Sketch {
   val bits = new Array[Byte](numBits >>> 3)
-  def mergeFrom(other: BloomAggBuffer): Unit = {
+
+  def insert(row: Array[Any]): Unit = BloomKernel.insert(bits, numBits, k, row(0).asInstanceOf[UTF8String])
+
+  def merge(other: Sketch): Unit = {
+    val o = other.asInstanceOf[BloomAggBuffer].bits
     var i = 0
-    while (i < bits.length) { bits(i) = (bits(i) | other.bits(i)).toByte; i += 1 }
+    while (i < bits.length) { bits(i) = (bits(i) | o(i)).toByte; i += 1 }
+  }
+
+  /** The serialized filter [[BloomKernel]] probes. */
+  def result: Any = bytes
+
+  def bytes: Array[Byte] = {
+    val out = new Array[Byte](BloomKernel.HeaderBytes + bits.length)
+    BloomKernel.writeHeader(out, k, numBits)
+    System.arraycopy(bits, 0, out, BloomKernel.HeaderBytes, bits.length)
+    out
   }
 }
 
-/** `bloom_build(item, numBits, k)`: aggregate a string column into a
-  * serialized Bloom filter (binary). numBits must be a positive multiple
-  * of 8 (<= 2^30, i.e. 128 MB of filter); k the number of probe bits per
-  * key (1..32). Merge is byte-OR, so the result is bit-identical under any
-  * partitioning — and duplicates are free (idempotent insert). */
-case class BloomBuild(child: Expression, numBits: Int, k: Int,
-                      mutableAggBufferOffset: Int = 0,
-                      inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomAggBuffer] with UnaryLike[Expression] {
-
-  require(numBits >= 8 && numBits % 8 == 0 && numBits <= (1 << 30),
-    s"bloom_build requires 8 <= numBits <= 2^30, multiple of 8; got $numBits")
-  require(k >= 1 && k <= 32, s"bloom_build requires 1 <= k <= 32, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_build requires a string item column, got ${child.dataType.sql}")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): BloomAggBuffer = new BloomAggBuffer(numBits, k)
-
-  override def update(buffer: BloomAggBuffer, input: InternalRow): BloomAggBuffer = {
-    val v = child.eval(input)
-    if (v != null)
-      BloomKernel.insert(buffer.bits, numBits, k, v.asInstanceOf[UTF8String])
-    buffer
-  }
-
-  override def merge(buffer: BloomAggBuffer, other: BloomAggBuffer): BloomAggBuffer = {
-    buffer.mergeFrom(other)
-    buffer
-  }
-
-  override def eval(buffer: BloomAggBuffer): Any = serialize(buffer)
-
-  override def serialize(buffer: BloomAggBuffer): Array[Byte] = {
-    val out = new Array[Byte](BloomKernel.HeaderBytes + buffer.bits.length)
-    BloomKernel.writeHeader(out, k, numBits)
-    System.arraycopy(buffer.bits, 0, out, BloomKernel.HeaderBytes, buffer.bits.length)
-    out
-  }
-
-  override def deserialize(bytes: Array[Byte]): BloomAggBuffer = {
+object BloomAggBuffer {
+  def fromBytes(numBits: Int, k: Int, bytes: Array[Byte]): BloomAggBuffer = {
     val buf = new BloomAggBuffer(numBits, k)
     System.arraycopy(bytes, BloomKernel.HeaderBytes, buf.bits, 0, buf.bits.length)
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomBuild =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomBuild =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BloomBuild =
-    copy(child = newChild)
-  override def prettyName: String = "bloom_build"
 }
 
 object BloomFunctions {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  def bloomBuild(item: Column, numBits: Int, k: Int): Column =
-    ColumnBridge.column(
-      BloomBuild(ColumnBridge.expression(item), numBits, k).toAggregateExpression())
   /** `bloom_shingle_hits(text, bloom, w)`: struct(n_shingles:int,
     * hits:array<string>), see [[BloomKernel.bloomShingleHits]]. */
   def bloomShingleHits(text: Column, bloom: Column, w: Int): Column =
@@ -228,7 +186,7 @@ object BloomFunctions {
 
   /** Filter shape for an expected key count at a bits-per-key budget:
     * (numBits rounded up to a multiple of 64, the FP-optimal k =
-    * round(bits/key * ln 2), clamped into BloomBuild's accepted 1..32 —
+    * round(bits/key * ln 2), clamped into bloom_build's accepted 1..32 —
     * above 46 bits/key the optimum exceeds 32, where extra probes buy
     * nothing measurable anyway). */
   def shape(expectedKeys: Long, bitsPerKey: Int): (Int, Int) = {

@@ -57,61 +57,10 @@ object ExtractFunctions {
   * extraction kernel AND the sketch family, so every native expression in
   * this library is reachable from plain SQL (q31 exercises the mechanism). */
 object GraftFunctionSet {
-  import org.apache.spark.sql.catalyst.expressions.Literal
-  import org.apache.spark.sql.types.{IntegerType, LongType}
-
-  private[functions] def intLit(name: String, e: Expression): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$name expects a literal integer parameter, got $other")
-  }
-
-  private def longLit(name: String, e: Expression): Long = e match {
-    case Literal(v: Long, LongType) => v
-    case Literal(v: Int, IntegerType) => v.toLong
-    case other => throw new IllegalArgumentException(
-      s"$name expects a literal integral parameter, got $other")
-  }
-
-  private[functions] def arity(name: String, n: Int)(args: Seq[Expression]): Seq[Expression] = {
-    require(args.length == n, s"$name expects $n argument(s), got ${args.length}")
-    args
-  }
-
-  /** (name, builder) for every SQL-exposed native expression. */
+  /** (name, builder) for every SQL-exposed native function, scalar and
+    * aggregate (the analyzer wraps a bare aggregate function). */
   val all: Seq[(String, Seq[Expression] => Expression)] =
-    Natives.all.map(f => f.name -> (f.build _)) ++ bespoke
-
-  // cosine_sim and hyperplane_sigs read float or double elements by the
-  // argument's type after analysis; the aggregates keep per-group state
-  private def bespoke: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "hyperplane_sigs" -> (args => {
-      val a = arity("hyperplane_sigs", 3)(args)
-      HyperplaneSigs(a(0), intLit("hyperplane_sigs", a(1)), intLit("hyperplane_sigs", a(2)))
-    }),
-    "cosine_sim" -> (args => { val a = arity("cosine_sim", 2)(args); CosineSim(a(0), a(1)) }),
-    // aggregates: the analyzer wraps a bare AggregateFunction builder result
-    "misra_gries" -> (args => {
-      val a = arity("misra_gries", 2)(args)
-      MisraGries(a(0), intLit("misra_gries", a(1)))
-    }),
-    "hll_distinct" -> (args => {
-      val a = arity("hll_distinct", 2)(args)
-      HllDistinct(a(0), intLit("hll_distinct", a(1)))
-    }),
-    "approx_quantiles" -> (args => {
-      val a = arity("approx_quantiles", 2)(args)
-      ApproxQuantiles(a(0), intLit("approx_quantiles", a(1)))
-    }),
-    // single-probe SQL form; the Scala API takes a probe sequence
-    "approx_ranks" -> (args => {
-      val a = arity("approx_ranks", 3)(args)
-      ApproxRanks(a(0), intLit("approx_ranks", a(1)), Seq(longLit("approx_ranks", a(2))))
-    }),
-    "bloom_build" -> (args => {
-      val a = arity("bloom_build", 3)(args)
-      BloomBuild(a(0), intLit("bloom_build", a(1)), intLit("bloom_build", a(2)))
-    }))
+    (Natives.scalars ++ Natives.aggregates).map(f => f.name -> (f.build _))
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -2,11 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import graft.operators.ExtractPipeline
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,9 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * candidates (see `TextAnalysis.heavyHitterTokens`), which is what makes
   * the end result deterministic and oracle-checkable.
   */
-final class MgBuffer(val k: Int) {
+final class MgBuffer(val k: Int) extends Sketch {
   val counts = new java.util.HashMap[String, Long]()
   var n: Long = 0L // total items summarized (rides the buffer so callers get it for free)
+
+  def insert(row: Array[Any]): Unit = insert(row(0).toString)
 
   def insert(item: String): Unit = {
     n += 1
@@ -67,71 +66,31 @@ final class MgBuffer(val k: Int) {
       decrementAll(vals(vals.length - k - 1)) // (k+1)-th largest
     }
   }
-}
 
-/** Aggregate form: `misra_gries(item, k)` returns
-  * struct<n:bigint, items:array<struct<item:string, count_lb:bigint>>>
-  * — n is the exact total item count, items the frequency summary sorted
-  * by (count_lb desc, item asc). */
-case class MisraGries(child: Expression, k: Int,
-                      mutableAggBufferOffset: Int = 0,
-                      inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MgBuffer] with UnaryLike[Expression] {
+  def merge(other: Sketch): Unit = mergeFrom(other.asInstanceOf[MgBuffer])
 
-  require(k > 0 && k <= (1 << 22), s"misra_gries requires 0 < k <= 2^22, got $k")
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"misra_gries requires a string item column, got ${child.dataType.sql}")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("items", ArrayType(StructType(Seq(
-      StructField("item", StringType, nullable = false),
-      StructField("count_lb", LongType, nullable = false))), containsNull = false),
-      nullable = false)))
-
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): MgBuffer = new MgBuffer(k)
-
-  override def update(buffer: MgBuffer, input: InternalRow): MgBuffer = {
-    val v = child.eval(input)
-    if (v != null) buffer.insert(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(buffer: MgBuffer, other: MgBuffer): MgBuffer = {
-    buffer.mergeFrom(other)
-    buffer
-  }
-
-  override def eval(buffer: MgBuffer): Any = {
-    val entries = new Array[(String, Long)](buffer.counts.size)
-    val it = buffer.counts.entrySet().iterator()
+  /** struct(n, items): the items sorted by (count_lb desc, item asc), items
+    * in code-point order (Spark's string order). */
+  def result: Any = {
+    val entries = new Array[(String, Long)](counts.size)
+    val it = counts.entrySet().iterator()
     var i = 0
     while (it.hasNext) { val e = it.next(); entries(i) = (e.getKey, e.getValue); i += 1 }
-    val sorted = entries.sortBy(t => (-t._2, t._1))
-    val arr = new Array[Any](sorted.length)
-    i = 0
-    while (i < sorted.length) {
-      arr(i) = new GenericInternalRow(Array[Any](
-        UTF8String.fromString(sorted(i)._1), sorted(i)._2))
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](buffer.n, new GenericArrayData(arr)))
+    val sorted = entries.sortWith((a, b) =>
+      if (a._2 != b._2) a._2 > b._2 else ExtractPipeline.codePointCompare(a._1, b._1) < 0)
+    new GenericInternalRow(Array[Any](n, new GenericArrayData(sorted.map[Any] { case (item, c) =>
+      new GenericInternalRow(Array[Any](UTF8String.fromString(item), c))
+    })))
   }
 
-  override def serialize(buffer: MgBuffer): Array[Byte] = {
-    var bytes = 12 // n + size
-    val it0 = buffer.counts.keySet().iterator()
-    while (it0.hasNext) bytes += 12 + it0.next().getBytes(StandardCharsets.UTF_8).length
-    val bb = ByteBuffer.allocate(bytes)
-    bb.putLong(buffer.n)
-    bb.putInt(buffer.counts.size)
-    val it = buffer.counts.entrySet().iterator()
+  def bytes: Array[Byte] = {
+    var size = 12 // n + size
+    val it0 = counts.keySet().iterator()
+    while (it0.hasNext) size += 12 + it0.next().getBytes(StandardCharsets.UTF_8).length
+    val bb = ByteBuffer.allocate(size)
+    bb.putLong(n)
+    bb.putInt(counts.size)
+    val it = counts.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       val b = e.getKey.getBytes(StandardCharsets.UTF_8)
@@ -141,8 +100,20 @@ case class MisraGries(child: Expression, k: Int,
     }
     bb.array()
   }
+}
 
-  override def deserialize(bytes: Array[Byte]): MgBuffer = {
+/** `misra_gries(item, k)` ([[Natives.misraGries]]) returns
+  * struct<n:bigint, items:array<struct<item:string, count_lb:bigint>>>
+  * — n is the exact total item count, items the frequency summary. */
+object MgBuffer {
+  val ResultType: DataType = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("items", ArrayType(StructType(Seq(
+      StructField("item", StringType, nullable = false),
+      StructField("count_lb", LongType, nullable = false))), containsNull = false),
+      nullable = false)))
+
+  def fromBytes(k: Int, bytes: Array[Byte]): MgBuffer = {
     val bb = ByteBuffer.wrap(bytes)
     val buf = new MgBuffer(k)
     buf.n = bb.getLong
@@ -157,19 +128,4 @@ case class MisraGries(child: Expression, k: Int,
     }
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MisraGries =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MisraGries =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): MisraGries =
-    copy(child = newChild)
-  override def prettyName: String = "misra_gries"
-}
-
-object HeavyHitterFunctions {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-  def misraGries(item: Column, k: Int): Column =
-    ColumnBridge.column(
-      MisraGries(ColumnBridge.expression(item), k).toAggregateExpression())
 }

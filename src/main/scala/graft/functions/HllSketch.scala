@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
 /** HyperLogLog registers at precision p: m = 2^p byte registers, each the
@@ -14,14 +10,21 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Mergeable by byte-wise max — commutative, associative, idempotent — so
   * the estimate is IDENTICAL under any partitioning or merge order (unlike
-  * MisraGries, whose membership set is order-dependent), and re-inserting
+  * misra_gries, whose membership set is order-dependent), and re-inserting
   * a duplicate is a no-op by construction. The memory bound is m bytes per
   * group regardless of cardinality: the corpus-stats primitive for
   * "distinct urls/tokens/domains per group" at scales where an exact
   * count's (group, value) shuffle is the dominant cost. */
-final class HllBuffer(val p: Int) {
+final class HllBuffer(val p: Int) extends Sketch {
   val m: Int = 1 << p
   val regs = new Array[Byte](m)
+
+  /** A string item, hashed with xxhash64 over its UTF-8 bytes (the sketch
+    * kernels' seed, so deterministic across JVMs and runs). */
+  def insert(row: Array[Any]): Unit = {
+    val s = row(0).asInstanceOf[UTF8String]
+    insert(XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L))
+  }
 
   def insert(hash: Long): Unit = {
     val idx = (hash >>> (64 - p)).toInt
@@ -31,6 +34,8 @@ final class HllBuffer(val p: Int) {
     val rank = (if (w == 0L) 64 - p else java.lang.Long.numberOfLeadingZeros(w)) + 1
     if (rank > regs(idx)) regs(idx) = rank.toByte
   }
+
+  def merge(other: Sketch): Unit = mergeFrom(other.asInstanceOf[HllBuffer])
 
   def mergeFrom(other: HllBuffer): Unit = {
     var i = 0
@@ -64,66 +69,21 @@ final class HllBuffer(val p: Int) {
       else e
     math.round(corrected)
   }
+
+  def result: Any = estimate()
+  def bytes: Array[Byte] = regs.clone()
 }
 
-/** Aggregate form: `hll_distinct(item, p)` returns the approximate
-  * distinct count (bigint) of the string column at precision p
+/** `hll_distinct(item, p)` ([[Natives.hllDistinct]]) returns the
+  * approximate distinct count (bigint) of the string column at precision p
   * (4 <= p <= 18; m = 2^p one-byte registers per group; standard error
-  * ~= 1.04 / sqrt(m), ~1.6% at the default p = 12). Estimates are
-  * partitioning- and merge-order-INDEPENDENT (register max is
-  * commutative), so repeated runs agree exactly — approximate vs the
-  * truth, deterministic vs itself. */
-case class HllDistinct(child: Expression, p: Int = 12,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllBuffer] with UnaryLike[Expression] {
-
-  require(p >= 4 && p <= 18, s"hll_distinct requires 4 <= p <= 18, got $p")
-
-  // xxhash64 over the UTF8 bytes, same seed discipline as the sketch
-  // kernels (deterministic across JVMs and runs)
-  private val Seed = 42L
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"hll_distinct requires a string item column, got ${child.dataType.sql}")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): HllBuffer = new HllBuffer(p)
-
-  override def update(buffer: HllBuffer, input: InternalRow): HllBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val s = v.asInstanceOf[UTF8String]
-      buffer.insert(XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, Seed))
-    }
-    buffer
-  }
-
-  override def merge(buffer: HllBuffer, other: HllBuffer): HllBuffer = {
-    buffer.mergeFrom(other)
-    buffer
-  }
-
-  override def eval(buffer: HllBuffer): Any = buffer.estimate()
-
-  override def serialize(buffer: HllBuffer): Array[Byte] = buffer.regs.clone()
-
-  override def deserialize(bytes: Array[Byte]): HllBuffer = {
+  * ~= 1.04 / sqrt(m), ~1.6% at p = 12). Estimates are partitioning- and
+  * merge-order-INDEPENDENT (register max is commutative), so repeated runs
+  * agree exactly — approximate vs the truth, deterministic vs itself. */
+object HllBuffer {
+  def fromBytes(p: Int, bytes: Array[Byte]): HllBuffer = {
     val buf = new HllBuffer(p)
     System.arraycopy(bytes, 0, buf.regs, 0, buf.m)
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllDistinct =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllDistinct =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): HllDistinct =
-    copy(child = newChild)
-  override def prettyName: String = "hll_distinct"
 }

@@ -1,13 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
-/** Native random-hyperplane LSH signatures.
+/** Native random-hyperplane LSH signatures (`hyperplane_sigs`,
+  * [[Natives.hyperplaneSigs]]).
   *
   * Computes the identical values to the declarative formulation in the
   * test reference graft.operators.SimilarityReference (src/test;
@@ -39,17 +36,17 @@ object LshKernel {
     })
   }
 
-  /** nTables signatures of nBits bits each, float or double input vector.
-    * A null element nulls every plane's dot product in the declarative
+  /** nTables signatures of nBits bits each of a double vector (float
+    * vectors are widened exactly before the call). A null element nulls every plane's dot product in the declarative
     * form, and `when(null >= 0, bit).otherwise(0)` zeroes every bit — so
     * the whole signature set collapses to 0L, replicated here. */
-  def signatures(vec: ArrayData, nBits: Int, nTables: Int, isFloat: Boolean): Array[Long] = {
+  def signatures(vec: ArrayData, nBits: Int, nTables: Int): ArrayData = {
     val dim = vec.numElements()
     val v = new Array[Double](dim)
     var d = 0
     while (d < dim) {
-      if (vec.isNullAt(d)) return new Array[Long](nTables) // all-zero signatures
-      v(d) = if (isFloat) vec.getFloat(d).toDouble else vec.getDouble(d)
+      if (vec.isNullAt(d)) return new GenericArrayData(new Array[Long](nTables)) // all-zero
+      v(d) = vec.getDouble(d)
       d += 1
     }
     val cs = coeffs(nBits, nTables, dim)
@@ -69,19 +66,21 @@ object LshKernel {
       out(t) = sig
       t += 1
     }
-    out
+    new GenericArrayData(out)
   }
 }
 
 object CosineKernel {
-  /** cosine = dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))), every dot an
+  /** `cosine_sim` ([[Natives.cosineSim]]) over two double vectors (float
+    * vectors are widened exactly before the call):
+    * cosine = dot(a,b) / (sqrt(dot(a,a)) * sqrt(dot(b,b))), every dot an
     * ordered double-precision left fold — bit-identical to the declarative
     * zip_with/aggregate formulation AND to DuckDB's list_dot_product over
     * DOUBLE[] (the oracle contract). Returns null (boxed) exactly where the
     * declarative form does: ragged lengths (zip_with pads with null) or a
     * null element — so a corrupt embedding row can never sneak a truncated
     * cosine past a >= threshold predicate. */
-  def cosine(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): java.lang.Double = {
+  def cosine(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
     var dot = 0.0
@@ -90,8 +89,8 @@ object CosineKernel {
     var i = 0
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      val x = a.getDouble(i)
+      val y = b.getDouble(i)
       dot += x * y
       na += x * x
       nb += y * y
@@ -99,76 +98,4 @@ object CosineKernel {
     }
     java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
   }
-}
-
-case class CosineSim(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // ragged/null-element inputs yield null
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim requires two array<float|double> inputs, got $other")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    CosineKernel.cosine(a.asInstanceOf[ArrayData], isFloat(left),
-      b.asInstanceOf[ArrayData], isFloat(right))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("cos")
-      s"""java.lang.Double $boxed = graft.functions.CosineKernel.cosine(
-         |  $a, ${isFloat(left)}, $b, ${isFloat(right)});
-         |if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $boxed.doubleValue(); }
-         |""".stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "cosine_sim"
-}
-
-case class HyperplaneSigs(child: Expression, nBits: Int, nTables: Int) extends UnaryExpression {
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"hyperplane_sigs requires array<float|double>, got ${other.sql}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      LshKernel.signatures(input.asInstanceOf[ArrayData], nBits, nTables, isFloat))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.LshKernel.signatures($c, $nBits, $nTables, $isFloat))")
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSigs =
-    copy(child = newChild)
-  override def prettyName: String = "hyperplane_sigs"
-}
-
-object LshFunctions {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-  def hyperplaneSigs(vec: Column, nBits: Int, nTables: Int): Column =
-    ColumnBridge.column(HyperplaneSigs(ColumnBridge.expression(vec), nBits, nTables))
-  def cosineSim(a: Column, b: Column): Column =
-    ColumnBridge.column(CosineSim(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }

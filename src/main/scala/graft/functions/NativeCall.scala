@@ -1,64 +1,183 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, ExpectsInputTypes, Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.ColumnBridge.InputType
 import org.apache.spark.sql.types._
 
-/** One native scalar kernel, declared once: SQL `name`, computed by the
-  * static method `kernel.method(columns..., ints...)` — one column argument
-  * per `inputTypes` entry, then `nInts` integer literal parameters, which
-  * `check` validates when the expression is built (bad SQL literals fail
-  * analysis, not the job). The method returns Catalyst values (`ArrayData`,
-  * `InternalRow`, `UTF8String`, primitives) of `dataType`; a non-null input
-  * row gives a non-null result, so `dataType` says nothing about nulls. */
-final case class NativeFn(name: String, kernel: Class[_], method: String,
-    dataType: DataType, inputTypes: Seq[DataType], nInts: Int = 0,
-    check: Seq[Int] => Unit = _ => ()) {
-
-  def expr(cols: Seq[Expression], ints: Seq[Int]): Expression = {
-    check(ints)
-    NativeCall(this, cols, ints)
-  }
-
-  /** The DataFrame-API handle. */
-  def apply(cols: Seq[Column], ints: Int*): Column =
-    ColumnBridge.column(expr(cols.map(ColumnBridge.expression), ints))
+/** What every native function declares, scalar or aggregate: its SQL
+  * `name`, one column argument per `inputTypes` entry, then integer literal
+  * parameters of `paramTypes` (`IntegerType` or `LongType`), which the
+  * entry's `check` validates when the expression is built (bad SQL literals
+  * fail analysis, not the job). */
+sealed trait Native {
+  def name: String
+  def inputTypes: Seq[InputType]
+  def paramTypes: Seq[DataType]
+  protected def make(cols: Seq[Expression], params: Seq[Long]): Expression
 
   /** The SQL builder: the column arguments, then the integer literals. */
   def build(args: Seq[Expression]): Expression = {
     val n = inputTypes.length
-    GraftFunctionSet.arity(name, n + nInts)(args)
-    expr(args.take(n), args.drop(n).map(GraftFunctionSet.intLit(name, _)))
+    require(args.length == n + paramTypes.length,
+      s"$name expects ${n + paramTypes.length} argument(s), got ${args.length}")
+    make(args.take(n), args.drop(n).zip(paramTypes).map {
+      case (Literal(v: Int, IntegerType), _) => v.toLong
+      case (Literal(v: Long, LongType), LongType) => v
+      case (other, t) => throw new IllegalArgumentException(
+        s"$name expects a literal ${t.sql} parameter, got $other")
+    })
   }
+}
+
+/** One native scalar kernel, declared once: computed by the static method
+  * `kernel.method(columns..., ints...)` with `nInts` int parameters. The
+  * method returns Catalyst values (`ArrayData`, `InternalRow`,
+  * `UTF8String`, primitives) of `dataType`; a non-null input row gives a
+  * non-null result unless the entry is `nullable` (the method then returns
+  * a boxed value or null). With `widenInputs` the columns are cast to
+  * `inputTypes` where the expression is built, in SQL and in the DataFrame
+  * handle alike; every other entry takes exactly its `inputTypes`. */
+final case class NativeFn(name: String, kernel: Class[_], method: String,
+    dataType: DataType, inputTypes: Seq[DataType], nInts: Int = 0,
+    check: Seq[Int] => Unit = _ => (), nullable: Boolean = false,
+    widenInputs: Boolean = false) extends Native {
+
+  def paramTypes: Seq[DataType] = Seq.fill(nInts)(IntegerType)
+
+  def expr(cols: Seq[Expression], ints: Seq[Int]): Expression = {
+    check(ints)
+    NativeCall(this,
+      if (widenInputs) cols.zip(inputTypes).map { case (c, t) => Cast(c, t) } else cols, ints)
+  }
+
+  protected def make(cols: Seq[Expression], params: Seq[Long]): Expression =
+    expr(cols, params.map(_.toInt))
+
+  /** The DataFrame-API handle. */
+  def apply(cols: Seq[Column], ints: Int*): Column =
+    ColumnBridge.column(expr(cols.map(ColumnBridge.expression), ints))
 }
 
 /** The expression every [[NativeFn]] builds. It is replaced before
   * execution by a `StaticInvoke` of the kernel method, which Spark runs
   * through reflection when interpreted and as a direct static call inside
   * whole-stage codegen, so the two paths call the same method. Null in
-  * gives null out (`propagateNull`), non-null in gives non-null out
-  * (`returnNullable = false`). */
+  * gives null out (`propagateNull`). */
 case class NativeCall(fn: NativeFn, children: Seq[Expression], params: Seq[Int])
   extends RuntimeReplaceable with ExpectsInputTypes {
   override def prettyName: String = fn.name
   override def dataType: DataType = fn.dataType
   override def inputTypes: Seq[DataType] = fn.inputTypes
   override lazy val replacement: Expression = StaticInvoke(fn.kernel, fn.dataType, fn.method,
-    children ++ params.map(Literal(_)), propagateNull = true, returnNullable = false)
+    children ++ params.map(Literal(_)), propagateNull = true, returnNullable = fn.nullable)
   override protected def stringArgs: Iterator[Any] = (children ++ params).iterator
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): NativeCall =
     copy(children = newChildren)
 }
 
-/** Every native scalar kernel. `GraftFunctionSet` registers each under its
-  * SQL name; `SketchFunctions`, `ExtractFunctions` and `BloomFunctions` are
-  * DataFrame handles over the same entries. */
+/** The per-group state of a [[NativeAgg]]: fed input rows, merged with
+  * other partial states of the same entry, read once as the result, and
+  * carried across the exchange as `bytes`. */
+trait Sketch {
+  /** Adds one row; `row(i)` is the Catalyst value of the i-th input,
+    * never null. */
+  def insert(row: Array[Any]): Unit
+  def merge(other: Sketch): Unit
+  /** The aggregate's value, of its entry's `dataType`. */
+  def result: Any
+  def bytes: Array[Byte]
+}
+
+/** One native aggregate, declared once: `empty(params)` starts a group's
+  * [[Sketch]], `fromBytes(params, bytes)` reads back one that `Sketch.bytes`
+  * wrote, and `dataType(params)` is the type of `Sketch.result`. A row with
+  * a null input is skipped; the result is never null. */
+final case class NativeAgg(name: String, inputTypes: Seq[InputType],
+    paramTypes: Seq[DataType], dataType: Seq[Long] => DataType, check: Seq[Long] => Unit,
+    empty: Seq[Long] => Sketch, fromBytes: (Seq[Long], Array[Byte]) => Sketch) extends Native {
+
+  def expr(cols: Seq[Expression], params: Seq[Long]): NativeAggCall = {
+    check(params)
+    NativeAggCall(this, cols, params)
+  }
+
+  protected def make(cols: Seq[Expression], params: Seq[Long]): Expression = expr(cols, params)
+
+  /** The DataFrame-API handle. */
+  def apply(cols: Seq[Column], params: Long*): Column =
+    ColumnBridge.column(expr(cols.map(ColumnBridge.expression), params).toAggregateExpression())
+
+  // an entry ships to executors inside its aggregate; it crosses as its
+  // name and resolves to the same entry of the table there (input types
+  // are not serializable)
+  private def writeReplace(): AnyRef = new NativeAgg.ByName(name)
+}
+
+object NativeAgg {
+  private class ByName(name: String) extends Serializable {
+    private def readResolve(): AnyRef = Natives.aggregates.find(_.name == name).get
+  }
+}
+
+/** The aggregate every [[NativeAgg]] builds. */
+case class NativeAggCall(fn: NativeAgg, children: Seq[Expression], params: Seq[Long],
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[Sketch] with ExpectsInputTypes {
+  override def prettyName: String = fn.name
+  override def dataType: DataType = fn.dataType(params)
+  override def nullable: Boolean = false
+  override def inputTypes: Seq[InputType] = fn.inputTypes
+
+  // the children are evaluated into one reused row
+  @transient private lazy val inputs = children.toArray
+  @transient private lazy val row = new Array[Any](inputs.length)
+
+  override def createAggregationBuffer(): Sketch = fn.empty(params)
+
+  override def update(buffer: Sketch, input: InternalRow): Sketch = {
+    var i = 0
+    while (i < inputs.length) {
+      row(i) = inputs(i).eval(input)
+      if (row(i) == null) return buffer
+      i += 1
+    }
+    buffer.insert(row)
+    buffer
+  }
+
+  override def merge(buffer: Sketch, other: Sketch): Sketch = {
+    buffer.merge(other)
+    buffer
+  }
+
+  override def eval(buffer: Sketch): Any = buffer.result
+  override def serialize(buffer: Sketch): Array[Byte] = buffer.bytes
+  override def deserialize(bytes: Array[Byte]): Sketch = fn.fromBytes(params, bytes)
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): NativeAggCall =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): NativeAggCall =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def stringArgs: Iterator[Any] = (children ++ params).iterator
+  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): NativeAggCall =
+    copy(children = newChildren)
+}
+
+/** Every native function: the scalar kernels and the aggregates.
+  * `GraftFunctionSet` registers each under its SQL name; `SketchFunctions`,
+  * `ExtractFunctions`, `BloomFunctions` and `TopKFunctions` are DataFrame
+  * handles over the same entries. */
 object Natives {
   private val Sketch = SketchKernel.getClass
   private val Extract = ExtractKernel.getClass
   private val Bloom = BloomKernel.getClass
+  private val Lsh = LshKernel.getClass
+  private val Cosine = CosineKernel.getClass
 
   private def widthAtLeast1(name: String)(ints: Seq[Int]): Unit =
     require(ints.head >= 1, s"$name needs w >= 1, got ${ints.head}")
@@ -66,6 +185,7 @@ object Natives {
   private def struct(fields: (String, DataType, Boolean)*): StructType =
     StructType(fields.map { case (n, t, nullable) => StructField(n, t, nullable) })
   private val Longs = ArrayType(LongType, containsNull = false)
+  private val Doubles = ArrayType(DoubleType)
 
   val simhash64 = NativeFn("simhash64", Sketch, "simhash", LongType, Seq(StringType))
   val simhashMd5 = NativeFn("simhash_md5", Sketch, "simhashMd5", LongType, Seq(StringType))
@@ -112,8 +232,49 @@ object Natives {
     struct(("n_shingles", IntegerType, false), ("hits", ArrayType(StringType, containsNull = false), false)),
     Seq(StringType, BinaryType), 1, widthAtLeast1("bloom_shingle_hits"))
 
-  val all: Seq[NativeFn] = Seq(simhash64, simhashMd5, minhashSig, minhashSigFromHashes,
+  // float vectors widen to double exactly, so the kernels read one element type
+  val cosineSim = NativeFn("cosine_sim", Cosine, "cosine", DoubleType, Seq(Doubles, Doubles),
+    nullable = true, widenInputs = true)
+  val hyperplaneSigs = NativeFn("hyperplane_sigs", Lsh, "signatures", Longs, Seq(Doubles), 2,
+    widenInputs = true)
+
+  val scalars: Seq[NativeFn] = Seq(simhash64, simhashMd5, minhashSig, minhashSigFromHashes,
     shingleHashes, fingerprint64, fingerprintMd5, tokenChunks, dedupLines, dedupSpans,
     exciseSpans, tokenTf, bpeEstimate, qualityScore, dotInt, jaccardSim,
-    pdfText, htmlText, graftText, htmlLinks, htmlAnchors, bloomMightContain, bloomShingleHits)
+    pdfText, htmlText, graftText, htmlLinks, htmlAnchors, bloomMightContain, bloomShingleHits,
+    cosineSim, hyperplaneSigs)
+
+  private def kIn(name: String, lo: Long, hi: Long, label: String)(params: Seq[Long]): Unit =
+    require(params.head >= lo && params.head <= hi,
+      s"$name requires $label, got ${params.head}")
+  private val Integral = ColumnBridge.anyOf(LongType, IntegerType)
+
+  val misraGries = NativeAgg("misra_gries", Seq(StringType), Seq(IntegerType),
+    _ => MgBuffer.ResultType, kIn("misra_gries", 1, 1 << 22, "0 < k <= 2^22"),
+    p => new MgBuffer(p.head.toInt), (p, b) => MgBuffer.fromBytes(p.head.toInt, b))
+  val hllDistinct = NativeAgg("hll_distinct", Seq(StringType), Seq(IntegerType),
+    _ => LongType, kIn("hll_distinct", 4, 18, "4 <= p <= 18"),
+    p => new HllBuffer(p.head.toInt), (p, b) => HllBuffer.fromBytes(p.head.toInt, b))
+  val topKByScore = NativeAgg("topk_by_score", Seq(DoubleType, LongType), Seq(IntegerType),
+    _ => TopKBuffer.ResultType, kIn("topk_by_score", 1, Int.MaxValue, "k > 0"),
+    p => new TopKBuffer(p.head.toInt), (p, b) => TopKBuffer.fromBytes(p.head.toInt, b))
+  val approxQuantiles = NativeAgg("approx_quantiles", Seq(Integral), Seq(IntegerType),
+    _ => QuantileBuffer.QuantilesType, kIn("approx_quantiles", 8, 1 << 20, "8 <= k <= 2^20"),
+    p => new QuantileBuffer(p.head.toInt), (p, b) => QuantileBuffer.fromBytes(p.head.toInt, None, b))
+  /** `approx_ranks(v, k, probe)`: how many inputs are <= probe. */
+  val approxRanks = NativeAgg("approx_ranks", Seq(Integral), Seq(IntegerType, LongType),
+    p => QuantileBuffer.ranksType(p(1)), kIn("approx_ranks", 8, 1 << 20, "8 <= k <= 2^20"),
+    p => new QuantileBuffer(p.head.toInt, Some(p(1))),
+    (p, b) => QuantileBuffer.fromBytes(p.head.toInt, Some(p(1)), b))
+  val bloomBuild = NativeAgg("bloom_build", Seq(StringType), Seq(IntegerType, IntegerType),
+    _ => BinaryType, { case Seq(numBits, k) =>
+      require(numBits >= 8 && numBits % 8 == 0 && numBits <= (1 << 30),
+        s"bloom_build requires 8 <= numBits <= 2^30, multiple of 8; got $numBits")
+      require(k >= 1 && k <= 32, s"bloom_build requires 1 <= k <= 32, got $k")
+    },
+    p => new BloomAggBuffer(p(0).toInt, p(1).toInt),
+    (p, b) => BloomAggBuffer.fromBytes(p(0).toInt, p(1).toInt, b))
+
+  val aggregates: Seq[NativeAgg] = Seq(misraGries, hllDistinct, topKByScore, approxQuantiles,
+    approxRanks, bloomBuild)
 }

@@ -1,11 +1,7 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
 /** Deterministic multi-level quantile summary (the Manku-Rajagopalan-
@@ -24,9 +20,9 @@ import org.apache.spark.sql.types._
   * Mergeable: levels concatenate weight-for-weight and over-full levels
   * compact — summaries cross the exchange, never values. Deterministic
   * given an insertion order; results may differ ACROSS partitionings
-  * (within the bound) — unlike HllDistinct's order-invariant registers,
+  * (within the bound) — unlike hll_distinct's order-invariant registers,
   * which is why exact rank selection stays `exactQuantiles`' job. */
-final class QuantileBuffer(val k: Int) {
+final class QuantileBuffer(val k: Int, probe: Option[Long] = None) extends Sketch {
   var n: Long = 0L
   // levels(i): sorted Array[Long], each element weighing 2^i; level 0's
   // tail [level0Len, k) is the unsorted insert accumulator
@@ -80,6 +76,13 @@ final class QuantileBuffer(val k: Int) {
     out
   }
 
+  def insert(row: Array[Any]): Unit = insert(row(0) match {
+    case l: java.lang.Long => l.longValue()
+    case i: java.lang.Integer => i.longValue()
+  })
+
+  def merge(other: Sketch): Unit = mergeFrom(other.asInstanceOf[QuantileBuffer])
+
   def mergeFrom(other: QuantileBuffer): Unit = {
     n += other.n
     var i = 0
@@ -98,7 +101,7 @@ final class QuantileBuffer(val k: Int) {
 
   /** All surviving (value, weight) pairs sorted by value, plus the total
     * surviving weight — the shared base of the two query directions
-    * ([[quantiles]]: rank -> value; [[ranks]]: value -> rank). */
+    * ([[quantiles]]: rank -> value; [[rank]]: value -> rank). */
   private def survivors(): (Array[Long], Array[Long], Long) = {
     var m = level0Len
     var lvl = 1
@@ -120,24 +123,18 @@ final class QuantileBuffer(val k: Int) {
     (idx.map(vals).toArray, idx.map(wts).toArray, wts.sum)
   }
 
-  /** Estimated rank of each probe value: the count of inputs <= probe,
-    * rescaled from surviving weight mass to n — the INVERSE query of
-    * [[quantiles]] (value -> rank instead of rank -> value), same error
-    * bound, same summary. rank(x) in [0, n]; 0 when x precedes every
-    * input, n when it follows all of them. */
-  def ranks(probes: Seq[Long]): Array[Long] = {
-    if (n == 0) return Array.fill(probes.length)(0L)
+  /** Estimated rank of a probe value: the count of inputs <= x, rescaled
+    * from surviving weight mass to n — the INVERSE query of [[quantiles]]
+    * (value -> rank instead of rank -> value), same error bound, same
+    * summary. rank(x) in [0, n]; 0 when x precedes every input, n when it
+    * follows all of them. */
+  def rank(x: Long): Long = {
+    if (n == 0) return 0L
     val (sortedV, sortedW, totalW) = survivors()
-    val m = sortedV.length
-    probes.map { x =>
-      // binary search for the first value > x, then the cumulative weight
-      // below it (prefix sums are m-small — computed once per probe set
-      // would also work, but m <= k log(n/k) keeps the scan trivial)
-      var cum = 0L
-      var j = 0
-      while (j < m && sortedV(j) <= x) { cum += sortedW(j); j += 1 }
-      if (totalW == 0L) 0L else math.round(cum.toDouble / totalW * n)
-    }.toArray
+    var cum = 0L
+    var j = 0
+    while (j < sortedV.length && sortedV(j) <= x) { cum += sortedW(j); j += 1 }
+    if (totalW == 0L) 0L else math.round(cum.toDouble / totalW * n)
   }
 
   /** Lower-rank selection over the weighted survivors: smallest value
@@ -163,62 +160,52 @@ final class QuantileBuffer(val k: Int) {
       res
     }.toArray
   }
-}
 
-/** The buffer plumbing (typing, create/update/merge, byte round-trip)
-  * shared by the two query directions over the same sketch —
-  * [[ApproxQuantiles]] (rank -> value) and [[ApproxRanks]] (value ->
-  * rank). */
-trait QuantileSketchAggregate
-  extends TypedImperativeAggregate[QuantileBuffer] with UnaryLike[Expression] {
-  def k: Int
+  /** struct(n, p50, p90, p99) — or, with a `probe`, struct(n, r_<probe>). */
+  def result: Any = new GenericInternalRow(Array[Any](n) ++
+    probe.fold(quantiles(QuantileBuffer.Ps).map(v => v: Any))(x => Array[Any](rank(x))))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType || child.dataType == IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an integral column, got ${child.dataType.sql}")
-
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): QuantileBuffer = new QuantileBuffer(k)
-
-  override def update(buffer: QuantileBuffer, input: InternalRow): QuantileBuffer = {
-    val v = child.eval(input)
-    if (v != null) buffer.insert(v match {
-      case l: java.lang.Long => l.longValue()
-      case i: java.lang.Integer => i.longValue()
-    })
-    buffer
-  }
-
-  override def merge(buffer: QuantileBuffer, other: QuantileBuffer): QuantileBuffer = {
-    buffer.mergeFrom(other)
-    buffer
-  }
-
-  override def serialize(buffer: QuantileBuffer): Array[Byte] = {
-    var bytes = 8 + 4 + 4 // n, level0Len, nLevels
+  def bytes: Array[Byte] = {
+    var size = 8 + 4 + 4 // n, level0Len, nLevels
     var lvl = 1
-    while (lvl < buffer.levels.length) { bytes += 4 + 8 * buffer.levels(lvl).length; lvl += 1 }
-    bytes += 8 * buffer.level0Len
-    val bb = ByteBuffer.allocate(bytes)
-    bb.putLong(buffer.n)
-    bb.putInt(buffer.level0Len)
+    while (lvl < levels.length) { size += 4 + 8 * levels(lvl).length; lvl += 1 }
+    size += 8 * level0Len
+    val bb = ByteBuffer.allocate(size)
+    bb.putLong(n)
+    bb.putInt(level0Len)
     var i = 0
-    while (i < buffer.level0Len) { bb.putLong(buffer.levels(0)(i)); i += 1 }
-    bb.putInt(buffer.levels.length - 1)
+    while (i < level0Len) { bb.putLong(levels(0)(i)); i += 1 }
+    bb.putInt(levels.length - 1)
     lvl = 1
-    while (lvl < buffer.levels.length) {
-      bb.putInt(buffer.levels(lvl).length)
-      buffer.levels(lvl).foreach(bb.putLong)
+    while (lvl < levels.length) {
+      bb.putInt(levels(lvl).length)
+      levels(lvl).foreach(bb.putLong)
       lvl += 1
     }
     bb.array()
   }
+}
 
-  override def deserialize(bytes: Array[Byte]): QuantileBuffer = {
+/** `approx_quantiles(v, k)` ([[Natives.approxQuantiles]]) returns
+  * struct<n:bigint, p50:bigint, p90:bigint, p99:bigint>; the inverse query
+  * `approx_ranks(v, k, probe)` ([[Natives.approxRanks]]) returns
+  * struct<n:bigint, r_<probe>:bigint>, the estimated count of inputs <=
+  * probe (a CDF point scaled to counts) from the same summary — the
+  * question a threshold chooser asks ("how many documents fall below this
+  * score?") without a second exact pass. Both take an integral column. */
+object QuantileBuffer {
+  val Ps: Seq[Double] = Seq(0.5, 0.9, 0.99)
+
+  val QuantilesType: DataType = StructType(StructField("n", LongType, nullable = false) +:
+    Ps.map(p => StructField(QuantileNames.pName(p), LongType, nullable = false)))
+
+  def ranksType(probe: Long): DataType = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField(QuantileNames.rName(probe), LongType, nullable = false)))
+
+  def fromBytes(k: Int, probe: Option[Long], bytes: Array[Byte]): QuantileBuffer = {
     val bb = ByteBuffer.wrap(bytes)
-    val buf = new QuantileBuffer(k)
+    val buf = new QuantileBuffer(k, probe)
     buf.n = bb.getLong
     buf.level0Len = bb.getInt
     var i = 0
@@ -236,69 +223,6 @@ trait QuantileSketchAggregate
     }
     buf
   }
-
-}
-
-/** Aggregate form: `approx_quantiles(v, k)` returns
-  * struct<n:bigint, p50:bigint, p90:bigint, p99:bigint> (the Scala API
-  * takes arbitrary ps). Input casts to long like exactQuantiles. */
-case class ApproxQuantiles(child: Expression, k: Int,
-                           ps: Seq[Double] = Seq(0.5, 0.9, 0.99),
-                           mutableAggBufferOffset: Int = 0,
-                           inputAggBufferOffset: Int = 0)
-  extends QuantileSketchAggregate {
-
-  require(k >= 8 && k <= (1 << 20), s"approx_quantiles requires 8 <= k <= 2^20, got $k")
-  require(ps.nonEmpty && ps.forall(p => p > 0.0 && p <= 1.0),
-    s"quantiles must lie in (0, 1], got $ps")
-
-  override def dataType: DataType = StructType(
-    StructField("n", LongType, nullable = false) +:
-      ps.map(p => StructField(QuantileNames.pName(p), LongType, nullable = false)))
-
-  override def eval(buffer: QuantileBuffer): Any =
-    new GenericInternalRow((buffer.n +: buffer.quantiles(ps).toSeq).toArray[Any])
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ApproxQuantiles =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ApproxQuantiles =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ApproxQuantiles =
-    copy(child = newChild)
-  override def prettyName: String = "approx_quantiles"
-}
-
-/** The inverse query: `approx_ranks(v, k, probe)` estimates, for each
-  * probe value, HOW MANY inputs are <= it (a CDF point scaled to counts)
-  * from the same mergeable summary `approx_quantiles` maintains — the
-  * question a threshold chooser asks ("how many documents fall below
-  * this score?") without a second exact pass. Same rank-error bound,
-  * same O(k log(n/k)) bytes per group. */
-case class ApproxRanks(child: Expression, k: Int,
-                       probes: Seq[Long],
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-  extends QuantileSketchAggregate {
-
-  require(k >= 8 && k <= (1 << 20), s"approx_ranks requires 8 <= k <= 2^20, got $k")
-  require(probes.nonEmpty, "approx_ranks requires at least one probe value")
-  require(probes == probes.sorted && probes.distinct == probes,
-    s"probes must be strictly increasing, got $probes")
-
-  override def dataType: DataType = StructType(
-    StructField("n", LongType, nullable = false) +:
-      probes.map(v => StructField(QuantileNames.rName(v), LongType, nullable = false)))
-
-  override def eval(buffer: QuantileBuffer): Any =
-    new GenericInternalRow((buffer.n +: buffer.ranks(probes).toSeq).toArray[Any])
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ApproxRanks =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ApproxRanks =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): ApproxRanks =
-    copy(child = newChild)
-  override def prettyName: String = "approx_ranks"
 }
 
 /** Quantile-name formatting shared with Stats.exactQuantiles so the two

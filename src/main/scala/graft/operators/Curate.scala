@@ -32,13 +32,14 @@ object Curate {
   private val BoilerplateChunk = 8
   private val DecontaminateW = 5
   private val DecontaminateMinOverlap = 3L
+  private val PackBudget = 512
 
   /** Returns one row per SURVIVING document:
     * (doc_id, detected_lang, n_tokens, cum_tokens, pack_id).
     * `docs` carries (doc_id, text); the benchmark frame, when given, too.
     * Rows with a null text evaluate null through the gate predicates and
     * are therefore dropped — the gate semantics, not an accident. */
-  def curate(docs: DataFrame, packBudget: Int = 512, packShards: Int = 1,
+  def curate(docs: DataFrame, packShards: Int = 1,
              stripBoilerplate: Boolean = false, boilerplateMinDocs: Long = 30L,
              decontaminateAgainst: DataFrame = null,
              dedupSpansW: Int = 0,
@@ -215,7 +216,7 @@ object Curate {
     // and every pack still respects the budget).
     TextAnalysis.packShardedOn(
         kept.select(col("doc_id"), col("detected_lang"), col("n_tokens")),
-        "detected_lang", "doc_id", packBudget, packShards)
+        "detected_lang", "doc_id", PackBudget, packShards)
       .select(col("doc_id"), col("detected_lang"), col("n_tokens"),
         col("cum_tokens"), col("pack_id"))
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{BloomFunctions, SketchFunctions}
+import graft.functions.{BloomFunctions, Natives, SketchFunctions}
 import graft.exec.Exec
 
 /** Test-set decontamination: flag corpus documents that share at least
@@ -84,7 +84,7 @@ object Decontaminate {
       if (!BloomFunctions.fits(n, bitsPerShingle)) None
       else {
         val (numBits, k) = BloomFunctions.shape(n, bitsPerShingle)
-        Some(shingles.agg(BloomFunctions.bloomBuild(col("sh"), numBits, k))
+        Some(shingles.agg(Natives.bloomBuild(Seq(col("sh")), numBits, k))
           .head().getAs[Array[Byte]](0))
       }
     PreparedBenchmark(shingles, n, filter)

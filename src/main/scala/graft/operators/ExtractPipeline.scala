@@ -319,7 +319,7 @@ object ExtractPipeline {
   /** `String.compareTo` in code-point order: UTF-16 order differs only
     * where a surrogate meets U+E000..U+FFFF, so at the first differing unit
     * surrogates are moved above that range. */
-  private def codePointCompare(a: String, b: String): Int = {
+  private[graft] def codePointCompare(a: String, b: String): Int = {
     val n = math.min(a.length, b.length)
     var i = 0
     while (i < n && a.charAt(i) == b.charAt(i)) i += 1

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * range guard cannot drift apart.
   *
   * `packed = score * 2^21 + (2^21 - 1 - id)`: score occupies the high
-  * bits (52 total — exactly representable in the DOUBLE the TopKByScore
+  * bits (52 total — exactly representable in the DOUBLE the topk_by_score
   * sketch orders by), the complemented id breaks ties DOWNWARD, so
   * max(packed) is "highest score, then smallest id" in one map-side
   * combinable aggregate — never a per-group window. The same arithmetic

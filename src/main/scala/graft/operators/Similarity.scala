@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Natives
 import graft.functions.TopKFunctions.topKByScore
 import graft.exec.Exec
 
@@ -10,8 +11,8 @@ import graft.exec.Exec
   * LSH as the 100 TB scale path. All scoring is native Catalyst expressions
   * (zip_with/aggregate — no UDFs, zero extra serialization); the query side
   * is broadcast so the corpus is scanned exactly once with no shuffle of
-  * the embedding vectors; per-query top-k is a bounded custom aggregate
-  * (graft.functions.TopKByScore) with map-side partial aggregation, so only
+  * the embedding vectors; per-query top-k is the bounded `topk_by_score`
+  * aggregate with map-side partial aggregation, so only
   * queries x k x partitions rows ever cross an exchange — never the full
   * scored set.
   *
@@ -28,7 +29,7 @@ object Similarity {
     * reference in `SimilarityReference` (LshExpressionsSpec) and to the
     * DuckDB oracle arithmetic. */
   def cosine(a: Column, b: Column): Column =
-    graft.functions.LshFunctions.cosineSim(a, b)
+    Natives.cosineSim(Seq(a, b))
 
   /** The L independent nBits-bit random-hyperplane signatures of a vector
     * as one array (posexplode to (table_idx, bucket)): bit p of table t is
@@ -39,7 +40,7 @@ object Similarity {
     * matrix, bit-identical to the declarative reference in
     * `SimilarityReference` (LshExpressionsSpec). */
   def signatures(vec: Column, nBits: Int, nTables: Int): Column =
-    graft.functions.LshFunctions.hyperplaneSigs(vec, nBits, nTables)
+    Natives.hyperplaneSigs(Seq(vec), nBits, nTables)
 
   /** Bucket-occupancy sizing: nBits = ceil(log2(n / targetOccupancy)), so
     * the expected bucket population stays ~constant as the corpus grows

@@ -270,7 +270,7 @@ object TextAnalysis {
       s"minFreq=$minFreq over n=$n tokens needs a k=$kL summary — raise minFreq")
     val k = kL.toInt
     val summary = tokens
-      .agg(graft.functions.HeavyHitterFunctions.misraGries(col("token"), k).as("mg"))
+      .agg(graft.functions.Natives.misraGries(Seq(col("token")), k).as("mg"))
       .select(explode(col("mg").getField("items")).as("it"))
       .select(col("it").getField("item").as("token"))
     tokens
@@ -297,7 +297,7 @@ object TextAnalysis {
     * hex chars, exactly representable in a double, so the hash order is
     * bit-identical across engines). Reproducible, partitioning-independent,
     * no RNG state — and unlike a per-stratum `row_number` window (which
-    * shuffles the whole stratum into one sort), the bounded `TopKByScore`
+    * shuffles the whole stratum into one sort), the bounded `topk_by_score`
     * aggregate keeps k rows per stratum per partition map-side, so only
     * strata x k x partitions rows cross the exchange. The fixed-quota
     * complement to q34's fixed-RATE md5-prefix sampling.

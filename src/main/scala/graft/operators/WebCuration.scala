@@ -313,7 +313,7 @@ object WebCuration {
     * highest-scoring documents per domain, ties to the SMALLEST id.
     * Output (domain, id, score).
     *
-    * Scale shape: the bounded `TopKByScore` aggregate keeps k rows per
+    * Scale shape: the bounded `topk_by_score` aggregate keeps k rows per
     * domain per partition MAP-side, so only domains x k x partitions rows
     * cross the exchange — a per-domain `row_number` window would shuffle
     * every hot domain's full row set into one partition's sort (the q04
@@ -355,7 +355,7 @@ object WebCuration {
     *
     * Scale shape: one map-side-combined groupBy on (dst, md5(anchor)) —
     * one representative string rides each distinct pair; then the per-dst
-    * top-k is the BOUNDED `TopKByScore` aggregate (k slots per dst per
+    * top-k is the BOUNDED `topk_by_score` aggregate (k slots per dst per
     * partition map-side), never a row_number window over the dst keyspace
     * — a page linked by millions of sites costs k slots, not a
     * single-partition sort. The (score, id) slot carries (cnt, 48-bit
@@ -378,7 +378,7 @@ object WebCuration {
       .groupBy(col("dst"), md5(col("anchor")).as("am"))
       .agg(count(lit(1)).as("cnt"), min(col("anchor")).as("anchor"))
       .withColumn("h48", conv(substring(col("am"), 1, 12), 16, 10).cast("long"))
-    // TopKByScore ties break id ASC, and rank wants h48 ASC among equal
+    // topk_by_score ties break id ASC, and rank wants h48 ASC among equal
     // counts — the id slot carries h48 directly (48 bits < 2^53: exact in
     // the double score packing is not even needed; cnt rides the score)
     val picks = counts

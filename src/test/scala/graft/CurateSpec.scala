@@ -103,14 +103,14 @@ class CurateSpec extends AnyFunSuite {
   }
 
   test("packing is per-language monotone with budget-sized pack ids") {
-    val out = Curate.curate(docs, packBudget = 256)
+    val out = Curate.curate(docs)
       .orderBy("detected_lang", "doc_id").collect()
     out.groupBy(_.getString(1)).foreach { case (_, rows) =>
       var prevCum = 0L
       rows.foreach { r =>
         val cum = r.getAs[Long]("cum_tokens")
         assert(cum > prevCum)
-        assert(r.getAs[Long]("pack_id") == (cum - 1) / 256)
+        assert(r.getAs[Long]("pack_id") == (cum - 1) / 512)
         prevCum = cum
       }
     }
@@ -123,9 +123,9 @@ class CurateSpec extends AnyFunSuite {
   }
 
   test("sharded packing: same survivor set, budgets hold per pack, globally unique pack ids") {
-    val budget = 256
-    val plain = Curate.curate(docs, packBudget = budget).cache()
-    val sharded = Curate.curate(docs, packBudget = budget, packShards = 8).cache()
+    val budget = 512
+    val plain = Curate.curate(docs).cache()
+    val sharded = Curate.curate(docs, packShards = 8).cache()
 
     // identical survivor set — sharding only changes pack assignment
     assert(plain.select("doc_id").collect().map(_.getLong(0)).toSet ==
@@ -156,8 +156,7 @@ class CurateSpec extends AnyFunSuite {
     }
 
     // deterministic under repartitioning too
-    def run(parts: Int) = Curate.curate(docs.repartition(parts), packBudget = budget,
-        packShards = 8)
+    def run(parts: Int) = Curate.curate(docs.repartition(parts), packShards = 8)
       .orderBy("detected_lang", "doc_id").collect().map(_.toString).toSeq
     assert(run(2) == run(11))
     plain.unpersist(); sharded.unpersist()

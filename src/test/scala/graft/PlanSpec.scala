@@ -267,10 +267,12 @@ class PlanSpec extends AnyFunSuite {
     val top1 = p1.linesIterator.next()
     assert(top1.startsWith("*(1) Project [") && top1.contains("SketchKernel.fingerprint64"),
       p1.take(400))
-    val p2 = emb.select(graft.functions.LshFunctions.hyperplaneSigs(col("embedding"), 8, 2),
-        graft.functions.LshFunctions.cosineSim(col("embedding"), col("embedding")))
+    val p2 = emb.select(graft.operators.Similarity.signatures(col("embedding"), 8, 2),
+        graft.operators.Similarity.cosine(col("embedding"), col("embedding")))
       .queryExecution.executedPlan.toString
-    assert(p2.linesIterator.next().startsWith("*(1) Project [hyperplane_sigs"), p2.take(400))
+    val top2 = p2.linesIterator.next()
+    assert(top2.startsWith("*(1) Project [") && top2.contains("LshKernel.signatures") &&
+      top2.contains("CosineKernel.cosine"), p2.take(400))
   }
 
   test("AQE splits a skewed pair-join partition (skew=true in the final adaptive plan)") {

@@ -15,7 +15,7 @@ class BloomFilterSpec extends AnyFunSuite {
 
   private val members = (1 to 2000).map(i => s"key-$i")
   private def build(df: org.apache.spark.sql.DataFrame, numBits: Int, k: Int): Array[Byte] =
-    df.agg(BloomFunctions.bloomBuild(col("v"), numBits, k)).head().getAs[Array[Byte]](0)
+    df.agg(Natives.bloomBuild(Seq(col("v")), numBits, k)).head().getAs[Array[Byte]](0)
 
   test("no false negatives: every inserted key probes true") {
     val (numBits, k) = BloomFunctions.shape(members.size.toLong, 10)
@@ -77,7 +77,7 @@ class BloomFilterSpec extends AnyFunSuite {
     val benchSh = graft.operators.Decontaminate
       .benchmarkShingles(docs.where($"id" === 1L), "id", "text", w)
     val (numBits, k) = BloomFunctions.shape(benchSh.count(), 12)
-    val ser = benchSh.agg(BloomFunctions.bloomBuild(col("sh"), numBits, k))
+    val ser = benchSh.agg(Natives.bloomBuild(Seq(col("sh")), numBits, k))
       .head().getAs[Array[Byte]](0)
     val got = docs.where($"text".isNotNull)
       .select($"id", BloomFunctions.bloomShingleHits($"text", lit(ser), w).as("p"))

@@ -45,7 +45,7 @@ class HeavyHittersSpec extends AnyFunSuite {
     val tokens = docs.select(explode(split(col("text"), " ")).as("token"))
     val n = tokens.count()
     val k = 64
-    val row = tokens.agg(HeavyHitterFunctions.misraGries(col("token"), k).as("mg"))
+    val row = tokens.agg(Natives.misraGries(Seq(col("token")), k).as("mg"))
       .select(col("mg.n"), col("mg.items")).head()
     assert(row.getLong(0) == n)
     val cands = row.getSeq[org.apache.spark.sql.Row](1).map(_.getString(0)).toSet
@@ -54,6 +54,19 @@ class HeavyHittersSpec extends AnyFunSuite {
       .where(col("count") > n.toDouble / (k + 1))
       .collect().map(_.getString(0)).toSet
     assert(qualifying.subsetOf(cands), (qualifying -- cands).mkString(","))
+  }
+
+  test("misra_gries breaks count ties in Spark's string order (code points, not UTF-16 units)") {
+    GraftFunctions.register(spark)
+    val privateUse = "\uE000"
+    val emoji = new String(Character.toChars(0x1F600)) // a surrogate pair in UTF-16
+    Seq("x", emoji, "x", privateUse).toDF("t").createOrReplaceTempView("hh_ties")
+    val sparkOrder = spark.sql("SELECT DISTINCT t FROM hh_ties WHERE t <> 'x' ORDER BY t")
+      .collect().map(_.getString(0)).toSeq
+    assert(sparkOrder == Seq(privateUse, emoji))
+    val items = spark.sql("SELECT misra_gries(t, 8).items.item FROM hh_ties").head()
+      .getSeq[String](0)
+    assert(items == "x" +: sparkOrder)
   }
 
   test("heavyHitterTokens == exact group-by-having, partitioning-independent") {

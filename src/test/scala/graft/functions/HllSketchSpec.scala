@@ -3,7 +3,6 @@ package graft.functions
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.SparkTestBase
 
 /** Property-style gate for the HLL aggregate: it is approximate vs the
@@ -15,7 +14,7 @@ class HllSketchSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def hllDistinct(item: Column, p: Int): Column =
-    ColumnBridge.column(HllDistinct(ColumnBridge.expression(item), p).toAggregateExpression())
+    Natives.hllDistinct(Seq(item), p)
 
   private val P = 12
   // standard error 1.04/sqrt(m); allow 4 sigma before failing the gate

@@ -68,6 +68,6 @@ class LshExpressionsSpec extends AnyFunSuite {
     val p = emb.select(Similarity.signatures(col("embedding"), 8, 4).as("s"))
       .queryExecution.executedPlan.toString
     assert(!p.contains("ScalaUDF"), p.take(1500))
-    assert(p.contains("hyperplane_sigs"), p.take(1500))
+    assert(p.contains("LshKernel.signatures("), p.take(1500))
   }
 }

@@ -10,7 +10,8 @@ import graft.sources.CrawlCorpus
 /** Every native scalar kernel in [[Natives]], called from SQL, returns the
   * same rows compiled (whole-stage codegen, no interpreted fallback) and
   * interpreted (no codegen at all), with the pinned result type and
-  * nullability: null in gives null out, non-null in gives non-null out. */
+  * nullability: null in gives null out, non-null in gives non-null out
+  * unless the entry declares a nullable result. */
 class NativeParitySpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   private val sf = "/root/testdata/sf0.001"
@@ -77,7 +78,12 @@ class NativeParitySpec extends AnyFunSuite {
       Seq("bloom", "md5(token_chunks(text, 5, 1)[0].chunk)"), Nil, BooleanType),
     "bloom_shingle_hits" -> Case(s"$Docs CROSS JOIN np_bloom", Seq("text", "bloom"), Seq(5),
       struct(("n_shingles", IntegerType, false),
-        ("hits", ArrayType(StringType, containsNull = false), false))))
+        ("hits", ArrayType(StringType, containsNull = false), false))),
+    // a float and a double vector
+    "cosine_sim" -> Case("np_emb",
+      Seq("embedding", "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> x * x - 0.1D)"), Nil,
+      DoubleType),
+    "hyperplane_sigs" -> Case("np_emb", Seq("embedding"), Seq(8, 2), Longs))
 
   /** A non-null value of each argument type, to build non-null inputs. */
   private def nonNull(t: DataType): String = t match {
@@ -85,6 +91,7 @@ class NativeParitySpec extends AnyFunSuite {
     case BinaryType => "X''"
     case ArrayType(LongType, _) => "array(0L)"
     case ArrayType(IntegerType, _) => "array(0)"
+    case ArrayType(DoubleType, _) => "array(0D)"
   }
 
   private val Compiled = Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
@@ -132,10 +139,10 @@ class NativeParitySpec extends AnyFunSuite {
   }
 
   test("every native scalar kernel has a parity case") {
-    assert(cases.keySet == Natives.all.map(_.name).toSet)
+    assert(cases.keySet == Natives.scalars.map(_.name).toSet)
   }
 
-  Natives.all.foreach { fn =>
+  Natives.scalars.foreach { fn =>
     test(s"${fn.name}: compiled == interpreted; type and nullability as declared") {
       views
       val c = cases(fn.name)
@@ -150,21 +157,30 @@ class NativeParitySpec extends AnyFunSuite {
       assert(anyValue, "every value is null")
       assert(schema("v").dataType == c.dataType && schema("nn").dataType == c.dataType, schema)
       assert(schema("v").nullable, "a nullable input must give a nullable result")
-      assert(!schema("nn").nullable, "non-null inputs must give a non-null result")
+      assert(schema("nn").nullable == fn.nullable,
+        "non-null inputs must give a non-null result unless the entry declares it nullable")
     }
   }
 
-  // the two expressions outside the table keep hand-written codegen: check
-  // it the same way, over float and double element types
+  // float input must equal its exact double cast; a ragged pair gives null
   test("cosine_sim and hyperplane_sigs: compiled == interpreted for float and double vectors") {
     views
-    val (anyValue, _, schema) = parity(
+    val query =
       """SELECT cosine_sim(embedding, transform(embedding, x -> x * x - 0.1F)) AS cf,
-        |       cosine_sim(CAST(embedding AS ARRAY<DOUBLE>), embedding) AS cd,
+        |       cosine_sim(CAST(embedding AS ARRAY<DOUBLE>),
+        |         CAST(transform(embedding, x -> x * x - 0.1F) AS ARRAY<DOUBLE>)) AS cd,
         |       hyperplane_sigs(embedding, 8, 2) AS hf,
-        |       hyperplane_sigs(CAST(embedding AS ARRAY<DOUBLE>), 8, 2) AS hd
-        |FROM np_emb""".stripMargin)
+        |       hyperplane_sigs(CAST(embedding AS ARRAY<DOUBLE>), 8, 2) AS hd,
+        |       cosine_sim(embedding, slice(embedding, 1, 3)) AS ragged
+        |FROM np_emb""".stripMargin
+    val (anyValue, _, schema) = parity(query)
     assert(anyValue)
-    assert(schema.map(_.dataType) == Seq(DoubleType, DoubleType, Longs, Longs), schema)
+    assert(schema.map(_.dataType) == Seq(DoubleType, DoubleType, Longs, Longs, DoubleType), schema)
+    val rows = spark.sql(s"$query WHERE embedding IS NOT NULL").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(norm(r.get(0)) == norm(r.get(1)) && r.getSeq[Long](2) == r.getSeq[Long](3), r)
+      assert(r.isNullAt(4), r)
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.functions
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.SparkTestBase
 
 /** Property gate for the quantile sketch (approximate by nature, no
@@ -14,14 +13,11 @@ class QuantileSketchSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
-  private def approxQuantiles(v: Column, k: Int,
-                              ps: Seq[Double] = Seq(0.5, 0.9, 0.99)): Column =
-    ColumnBridge.column(ApproxQuantiles(ColumnBridge.expression(v), k, ps).toAggregateExpression())
-  private def approxRanks(v: Column, k: Int, probes: Seq[Long]): Column =
-    ColumnBridge.column(ApproxRanks(ColumnBridge.expression(v), k, probes).toAggregateExpression())
+  private def approxQuantiles(v: Column, k: Int): Column = Natives.approxQuantiles(Seq(v), k)
+  private def approxRank(v: Column, k: Int, probe: Long): Column =
+    Natives.approxRanks(Seq(v), k, probe)
 
   private val K = 256
-  private val Ps = Seq(0.1, 0.5, 0.9, 0.99)
   // normalized rank error bound for k=256 at these sizes (generous
   // multiple of the observed error; the theoretical bound is looser)
   private val RankTol = 0.02
@@ -45,18 +41,23 @@ class QuantileSketchSpec extends AnyFunSuite {
   }
 
   private def checkErrors(values: Seq[Long], parts: Int, tag: String): Unit = {
-    val out = values.toDF("v").repartition(parts)
-      .agg(approxQuantiles(col("v"), K, Ps).as("q"))
-      .select("q.*").head()
     val sorted = values.sorted.toArray
     val n = sorted.length.toLong
-    assert(out.getLong(0) == n, s"$tag: n")
-    Ps.zipWithIndex.foreach { case (p, i) =>
-      val est = out.getLong(i + 1)
+    def check(p: Double, est: Long): Unit = {
       val target = math.ceil(p * n).toLong
       val err = rankError(sorted, est, target).toDouble / n
       assert(err <= RankTol, s"$tag p=$p est=$est target=$target err=$err")
     }
+    val out = values.toDF("v").repartition(parts)
+      .agg(approxQuantiles(col("v"), K).as("q"))
+      .select("q.*").head()
+    assert(out.getLong(0) == n, s"$tag: n")
+    QuantileBuffer.Ps.zipWithIndex.foreach { case (p, i) => check(p, out.getLong(i + 1)) }
+    // p10 is not in the aggregate's result: ask a buffer merged from
+    // `parts` partial summaries
+    val bufs = Array.fill(parts)(new QuantileBuffer(K))
+    values.zipWithIndex.foreach { case (v, i) => bufs(i % parts).insert(v) }
+    check(0.1, bufs.reduce { (a, b) => a.mergeFrom(b); a }.quantiles(Seq(0.1)).head)
   }
 
   test("rank error within bound: uniform, skewed, constant-heavy, across partitionings") {
@@ -72,21 +73,24 @@ class QuantileSketchSpec extends AnyFunSuite {
 
   test("small inputs are EXACT (everything fits in level 0 buffers)") {
     val vs = Seq(5L, 1L, 9L, 3L, 7L)
-    val out = Seq(5L, 1L, 9L, 3L, 7L).toDF("v").coalesce(1)
-      .agg(approxQuantiles(col("v"), K, Seq(0.5, 1.0)).as("q"))
+    val out = vs.toDF("v").coalesce(1)
+      .agg(approxQuantiles(col("v"), K).as("q"))
       .select("q.*").head()
     assert(out.getLong(0) == 5L)
     assert(out.getLong(1) == 5L) // p50 of {1,3,5,7,9}
-    assert(out.getLong(2) == 9L)
+    assert(out.getLong(2) == 9L && out.getLong(3) == 9L)
+    val buf = new QuantileBuffer(K)
+    vs.foreach(buf.insert(_))
+    assert(buf.quantiles(Seq(0.2, 0.5, 1.0)).toSeq == Seq(1L, 5L, 9L))
   }
 
   test("nulls ignored; empty input reports n=0") {
     val out = Seq(Some(1L), None, Some(3L)).toDF("v")
-      .agg(approxQuantiles(col("v"), K, Seq(1.0)).as("q"))
+      .agg(approxQuantiles(col("v"), K).as("q"))
       .select("q.*").head()
-    assert(out.getLong(0) == 2L && out.getLong(1) == 3L)
+    assert(out.getLong(0) == 2L && out.getLong(3) == 3L)
     val empty = Seq.empty[Long].toDF("v")
-      .agg(approxQuantiles(col("v"), K, Seq(0.5)).as("q"))
+      .agg(approxQuantiles(col("v"), K).as("q"))
       .select("q.*").head()
     assert(empty.getLong(0) == 0L)
   }
@@ -94,7 +98,7 @@ class QuantileSketchSpec extends AnyFunSuite {
   test("grouped usage tracks per-group exact quantiles on the documents table") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val approx = docs.groupBy("lang")
-      .agg(approxQuantiles(col("n_chars"), K, Seq(0.5)).as("q"))
+      .agg(approxQuantiles(col("n_chars"), K).as("q"))
       .select(col("lang"), col("q.n"), col("q.p50"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val exact = graft.operators.Stats.exactQuantiles(docs, "lang", "n_chars", Seq(0.5))
@@ -139,31 +143,33 @@ class QuantileSketchSpec extends AnyFunSuite {
       val n = sorted.length.toLong
       val probes = Seq(sorted(0) - 1, sorted(n.toInt / 10), sorted(n.toInt / 2),
         sorted(n.toInt - n.toInt / 100), sorted.last + 1).distinct.sorted
-      val out = values.toDF("v").repartition(parts)
-        .agg(approxRanks(col("v"), K, probes).as("r"))
-        .select("r.*").head()
-      assert(out.getLong(0) == n)
-      probes.zipWithIndex.foreach { case (x, i) =>
-        val est = out.getLong(i + 1)
+      // one approx_ranks column per probe, each struct(n, r_<probe>)
+      val cols = probes.map(x => approxRank(col("v"), K, x))
+      val out = values.toDF("v").repartition(parts).agg(cols.head, cols.tail: _*).head()
+      val ests = probes.indices.map { i =>
+        assert(out.getStruct(i).getLong(0) == n)
+        out.getStruct(i).getLong(1)
+      }
+      probes.zip(ests).foreach { case (x, est) =>
         val err = math.abs(est - exactRank(sorted, x)).toDouble / n
         assert(err <= RankTol, s"$tag/$parts probe=$x est=$est exact=${exactRank(sorted, x)}")
       }
       // CDF points are monotone in the probe by construction
-      val ests = probes.indices.map(i => out.getLong(i + 1))
       assert(ests == ests.sorted)
       // below-min probes report 0, above-max report n (exactly)
-      assert(out.getLong(1) == 0L && ests.last == n)
+      assert(ests.head == 0L && ests.last == n)
     }
   }
 
   test("approx_ranks: small inputs exact; nulls ignored; SQL form matches the API") {
     val vs = Seq(5L, 1L, 9L, 3L, 7L)
     val out = vs.toDF("v").coalesce(1)
-      .agg(approxRanks(col("v"), K, Seq(0L, 3L, 9L)).as("r"))
-      .select("r.*").head()
-    assert(out.toSeq == Seq(5L, 0L, 2L, 5L))
+      .agg(approxRank(col("v"), K, 0L), approxRank(col("v"), K, 3L), approxRank(col("v"), K, 9L))
+      .head()
+    assert((0 to 2).map(i => out.getStruct(i).toSeq) ==
+      Seq(Seq(5L, 0L), Seq(5L, 2L), Seq(5L, 5L)))
     val withNulls = Seq(Some(1L), None, Some(3L)).toDF("v")
-      .agg(approxRanks(col("v"), K, Seq(2L)).as("r"))
+      .agg(approxRank(col("v"), K, 2L).as("r"))
       .select("r.*").head()
     assert(withNulls.toSeq == Seq(2L, 1L))
     GraftFunctions.register(spark)
@@ -171,26 +177,20 @@ class QuantileSketchSpec extends AnyFunSuite {
     val viaSql = spark.sql(s"SELECT approx_ranks(v, $K, 5000L) AS r FROM ar_items")
       .select("r.*").head()
     val viaApi = (1L to 9999L).toDF("v")
-      .agg(approxRanks(col("v"), K, Seq(5000L)).as("r"))
+      .agg(approxRank(col("v"), K, 5000L).as("r"))
       .select("r.*").head()
     assert(viaSql.toSeq == viaApi.toSeq)
     // negative probes name with 'm' (no bare minus in a struct field)
     val neg = Seq(-5L, 0L, 5L).toDF("v")
-      .agg(approxRanks(col("v"), K, Seq(-5L)).as("r"))
+      .agg(approxRank(col("v"), K, -5L).as("r"))
       .select("r.*")
     assert(neg.columns.toSeq == Seq("n", "r_m5"))
     assert(neg.head().toSeq == Seq(3L, 1L))
-    intercept[IllegalArgumentException] {
-      Seq(1L).toDF("v").agg(approxRanks(col("v"), K, Seq(3L, 1L))).head()
-    }
   }
 
-  test("k bounds and p bounds are require-guarded") {
+  test("k bounds are require-guarded") {
     intercept[IllegalArgumentException] {
       Seq(1L).toDF("v").agg(approxQuantiles(col("v"), 4)).head()
-    }
-    intercept[IllegalArgumentException] {
-      Seq(1L).toDF("v").agg(approxQuantiles(col("v"), K, Seq(1.5))).head()
     }
   }
 }

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """List every definition in src/main that no production code reaches.
 
-The audited definitions are every `def`, every `val` that is a member of an
-`object`, and every `object` nested in another object.
+The audited definitions are every `def`, `class` and `trait` (at any
+nesting level), every `val` that is a member of an `object`, and every
+`object` nested in another object.
 
 Run from the repository root, with no arguments:
 
@@ -12,11 +13,11 @@ Reaching code is every non-comment line of src/main plus perfbench/src (the
 benchmark calls into the library). A definition is reached when reaching
 code outside its own body (so plain recursion does not count) names it:
 
-- a member of an `object Obj` (a def, a val or a nested object) by a
-  qualified reference `Obj.name`, or by the bare name in its own file or in
-  a file that imports `Obj._` / `Obj.name`;
-- any other def (a class, trait or anonymous-class member, or a local def)
-  by its bare name anywhere;
+- a member of an `object Obj` (a def, a val, a class, a trait or a nested
+  object) by a qualified reference `Obj.name`, or by the bare name in its
+  own file or in a file that imports `Obj._` / `Obj.name`;
+- any other definition (a top-level class or trait, a class, trait or
+  anonymous-class member, or a local def) by its bare name anywhere;
 - a member of `Obj` by a string literal whose whole text is its name, in a
   file that takes `Obj.getClass` or `classOf[Obj]` (a kernel method invoked
   through reflection, e.g. `NativeFn(..., SketchKernel.getClass, "simhash")`).
@@ -48,9 +49,15 @@ KEEP = {
         "the smoke hook that an outside caller invokes by name with a live session",
     "ParquetManifestTable.readLatest":
         "reads back the replace-style tables that graft.Extract writes",
+    "GraftExtensions":
+        "Spark loads it by class name from the spark.sql.extensions setting",
+    "NativeAgg.writeReplace":
+        "Java serialization calls it when an aggregate's entry ships to executors",
+    "ByName.readResolve":
+        "Java serialization calls it when an aggregate's entry is read on an executor",
 }
 
-DEF_RE = re.compile(r"^(\s*)((?:[\w\[\]]+\s+)*)(def|val|object)\s+([A-Za-z_][A-Za-z0-9_]*)")
+DEF_RE = re.compile(r"^(\s*)((?:[\w\[\]]+\s+)*)(def|val|object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)")
 IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 ALWAYS_REACHED = {"main", "apply", "unapply"}
 # the keyword nearest before a `{` says what the brace opens
@@ -261,7 +268,7 @@ def main():
                 continue
             kind, owner = src.scope[k] or (None, None)
             # vals and objects are audited only as members of an object
-            if m.group(3) != "def" and kind != "object":
+            if m.group(3) in ("val", "object") and kind != "object":
                 continue
             groups.setdefault((src.path, kind, owner, m.group(4)), []).append(
                 (k, body_end(src.lines, k, len(m.group(1)))))
