@@ -331,9 +331,9 @@ object SparkEntry {
     // a running token sum per language (greedy sequential packing).
     // NOTE: per-language single window — fine for the oracle demo; at corpus
     // scale one giant language serializes into one partition's window sort.
-    // The pipeline stage is Curate.curate(packShards > 1) (salted two-level
-    // packing through TextAnalysis.packShardedOn, sort parallelism = langs x
-    // shards).
+    // Curate.curate takes a packShards > 1 for salted two-level packing
+    // (TextAnalysis.packShardedOn, sort parallelism = langs x shards), but
+    // no production caller passes one yet.
     "q35_token_packing" -> ((s, dir) =>
       withPackAssignment(
         t(s, dir, "documents")

@@ -48,6 +48,21 @@ private[graft] object Exec {
     (ck, row)
   }
 
+  /** `value` where `ok` holds; on a row where it does not, the query fails
+    * with the concatenated `message` (values shown through [[shown]]),
+    * cast to `dataType`. */
+  def orRaise(ok: Column, value: Column, dataType: String, message: Column*): Column =
+    when(ok, value).otherwise(raise_error(concat(message: _*)).cast(dataType))
+
+  /** The loud guard: true where `ok` holds, and the query fails with the
+    * concatenated `message` on the first row where it does not. A Filter on
+    * it stops the job instead of dropping the row, and Catalyst never
+    * prunes a Filter, whatever the consumer selects. */
+  def check(ok: Column, message: Column*): Column = orRaise(ok, lit(true), "boolean", message: _*)
+
+  /** `c` as message text: its string form, or "null". */
+  def shown(c: Column): Column = coalesce(c.cast("string"), lit("null"))
+
   /** One row per DISTINCT id of `df`, raise_error'ing loudly (naming the
     * id and operator) when any id appears more than once — the shared
     * anchor for per-document operators whose outputs would otherwise
@@ -58,10 +73,8 @@ private[graft] object Exec {
   def checkedIdAnchor(df: DataFrame, idCol: String, op: String): DataFrame =
     df.select(col(idCol).as("id")).groupBy(col("id"))
       .agg(count(lit(1)).as("__copies"))
-      .where(when(col("__copies") === 1, lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"$op: duplicate input id (ids must be unique): "),
-          coalesce(col("id").cast("string"), lit("null")))).cast("boolean")))
+      .where(check(col("__copies") === 1,
+        lit(s"$op: duplicate input id (ids must be unique): "), shown(col("id"))))
       .select(col("id"))
 
   /** NULL-SAFE left join of a per-id result frame onto the checked id

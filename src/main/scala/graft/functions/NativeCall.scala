@@ -39,20 +39,20 @@ sealed trait Native {
   * method returns Catalyst values (`ArrayData`, `InternalRow`,
   * `UTF8String`, primitives) of `dataType`; a non-null input row gives a
   * non-null result unless the entry is `nullable` (the method then returns
-  * a boxed value or null). With `widenInputs` the columns are cast to
-  * `inputTypes` where the expression is built, in SQL and in the DataFrame
-  * handle alike; every other entry takes exactly its `inputTypes`. */
+  * a boxed value or null). Each column must have its `inputTypes` type or,
+  * when the entry lists `widenedFrom` types, one of those, which analysis
+  * accepts and the kernel call casts to `inputTypes`; any other type fails
+  * analysis. */
 final case class NativeFn(name: String, kernel: Class[_], method: String,
     dataType: DataType, inputTypes: Seq[DataType], nInts: Int = 0,
     check: Seq[Int] => Unit = _ => (), nullable: Boolean = false,
-    widenInputs: Boolean = false) extends Native {
+    widenedFrom: Seq[DataType] = Nil) extends Native {
 
   def paramTypes: Seq[DataType] = Seq.fill(nInts)(IntegerType)
 
   def expr(cols: Seq[Expression], ints: Seq[Int]): Expression = {
     check(ints)
-    NativeCall(this,
-      if (widenInputs) cols.zip(inputTypes).map { case (c, t) => Cast(c, t) } else cols, ints)
+    NativeCall(this, cols, ints)
   }
 
   protected def make(cols: Seq[Expression], params: Seq[Long]): Expression =
@@ -72,9 +72,16 @@ case class NativeCall(fn: NativeFn, children: Seq[Expression], params: Seq[Int])
   extends RuntimeReplaceable with ExpectsInputTypes {
   override def prettyName: String = fn.name
   override def dataType: DataType = fn.dataType
-  override def inputTypes: Seq[DataType] = fn.inputTypes
-  override lazy val replacement: Expression = StaticInvoke(fn.kernel, fn.dataType, fn.method,
-    children ++ params.map(Literal(_)), propagateNull = true, returnNullable = fn.nullable)
+  override def inputTypes: Seq[InputType] =
+    if (fn.widenedFrom.isEmpty) fn.inputTypes
+    else fn.inputTypes.map(t => ColumnBridge.anyOf(t +: fn.widenedFrom: _*))
+  override lazy val replacement: Expression = {
+    val args =
+      if (fn.widenedFrom.isEmpty) children
+      else children.zip(fn.inputTypes).map { case (c, t) => Cast(c, t) }
+    StaticInvoke(fn.kernel, fn.dataType, fn.method, args ++ params.map(Literal(_)),
+      propagateNull = true, returnNullable = fn.nullable)
+  }
   override protected def stringArgs: Iterator[Any] = (children ++ params).iterator
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): NativeCall =
     copy(children = newChildren)
@@ -233,10 +240,11 @@ object Natives {
     Seq(StringType, BinaryType), 1, widthAtLeast1("bloom_shingle_hits"))
 
   // float vectors widen to double exactly, so the kernels read one element type
+  private val Floats = Seq(ArrayType(FloatType))
   val cosineSim = NativeFn("cosine_sim", Cosine, "cosine", DoubleType, Seq(Doubles, Doubles),
-    nullable = true, widenInputs = true)
+    nullable = true, widenedFrom = Floats)
   val hyperplaneSigs = NativeFn("hyperplane_sigs", Lsh, "signatures", Longs, Seq(Doubles), 2,
-    widenInputs = true)
+    widenedFrom = Floats)
 
   val scalars: Seq[NativeFn] = Seq(simhash64, simhashMd5, minhashSig, minhashSigFromHashes,
     shingleHashes, fingerprint64, fingerprintMd5, tokenChunks, dedupLines, dedupSpans,

@@ -30,6 +30,7 @@ object Curate {
   private val MinJaccard = 0.9
   private val ShingleWords = 3
   private val BoilerplateChunk = 8
+  private val BoilerplateMinDocs = 30L
   private val DecontaminateW = 5
   private val DecontaminateMinOverlap = 3L
   private val PackBudget = 512
@@ -40,7 +41,7 @@ object Curate {
     * Rows with a null text evaluate null through the gate predicates and
     * are therefore dropped — the gate semantics, not an accident. */
   def curate(docs: DataFrame, packShards: Int = 1,
-             stripBoilerplate: Boolean = false, boilerplateMinDocs: Long = 30L,
+             stripBoilerplate: Boolean = false,
              decontaminateAgainst: DataFrame = null,
              dedupSpansW: Int = 0,
              qualityReps: Boolean = false,
@@ -84,7 +85,7 @@ object Curate {
     // Docs whose every surviving line was boilerplate get NULL text and
     // fall out at the gate (the documented gate-null semantics).
     //
-    // boilerplateMinDocs defaults to 30, not 2: a "template" line is one
+    // BoilerplateMinDocs is 30, not 2: a "template" line is one
     // recurring across MANY distinct post-dedup documents (nav bars,
     // cookie banners), and the threshold doubles as the guard for NEAR-dup
     // clusters — two 97%-similar pages share most of their lines, and at
@@ -97,7 +98,7 @@ object Curate {
         val keep = docs0.groupBy(md5(col("text")).as("__md5"))
           .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
         WebCuration.stripBoilerplate(docs0.join(keep, Seq("doc_id"), "left_semi"),
-            "doc_id", "text", chunk = BoilerplateChunk, minDocs = boilerplateMinDocs)
+            "doc_id", "text", chunk = BoilerplateChunk, minDocs = BoilerplateMinDocs)
           .select(col("id").as("doc_id"), col("clean_text").as("text"))
       }
 

@@ -99,36 +99,55 @@ object Dedup {
     (under, starred)
   }
 
-  /** Banded-LSH candidate pairs (id_a < id_b) over an (id, sig) minhash
-    * table — the shared candidate generator for the exact-verified dedup
-    * operators. Only (band_idx, band_hash, id) triples cross the self-join
-    * exchange: 3 bigints per (row, band), never signatures, shingles, or
-    * text. Over-popular (band_idx, band_hash) blocks — boilerplate pages
-    * whose shared band would make the pair count quadratic — degrade to
-    * LINEAR star candidates against the block's min id (`splitBlocks`; ON
-    * by default, `maxBlock = 0` disables). */
-  private[operators] def candidatesFromSigs(sigs: DataFrame, k: Int, bands: Int,
-                                            maxBlock: Long): DataFrame = {
-    val banded = sigs
-      .select(col("id"), posexplode(lshBands(col("sig"), k, bands)).as(Seq("band_idx", "band_hash")))
-    val keys = Seq("band_idx", "band_hash")
-    def selfJoinPairs(rows: DataFrame): DataFrame = {
-      val a = rows.select(col("band_idx"), col("band_hash"), col("id").as("id_a"))
-      val b = rows.select(col("band_idx"), col("band_hash"), col("id").as("id_b"))
+  /** Distinct candidate pairs (id_a < id_b) of the rows sharing a block:
+    * `rows` carries `id` plus the block `keys`, and only those columns
+    * cross the self-join exchange. Over-popular blocks degrade to LINEAR
+    * star candidates against the block's min id ([[splitBlocks]], observed
+    * under `metric`; `maxBlock = 0` disables). The one candidate join
+    * behind the banded-minhash and the embedding-LSH pair miners. */
+  private[operators] def blockPairs(rows: DataFrame, keys: Seq[String],
+                                    maxBlock: Long, metric: String): DataFrame = {
+    def selfJoinPairs(r: DataFrame): DataFrame = {
+      val a = r.select(keys.map(col) :+ col("id").as("id_a"): _*)
+      val b = r.select(keys.map(col) :+ col("id").as("id_b"): _*)
       a.join(b, keys)
         .where(col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b"))
     }
     val pairs =
-      if (maxBlock <= 0) selfJoinPairs(banded)
+      if (maxBlock <= 0) selfJoinPairs(rows)
       else {
-        val (under, starred) = splitBlocks(banded, keys, maxBlock, "minhash_lsh_blocks")
+        val (under, starred) = splitBlocks(rows, keys, maxBlock, metric)
         selfJoinPairs(under).unionByName(
           starred.select(least(col("rep_id"), col("id")).as("id_a"),
             greatest(col("rep_id"), col("id")).as("id_b")))
       }
     pairs.dropDuplicates("id_a", "id_b")
   }
+
+  /** Banded-LSH candidate pairs (id_a < id_b) over an (id, sig) minhash
+    * table — the shared candidate generator for the exact-verified dedup
+    * operators: [[blockPairs]] over (band_idx, band_hash) blocks, so 3
+    * bigints per (row, band) cross the exchange, never signatures,
+    * shingles, or text. */
+  private[operators] def candidatesFromSigs(sigs: DataFrame, k: Int, bands: Int,
+                                            maxBlock: Long): DataFrame =
+    blockPairs(bandRows(sigs, k, bands), BandKeys, maxBlock, "minhash_lsh_blocks")
+
+  private val BandKeys = Seq("band_idx", "band_hash")
+
+  /** One (id, band_idx, band_hash) row per band of each (id, sig) row. */
+  private def bandRows(sigs: DataFrame, k: Int, bands: Int): DataFrame =
+    sigs.select(col("id"), posexplode(lshBands(col("sig"), k, bands)).as(BandKeys))
+
+  /** The n-gram miners' verify tail: the (id_a, id_b, jaccard) of `pairs`
+    * whose shingle hashes `sh_a`, `sh_b` reach `minJaccard`, by the native
+    * sorted-merge jaccard (value-identical to
+    * size(array_intersect)/size(array_union), SketchExpressionsSpec). */
+  private def jaccardAtLeast(pairs: DataFrame, minJaccard: Double): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+        graft.functions.SketchFunctions.jaccardSim(col("sh_a"), col("sh_b")).as("jaccard"))
+      .where(col("jaccard") >= minJaccard)
 
   // ---------- SimHash ----------
 
@@ -393,15 +412,10 @@ object Dedup {
       hashes.select(col("id"),
         graft.functions.SketchFunctions.minhashSigFromHashes(col("hashes"), k).as("sig")),
       k, bands, maxBlock)
-    cand
+    jaccardAtLeast(cand
       .join(hashes.select(col("id").as("id_a"), col("hashes").as("sh_a")), Seq("id_a"))
-      .join(hashes.select(col("id").as("id_b"), col("hashes").as("sh_b")), Seq("id_b"))
-      // native sorted-merge jaccard: value-identical to
-      // size(array_intersect)/size(array_union) (SketchExpressionsSpec
-      // parity) without materializing either intermediate array per pair
-      .select(col("id_a"), col("id_b"),
-        graft.functions.SketchFunctions.jaccardSim(col("sh_a"), col("sh_b")).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
+      .join(hashes.select(col("id").as("id_b"), col("hashes").as("sh_b")), Seq("id_b")),
+      minJaccard)
   }
 
   /** BIPARTITE n-gram Jaccard near-dup pairs between a (large) left
@@ -434,19 +448,16 @@ object Dedup {
                                  shingleWords: Int = 3, minJaccard: Double = 0.5,
                                  k: Int = 64, bands: Int = 16,
                                  maxBlock: Long = DefaultMaxBlock): DataFrame = {
-    val keys = Seq("band_idx", "band_hash")
-    def banded(sigs: DataFrame): DataFrame =
-      sigs.select(col("id"),
-        posexplode(lshBands(col("sig"), k, bands)).as(Seq("band_idx", "band_hash")))
     // the LEFT (corpus) side materializes NOTHING (r6): its banded frame
     // feeds exactly ONE join (unlike the self-join miner, where the sig
     // table feeds both sides), so a checkpoint only adds a corpus-scale
     // write — bands are computed map-side straight off the text, and the
     // verify shingle pass stays map-side too (the documented no-corpus-
     // checkpoint discipline of this miner).
-    val bandedL = banded(
+    val bandedL = bandRows(
       left.select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.minhashSig(col(textCol), shingleWords, k).as("sig")))
+        graft.functions.SketchFunctions.minhashSig(col(textCol), shingleWords, k).as("sig")),
+      k, bands)
     // the RIGHT (benchmark) side materializes ONE (id, hashes) frame: its
     // band signatures derive map-side from the stored distinct hashes
     // (parity-asserted idempotence argument in ngramJaccardPairs), so the
@@ -455,14 +466,14 @@ object Dedup {
     val skR = Exec.checkpoint(
       right.select(col(idCol).as("id"),
         graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes")))
-    val bandedR = banded(skR.select(col("id"),
-      graft.functions.SketchFunctions.minhashSigFromHashes(col("hashes"), k).as("sig")))
+    val bandedR = bandRows(skR.select(col("id"),
+      graft.functions.SketchFunctions.minhashSigFromHashes(col("hashes"), k).as("sig")), k, bands)
     val rightRows =
       if (maxBlock <= 0) bandedR
-      else splitBlocks(bandedR, keys, maxBlock, "bipartite_lsh_blocks")._1
+      else splitBlocks(bandedR, BandKeys, maxBlock, "bipartite_lsh_blocks")._1
     val cand = bandedL
       .select(col("band_idx"), col("band_hash"), col("id").as("id_a"))
-      .join(rightRows.select(col("band_idx"), col("band_hash"), col("id").as("id_b")), keys)
+      .join(rightRows.select(col("band_idx"), col("band_hash"), col("id").as("id_b")), BandKeys)
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
     // the LEFT hash table feeds exactly ONE join-back (contrast the
@@ -478,12 +489,9 @@ object Dedup {
     val shA = left.select(col(idCol).as("__ida"),
       graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("sh_a"))
     val shB = skR.select(col("id").as("__idb"), col("hashes").as("sh_b"))
-    cand
+    jaccardAtLeast(cand
       .join(shA, col("id_a") <=> col("__ida")).drop("__ida")
-      .join(shB, col("id_b") <=> col("__idb")).drop("__idb")
-      .select(col("id_a"), col("id_b"),
-        graft.functions.SketchFunctions.jaccardSim(col("sh_a"), col("sh_b")).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
+      .join(shB, col("id_b") <=> col("__idb")).drop("__idb"), minJaccard)
   }
 
   /** QUALITY-AWARE cluster representative selection — the FineWeb upgrade
@@ -518,13 +526,11 @@ object Dedup {
         col(scoreCol).cast("long").as("score"))
       // a null id/cluster/score would silently vanish in (or
       // nondeterministically lose) the winner join below — fail loudly
-      .where(when(col("id").isNotNull && col("cluster_id").isNotNull &&
-          col("score").isNotNull, lit(true))
-        .otherwise(raise_error(concat(
-          lit("Dedup.clusterRepresentatives: id, cluster and score must be non-null, got id="),
-          coalesce(col("id").cast("string"), lit("null")),
-          lit(" cluster="), coalesce(col("cluster_id").cast("string"), lit("null")),
-          lit(" score="), coalesce(col("score").cast("string"), lit("null")))).cast("boolean")))
+      .where(Exec.check(col("id").isNotNull && col("cluster_id").isNotNull &&
+          col("score").isNotNull,
+        lit("Dedup.clusterRepresentatives: id, cluster and score must be non-null, got id="),
+        Exec.shown(col("id")), lit(" cluster="), Exec.shown(col("cluster_id")),
+        lit(" score="), Exec.shown(col("score"))))
       .join(Exec.checkedIdAnchor(df, idCol, "Dedup.clusterRepresentatives"),
         Seq("id"), "left_semi")
     val winners = base.groupBy(col("cluster_id"))

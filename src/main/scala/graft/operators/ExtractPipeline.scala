@@ -38,7 +38,8 @@ final case class ExtractedDoc(
       * the default `includeEmbedded = false`): embedded files are the one
       * column that can dwarf the document itself, and the md5 manifest
       * already pins their identity. Under `includeEmbedded = true` a per-doc
-      * byte budget (`maxEmbeddedBytes`) nulls individual oversized entries
+      * byte budget (`DefaultMaxEmbeddedBytes`; `extractOne` takes another)
+      * nulls individual oversized entries
       * (alignment preserved) so one pathological attachment cannot blow the
       * row size — a nulled entry is detectable as md5 present, data null. */
     embedded_data: Seq[Array[Byte]],
@@ -91,14 +92,12 @@ object ExtractPipeline {
 
   private def md5hex(b: Array[Byte]): String = Crypto.hex(Crypto.md5(b))
 
-  /** Extract a single row. Pure; never throws. */
-  def extractOne(row: CrawlRow, password: String): ExtractedDoc =
-    extractOne(row, password, new HtmlExtract.Scratch)
-
   /** Default per-document embedded-payload budget (bytes) under
     * `includeEmbedded = true`. */
   val DefaultMaxEmbeddedBytes: Long = 64L * 1024 * 1024
 
+  /** Extract a single row; `scratch` is reused across the rows of one
+    * thread. Pure; never throws. */
   def extractOne(row: CrawlRow, password: String, scratch: HtmlExtract.Scratch,
                  includeRaw: Boolean = false, objectStreams: Boolean = false,
                  includeEmbedded: Boolean = false,
@@ -177,13 +176,12 @@ object ExtractPipeline {
   private def extractPartition[T](rows: Iterator[T], row: T => CrawlRow, password: T => String,
                                   defaultPassword: String, includeRaw: Boolean,
                                   objectStreams: Boolean, includeEmbedded: Boolean,
-                                  maxEmbeddedBytes: Long,
                                   metrics: CollectionAccumulator[Row]): Iterator[ExtractedDoc] = {
     val scratch = new HtmlExtract.Scratch
     val docs = rows.map { t =>
       val pw = password(t)
       extractOne(row(t), if (pw == null) defaultPassword else pw, scratch, includeRaw,
-        objectStreams, includeEmbedded, maxEmbeddedBytes)
+        objectStreams, includeEmbedded)
     }
     if (metrics == null) docs
     else new Iterator[ExtractedDoc] {
@@ -210,28 +208,10 @@ object ExtractPipeline {
                   includeRaw: Boolean = false,
                   objectStreams: Boolean = false,
                   includeEmbedded: Boolean = false,
-                  maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes,
                   metrics: CollectionAccumulator[Row] = null): Dataset[ExtractedDoc] = {
     import ds.sparkSession.implicits._
     ds.mapPartitions(extractPartition(_, identity[CrawlRow], (_: CrawlRow) => password, password,
-      includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes, metrics))
-  }
-
-  /** Per-document password variant: the reference takes `-p` per invocation
-    * (main.go:30-36); at corpus scale the password rides with the row. A
-    * null password falls back to the corpus-wide default. Carries the same
-    * option surface as `extractDocs` — encrypted corpora are the most
-    * likely to be post-1.5 PDFs wanting /ObjStm expansion. */
-  def extractDocsWithPasswords(ds: Dataset[(CrawlRow, String)],
-                               defaultPassword: String = "",
-                               includeRaw: Boolean = false,
-                               objectStreams: Boolean = false,
-                               includeEmbedded: Boolean = false,
-                               maxEmbeddedBytes: Long = DefaultMaxEmbeddedBytes,
-                               metrics: CollectionAccumulator[Row] = null): Dataset[ExtractedDoc] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions(extractPartition(_, (_: (CrawlRow, String))._1, (_: (CrawlRow, String))._2,
-      defaultPassword, includeRaw, objectStreams, includeEmbedded, maxEmbeddedBytes, metrics))
+      includeRaw, objectStreams, includeEmbedded, metrics))
   }
 
   /** Salted url-hash repartition (north rule): spreads url-clustered inputs
@@ -247,7 +227,9 @@ object ExtractPipeline {
     * runs for every flag combination: `saltedRepartitionByUrl` into
     * `numPartitions` (0 = default parallelism), then one extraction pass.
     * `passwordColumn` names a column of `ds` beyond the CrawlRow fields
-    * that carries each row's own password (null = `password`).
+    * that carries each row's own password: the reference takes `-p` per
+    * invocation (main.go:30-36); at corpus scale the password rides with
+    * the row, and a null one falls back to `password`.
     *
     * `metrics` (a fresh accumulator per run) receives one
     * `PartitionMetricsSchema` row per non-empty extraction partition, as
@@ -268,12 +250,12 @@ object ExtractPipeline {
     val salted = saltedRepartitionByUrl(ds, parts)
     if (passwordColumn == null)
       extractDocs(salted, password, includeRaw, objectStreams, includeEmbedded, metrics = metrics)
-    else extractDocsWithPasswords(
-      salted.select(
-          struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as("_1"),
-          col(passwordColumn).as("_2"))
-        .as[(CrawlRow, String)],
-      password, includeRaw, objectStreams, includeEmbedded, metrics = metrics)
+    else salted.select(
+        struct(col("url"), col("warc_ts"), col("html"), col("text"), col("lang")).as("_1"),
+        col(passwordColumn).as("_2"))
+      .as[(CrawlRow, String)]
+      .mapPartitions(extractPartition(_, (_: (CrawlRow, String))._1, (_: (CrawlRow, String))._2,
+        password, includeRaw, objectStreams, includeEmbedded, metrics))
   }
 
   /** Schema of the per-partition lineage rows: the names, types and

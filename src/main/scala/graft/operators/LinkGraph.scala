@@ -92,11 +92,9 @@ object LinkGraph {
         val marked = sd.alias("s")
           .join(anchor0.select(col("id"), lit(true).as("__in")).alias("n"),
             col("s.id") <=> col("n.id"), "left")
-          .select(when(col("n.__in"), col("s.id"))
-            .otherwise(raise_error(concat(
-              lit(s"$op: teleport seed not in ids: "),
-              coalesce(col("s.id").cast("string"), lit("null")))).cast("long"))
-            .as("sid"), lit(true).as("__seed"))
+          .select(Exec.orRaise(col("n.__in"), col("s.id"), "long",
+              lit(s"$op: teleport seed not in ids: "), Exec.shown(col("s.id"))).as("sid"),
+            lit(true).as("__seed"))
         anchor0.join(marked, col("id") <=> col("sid"), "left")
           .select(col("id"), col("__seed").isNotNull.as("seed"))
     }
@@ -115,15 +113,11 @@ object LinkGraph {
     val e = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
         wExpr.as("w"))
-      .where(when(col("src").isNotNull && col("dst").isNotNull, lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"$op: edge endpoints must be non-null, got src="),
-          coalesce(col("src").cast("string"), lit("null")), lit(" dst="),
-          coalesce(col("dst").cast("string"), lit("null")))).cast("boolean")))
-      .where(when(col("w").isNotNull && col("w") >= 1L && col("w") <= maxW, lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"$op: edge weights must be in [1, $maxW], got "),
-          coalesce(col("w").cast("string"), lit("null")))).cast("boolean")))
+      .where(Exec.check(col("src").isNotNull && col("dst").isNotNull,
+        lit(s"$op: edge endpoints must be non-null, got src="), Exec.shown(col("src")),
+        lit(" dst="), Exec.shown(col("dst"))))
+      .where(Exec.check(col("w").isNotNull && col("w") >= 1L && col("w") <= maxW,
+        lit(s"$op: edge weights must be in [1, $maxW], got "), Exec.shown(col("w"))))
     val deg = e.groupBy(col("src")).agg(sum(col("w")).as("od"))
     // persisted lazily: iteration 1's contrib join materializes the cache
     // as part of its own job — the separate count() job is gone (r6)
@@ -195,12 +189,10 @@ object LinkGraph {
       .join(idNode.withColumnRenamed("id", "dst").withColumnRenamed("nid", "dnid"),
         Seq("dst"), "left")
       .select(
-        when(col("snid").isNotNull, col("snid")).otherwise(raise_error(concat(
-          lit(s"$op: edge src endpoint not in docDomains: "),
-          coalesce(col("src").cast("string"), lit("null")))).cast("long")).as("src"),
-        when(col("dnid").isNotNull, col("dnid")).otherwise(raise_error(concat(
-          lit(s"$op: edge dst endpoint not in docDomains: "),
-          coalesce(col("dst").cast("string"), lit("null")))).cast("long")).as("dst"))
+        Exec.orRaise(col("snid").isNotNull, col("snid"), "long",
+          lit(s"$op: edge src endpoint not in docDomains: "), Exec.shown(col("src"))).as("src"),
+        Exec.orRaise(col("dnid").isNotNull, col("dnid"), "long",
+          lit(s"$op: edge dst endpoint not in docDomains: "), Exec.shown(col("dst"))).as("dst"))
       // clamp the multiplicity at pageRank's overflow bound: a mega-domain
       // self-edge can exceed Long.MaxValue/totalMass (~9.2M links at the
       // default mass) and must not abort the job — past the cap the

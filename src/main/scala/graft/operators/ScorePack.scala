@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.exec.Exec
 
 /** ONE definition of the (score, id) -> single-long packing that turns
   * "best score, ties to smallest id" into a plain max aggregate — shared
@@ -23,12 +24,10 @@ private[graft] object ScorePack {
     * 0 <= score < 2^31 — out-of-range values would silently corrupt the
     * packing, so they fail loudly on the first offending row. */
   def guarded(idCol: Column, scoreCol: Column, op: String): Column =
-    when(idCol.isNotNull && idCol >= 0 && idCol < MaxId &&
-        scoreCol.isNotNull && scoreCol >= 0 && scoreCol < MaxScore, lit(true))
-      .otherwise(raise_error(concat(
-        lit(s"$op: id must be in [0, $MaxId) and score in [0, $MaxScore), got id="),
-        coalesce(idCol.cast("string"), lit("null")), lit(" score="),
-        coalesce(scoreCol.cast("string"), lit("null")))).cast("boolean"))
+    Exec.check(idCol.isNotNull && idCol >= 0 && idCol < MaxId &&
+        scoreCol.isNotNull && scoreCol >= 0 && scoreCol < MaxScore,
+      lit(s"$op: id must be in [0, $MaxId) and score in [0, $MaxScore), got id="),
+      Exec.shown(idCol), lit(" score="), Exec.shown(scoreCol))
 
   def pack(scoreCol: Column, idCol: Column): Column =
     scoreCol * MaxId + (lit(MaxId - 1) - idCol)

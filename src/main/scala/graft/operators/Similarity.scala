@@ -48,8 +48,10 @@ object Similarity {
   def occupancySizedBits(n: Long, targetOccupancy: Long = 1024L): Int =
     math.max(1, math.ceil(math.log(math.max(n, 2L).toDouble / targetOccupancy) / math.log(2.0)).toInt)
 
-  private def explodeTopK(grouped: DataFrame): DataFrame =
-    grouped
+  /** The k best (cos desc, id asc) `scored` rows per query as
+    * (query_id, id, rank, cos): one bounded `topk_by_score` aggregate. */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+    scored.groupBy(col("query_id")).agg(topKByScore(col("cos"), col("id"), k).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "entry")))
       .select(col("query_id"), col("entry.id").as("id"),
         (col("pos") + 1).cast("int").as("rank"), col("entry.score").as("cos"))
@@ -66,8 +68,7 @@ object Similarity {
       .where(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
         cosine(col("vec"), col("query_vec")).as("cos"))
-    explodeTopK(
-      scored.groupBy(col("query_id")).agg(topKByScore(col("cos"), col("id"), k).as("top")))
+    topKPerQuery(scored, k)
   }
 
   /** Symmetric int8 quantization of an embedding at a POWER-OF-TWO scale:
@@ -117,8 +118,7 @@ object Similarity {
       .select(col("query_id"), col("id"),
         (dotInt(col("qv"), col("qqv")).cast("double") /
           sqrt((col("n2") * col("qn2")).cast("double"))).as("cos"))
-    explodeTopK(
-      scored.groupBy(col("query_id")).agg(topKByScore(col("cos"), col("id"), k).as("top")))
+    topKPerQuery(scored, k)
   }
 
   /** Multi-table LSH approximate top-k: the corpus is scanned once; each row
@@ -143,8 +143,7 @@ object Similarity {
       .where(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
         cosine(col("vec"), col("query_vec")).as("cos"))
-    explodeTopK(
-      scored.groupBy(col("query_id")).agg(topKByScore(col("cos"), col("id"), k).as("top")))
+    topKPerQuery(scored, k)
   }
 
   /** Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >= minCos):
@@ -161,7 +160,7 @@ object Similarity {
     * QUADRATIC in bucket occupancy — pair mining wants a small occupancy
     * (`occupancySizedBits(n, 32)`), unlike top-k search where per-query
     * candidate volume is only linear in occupancy. Occupancy sizing bounds
-    * the EXPECTED bucket; `maxBlock` (Dedup.splitBlocks, ON by default)
+    * the EXPECTED bucket; `maxBlock` (Dedup.blockPairs, ON by default)
     * additionally bounds the worst one — a dense embedding cluster (or a
     * zero-vector pileup) lands in one bucket regardless of nBits — by
     * degrading it to LINEAR star candidates against the bucket's min id
@@ -176,21 +175,7 @@ object Similarity {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val buckets = Exec.checkpoint(base.select(col("id"),
       posexplode(signatures(col("vec"), nBits, nTables)).as(Seq("table_idx", "bucket"))))
-    val keys = Seq("table_idx", "bucket")
-    def selfJoinPairs(rows: DataFrame): DataFrame = {
-      val a = rows.select(col("table_idx"), col("bucket"), col("id").as("id_a"))
-      val b = rows.select(col("table_idx"), col("bucket"), col("id").as("id_b"))
-      a.join(b, keys).where(col("id_a") < col("id_b")).select(col("id_a"), col("id_b"))
-    }
-    val cand = (
-      if (maxBlock <= 0) selfJoinPairs(buckets)
-      else {
-        val (under, starred) =
-          Dedup.splitBlocks(buckets, keys, maxBlock, "embedding_lsh_blocks")
-        selfJoinPairs(under).unionByName(
-          starred.select(least(col("rep_id"), col("id")).as("id_a"),
-            greatest(col("rep_id"), col("id")).as("id_b")))
-      }).dropDuplicates("id_a", "id_b")
+    val cand = Dedup.blockPairs(buckets, Seq("table_idx", "bucket"), maxBlock, "embedding_lsh_blocks")
     cand
       .join(base.select(col("id").as("id_a"), col("vec").as("vec_a")), Seq("id_a"))
       .join(base.select(col("id").as("id_b"), col("vec").as("vec_b")), Seq("id_b"))

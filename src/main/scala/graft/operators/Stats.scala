@@ -79,14 +79,12 @@ object Stats {
     val overCap = ndv.where(col("__ndv") > lit(maxDistinctValuesPerGroup))
     val checked = hist
       .join(broadcast(overCap), Seq("g"), "left")
-      .where(when(col("__ndv").isNull, lit(true))
-        .otherwise(raise_error(concat(
-          lit("exactQuantiles: group "), coalesce(col("g").cast("string"), lit("null")),
-          lit(" has "), col("__ndv").cast("string"),
-          lit(s" distinct values (cap $maxDistinctValuesPerGroup); " +
-            "pass valueResolution to quantize, or use the approx_quantiles " +
-            "sketch for an unbounded value space")))
-          .cast("boolean")))
+      .where(Exec.check(col("__ndv").isNull,
+        lit("exactQuantiles: group "), Exec.shown(col("g")),
+        lit(" has "), col("__ndv").cast("string"),
+        lit(s" distinct values (cap $maxDistinctValuesPerGroup); " +
+          "pass valueResolution to quantize, or use the approx_quantiles " +
+          "sketch for an unbounded value space")))
       .drop("__ndv")
     // distinct v per (g, v) group => ROWS and RANGE frames agree; rows
     // keeps the Spark side aligned with the oracle's default range frame
@@ -152,13 +150,11 @@ object Stats {
     // cap enforced BEFORE the single-task cum window, the exactQuantiles
     // rule: a near-continuous score column fails loudly in the scan stage
     val checked = hist.crossJoin(broadcast(totals))
-      .where(when(col("__ndv") <= lit(maxDistinctValues), lit(true))
-        .otherwise(raise_error(concat(
-          lit("relativeGate: score column has "), col("__ndv").cast("string"),
-          lit(s" distinct values (cap $maxDistinctValues); quantize the " +
-            "score upstream (floor-multiple, the exactQuantiles " +
-            "valueResolution arithmetic) before gating")))
-          .cast("boolean")))
+      .where(Exec.check(col("__ndv") <= lit(maxDistinctValues),
+        lit("relativeGate: score column has "), col("__ndv").cast("string"),
+        lit(s" distinct values (cap $maxDistinctValues); quantize the " +
+          "score upstream (floor-multiple, the exactQuantiles " +
+          "valueResolution arithmetic) before gating")))
     val wCum = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val thrRow = checked

@@ -33,7 +33,8 @@ object WebCuration {
     * order.
     *
     * Output: (id, n_lines, n_kept, clean_text) — clean_text is NULL when
-    * every line was boilerplate.
+    * every line was boilerplate. Ids must be unique (checked anchor
+    * raise_errors on duplicates); a null-id document keeps its row.
     *
     * Scale shape: the frequency pass groups by md5(line) and shuffles ONLY
     * (line_md5, id) pairs; the hot-line list is bounded above by
@@ -42,28 +43,36 @@ object WebCuration {
     * exactly once (that is the output itself, not overhead). No stage ever
     * carries a line across the wire to be COUNTED — only to be returned. */
   def stripBoilerplate(df: DataFrame, idCol: String, textCol: String,
-                       chunk: Int = 8, minDocs: Long = 2L): DataFrame = {
-    // the exploded frame feeds BOTH the hot-line aggregate and the
-    // reassembly join — checkpoint it once so the tokenize+hash pass over
-    // the full text does not run twice (the Dedup sketch-frame rule)
+                       chunk: Int = 8, minDocs: Long = 2L): DataFrame =
+    filterUnits(df, idCol, posexplode(tokenLines(col(textCol), chunk)).as(Seq("idx", "line")),
+        "\n", "WebCuration.stripBoilerplate") { exploded =>
+      val hot = exploded
+        .select(col("line_md5"), col("id"))
+        .groupBy(col("line_md5"))
+        .agg(countDistinct(col("id")).as("n_docs"))
+        .where(col("n_docs") >= minDocs)
+        .select(col("line_md5"), lit(true).as("hot"))
+      exploded.join(hot, Seq("line_md5"), "left")
+        .withColumn("keep", col("hot").isNull)
+    }
+
+  /** ONE copy of the line-filter skeleton behind [[stripBoilerplate]],
+    * [[keepFirstLines]] and [[keepFirstUnits]]: explode each document per
+    * `unitsExpr` (must produce (idx, line) columns) with the unit's md5 as
+    * `line_md5`, checkpoint that frame once (it feeds the caller's `keep`
+    * rule and the reassembly, so the tokenize+hash pass runs once), flag
+    * each row by the rule, rejoin the survivors in index order with `sep`,
+    * and re-anchor on the checked id set: one row per input document even
+    * when its text is NULL (posexplode of a null array emits nothing).
+    * Duplicate ids would lose per-copy texts and mix line counts, so the
+    * anchor raise_errors whatever the consumer selects; its join is
+    * null-safe, so a (single) null-id document keeps its lines. */
+  private def filterUnits(df: DataFrame, idCol: String, unitsExpr: Column, sep: String,
+                          op: String)(keep: DataFrame => DataFrame): DataFrame = {
     val exploded = Exec.checkpoint(df
-      .select(col(idCol).as("id"), posexplode(tokenLines(col(textCol), chunk)).as(Seq("idx", "line")))
+      .select(col(idCol).as("id"), unitsExpr)
       .withColumn("line_md5", md5(col("line"))))
-    val hot = exploded
-      .select(col("line_md5"), col("id"))
-      .groupBy(col("line_md5"))
-      .agg(countDistinct(col("id")).as("n_docs"))
-      .where(col("n_docs") >= minDocs)
-      .select(col("line_md5"), lit(true).as("hot"))
-    val agg = reassembleKept(exploded.join(hot, Seq("line_md5"), "left")
-      .withColumn("keep", col("hot").isNull))
-    // one row per input doc even when text is NULL (posexplode of a null
-    // array emits nothing): re-anchor on the id set. Ids MUST be unique —
-    // with duplicates the per-copy texts are lost and line counts mix the
-    // copies — so the anchor raise_errors loudly instead of silently
-    // collapsing rows, whichever output columns the consumer selects
-    Exec.checkedIdAnchor(df, idCol, "WebCuration.stripBoilerplate")
-      .join(agg, Seq("id"), "left")
+    Exec.anchorLeftJoin(Exec.checkedIdAnchor(df, idCol, op), reassembleKept(keep(exploded), sep))
       .select(col("id"),
         coalesce(col("n_lines"), lit(0L)).as("n_lines"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
@@ -84,7 +93,7 @@ object WebCuration {
   /** Row-level form of the reassembly: `flagged` = (id, idx, line, keep)
     * rows; surviving lines rejoin in index order with `sep`. One row per
     * id present in `flagged`: (id, n_lines, n_kept, joined). */
-  private[graft] def reassembleKept(flagged: DataFrame, sep: String = "\n"): DataFrame =
+  private def reassembleKept(flagged: DataFrame, sep: String): DataFrame =
     flagged
       .groupBy(col("id"))
       .agg(
@@ -113,9 +122,8 @@ object WebCuration {
     * that IS the output (PlanSpec-asserted). */
   def keepFirstLines(df: DataFrame, idCol: String, textCol: String,
                      chunk: Int = 8): DataFrame =
-    keepFirstExploded(df, idCol,
-      posexplode(tokenLines(col(textCol), chunk)).as(Seq("idx", "line")),
-      sep = "\n", op = "WebCuration.keepFirstLines")
+    filterUnits(df, idCol, posexplode(tokenLines(col(textCol), chunk)).as(Seq("idx", "line")),
+      "\n", "WebCuration.keepFirstLines")(firstOccurrences)
 
   /** Non-empty units of a LITERAL separator split, in order — the unit
     * extractor for corpora with real structure markers: paragraphs on
@@ -147,23 +155,14 @@ object WebCuration {
     * (id, idx)-keyed join-back that feeds the output itself. */
   def keepFirstUnits(df: DataFrame, idCol: String, textCol: String,
                      sep: String): DataFrame =
-    keepFirstExploded(df, idCol,
-      posexplode(sepUnits(col(textCol), sep)).as(Seq("idx", "line")),
-      sep = sep, op = "WebCuration.keepFirstUnits")
+    filterUnits(df, idCol, posexplode(sepUnits(col(textCol), sep)).as(Seq("idx", "line")),
+        sep, "WebCuration.keepFirstUnits")(firstOccurrences)
       .withColumnRenamed("n_lines", "n_units")
 
-  /** ONE copy of the keep-first machinery shared by [[keepFirstLines]]
-    * and [[keepFirstUnits]]: explode per `unitsExpr` (must produce
-    * (idx, line) columns), pick the lexicographically first (id, idx)
-    * occurrence per unit md5 with a map-side-combined min-struct
-    * aggregate, strike the rest, reassemble survivors with `sep`. The
-    * exploded frame feeds the winner aggregate and the text join-back, so
-    * it is checkpointed once. */
-  private def keepFirstExploded(df: DataFrame, idCol: String,
-                                unitsExpr: Column, sep: String, op: String): DataFrame = {
-    val exploded = Exec.checkpoint(df
-      .select(col(idCol).as("id"), unitsExpr)
-      .withColumn("line_md5", md5(col("line"))))
+  /** The keep-first rule of [[keepFirstLines]] and [[keepFirstUnits]]:
+    * keep the lexicographically first (id, idx) occurrence per unit md5,
+    * picked by a map-side-combined min-struct aggregate. */
+  private def firstOccurrences(exploded: DataFrame): DataFrame = {
     // winner selection runs entirely in compact (id, idx, md5) space —
     // joining the full exploded frame by md5 would drag every copy of a
     // hot template line's TEXT into one join partition
@@ -174,16 +173,9 @@ object WebCuration {
     val flags = compact.join(winners, Seq("line_md5"))
       .select(col("id"), col("idx"),
         (struct(col("id"), col("idx")) === col("w")).as("keep"))
-    // the (id, idx) flag join-back tolerates equality keys — a null-id
-    // doc's rows all carry idx ints and rejoin below — but the ANCHOR
-    // join must be null-safe or that doc's reassembly is silently lost
-    val flagged = exploded.join(flags, Seq("id", "idx"))
-    Exec.anchorLeftJoin(
-        Exec.checkedIdAnchor(df, idCol, op), reassembleKept(flagged, sep))
-      .select(col("id"),
-        coalesce(col("n_lines"), lit(0L)).as("n_lines"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        when(col("n_kept") > 0, col("joined")).as("clean_text"))
+    // an equality join: a null-id document's rows do not rejoin here, so
+    // keep-first reports it with no lines (the anchor still keeps its row)
+    exploded.join(flags, Seq("id", "idx"))
   }
 
   /** Cross-document KEEP-FIRST SPAN dedup — the "Deduplicating Training
@@ -435,13 +427,11 @@ object WebCuration {
         col(idCol).cast("long").as("id"),
         col(tokensCol).cast("long").as("tok"),
         TextAnalysis.md5PrefixLong(col(hc).cast("string"), 10).as("draw"))
-      .where(when(col("id").isNotNull && col("tok").isNotNull &&
-            col("tok") >= 0 && col("draw").isNotNull, lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"$op: needs non-null id and hash key and non-negative tokens, got id="),
-          coalesce(col("id").cast("string"), lit("null")), lit(" tok="),
-          coalesce(col("tok").cast("string"), lit("null")), lit(" draw="),
-          coalesce(col("draw").cast("string"), lit("null")))).cast("boolean")))
+      .where(Exec.check(col("id").isNotNull && col("tok").isNotNull &&
+          col("tok") >= 0 && col("draw").isNotNull,
+        lit(s"$op: needs non-null id and hash key and non-negative tokens, got id="),
+        Exec.shown(col("id")), lit(" tok="), Exec.shown(col("tok")),
+        lit(" draw="), Exec.shown(col("draw"))))
       .join(Exec.checkedIdAnchor(df, idCol, op), Seq("id"), "left_semi")
       .withColumn("bucket", shiftright(col("draw"), 28))
     val bstats = base.groupBy(col("domain"), col("bucket"))
@@ -564,10 +554,9 @@ object WebCuration {
       .groupBy(col("url"))
       .agg(count(lit(1)).as("__copies"), max(col("base_md5")).as("base_md5"))
       .select(col("url"),
-        when(col("__copies") === 1, col("base_md5"))
-          .otherwise(raise_error(concat(
-            lit("incrementalDelta: duplicate base url (base must hold one current row per url): "),
-            col("url")))).as("base_md5"),
+        Exec.orRaise(col("__copies") === 1, col("base_md5"), "string",
+          lit("incrementalDelta: duplicate base url (base must hold one current row per url): "),
+          col("url")).as("base_md5"),
         lit(true).as("__in_base"))
     batch
       .select(col(idCol).as("id"), col(urlCol).as("url"),

@@ -169,7 +169,7 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
       if (err != null) return err
       securityActive = true // Go: parser.security_handler != nil from here on
     }
-    cachingEnabled = !sys.props.contains("graft.nocache")
+    cachingEnabled = true
     null
   }
 

@@ -162,19 +162,18 @@ class CurateSpec extends AnyFunSuite {
     plain.unpersist(); sharded.unpersist()
   }
 
+  /** `d` with a 16-token template header in front of every text: two
+    * whole 8-token chunks, the same in each document, so the header is a
+    * boilerplate line of every document once 30 or more share it. */
+  private def templated(d: org.apache.spark.sql.DataFrame) = {
+    val header = "visit our site for more info and subscribe to the newsletter today or follow us online"
+    d.select(col("doc_id"), concat(lit(header + " "), col("text")).as("text"))
+  }
+
   test("stripBoilerplate stage: template lines removed before the gates, default path untouched") {
-    import spark.implicits._
-    // a template footer shared by every doc, long enough to dominate the
-    // 8-token chunks; bodies are distinct real doc texts
-    val footer = "visit our site for more info and subscribe to the newsletter today"
-    val base = docs.where(col("doc_id") < 40)
-      .select(col("doc_id"), concat(col("text"), lit(" " + footer + " " + footer)).as("text"))
-    // explicit minDocs=2 exercises the strike mechanism on a 40-doc corpus
-    // (the production default of 30 targets template-scale recurrence;
-    // chunk boundaries here are phase-shifted by each body's length, so at
-    // the default threshold this small fixture strips nothing)
+    val base = templated(docs.where(col("doc_id") < 40))
     val plain = Curate.curate(base)
-    val stripped = Curate.curate(base, stripBoilerplate = true, boilerplateMinDocs = 2)
+    val stripped = Curate.curate(base, stripBoilerplate = true)
     // same survivor ids (bodies are what distinguishes docs)...
     val pIds = plain.select("doc_id").collect().map(_.getLong(0)).toSet
     val sIds = stripped.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -188,10 +187,13 @@ class CurateSpec extends AnyFunSuite {
   }
 
   test("stripBoilerplate stage: duplicate input ids raise instead of merging the copies") {
-    val twoCopies = docs.where(col("doc_id") < 40).orderBy("doc_id").limit(2)
-      .withColumn("doc_id", lit(7L))
+    // two of 40 templated docs share id 7
+    val ids = docs.where(col("doc_id") < 40).orderBy("doc_id").limit(2)
+      .select("doc_id").collect().map(_.getLong(0))
+    val twoCopies = templated(docs.where(col("doc_id") < 40))
+      .withColumn("doc_id", when(col("doc_id").isin(ids: _*), lit(7L)).otherwise(col("doc_id")))
     val e = intercept[Exception] {
-      Curate.curate(twoCopies, stripBoilerplate = true, boilerplateMinDocs = 2).collect()
+      Curate.curate(twoCopies, stripBoilerplate = true).collect()
     }
     assert(SparkTestBase.causeMessages(e).exists(_.contains("duplicate input id")))
   }

@@ -305,8 +305,8 @@ class PipelineSpec extends AnyFunSuite {
 
     // per-doc budget: an entry over the byte budget is nulled, md5/name and
     // index alignment stay (detectable as md5 present, data null)
-    val capped = ExtractPipeline.extractDocs(rows.toDS(), includeEmbedded = true,
-      maxEmbeddedBytes = 3L).collect().head
+    val capped = ExtractPipeline.extractOne(rows.head, "", new graft.html.HtmlExtract.Scratch,
+      includeEmbedded = true, maxEmbeddedBytes = 3L)
     assert(capped.embedded_md5 == Seq("5d41402abc4b2a76b9719d911017c592"))
     assert(capped.embedded_data.length == 1 && capped.embedded_data.head == null)
 
@@ -335,7 +335,8 @@ class PipelineSpec extends AnyFunSuite {
     val rows = Seq(
       (graft.sources.CrawlRow("test://a/encrypted.pdf", ts, enc, "", "en"), null.asInstanceOf[String]),
       (graft.sources.CrawlRow("test://b/encrypted.pdf", ts, enc, "", "en"), "wrong"))
-    val out = ExtractPipeline.extractDocsWithPasswords(rows.toDS(), defaultPassword = "")
+    val ds = rows.toDS().select(col("_1.*"), col("_2").as("password")).as[graft.sources.CrawlRow]
+    val out = ExtractPipeline.extractDocsSkewAware(ds, password = "", passwordColumn = "password")
       .collect().sortBy(_.url)
     assert(out(0).ok, String.valueOf(out(0).failure)) // null password -> corpus default "" decrypts
     assert(!out(1).ok && out(1).failure == "incorrect password")

@@ -47,6 +47,32 @@ class SimilaritySpec extends AnyFunSuite {
     assert(expected.subsetOf(pairs), s"missing: ${expected diff pairs}")
   }
 
+  test("embeddingNearDupPairs: an over-popular bucket degrades to star pairs that components close") {
+    import spark.implicits._
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
+    // vec 0 (the smallest id) and 11 identical copies share a bucket of 12
+    // in every table, over a maxBlock of 4
+    val copies = (1 to 11).map(100000L + _)
+    val cluster = 0L +: copies
+    val withCluster = emb.unionByName(copies.map(c =>
+      emb.where(col("vec_id") === 0L).withColumn("vec_id", lit(c))).reduce(_ unionByName _))
+    def pairs(maxBlock: Long): Set[(Long, Long)] =
+      Similarity.embeddingNearDupPairs(withCluster, "vec_id", "embedding",
+          minCos = 0.9999, nBits = 16, nTables = 4, maxBlock = maxBlock)
+        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val capped = pairs(4L)
+    val uncapped = pairs(0L)
+    def inCluster(p: (Long, Long)) = cluster.contains(p._1) && cluster.contains(p._2)
+    // every member pairs with the bucket's min id, and only with it
+    assert(capped.filter(inCluster) == copies.map(c => (0L, c)).toSet, capped.filter(inCluster))
+    assert(uncapped.filter(inCluster).size == cluster.size * (cluster.size - 1) / 2)
+    assert(capped.subsetOf(uncapped), capped diff uncapped)
+    val cc = graft.operators.Dedup.connectedComponents(capped.toSeq.toDF("id_a", "id_b"),
+      withCluster.select(col("vec_id").as("id")))
+    assert(cc.where(col("id").isin(cluster: _*)).select("cluster_id").distinct()
+      .collect().map(_.getLong(0)).toSeq == Seq(0L))
+  }
+
   test("quantizeI8: exact power-of-two floor, clamp at +-127; dot_int == double fold") {
     import spark.implicits._
     val df = Seq((1L, Seq(0.5f, -0.25f, 3.0f, -9.9f, 0.0039f))).toDF("id", "v")

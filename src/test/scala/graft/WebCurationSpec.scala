@@ -57,6 +57,16 @@ class WebCurationSpec extends AnyFunSuite {
     assert(out(2).getLong(1) == 0L && out(2).getLong(2) == 0L && out(2).isNullAt(3))
   }
 
+  test("stripBoilerplate keeps the clean_text of a null-id document") {
+    val df = Seq((Option(1L), "shared nav body one"), (Option(2L), "shared nav body two"),
+      (Option.empty[Long], "own words here")).toDF("doc_id", "text")
+    val out = WebCuration.stripBoilerplate(df, "doc_id", "text", chunk = 2, minDocs = 2)
+      .where($"id".isNull).collect()
+    assert(out.length == 1)
+    assert((out.head.getLong(1), out.head.getLong(2), out.head.getString(3)) ==
+      ((2L, 2L, "own words\nhere")))
+  }
+
   test("stripBoilerplate raise_errors on duplicate ids instead of silently collapsing") {
     val df = Seq((1L, "aa bb"), (1L, "cc dd"), (2L, "aa bb")).toDF("doc_id", "text")
     val e = intercept[Exception] {

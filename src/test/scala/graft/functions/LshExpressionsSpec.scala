@@ -20,6 +20,15 @@ class LshExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("cosine_sim and hyperplane_sigs reject non-float vectors at analysis") {
+    GraftFunctions.register(spark)
+    for (q <- Seq("SELECT cosine_sim(array('a'), array('b'))",
+                  "SELECT hyperplane_sigs(array(1), 4, 2)"))
+      intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(1).select(Similarity.cosine(array(lit("a")), array(lit("b")))).collect())
+  }
+
   test("double-typed vectors take the non-float path and agree too") {
     val d = emb.select(col("embedding").cast("array<double>").as("v"))
     val cmp = d.select(

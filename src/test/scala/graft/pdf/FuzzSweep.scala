@@ -53,7 +53,8 @@ class FuzzSweep extends AnyFunSuite {
       val m = FuzzMutations.mutate(html, 777000L + i)
       val t0 = System.nanoTime()
       val d = graft.operators.ExtractPipeline.extractOne(
-        graft.sources.CrawlRow(s"test://sweep/$i/page.html", ts, m, "", "en"), "")
+        graft.sources.CrawlRow(s"test://sweep/$i/page.html", ts, m, "", "en"), "",
+        new graft.html.HtmlExtract.Scratch)
       val ms = (System.nanoTime() - t0) / 1e6
       if (d.failure != null && d.failure.startsWith("internal:"))
         failures.add(s"html#$i -> ${d.failure}")

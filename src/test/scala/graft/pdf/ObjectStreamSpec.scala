@@ -39,17 +39,20 @@ class ObjectStreamSpec extends AnyFunSuite {
     assert(s(r.contents) == "Hello ObjStm\n")
   }
 
-  test("extractDocsWithPasswords threads objectStreams to the kernel (encrypted corpora are the post-1.5 ones)") {
+  test("per-row passwords thread objectStreams to the kernel") {
+    // encrypted corpora are the post-1.5 ones
     val spark = graft.SparkTestBase.spark
     import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit}
     val ts = new java.sql.Timestamp(0L)
-    val rows = Seq((graft.sources.CrawlRow("test://a/objstm.pdf", ts, objStmPdf(), "", "en"),
-      null.asInstanceOf[String]))
-    val on = graft.operators.ExtractPipeline
-      .extractDocsWithPasswords(rows.toDS(), objectStreams = true).collect().head
+    val rows = Seq(graft.sources.CrawlRow("test://a/objstm.pdf", ts, objStmPdf(), "", "en")).toDS()
+      .withColumn("password", lit(null).cast("string")).as[graft.sources.CrawlRow]
+    def extract(objectStreams: Boolean) = graft.operators.ExtractPipeline
+      .extractDocsSkewAware(rows, objectStreams = objectStreams, passwordColumn = "password")
+      .collect().head
+    val on = extract(objectStreams = true)
     assert(s(on.contents) == "Hello ObjStm\n", s(on.contents))
-    val off = graft.operators.ExtractPipeline
-      .extractDocsWithPasswords(rows.toDS()).collect().head
+    val off = extract(objectStreams = false)
     assert(s(off.contents) == "", s(off.contents)) // default = reference parity
   }
 

@@ -25,7 +25,13 @@ code outside its own body (so plain recursion does not count) names it:
 Comments are stripped first, and string literals count only as a whole:
 an error label such as "LanguageModel.bigramSurprisal" reaches nothing,
 while the `$x` / `${...}` parts of an interpolated string are code.
-Overloads share a name and are reached together. Entry points (`main`),
+Overloads of a def are told apart by argument count: a reference followed
+by an argument list of k top-level arguments reaches an overload only when
+its required parameter count <= k <= its total parameter count (defaults
+and varargs counted), and a sibling overload's body counts as reaching
+code for it. A reference without an argument list (an eta-expansion, a
+reflective name), and overloads that k cannot tell apart, are reached
+together. Entry points (`main`),
 `apply`/`unapply` (called by syntax), `override` members (called by the
 framework) and `implicit` vals (used by the compiler) are never listed.
 
@@ -236,23 +242,103 @@ class Source:
         return False
 
 
-def reached(sources, path, kind, owner, name, spans):
+def arg_list(code, i):
+    """The top-level items of the parenthesized list that starts at or after
+    `code[i]` (past whitespace and one `[...]` type-argument list), or None
+    when no `(` follows. A `{` block argument is one item."""
+    def skip_ws(j):
+        while j < len(code) and code[j] in " \t\n":
+            j += 1
+        return j
+
+    j = skip_ws(i)
+    if code.startswith("[", j):
+        depth = 0
+        while j < len(code):
+            depth += {"[": 1, "]": -1}.get(code[j], 0)
+            j += 1
+            if not depth:
+                break
+        j = skip_ws(j)
+    if code.startswith("{", j):
+        return ["{"]
+    if not code.startswith("(", j):
+        return None
+    items, cur, depth = [], [], 0
+    for ch in code[j + 1:]:
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            if not depth:
+                break
+            depth -= 1
+        elif ch == "," and not depth:
+            items.append("".join(cur))
+            cur = []
+            continue
+        cur.append(ch)
+    items.append("".join(cur))
+    return [] if items == [""] or (len(items) == 1 and not items[0].strip()) else items
+
+
+def arity(src, line, name):
+    """(required, total) parameter counts of the def `name` declared on
+    `line` of `src`, from its first parameter list."""
+    start = src.starts[line]
+    m = re.compile(r"\bdef\s+" + re.escape(name) + r"(?![A-Za-z0-9_])").search(src.code, start)
+    params = arg_list(src.code, m.end()) or []
+    total = len(params)
+    if params and params[-1].rstrip().endswith("*"):
+        total = float("inf")
+    defaults = sum(1 for p in params if re.search(r"(?<![=<>!])=(?![=>])", strip_parens(p)))
+    return total - defaults if total != float("inf") else total - 1 - defaults, total
+
+
+DECL_RE = re.compile(r"\bdef\s+$")
+
+
+def reaching_sites(sources, path, kind, owner, name, own, decls=True):
+    """The argument count of every reference to `name` outside the `own`
+    line spans of `path` (None where no argument list follows); with
+    `decls` false, `def name` declarations are not references."""
     bare = word(name)
     qualified = word(f"{owner}.{name}")
+    sites = []
     for src in sources:
-        own = spans if src.path == path else []
+        skip = own if src.path == path else []
         if (kind == "object" and src.path != path
                 and not {(owner, "_"), (owner, name)} & src.imports):
             pattern = qualified
         else:
             pattern = bare
-        if src.hits(pattern, own):
-            return True
+        for m in pattern.finditer(src.code):
+            k = bisect.bisect_right(src.starts, m.start()) - 1
+            if any(s <= k < e for s, e in skip) or (
+                    not decls and DECL_RE.search(src.code, src.starts[k], m.start())):
+                continue
+            args = arg_list(src.code, m.end())
+            sites.append(None if args is None else len(args))
         if owner in src.reflected and any(
-                lit == name and not any(s <= k < e for s, e in own)
+                lit == name and not any(s <= k < e for s, e in skip)
                 for k, lit in src.literals):
-            return True
-    return False
+            sites.append(None)
+    return sites
+
+
+def unreached(sources, path, kind, owner, name, spans):
+    """The spans of the group's defs that no reaching code names: a lone
+    def is reached by any reference outside its body, an overload only by
+    one its argument count admits."""
+    if len(spans) == 1:
+        return [] if reaching_sites(sources, path, kind, owner, name, spans) else spans
+    src = next(s for s in sources if s.path == path)
+    out = []
+    for span in spans:
+        lo, hi = arity(src, span[0], name)
+        if not any(k is None or lo <= k <= hi
+                   for k in reaching_sites(sources, path, kind, owner, name, [span], decls=False)):
+            out.append(span)
+    return out
 
 
 def main():
@@ -276,11 +362,12 @@ def main():
     tests = {p: scrub(p.read_text())[0] for p in sorted(TEST.rglob("*.scala"))}
     listed = []
     for (path, kind, owner, name), spans in groups.items():
-        if reached(sources, path, kind, owner, name, spans):
+        missed = unreached(sources, path, kind, owner, name, spans)
+        if not missed:
             continue
         label = f"{owner}.{name}" if owner else name
         users = [str(p.relative_to(ROOT)) for p, t in tests.items() if word(name).search(t)]
-        for k, _ in spans:
+        for k, _ in missed:
             listed.append((str(path.relative_to(ROOT)), k + 1, label, users))
 
     outside = 0
