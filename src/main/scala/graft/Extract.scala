@@ -1,11 +1,12 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{ExtractPipeline, SinkTables}
 import graft.sources.{CrawlCorpus, CrawlRow, ParquetManifestTable, Resume}
 import graft.exec.Exec
+import graft.functions.Natives
 
 /** The production job — the corpus-scale equivalent of the reference CLI's
   * `pdf extract <file> -o <outdir>` (main.go:44-55), run via spark-submit:
@@ -126,23 +127,13 @@ object Extract {
 
   private val crawlCols = Seq("url", "warc_ts", "html", "text", "lang")
 
-  /** One row per url, deterministic winner: lexicographic max of
-    * (warc_ts, md5(html), md5(text), lang, then any other column, e.g.
-    * the row's password) — null fields sort smallest, full-key ties are
-    * identical copies (md5-as-identity, as everywhere). A max_by
-    * AGGREGATE, not a row_number window: a window would sort every copy
-    * of a hot url (WITH its html payload) inside one task — a url
-    * recrawled millions of times OOMs it; the partial aggregate keeps ONE
-    * winner payload per url per partition map-side. Shared by the
-    * duplicate-input dedup and the recrawl base collapse. */
-  private def dedupCrawlByUrl(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val extra = df.columns.toSeq.filterNot(crawlCols.contains).map(col)
-    df.groupBy(col("url"))
-      .agg(max_by(struct(df.columns.map(col): _*),
-        struct(Seq(col("warc_ts"), md5(col("html")), md5(col("text")), col("lang")) ++ extra: _*))
-        .as("r"))
-      .select(df.columns.map(c => col("r." + c).as(c)): _*)
-  }
+  /** The crawl-row winner key of the duplicate-input dedup and the
+    * recrawl base collapse ([[Resume.winnerPerUrl]]): (warc_ts, md5(html),
+    * md5(text), lang, then any other column, e.g. the row's password) —
+    * md5-as-identity, as everywhere. */
+  private def crawlKey(df: DataFrame): Column =
+    struct(Seq(col("warc_ts"), md5(col("html")), md5(col("text")), col("lang")) ++
+      df.columns.toSeq.filterNot(crawlCols.contains).map(col): _*)
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
@@ -185,7 +176,8 @@ object Extract {
         // applies to its own input — real crawl parquets carry duplicate
         // urls, and the diff's one-row-per-url guard must not kill the
         // documented usage (--recrawl <the previous run's input dir>)
-        val base = dedupCrawlByUrl(spark.read.parquet(a.recrawl).select(crawlCols.map(col): _*))
+        val crawl = spark.read.parquet(a.recrawl).select(crawlCols.map(col): _*)
+        val base = Resume.winnerPerUrl(crawl, crawlKey(crawl))
         val contentKey = md5(concat_ws("|",
           coalesce(md5(col("html")), lit("")), coalesce(md5(col("text")), lit(""))))
         val delta = graft.operators.WebCuration.incrementalDeltaBy(
@@ -280,7 +272,8 @@ object Extract {
       if (nPending == nNonNull) pendingNonNull
       else {
         println(s"""{"job":"graft-extract","warn":"input has ${nNonNull - nPending} duplicate-url rows; keeping latest warc_ts per url"}""")
-        dedupCrawlByUrl(pendingNonNull.toDF()).as[CrawlRow]
+        val df = pendingNonNull.toDF()
+        Resume.winnerPerUrl(df, crawlKey(df)).as[CrawlRow]
       }
 
     // deterministic batch id (stable across retries of the same pending
@@ -323,7 +316,7 @@ object Extract {
       // and an unchanged re-delivered link must not double-count)
       linksTable.commit(
         pending.toDF().select(col("url"), col("warc_ts"),
-          explode(graft.functions.ExtractFunctions.htmlAnchors(col("url"), col("html")))
+          explode(Natives.htmlAnchors(Seq(col("url"), col("html"))))
             .as("a"))
           .select(col("url"), col("warc_ts"),
             col("a.dst").as("dst_url"), col("a.anchor").as("anchor")),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators._
 import graft.sources.CrawlCorpus
+import graft.functions.Natives
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -183,7 +184,7 @@ object SparkEntry {
       t(s, dir, "documents")
         .select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).as("token_count"),
-          TextAnalysis.bpeTokenEstimate(col("text")).as("bpe_estimate"))
+          Natives.bpeEstimate(Seq(col("text"))).as("bpe_estimate"))
         .orderBy(col("doc_id"))),
 
     // ---- sketch-based dedup ----
@@ -249,8 +250,8 @@ object SparkEntry {
     // proven by parity specs
     "q23_fingerprint" -> ((s, dir) =>
       t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.fingerprintMd5(col("text")).as("fingerprint"),
-          graft.functions.SketchFunctions.simhashMd5(col("text")).as("simhash"))
+        .select(col("doc_id"), Natives.fingerprintMd5(Seq(col("text"))).as("fingerprint"),
+          Natives.simhashMd5(Seq(col("text"))).as("simhash"))
         .orderBy(col("doc_id"))),
 
     // ---- extraction pipeline over the synthesized crawl corpus ----
@@ -428,7 +429,7 @@ object SparkEntry {
     "q46_token_chunks" -> ((s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"),
-          explode(TextAnalysis.tokenChunks(col("text"), size = 64, stride = 48)).as("c"))
+          explode(Natives.tokenChunks(Seq(col("text")), 64, 48)).as("c"))
         .select(col("doc_id"), col("c").getField("chunk_idx").as("chunk_idx"),
           size(split(col("c").getField("chunk"), " ")).cast("long").as("n_tokens"),
           md5(col("c").getField("chunk")).as("chunk_md5"))
@@ -473,7 +474,7 @@ object SparkEntry {
       val lines = translate(col("text"), " ", "\n")
       t(s, dir, "documents").where(col("text").isNotNull)
         .select(col("doc_id"), lines.as("ls"),
-          graft.functions.SketchFunctions.dedupLines(lines).as("dl"))
+          Natives.dedupLines(Seq(lines)).as("dl"))
         .select(col("doc_id"),
           size(split(col("ls"), "\n")).cast("long").as("n_lines"),
           size(split(col("dl"), "\n")).cast("long").as("n_kept"),
@@ -495,7 +496,7 @@ object SparkEntry {
         .select(col("doc_id"),
           when(col("doc_id") % 3 === 0, rep).otherwise(col("text")).as("text"))
         .select(col("doc_id"), col("text"),
-          graft.functions.SketchFunctions.dedupSpans(col("text"), 5).as("ds"))
+          Natives.dedupSpans(Seq(col("text")), 5).as("ds"))
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tokens"),
           size(split(col("ds"), " ")).cast("long").as("n_kept"),

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -164,11 +163,6 @@ object BloomAggBuffer {
 }
 
 object BloomFunctions {
-  /** `bloom_shingle_hits(text, bloom, w)`: struct(n_shingles:int,
-    * hits:array<string>), see [[BloomKernel.bloomShingleHits]]. */
-  def bloomShingleHits(text: Column, bloom: Column, w: Int): Column =
-    Natives.bloomShingleHits(Seq(text, bloom), w)
-
   /** The filter-size cap: 2^30 bits (128 MB), the largest filter that
     * is collected as one row. */
   private val MaxBits: Long = 1L << 30

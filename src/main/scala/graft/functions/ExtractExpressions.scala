@@ -43,14 +43,6 @@ object ExtractKernel {
       }.toArray[Any])
 }
 
-/** DataFrame-API handles for the extraction natives (the SketchFunctions
-  * convention). */
-object ExtractFunctions {
-  import org.apache.spark.sql.Column
-  def htmlLinks(url: Column, payload: Column): Column = Natives.htmlLinks(Seq(url, payload))
-  def htmlAnchors(url: Column, payload: Column): Column = Natives.htmlAnchors(Seq(url, payload))
-}
-
 /** Registration: either as session extensions
   * (`spark.sql.extensions=graft.functions.GraftExtensions`) or imperatively
   * on an existing session via `GraftFunctions.register(spark)`. Covers the

@@ -36,10 +36,15 @@ object LshKernel {
     })
   }
 
-  /** nTables signatures of nBits bits each of a double vector (float
-    * vectors are widened exactly before the call). A null element nulls every plane's dot product in the declarative
-    * form, and `when(null >= 0, bit).otherwise(0)` zeroes every bit — so
-    * the whole signature set collapses to 0L, replicated here. */
+  /** The nTables independent nBits-bit signatures of a double vector as
+    * one array (float vectors are widened exactly before the call;
+    * posexplode to (table_idx, bucket)): bit p of table t is the sign of
+    * dot(vec, plane_{t*nBits+p}), so buckets collide for nearby directions
+    * (Charikar's cosine LSH; the multi-table scheme is the standard E2LSH
+    * construction: L independent tables, union of candidates). A null
+    * element nulls every plane's dot product in the declarative form, and
+    * `when(null >= 0, bit).otherwise(0)` zeroes every bit — so the whole
+    * signature set collapses to 0L, replicated here. */
   def signatures(vec: ArrayData, nBits: Int, nTables: Int): ArrayData = {
     val dim = vec.numElements()
     val v = new Array[Double](dim)

@@ -20,11 +20,19 @@ sealed trait Native {
   def paramTypes: Seq[DataType]
   protected def make(cols: Seq[Expression], params: Seq[Long]): Expression
 
+  /** Fails, naming the entry, unless there is one column per `inputTypes`
+    * entry and one literal per `paramTypes` entry. */
+  protected def checkArity(nCols: Int, nParams: Int): Unit = {
+    val (n, p) = (inputTypes.length, paramTypes.length)
+    require(nCols + nParams == n + p, s"$name expects ${n + p} argument(s), got ${nCols + nParams}")
+    require(nCols == n,
+      s"$name expects $n column(s) and $p literal parameter(s), got $nCols and $nParams")
+  }
+
   /** The SQL builder: the column arguments, then the integer literals. */
   def build(args: Seq[Expression]): Expression = {
     val n = inputTypes.length
-    require(args.length == n + paramTypes.length,
-      s"$name expects ${n + paramTypes.length} argument(s), got ${args.length}")
+    checkArity(n, args.length - n)
     make(args.take(n), args.drop(n).zip(paramTypes).map {
       case (Literal(v: Int, IntegerType), _) => v.toLong
       case (Literal(v: Long, LongType), LongType) => v
@@ -58,9 +66,11 @@ final case class NativeFn(name: String, kernel: Class[_], method: String,
   protected def make(cols: Seq[Expression], params: Seq[Long]): Expression =
     expr(cols, params.map(_.toInt))
 
-  /** The DataFrame-API handle. */
-  def apply(cols: Seq[Column], ints: Int*): Column =
+  /** The DataFrame-API call: the columns, then the int parameters. */
+  def apply(cols: Seq[Column], ints: Int*): Column = {
+    checkArity(cols.length, ints.length)
     ColumnBridge.column(expr(cols.map(ColumnBridge.expression), ints))
+  }
 }
 
 /** The expression every [[NativeFn]] builds. It is replaced before
@@ -115,9 +125,11 @@ final case class NativeAgg(name: String, inputTypes: Seq[InputType],
 
   protected def make(cols: Seq[Expression], params: Seq[Long]): Expression = expr(cols, params)
 
-  /** The DataFrame-API handle. */
-  def apply(cols: Seq[Column], params: Long*): Column =
+  /** The DataFrame-API call: the columns, then the parameters. */
+  def apply(cols: Seq[Column], params: Long*): Column = {
+    checkArity(cols.length, params.length)
     ColumnBridge.column(expr(cols.map(ColumnBridge.expression), params).toAggregateExpression())
+  }
 
   // an entry ships to executors inside its aggregate; it crosses as its
   // name and resolves to the same entry of the table there (input types
@@ -175,10 +187,11 @@ case class NativeAggCall(fn: NativeAgg, children: Seq[Expression], params: Seq[L
     copy(children = newChildren)
 }
 
-/** Every native function: the scalar kernels and the aggregates.
-  * `GraftFunctionSet` registers each under its SQL name; `SketchFunctions`,
-  * `ExtractFunctions`, `BloomFunctions` and `TopKFunctions` are DataFrame
-  * handles over the same entries. */
+/** Every native function: the scalar kernels and the aggregates, each
+  * declared once. `GraftFunctionSet` registers each under its SQL name, and
+  * Scala code calls the entry itself: `Natives.minhashSig(Seq(c), 3, 16)`,
+  * the columns then the literal parameters, whose counts are checked when
+  * the call is built. */
 object Natives {
   private val Sketch = SketchKernel.getClass
   private val Extract = ExtractKernel.getClass
@@ -218,6 +231,8 @@ object Natives {
     ArrayType(struct(("token", StringType, false), ("tf", LongType, false)), containsNull = false),
     Seq(StringType))
   val bpeEstimate = NativeFn("bpe_estimate", Sketch, "bpeEstimate", LongType, Seq(StringType))
+  /** The composite [0,1] quality score: the one definition behind
+    * `TextAnalysis.qualityColumns` (q15), Curate's gate and the q38/q50 oracles. */
   val qualityScore = NativeFn("quality_score", Sketch, "qualityScore", DoubleType, Seq(StringType))
   val dotInt = NativeFn("dot_int", Sketch, "dotInt", LongType,
     Seq(ArrayType(IntegerType), ArrayType(IntegerType)))

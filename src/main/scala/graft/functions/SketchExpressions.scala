@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -101,7 +100,7 @@ object SketchKernel {
   /** Token start offsets of the single-space split: starts(j) is token
     * j's first byte, with sentinel starts(nTokens) = numBytes + 1 so token
     * j ends at starts(j+1) - 1. THE one copy of the boundary scan shared
-    * by minhashSignature / shingleHashes / tokenChunks — tokenization
+    * by minhashSignature / shingleHashes / tokenChunksData — tokenization
     * semantics must never diverge between the native expressions. */
   @inline private[functions] def tokenStarts(s: UTF8String): Array[Int] = {
     val n = s.numBytes
@@ -212,28 +211,33 @@ object SketchKernel {
     new GenericArrayData(sig)
   }
 
-  /** Overlapping token-window chunks over the whitespace tokens: chunk i
-    * covers tokens [i*stride, i*stride + size). One pass to find token
-    * boundaries, one byte-range copy per chunk — unlike the declarative
-    * transform(sequence, i => slice(split(text), ...)) formulation, which
-    * re-evaluates the split INSIDE the lambda for every chunk (interpreted
-    * HOFs have no CSE), i.e. O(len^2/stride) per document. Bit-identical
-    * to the declarative form (SketchExpressionsSpec). */
-  def tokenChunks(s: UTF8String, size: Int, stride: Int): Array[(Int, UTF8String)] = {
+  /** `token_chunks`: overlapping token-window chunks over the whitespace
+    * tokens (context-window preprocessing), as
+    * array<struct<chunk_idx:int, chunk:string>>. Chunk i covers tokens
+    * [i*stride, i*stride + size); starts advance by `stride` while they stay
+    * inside the token stream, so every token lands in at least one chunk
+    * and consecutive chunks overlap by size - stride tokens. One pass to
+    * find token boundaries, one byte-range copy per chunk — unlike the
+    * declarative transform(sequence, i => slice(split(text), ...))
+    * formulation, which re-evaluates the split INSIDE the lambda for every
+    * chunk (interpreted HOFs have no CSE), i.e. O(len^2/stride) per
+    * document. Bit-identical to the declarative reference in
+    * `TextAnalysisReference` (SketchExpressionsSpec). */
+  def tokenChunksData(s: UTF8String, size: Int, stride: Int): ArrayData = {
     val starts = tokenStarts(s)
     val nTokens = starts.length - 1
     val bytes = s.getBytes // materialized once; chunk slices copy from it
 
     val nChunks = (nTokens - 1) / stride + 1
-    val out = new Array[(Int, UTF8String)](nChunks)
+    val rows = new Array[Any](nChunks)
     var c = 0
     while (c < nChunks) {
       val from = starts(c * stride)
       val until = starts(math.min(c * stride + size, nTokens)) - 1
-      out(c) = (c, UTF8String.fromBytes(bytes, from, until - from))
+      rows(c) = new GenericInternalRow(Array[Any](c, UTF8String.fromBytes(bytes, from, until - from)))
       c += 1
     }
-    out
+    new GenericArrayData(rows)
   }
 
   /** Per-document term frequencies of the single-space split in ONE pass:
@@ -265,7 +269,7 @@ object SketchKernel {
     var i = 0
     while (it.hasNext) {
       val e = it.next()
-      rows(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+      rows(i) = new GenericInternalRow(
         Array[Any](e.getKey, e.getValue()(0)))
       i += 1
     }
@@ -411,7 +415,7 @@ object SketchKernel {
       x += 1
     }
     val (kept, clean) = reassembleUncovered(s, bytes, starts, covered)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+    new GenericInternalRow(
       Array[Any](nTokens.toLong, kept.toLong, clean))
   }
 
@@ -503,20 +507,6 @@ object SketchKernel {
       i += 1
     }
     acc
-  }
-
-  /** Catalyst-shaped variant of [[tokenChunks]] (the `token_chunks`
-    * kernel): array<struct<chunk_idx:int, chunk:string>>. */
-  def tokenChunksData(s: UTF8String, size: Int, stride: Int): ArrayData = {
-    val chunks = tokenChunks(s, size, stride)
-    val rows = new Array[Any](chunks.length)
-    var i = 0
-    while (i < chunks.length) {
-      rows(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](chunks(i)._1, chunks(i)._2))
-      i += 1
-    }
-    new GenericArrayData(rows)
   }
 
   private val HexDigits = "0123456789abcdef".getBytes
@@ -661,26 +651,4 @@ object SketchKernel {
     }
     acc
   }
-}
-
-/** DataFrame-API handles for the native sketch kernels ([[Natives]]). */
-object SketchFunctions {
-  def simhashMd5(c: Column): Column = Natives.simhashMd5(Seq(c))
-  def minhashSig(c: Column, shingleWords: Int, k: Int): Column =
-    Natives.minhashSig(Seq(c), shingleWords, k)
-  def fingerprint64(c: Column): Column = Natives.fingerprint64(Seq(c))
-  def fingerprintMd5(c: Column): Column = Natives.fingerprintMd5(Seq(c))
-  def shingleHashes(c: Column, shingleWords: Int): Column =
-    Natives.shingleHashes(Seq(c), shingleWords)
-  def minhashSigFromHashes(c: Column, k: Int): Column = Natives.minhashSigFromHashes(Seq(c), k)
-  def jaccardSim(a: Column, b: Column): Column = Natives.jaccardSim(Seq(a, b))
-  def tokenChunks(c: Column, size: Int, stride: Int): Column =
-    Natives.tokenChunks(Seq(c), size, stride)
-  def qualityScore(c: Column): Column = Natives.qualityScore(Seq(c))
-  def bpeEstimate(c: Column): Column = Natives.bpeEstimate(Seq(c))
-  def tokenTf(c: Column): Column = Natives.tokenTf(Seq(c))
-  def dedupLines(c: Column): Column = Natives.dedupLines(Seq(c))
-  def dedupSpans(c: Column, w: Int): Column = Natives.dedupSpans(Seq(c), w)
-  def exciseSpans(text: Column, hits: Column, w: Int): Column = Natives.exciseSpans(Seq(text, hits), w)
-  def dotInt(a: Column, b: Column): Column = Natives.dotInt(Seq(a, b))
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -85,12 +84,4 @@ object TopKBuffer {
     while (i < n) { buf.insert(bb.getDouble, bb.getLong); i += 1 }
     buf
   }
-}
-
-object TopKFunctions {
-  /** agg handle: array<struct<id,score>> of the k best (score desc, id asc).
-    * Inputs are cast up front so any numeric score / integral id column
-    * works (the entry itself requires exactly double + bigint). */
-  def topKByScore(score: Column, id: Column, k: Int): Column =
-    Natives.topKByScore(Seq(score.cast("double"), id.cast("long")), k)
 }

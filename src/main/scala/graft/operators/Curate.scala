@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.exec.Exec
+import graft.functions.Natives
 
 /** The end-to-end training-data curation pipeline, composed from the
   * library's operators — the shape a 100 TB pretraining-data run takes
@@ -56,7 +57,7 @@ object Curate {
     val docsW =
       if (dedupSpansW <= 0) docs
       else docs.withColumn("text",
-        graft.functions.SketchFunctions.dedupSpans(col("text"), dedupSpansW))
+        Natives.dedupSpans(Seq(col("text")), dedupSpansW))
     // -0.5. optional CROSS-doc keep-first span dedup (keepFirstSpansW > 0)
     // as the first cross-document rewrite: every repeated w-token span
     // keeps only its globally first (id, pos) occurrence (Lee et al.

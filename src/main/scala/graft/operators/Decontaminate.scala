@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.{BloomFunctions, Natives, SketchFunctions}
+import graft.functions.{BloomFunctions, Natives}
 import graft.exec.Exec
 
 /** Test-set decontamination: flag corpus documents that share at least
@@ -32,7 +32,7 @@ object Decontaminate {
     require(w >= 1, s"shingle width must be >= 1, got $w")
     df.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
-        explode(SketchFunctions.tokenChunks(col(textCol), w, 1)).as("c"))
+        explode(Natives.tokenChunks(Seq(col(textCol)), w, 1)).as("c"))
       .where(size(split(col("c.chunk"), " ")) === w)
       .select(col("id"), col("c.chunk_idx").as("pos"), md5(col("c.chunk")).as("sh"))
   }
@@ -107,7 +107,7 @@ object Decontaminate {
         // so a clean doc keeps its count)
         corpus.where(col(textCol).isNotNull)
           .select(col(idCol).as("id"),
-            BloomFunctions.bloomShingleHits(col(textCol), lit(filterBytes), w).as("p"))
+            Natives.bloomShingleHits(Seq(col(textCol), lit(filterBytes)), w).as("p"))
           .select(col("id"), col("p.n_shingles").cast("long").as("n_shingles"),
             explode_outer(col("p.hits")).as("sh"))
           .withColumn("sh", unhex(col("sh")))
@@ -285,8 +285,8 @@ object Decontaminate {
   private[graft] def exciseJoinBack(corpus: DataFrame, idCol: String,
       textCol: String, hitsPerDoc: DataFrame, w: Int, countCol: String,
       op: String): DataFrame = {
-    val ex = SketchFunctions.exciseSpans(col("text"),
-      coalesce(col("hits"), array().cast("array<int>")), w)
+    val ex = Natives.exciseSpans(
+      Seq(col("text"), coalesce(col("hits"), array().cast("array<int>"))), w)
     // the checked anchor covers every corpus id (null ids group together);
     // left-joined with hits it becomes the one compact per-id metadata frame
     val meta = Exec.checkedIdAnchor(corpus, idCol, op).alias("__c")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.exec.Exec
+import graft.functions.Natives
 
 /** Deduplication operators for large-scale training-data pipelines.
   * Everything below is built from native Catalyst expressions
@@ -146,7 +147,7 @@ object Dedup {
     * size(array_intersect)/size(array_union), SketchExpressionsSpec). */
   private def jaccardAtLeast(pairs: DataFrame, minJaccard: Double): DataFrame =
     pairs.select(col("id_a"), col("id_b"),
-        graft.functions.SketchFunctions.jaccardSim(col("sh_a"), col("sh_b")).as("jaccard"))
+        Natives.jaccardSim(Seq(col("sh_a"), col("sh_b"))).as("jaccard"))
       .where(col("jaccard") >= minJaccard)
 
   // ---------- SimHash ----------
@@ -164,7 +165,7 @@ object Dedup {
   def simhashPairsPortable(df: DataFrame, idCol: String, textCol: String,
                            maxHamming: Int = 3): DataFrame = {
     val hashed = Exec.checkpoint(df.select(col(idCol).as("id"),
-      graft.functions.SketchFunctions.simhashMd5(col(textCol)).as("sh")))
+      Natives.simhashMd5(Seq(col(textCol))).as("sh")))
     val chunkBits = 15
     val mask = (1L << chunkBits) - 1
     val chunked = hashed.select(col("id"), col("sh"),
@@ -407,10 +408,10 @@ object Dedup {
     // row would be fully decoded by every consumer).
     val hashes = Exec.checkpoint(
       df.select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes")))
+        Natives.shingleHashes(Seq(col(textCol)), shingleWords).as("hashes")))
     val cand = candidatesFromSigs(
       hashes.select(col("id"),
-        graft.functions.SketchFunctions.minhashSigFromHashes(col("hashes"), k).as("sig")),
+        Natives.minhashSigFromHashes(Seq(col("hashes")), k).as("sig")),
       k, bands, maxBlock)
     jaccardAtLeast(cand
       .join(hashes.select(col("id").as("id_a"), col("hashes").as("sh_a")), Seq("id_a"))
@@ -456,7 +457,7 @@ object Dedup {
     // checkpoint discipline of this miner).
     val bandedL = bandRows(
       left.select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.minhashSig(col(textCol), shingleWords, k).as("sig")),
+        Natives.minhashSig(Seq(col(textCol)), shingleWords, k).as("sig")),
       k, bands)
     // the RIGHT (benchmark) side materializes ONE (id, hashes) frame: its
     // band signatures derive map-side from the stored distinct hashes
@@ -465,9 +466,9 @@ object Dedup {
     // instead of two.
     val skR = Exec.checkpoint(
       right.select(col(idCol).as("id"),
-        graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("hashes")))
+        Natives.shingleHashes(Seq(col(textCol)), shingleWords).as("hashes")))
     val bandedR = bandRows(skR.select(col("id"),
-      graft.functions.SketchFunctions.minhashSigFromHashes(col("hashes"), k).as("sig")), k, bands)
+      Natives.minhashSigFromHashes(Seq(col("hashes")), k).as("sig")), k, bands)
     val rightRows =
       if (maxBlock <= 0) bandedR
       else splitBlocks(bandedR, BandKeys, maxBlock, "bipartite_lsh_blocks")._1
@@ -487,7 +488,7 @@ object Dedup {
     // its matches as clean (hash-join keys support <=>, so AQE still
     // broadcasts the candidate set)
     val shA = left.select(col(idCol).as("__ida"),
-      graft.functions.SketchFunctions.shingleHashes(col(textCol), shingleWords).as("sh_a"))
+      Natives.shingleHashes(Seq(col(textCol)), shingleWords).as("sh_a"))
     val shB = skR.select(col("id").as("__idb"), col("hashes").as("sh_b"))
     jaccardAtLeast(cand
       .join(shA, col("id_a") <=> col("__ida")).drop("__ida")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.exec.Exec
+import graft.functions.Natives
 
 /** Corpus-trained unigram language-model scoring — the CCNet/FineWeb-style
   * "perplexity" quality filter re-expressed for a distributed engine: train
@@ -122,7 +123,7 @@ object LanguageModel {
   private def rawBigrams(df: DataFrame, textCol: String, keep: Seq[String]): DataFrame =
     df.where(col(textCol).isNotNull)
       .select(keep.map(col) :+
-        explode(graft.functions.SketchFunctions.tokenChunks(col(textCol), 2, 1)).as("t"): _*)
+        explode(Natives.tokenChunks(Seq(col(textCol)), 2, 1)).as("t"): _*)
       .select(keep.map(col) :+
         substring_index(col("t.chunk"), " ", 1).as("ta") :+
         substring_index(col("t.chunk"), " ", -1).as("tb") :+

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Natives
-import graft.functions.TopKFunctions.topKByScore
 import graft.exec.Exec
 
 /** Similarity search over an embedding column (array<float>): brute-force
@@ -25,23 +24,6 @@ object Similarity {
 
   private def asDouble(a: Column): Column = a.cast("array<double>")
 
-  /** Native codegen'd cosine — bit-identical to the interpreted-HOF
-    * reference in `SimilarityReference` (LshExpressionsSpec) and to the
-    * DuckDB oracle arithmetic. */
-  def cosine(a: Column, b: Column): Column =
-    Natives.cosineSim(Seq(a, b))
-
-  /** The L independent nBits-bit random-hyperplane signatures of a vector
-    * as one array (posexplode to (table_idx, bucket)): bit p of table t is
-    * the sign of dot(vec, plane_{t*nBits+p}), so buckets collide for nearby
-    * directions (Charikar's cosine LSH; the multi-table scheme is the
-    * standard E2LSH construction: L independent tables, union of
-    * candidates). Native expression with a memoized per-shape coefficient
-    * matrix, bit-identical to the declarative reference in
-    * `SimilarityReference` (LshExpressionsSpec). */
-  def signatures(vec: Column, nBits: Int, nTables: Int): Column =
-    Natives.hyperplaneSigs(Seq(vec), nBits, nTables)
-
   /** Bucket-occupancy sizing: nBits = ceil(log2(n / targetOccupancy)), so
     * the expected bucket population stays ~constant as the corpus grows
     * (10^9 rows / 2^20 buckets ~ 10^3 — in-bucket work stays linear). */
@@ -51,7 +33,8 @@ object Similarity {
   /** The k best (cos desc, id asc) `scored` rows per query as
     * (query_id, id, rank, cos): one bounded `topk_by_score` aggregate. */
   private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
-    scored.groupBy(col("query_id")).agg(topKByScore(col("cos"), col("id"), k).as("top"))
+    scored.groupBy(col("query_id"))
+      .agg(Natives.topKByScore(Seq(col("cos"), col("id").cast("long")), k).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "entry")))
       .select(col("query_id"), col("entry.id").as("id"),
         (col("pos") + 1).cast("int").as("rank"), col("entry.score").as("cos"))
@@ -67,7 +50,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .where(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
-        cosine(col("vec"), col("query_vec")).as("cos"))
+        Natives.cosineSim(Seq(col("vec"), col("query_vec"))).as("cos"))
     topKPerQuery(scored, k)
   }
 
@@ -106,17 +89,16 @@ object Similarity {
   def bruteForceTopKI8(corpus: DataFrame, queries: DataFrame,
                        idCol: String, vecCol: String, k: Int,
                        scaleBits: Int = 7): DataFrame = {
-    import graft.functions.SketchFunctions.dotInt
     def quantized(df: DataFrame, idName: String, vecName: String, n2Name: String): DataFrame =
       df.select(col(idCol).as(idName), quantizeI8(col(vecCol), scaleBits).as(vecName))
-        .withColumn(n2Name, dotInt(col(vecName), col(vecName)))
+        .withColumn(n2Name, Natives.dotInt(Seq(col(vecName), col(vecName))))
         .where(col(n2Name) > 0)
     val c = quantized(corpus, "id", "qv", "n2")
     val q = quantized(queries, "query_id", "qqv", "qn2")
     val scored = c.crossJoin(broadcast(q))
       .where(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
-        (dotInt(col("qv"), col("qqv")).cast("double") /
+        (Natives.dotInt(Seq(col("qv"), col("qqv"))).cast("double") /
           sqrt((col("n2") * col("qn2")).cast("double"))).as("cos"))
     topKPerQuery(scored, k)
   }
@@ -136,13 +118,13 @@ object Similarity {
               idCol: String, vecCol: String, k: Int,
               nBits: Int = 16, nTables: Int = 8): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
-        posexplode(signatures(col(vecCol), nBits, nTables)).as(Seq("table_idx", "bucket")))
+        posexplode(Natives.hyperplaneSigs(Seq(col(vecCol)), nBits, nTables)).as(Seq("table_idx", "bucket")))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"),
-        posexplode(signatures(col(vecCol), nBits, nTables)).as(Seq("table_idx", "bucket")))
+        posexplode(Natives.hyperplaneSigs(Seq(col(vecCol)), nBits, nTables)).as(Seq("table_idx", "bucket")))
     val scored = c.join(broadcast(q), Seq("table_idx", "bucket"))
       .where(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"),
-        cosine(col("vec"), col("query_vec")).as("cos"))
+        Natives.cosineSim(Seq(col("vec"), col("query_vec"))).as("cos"))
     topKPerQuery(scored, k)
   }
 
@@ -174,12 +156,12 @@ object Similarity {
                             maxBlock: Long = Dedup.DefaultMaxBlock): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val buckets = Exec.checkpoint(base.select(col("id"),
-      posexplode(signatures(col("vec"), nBits, nTables)).as(Seq("table_idx", "bucket"))))
+      posexplode(Natives.hyperplaneSigs(Seq(col("vec")), nBits, nTables)).as(Seq("table_idx", "bucket"))))
     val cand = Dedup.blockPairs(buckets, Seq("table_idx", "bucket"), maxBlock, "embedding_lsh_blocks")
     cand
       .join(base.select(col("id").as("id_a"), col("vec").as("vec_a")), Seq("id_a"))
       .join(base.select(col("id").as("id_b"), col("vec").as("vec_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), cosine(col("vec_a"), col("vec_b")).as("cos"))
+      .select(col("id_a"), col("id_b"), Natives.cosineSim(Seq(col("vec_a"), col("vec_b"))).as("cos"))
       .where(col("cos") >= minCos)
   }
 

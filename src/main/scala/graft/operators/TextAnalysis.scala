@@ -2,11 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Natives
 
 /** Text-analysis operators for training-data curation: language id (marker
-  * heuristic), quality scoring, token counting, and document fingerprinting.
+  * heuristic), quality features, token counting, packing and sampling.
   * All pure Catalyst expressions (portable semantics, ANSI-SQL expressible
-  * where used as oracle-checked queries).
+  * where used as oracle-checked queries); the per-document kernels they
+  * build on (quality score, BPE estimate, fingerprint, token chunks) are
+  * [[Natives]] entries.
   */
 object TextAnalysis {
 
@@ -56,12 +59,6 @@ object TextAnalysis {
     trim(regexp_replace(regexp_replace(
       regexp_replace(lower(textCol), "\\s", " "), "[^a-z0-9 ]", ""), " +", " "))
 
-  /** BPE-ish subword-count estimate: word pieces of <= 4 chars. Native
-    * single-pass expression, bit-identical to the declarative reference in
-    * `TextAnalysisReference` (SketchExpressionsSpec). */
-  def bpeTokenEstimate(textCol: Column): Column =
-    graft.functions.SketchFunctions.bpeEstimate(textCol)
-
   private[operators] def nonAlnumRatioCol(textCol: Column): Column =
     length(regexp_replace(textCol, "[a-zA-Z0-9 ]", "")).cast("double") /
       greatest(length(textCol), lit(1)).cast("double")
@@ -74,20 +71,11 @@ object TextAnalysis {
     stopHits.cast("double") / greatest(size(tokens), lit(1)).cast("double")
   }
 
-  /** The composite [0,1] quality score — THE single definition consumed by
-    * qualityColumns (q15), Curate's gate, and the q38/q50 oracles. Native
-    * single-pass expression (the declarative form runs an interpreted
-    * aggregate-over-transform per document for the stopword ratio);
-    * bit-identical to the declarative reference in `TextAnalysisReference`
-    * (SketchExpressionsSpec). */
-  def qualityScore(textCol: Column): Column =
-    graft.functions.SketchFunctions.qualityScore(textCol)
-
   /** Integer-scaled (1e4) quality score: floor of a double is bit-portable
     * and integer sums are order-independent — the aggregation/oracle-safe
     * variant. */
   def qualityScoreI4(textCol: Column): Column =
-    floor(qualityScore(textCol) * 10000).cast("long")
+    floor(Natives.qualityScore(Seq(textCol)) * 10000).cast("long")
 
   /** Quality features: length, tokens, mean token length, uppercase ratio,
     * non-alphanumeric ratio, stopword ratio, and a composite [0,1] score. */
@@ -97,7 +85,7 @@ object TextAnalysis {
     val meanTokLen = (nChars.cast("double") / greatest(nTokens, lit(1)).cast("double"))
     val nonAlnumRatio = nonAlnumRatioCol(textCol)
     val stopRatio = stopRatioCol(textCol)
-    val score = qualityScore(textCol)
+    val score = Natives.qualityScore(Seq(textCol))
     Seq(
       nChars.as("n_chars"),
       nTokens.as("n_tokens"),
@@ -107,14 +95,6 @@ object TextAnalysis {
       round(score, 4).as("quality_score"),
       qualityScoreI4(textCol).as("quality_score_i4"))
   }
-
-  /** Oracle-portable fingerprint: the md5 hash chain in hex-string space
-    * (acc = md5(acc || md5(token))) — same order-sensitivity, but every
-    * engine with md5() can recompute it (DuckDB: list_reduce + md5). Native
-    * codegen'd; bit-identical to the declarative reference in
-    * `TextAnalysisReference`. */
-  def fingerprintMd5(textCol: Column): Column =
-    graft.functions.SketchFunctions.fingerprintMd5(textCol)
 
   /** Greedy token-budget packing, two-level, over a frame that already
     * carries an `n_tokens` column (Curate's stage 4 and q35/q63 share this
@@ -270,7 +250,7 @@ object TextAnalysis {
       s"minFreq=$minFreq over n=$n tokens needs a k=$kL summary — raise minFreq")
     val k = kL.toInt
     val summary = tokens
-      .agg(graft.functions.Natives.misraGries(Seq(col("token")), k).as("mg"))
+      .agg(Natives.misraGries(Seq(col("token")), k).as("mg"))
       .select(explode(col("mg").getField("items")).as("it"))
       .select(col("it").getField("item").as("token"))
     tokens
@@ -279,18 +259,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n"))
       .where(col("n") >= minFreq)
   }
-
-  /** Overlapping token-window chunks (context-window preprocessing): chunk
-    * i covers tokens [i*stride, i*stride + size); starts advance by
-    * `stride` while they stay inside the token stream, so every token lands
-    * in at least one chunk and consecutive chunks overlap by size - stride
-    * tokens. Returns array<struct<chunk_idx:int, chunk:string>> — a pure
-    * map-local NATIVE expression (one boundary pass + one byte-range copy
-    * per chunk; explode downstream costs no shuffle). Bit-identical to
-    * the declarative reference in `TextAnalysisReference`
-    * (SketchExpressionsSpec). */
-  def tokenChunks(textCol: Column, size: Int, stride: Int): Column =
-    graft.functions.SketchFunctions.tokenChunks(textCol, size, stride)
 
   /** Deterministic stratified sample: per stratum, exactly min(k, n) rows —
     * the ones with the SMALLEST 52-bit md5 hash of `hashCol` (52 bits = 13
@@ -317,8 +285,8 @@ object TextAnalysis {
         md5PrefixLong(col(hashCol), 13).as("h"))
       .where(col("id").isNotNull && col("h").isNotNull)
       .groupBy(col("stratum"))
-      .agg(graft.functions.TopKFunctions.topKByScore(
-        -col("h").cast("double"), col("id"), k).as("picks"))
+      .agg(Natives.topKByScore(Seq(-col("h").cast("double"), col("id").cast("long")), k)
+        .as("picks"))
       .select(col("stratum"), explode(col("picks")).as("p"))
       .select(col("stratum"), col("p").getField("id").as("id"),
         (-col("p").getField("score")).cast("long").as("h"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.SketchFunctions
+import graft.functions.Natives
 import graft.exec.Exec
 
 /** TF-IDF document-frequency statistics — the standard distinctive-term /
@@ -38,7 +38,7 @@ object TfIdf {
     * rows. */
   def termFrequencies(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), explode(SketchFunctions.tokenTf(col(textCol))).as("t"))
+      .select(col(idCol).as("id"), explode(Natives.tokenTf(Seq(col(textCol)))).as("t"))
       .select(col("id"), col("t.token").as("token"), col("t.tf").as("tf"))
 
   /** Top-k most DISTINCTIVE terms per document: among tokens appearing in

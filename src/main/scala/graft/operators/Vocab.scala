@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.SketchFunctions
+import graft.functions.Natives
 import graft.exec.Exec
 
 /** Tokenizer-vocabulary construction and corpus encoding — the step a
@@ -73,7 +73,7 @@ object Vocab {
              vocab: DataFrame, oovId: Long = 0L): DataFrame = {
     val toks = df.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
-        explode(SketchFunctions.tokenChunks(col(textCol), 1, 1)).as("t"))
+        explode(Natives.tokenChunks(Seq(col(textCol)), 1, 1)).as("t"))
       .select(col("id"), col("t.chunk_idx").as("pos"), col("t.chunk").as("token"))
       .where(col("token") =!= "")
     val vids = toks

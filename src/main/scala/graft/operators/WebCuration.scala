@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.exec.Exec
+import graft.functions.Natives
 
 /** Web-corpus curation operators beyond the per-document kernel: cross-doc
   * boilerplate line removal, PII detection/redaction, intra-doc repetition
@@ -19,11 +20,11 @@ object WebCuration {
   /** Fixed-size token chunks standing in for "lines" on corpora whose text
     * carries no newlines (the synthetic tables here); web text with real
     * newlines would pass `split(text, "\n")` to the line operators
-    * directly. Exactly [[TextAnalysis.tokenChunks]] with stride == size
-    * (ONE copy of the split/sequence/slice arithmetic), chunk strings
-    * projected out. */
+    * directly. Exactly [[Natives.tokenChunks]] with stride == size (ONE
+    * copy of the split/sequence/slice arithmetic), chunk strings projected
+    * out. */
   def tokenLines(textCol: Column, chunk: Int): Column =
-    transform(TextAnalysis.tokenChunks(textCol, chunk, chunk),
+    transform(Natives.tokenChunks(Seq(textCol), chunk, chunk),
       s => s.getField("chunk"))
 
   /** Cross-document boilerplate line removal (the CCNet / RefinedWeb
@@ -49,7 +50,7 @@ object WebCuration {
       val hot = exploded
         .select(col("line_md5"), col("id"))
         .groupBy(col("line_md5"))
-        .agg(countDistinct(col("id")).as("n_docs"))
+        .agg(countDistinct(struct(col("id"))).as("n_docs")) // a null id is one document
         .where(col("n_docs") >= minDocs)
         .select(col("line_md5"), lit(true).as("hot"))
       exploded.join(hot, Seq("line_md5"), "left")
@@ -171,11 +172,10 @@ object WebCuration {
       .groupBy(col("line_md5"))
       .agg(min(struct(col("id"), col("idx"))).as("w"))
     val flags = compact.join(winners, Seq("line_md5"))
-      .select(col("id"), col("idx"),
+      .select(col("id").as("__fid"), col("idx").as("__fidx"),
         (struct(col("id"), col("idx")) === col("w")).as("keep"))
-    // an equality join: a null-id document's rows do not rejoin here, so
-    // keep-first reports it with no lines (the anchor still keeps its row)
-    exploded.join(flags, Seq("id", "idx"))
+    exploded.join(flags, col("id") <=> col("__fid") && col("idx") === col("__fidx"))
+      .drop("__fid", "__fidx")
   }
 
   /** Cross-document KEEP-FIRST SPAN dedup — the "Deduplicating Training
@@ -328,9 +328,8 @@ object WebCuration {
       .join(Exec.checkedIdAnchor(df, idCol, "WebCuration.capPerDomain"),
         Seq("id"), "left_semi")
     base.groupBy(col("domain"))
-      .agg(graft.functions.TopKFunctions.topKByScore(
-        ScorePack.pack(col("score"), col("id")).cast("double"),
-        col("id"), k).as("picks"))
+      .agg(Natives.topKByScore(
+        Seq(ScorePack.pack(col("score"), col("id")).cast("double"), col("id")), k).as("picks"))
       .select(col("domain"), explode(col("picks")).as("p"))
       .select(col("domain"), col("p.id").as("id"),
         ScorePack.unpackScore(col("p.score")).as("score"))
@@ -375,8 +374,7 @@ object WebCuration {
     // the double score packing is not even needed; cnt rides the score)
     val picks = counts
       .groupBy(col("dst"))
-      .agg(graft.functions.TopKFunctions.topKByScore(
-        col("cnt"), col("h48"), k).as("picks"))
+      .agg(Natives.topKByScore(Seq(col("cnt").cast("double"), col("h48")), k).as("picks"))
       .select(col("dst"), posexplode(col("picks")).as(Seq("pos", "p")))
       .select(col("dst"), col("p.id").as("h48"),
         (col("pos") + 1L).cast("long").as("rnk"))

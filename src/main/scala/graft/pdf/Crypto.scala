@@ -86,7 +86,7 @@ final class AesDecryptor(key: Array[Byte]) extends Decryptor {
 
 sealed trait CryptFilter { def newDecryptor(n: Int, g: Int): Decryptor }
 object NoFilter extends CryptFilter {
-  def newDecryptor(n: Int, g: Int): Decryptor = NoDecryptor
+  override def newDecryptor(n: Int, g: Int): Decryptor = NoDecryptor
 }
 
 /** Per-object key salting: key || n[0:3]LE || g[0:2]LE (+"sAlT" for AES),
@@ -112,12 +112,12 @@ private object Salt {
 }
 
 final class Rc4CryptFilter(key: Array[Byte]) extends CryptFilter {
-  def newDecryptor(n: Int, g: Int): Decryptor =
+  override def newDecryptor(n: Int, g: Int): Decryptor =
     new Rc4Decryptor(Salt.saltedKey(key, n, g, aes = false))
 }
 
 final class AesCryptFilter(key: Array[Byte]) extends CryptFilter {
-  def newDecryptor(n: Int, g: Int): Decryptor =
+  override def newDecryptor(n: Int, g: Int): Decryptor =
     new AesDecryptor(Salt.saltedKey(key, n, g, aes = true))
 }
 

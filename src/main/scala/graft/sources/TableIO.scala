@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.{col, count, lit, max_by, md5, struct}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s.{JInt, JObject}
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
@@ -194,22 +194,31 @@ object Resume {
     }
   }
 
+  /** One row per url: the row with the greatest `key`, a struct that
+    * compares lexicographically (null fields sort smallest). The caller's
+    * key leaves ties only between identical copies, so the winner does not
+    * depend on partitioning. A max_by AGGREGATE, not a row_number
+    * window: a window would sort every copy of a hot url (with its
+    * payload) inside one task, and a url recrawled millions of times OOMs
+    * it; the partial aggregate keeps ONE winner payload per url per
+    * partition map-side. Identity on a frame that is already one row per
+    * url. */
+  def winnerPerUrl(df: DataFrame, key: Column): DataFrame = {
+    val cols = df.columns.toSeq
+    df.groupBy(col("url"))
+      .agg(max_by(struct(cols.map(col): _*), key).as("__r"))
+      .select(cols.map(c => col("__r." + c).as(c)): _*)
+  }
+
   /** The CURRENT row per url over an extracted-documents frame whose
     * append batches may hold several versions of a url (recrawl mode,
     * `Extract --recrawl`): newest `warc_ts` wins, `raw_md5` +
-    * `md5(contents)` tiebreak — the same lexicographic winner rule as the
-    * extract job's input dedup, and the same `max_by` AGGREGATE shape
-    * (one winner payload per url per partition map-side; never a
-    * row_number window sorting a hot url's full version history in one
-    * task). Identity on a table that is already one-row-per-url. */
-  def currentPerUrl(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+    * `md5(contents)` tiebreak — the extract job's input-dedup rule over
+    * the extracted columns ([[winnerPerUrl]]). */
+  def currentPerUrl(docs: DataFrame): DataFrame = {
     val cols = docs.columns.toSeq
     require(Seq("url", "warc_ts", "raw_md5", "contents").forall(cols.contains),
       s"currentPerUrl needs url/warc_ts/raw_md5/contents columns, got: $cols")
-    docs.groupBy(col("url"))
-      .agg(max_by(struct(cols.map(col): _*),
-        struct(col("warc_ts"), col("raw_md5"), md5(col("contents")))).as("__r"))
-      .select(cols.map(c => col("__r." + c).as(c)): _*)
+    winnerPerUrl(docs, struct(col("warc_ts"), col("raw_md5"), md5(col("contents"))))
   }
 }

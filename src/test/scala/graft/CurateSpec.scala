@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Curate
+import graft.functions.Natives
 
 /** End-to-end curation pipeline invariants (the per-value exactness is the
   * q38 DuckDB oracle's job; these pin the set-level contracts). */
@@ -65,7 +66,7 @@ class CurateSpec extends AnyFunSuite {
     val staged = stagedRows.map(_.toString).sorted.toSeq
     // contract: the stage IS a pre-transform of the input text, nothing else
     val preTransformed = Curate.curate(stuffed.withColumn("text",
-        graft.functions.SketchFunctions.dedupSpans(col("text"), 5)))
+        Natives.dedupSpans(Seq(col("text")), 5)))
       .collect().map(_.toString).sorted.toSeq
     assert(staged == preTransformed && staged.nonEmpty)
     // the struck repeats must not occupy pack budget: token sums shrink

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Decontaminate, DecontaminateSql, PreparedBenchmark}
+import graft.functions.Natives
 
 class DecontaminateSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -84,10 +85,10 @@ class DecontaminateSpec extends AnyFunSuite {
     // cross-join jaccard over the small fixture)
     val sh = (d: org.apache.spark.sql.DataFrame) => d.where(col("text").isNotNull)
       .select(col("doc_id"),
-        graft.functions.SketchFunctions.shingleHashes(col("text"), 3).as("s"))
+        Natives.shingleHashes(Seq(col("text")), 3).as("s"))
     val brute = sh(corpus).alias("a").crossJoin(sh(bench).alias("b"))
       .select(col("a.doc_id").as("id"),
-        graft.functions.SketchFunctions.jaccardSim(col("a.s"), col("b.s")).as("j"))
+        Natives.jaccardSim(Seq(col("a.s"), col("b.s"))).as("j"))
       .where(col("j") >= 0.9)
       .groupBy("id").count().collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val got = out.filter(_._4).map(t => (t._1, t._2)).toMap

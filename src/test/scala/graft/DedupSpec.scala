@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, DedupReference}
+import graft.functions.Natives
 
 /** Connected components over near-dup pairs: the transitive-closure step
   * that turns pairwise evidence into a dedup decision. */
@@ -57,7 +58,7 @@ class DedupSpec extends AnyFunSuite {
     val blocked = Dedup.simhashPairsPortable(withDups, "doc_id", "text", maxHamming = 3)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val hashed = withDups.select(col("doc_id").as("id"),
-      graft.functions.SketchFunctions.simhashMd5(col("text")).as("sh"))
+      Natives.simhashMd5(Seq(col("text"))).as("sh"))
     val brute = hashed.as("a").crossJoin(hashed.as("b"))
       .where(col("a.id") < col("b.id") &&
         bit_count(col("a.sh").bitwiseXOR(col("b.sh"))) <= 3)

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, ExtractPipeline, Similarity}
 import graft.sources.CrawlCorpus
+import graft.functions.Natives
 
 /** Physical-plan shape assertions — the 100 TB guarantees are properties of
   * the plan, not of small-scale timings: pushdown reaches the scan, small
@@ -259,16 +260,16 @@ class PlanSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val p1 = docs.select(
-        graft.functions.SketchFunctions.fingerprint64(col("text")),
+        Natives.fingerprint64(Seq(col("text"))),
         graft.functions.Natives.simhash64(Seq(col("text"))),
-        graft.functions.SketchFunctions.shingleHashes(col("text"), 3))
+        Natives.shingleHashes(Seq(col("text")), 3))
       .queryExecution.executedPlan.toString
     // "*(n) Project [...]" = the project runs inside WholeStageCodegen
     val top1 = p1.linesIterator.next()
     assert(top1.startsWith("*(1) Project [") && top1.contains("SketchKernel.fingerprint64"),
       p1.take(400))
-    val p2 = emb.select(graft.operators.Similarity.signatures(col("embedding"), 8, 2),
-        graft.operators.Similarity.cosine(col("embedding"), col("embedding")))
+    val p2 = emb.select(Natives.hyperplaneSigs(Seq(col("embedding")), 8, 2),
+        Natives.cosineSim(Seq(col("embedding"), col("embedding"))))
       .queryExecution.executedPlan.toString
     val top2 = p2.linesIterator.next()
     assert(top2.startsWith("*(1) Project [") && top2.contains("LshKernel.signatures") &&
@@ -479,7 +480,7 @@ class PlanSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val out = docs.where(col("text").isNotNull)
       .select(col("doc_id"),
-        graft.functions.SketchFunctions.dedupSpans(col("text"), 5).as("ds"))
+        Natives.dedupSpans(Seq(col("text")), 5).as("ds"))
     assert(collectShuffles(out).isEmpty)
   }
 
@@ -568,7 +569,7 @@ class PlanSpec extends AnyFunSuite {
   test("sketch expressions are native Catalyst (no UDF nodes, batched scan)") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val sketched = docs.select(graft.functions.Natives.simhash64(Seq(col("text"))).as("sh"),
-      graft.functions.SketchFunctions.minhashSig(col("text"), 3, 16).as("sig"))
+      Natives.minhashSig(Seq(col("text")), 3, 16).as("sig"))
     val p = plan(sketched)
     // higher-order functions evaluate interpreted (no whole-stage codegen),
     // but they are native expressions: no ScalaUDF / Python batch nodes, and

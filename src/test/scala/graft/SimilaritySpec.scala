@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.functions.Natives
 
 /** Multi-table LSH vs the exact brute-force baseline: recall@k at sf0.1 and
   * the occupancy-sizing math that keeps bucket populations constant as the
@@ -83,7 +84,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(q == Seq(64, -32, 127, -127, 0))
     // native integer dot == the declarative double fold over the same ints
     val two = Seq((Seq(3, -4, 127), Seq(2, 5, -127))).toDF("a", "b")
-    val native = two.select(graft.functions.SketchFunctions.dotInt(col("a"), col("b")))
+    val native = two.select(Natives.dotInt(Seq(col("a"), col("b"))))
       .head().getLong(0)
     assert(native == (3 * 2 + -4 * 5 + 127 * -127).toLong)
     // SQL surface
@@ -150,9 +151,9 @@ class SimilaritySpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(3.0f, 2.0f, 1.0f))).toDF("a", "b")
     val r = df.select(
-      Similarity.cosine(col("a"), col("a")).as("self"),
-      Similarity.cosine(col("a"), col("b")).as("ab"),
-      Similarity.cosine(col("b"), col("a")).as("ba")).head()
+      Natives.cosineSim(Seq(col("a"), col("a"))).as("self"),
+      Natives.cosineSim(Seq(col("a"), col("b"))).as("ab"),
+      Natives.cosineSim(Seq(col("b"), col("a"))).as("ba")).head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
     assert(r.getDouble(1) == r.getDouble(2))
   }

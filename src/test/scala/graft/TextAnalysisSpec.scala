@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
+import graft.functions.Natives
 
 /** Sharded token packing: the corpus-scale variant of q35's per-language
   * window — packing invariants must hold per (lang, pack) regardless of the
@@ -146,12 +147,12 @@ class TextAnalysisSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     val out = Seq("a b c d e f g").toDF("text")
-      .select(explode(TextAnalysis.tokenChunks(col("text"), size = 4, stride = 2)).as("c"))
+      .select(explode(Natives.tokenChunks(Seq(col("text")), 4, 2)).as("c"))
       .select(col("c.chunk_idx"), col("c.chunk")).collect()
       .map(r => (r.getInt(0), r.getString(1))).toSeq
     assert(out == Seq((0, "a b c d"), (1, "c d e f"), (2, "e f g"), (3, "g")))
     val one = Seq("x").toDF("text")
-      .select(explode(TextAnalysis.tokenChunks(col("text"), 64, 48)).as("c"))
+      .select(explode(Natives.tokenChunks(Seq(col("text")), 64, 48)).as("c"))
       .select(col("c.chunk")).as[String].collect().toSeq
     assert(one == Seq("x"))
   }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.TfIdf
-import graft.functions.SketchFunctions
+import graft.functions.Natives
 
 class TfIdfSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
@@ -11,12 +11,12 @@ class TfIdfSpec extends AnyFunSuite {
 
   test("token_tf: per-doc counts, empty tokens excluded, first-occurrence order") {
     val out = Seq("b a  b c b a").toDF("text")
-      .select(SketchFunctions.tokenTf(col("text")).as("t"))
+      .select(Natives.tokenTf(Seq(col("text"))).as("t"))
       .as[Seq[(String, Long)]].head()
     assert(out == Seq(("b", 3L), ("a", 2L), ("c", 1L)))
     // all-space text: no tokens at all
     val empty = Seq("   ").toDF("text")
-      .select(SketchFunctions.tokenTf(col("text")).as("t"))
+      .select(Natives.tokenTf(Seq(col("text"))).as("t"))
       .as[Seq[(String, Long)]].head()
     assert(empty.isEmpty)
   }
@@ -78,7 +78,7 @@ class TfIdfSpec extends AnyFunSuite {
       "SELECT doc_id, token_tf(text) AS t FROM tfidf_docs WHERE text IS NOT NULL")
       .collect().map(r => (r.getLong(0), r.getSeq[Any](1).mkString(","))).toSet
     val viaApi = docs.where(col("text").isNotNull)
-      .select(col("doc_id"), SketchFunctions.tokenTf(col("text")).as("t"))
+      .select(col("doc_id"), Natives.tokenTf(Seq(col("text"))).as("t"))
       .collect().map(r => (r.getLong(0), r.getSeq[Any](1).mkString(","))).toSet
     assert(viaSql == viaApi)
   }
@@ -124,7 +124,7 @@ class TfIdfSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     def run(s: String): String =
-      Seq(s).toDF("t").select(SketchFunctions.dedupLines(col("t"))).head().getString(0)
+      Seq(s).toDF("t").select(Natives.dedupLines(Seq(col("t")))).head().getString(0)
     assert(run("a\nb\na\nc\nb") == "a\nb\nc")
     assert(run("x") == "x")
     assert(run("a\n\nb\n\na") == "a\n\nb")   // empty lines dedup too
@@ -133,7 +133,7 @@ class TfIdfSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .where(col("text").isNotNull).limit(100)
     val got = docs.select(col("doc_id"),
-        SketchFunctions.dedupLines(translate(col("text"), " ", "\n")).as("c"))
+        Natives.dedupLines(Seq(translate(col("text"), " ", "\n"))).as("c"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
     docs.select("doc_id", "text").collect().foreach { r =>
       val expected = r.getString(1).split(" ", -1).distinct.mkString("\n")

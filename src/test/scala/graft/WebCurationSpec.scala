@@ -67,6 +67,16 @@ class WebCurationSpec extends AnyFunSuite {
       ((2L, 2L, "own words\nhere")))
   }
 
+  test("stripBoilerplate counts a null-id document as one document toward minDocs") {
+    // "aa bb" opens documents 1, 2 and null: three documents, so minDocs = 3 strikes it
+    val df = Seq((Option(1L), "aa bb cc dd"), (Option(2L), "aa bb ee ff"),
+      (Option.empty[Long], "aa bb gg hh")).toDF("doc_id", "text")
+    val out = WebCuration.stripBoilerplate(df, "doc_id", "text", chunk = 2, minDocs = 3)
+      .collect().map(r => (if (r.isNullAt(0)) -1L else r.getLong(0), r.getLong(2),
+        r.getString(3))).toSet
+    assert(out == Set((1L, 1L, "cc dd"), (2L, 1L, "ee ff"), (-1L, 1L, "gg hh")))
+  }
+
   test("stripBoilerplate raise_errors on duplicate ids instead of silently collapsing") {
     val df = Seq((1L, "aa bb"), (1L, "cc dd"), (2L, "aa bb")).toDF("doc_id", "text")
     val e = intercept[Exception] {
@@ -104,6 +114,20 @@ class WebCurationSpec extends AnyFunSuite {
       WebCuration.keepFirstLines(dup, "doc_id", "text", chunk = 2).collect()
     }
     assert(SparkTestBase.causeMessages(e).exists(_.contains("duplicate input id")))
+  }
+
+  test("keepFirstLines and keepFirstUnits keep the text of a null-id document") {
+    val df = Seq((Option(1L), "aa bb cc dd"), (Option.empty[Long], "ee ff gg hh"))
+      .toDF("doc_id", "text")
+    def nullDoc(out: org.apache.spark.sql.DataFrame): (Long, Long, String) = {
+      val rows = out.where($"id".isNull).collect()
+      assert(rows.length == 1)
+      (rows.head.getLong(1), rows.head.getLong(2), rows.head.getString(3))
+    }
+    assert(nullDoc(WebCuration.keepFirstLines(df, "doc_id", "text", chunk = 2)) ==
+      ((2L, 2L, "ee ff\ngg hh")))
+    assert(nullDoc(WebCuration.keepFirstUnits(df, "doc_id", "text", " ")) ==
+      ((4L, 4L, "ee ff gg hh")))
   }
 
   test("keepFirstUnits: paragraph-granularity keep-first over a literal separator") {

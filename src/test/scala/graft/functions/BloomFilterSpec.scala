@@ -80,7 +80,7 @@ class BloomFilterSpec extends AnyFunSuite {
     val ser = benchSh.agg(Natives.bloomBuild(Seq(col("sh")), numBits, k))
       .head().getAs[Array[Byte]](0)
     val got = docs.where($"text".isNotNull)
-      .select($"id", BloomFunctions.bloomShingleHits($"text", lit(ser), w).as("p"))
+      .select($"id", Natives.bloomShingleHits(Seq($"text", lit(ser)), w).as("p"))
       .select($"id", $"p.n_shingles".as("n"), $"p.hits".as("hits"))
       .collect().map(r => (r.getLong(0), (r.getInt(1), r.getSeq[String](2).toSet))).toMap
     // declarative truth: distinct full-width shingle md5s per doc

@@ -49,9 +49,9 @@ class ExtractExpressionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val viaApi = spark.table("sql_docs").select(col("doc_id"),
         Natives.simhash64(Seq(col("text"))).as("sh"),
-        SketchFunctions.fingerprint64(col("text")).as("fp"),
-        SketchFunctions.minhashSig(col("text"), 3, 16).as("sig"),
-        SketchFunctions.shingleHashes(col("text"), 3).as("hs"))
+        Natives.fingerprint64(Seq(col("text"))).as("fp"),
+        Natives.minhashSig(Seq(col("text")), 3, 16).as("sig"),
+        Natives.shingleHashes(Seq(col("text")), 3).as("hs"))
       .orderBy("doc_id").collect()
     assert(viaSql.toSeq.map(_.toString) == viaApi.toSeq.map(_.toString))
     val cos = spark.sql(
@@ -71,8 +71,8 @@ class ExtractExpressionsSpec extends AnyFunSuite {
         |FROM sqlfns""".stripMargin).collect()(0)
     assert(row.getDouble(0) == 0.5)
     val api = Seq("the quick brown fox").toDF("t")
-      .select(SketchFunctions.qualityScore(org.apache.spark.sql.functions.col("t")),
-        SketchFunctions.bpeEstimate(org.apache.spark.sql.functions.col("t")))
+      .select(Natives.qualityScore(Seq(org.apache.spark.sql.functions.col("t"))),
+        Natives.bpeEstimate(Seq(org.apache.spark.sql.functions.col("t"))))
       .collect()(0)
     assert(row.getDouble(1) == api.getDouble(0))
     // the(1) + quick(2) + brown(2) + fox(1) = 6 pieces of <= 4 chars

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Property-style checks of the pure kernel functions against reference
@@ -9,6 +9,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * offline cache carries no scalatest-scalacheck bridge), thousands of
   * cases per run, no Spark session needed. */
 class KernelPropertySpec extends AnyFunSuite {
+
+  /** (chunk_idx, chunk) of each `tokenChunksData` row. */
+  private def chunkPairs(chunks: ArrayData): Seq[(Int, String)] =
+    (0 until chunks.numElements()).map { i =>
+      val row = chunks.getStruct(i, 2)
+      (row.getInt(0), row.getUTF8String(1).toString)
+    }
 
   test("jaccardSim == reference set math for random long arrays (dense + sparse)") {
     val rnd = new scala.util.Random(42)
@@ -39,11 +46,11 @@ class KernelPropertySpec extends AnyFunSuite {
       val stride = 1 + rnd.nextInt(8)
       val size = stride + rnd.nextInt(8)
       val tokens = text.split(" ", -1)
-      val chunks = SketchKernel.tokenChunks(UTF8String.fromString(text), size, stride)
+      val chunks = chunkPairs(SketchKernel.tokenChunksData(UTF8String.fromString(text), size, stride))
       val expected = (0 until ((tokens.length - 1) / stride + 1)).map { i =>
         (i, tokens.slice(i * stride, math.min(i * stride + size, tokens.length)).mkString(" "))
       }
-      assert(chunks.map { case (i, s) => (i, s.toString) }.toSeq == expected,
+      assert(chunks == expected,
         s"trial=$trial text='$text' size=$size stride=$stride")
     }
   }
@@ -54,12 +61,12 @@ class KernelPropertySpec extends AnyFunSuite {
     // boundary pass + one byte-range copy per chunk
     val text = Array.tabulate(200000)(i => "tok" + (i % 997)).mkString(" ")
     val t0 = System.nanoTime()
-    val chunks = SketchKernel.tokenChunks(UTF8String.fromString(text), 2048, 1024)
+    val data = SketchKernel.tokenChunksData(UTF8String.fromString(text), 2048, 1024)
     val ms = (System.nanoTime() - t0) / 1e6
+    val chunks = chunkPairs(data)
     assert(chunks.length == (200000 - 1) / 1024 + 1)
-    assert(chunks.head._2.toString.startsWith("tok0 tok1 "))
-    val last = chunks.last._2.toString
-    assert(last.endsWith("tok" + (199999 % 997)))
+    assert(chunks.head._2.startsWith("tok0 tok1 "))
+    assert(chunks.last._2.endsWith("tok" + (199999 % 997)))
     assert(ms < 1000.0, s"native chunking took ${ms}ms on 200k tokens")
   }
 

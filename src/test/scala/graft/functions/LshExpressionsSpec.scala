@@ -3,7 +3,7 @@ package graft.functions
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.operators.{Similarity, SimilarityReference}
+import graft.operators.SimilarityReference
 
 /** Parity: the native hyperplane-signature expression must equal the
   * declarative HOF formulation bit-for-bit on real embeddings. */
@@ -15,7 +15,7 @@ class LshExpressionsSpec extends AnyFunSuite {
     for ((nBits, nTables) <- Seq((1, 4), (4, 2), (16, 8))) {
       val cmp = emb.select(
         SimilarityReference.signaturesDeclarative(col("embedding"), nBits, nTables).as("a"),
-        Similarity.signatures(col("embedding"), nBits, nTables).as("b"))
+        Natives.hyperplaneSigs(Seq(col("embedding")), nBits, nTables).as("b"))
       assert(cmp.where(col("a") =!= col("b")).count() == 0, s"nBits=$nBits nTables=$nTables")
     }
   }
@@ -26,14 +26,14 @@ class LshExpressionsSpec extends AnyFunSuite {
                   "SELECT hyperplane_sigs(array(1), 4, 2)"))
       intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
     intercept[org.apache.spark.sql.AnalysisException](
-      spark.range(1).select(Similarity.cosine(array(lit("a")), array(lit("b")))).collect())
+      spark.range(1).select(Natives.cosineSim(Seq(array(lit("a")), array(lit("b"))))).collect())
   }
 
   test("double-typed vectors take the non-float path and agree too") {
     val d = emb.select(col("embedding").cast("array<double>").as("v"))
     val cmp = d.select(
       SimilarityReference.signaturesDeclarative(col("v"), 8, 2).as("a"),
-      Similarity.signatures(col("v"), 8, 2).as("b"))
+      Natives.hyperplaneSigs(Seq(col("v")), 8, 2).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
   }
 
@@ -43,9 +43,9 @@ class LshExpressionsSpec extends AnyFunSuite {
       .where(col("ia") < col("ib") && col("ib") < 40)
     val cmp = pairs.select(
       SimilarityReference.cosineDeclarative(col("a"), col("b")).as("x"),
-      Similarity.cosine(col("a"), col("b")).as("y"),
+      Natives.cosineSim(Seq(col("a"), col("b"))).as("y"),
       SimilarityReference.cosineDeclarative(col("a").cast("array<double>"), col("b")).as("xd"),
-      Similarity.cosine(col("a").cast("array<double>"), col("b")).as("yd"))
+      Natives.cosineSim(Seq(col("a").cast("array<double>"), col("b"))).as("yd"))
     assert(cmp.where(col("x") =!= col("y") || col("xd") =!= col("yd")).count() == 0)
   }
 
@@ -61,9 +61,9 @@ class LshExpressionsSpec extends AnyFunSuite {
       Row(Seq(1.0, 2.0), Seq(3.0, 4.0)))            // clean
     val df = spark.createDataFrame(rows, schema)
     val out = df.select(
-      Similarity.cosine(col("a"), col("b")).as("nat"),
+      Natives.cosineSim(Seq(col("a"), col("b"))).as("nat"),
       SimilarityReference.cosineDeclarative(col("a"), col("b")).as("dec"),
-      Similarity.signatures(col("a"), 4, 2).as("sig_nat"),
+      Natives.hyperplaneSigs(Seq(col("a")), 4, 2).as("sig_nat"),
       SimilarityReference.signaturesDeclarative(col("a"), 4, 2).as("sig_dec")).collect()
     out.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1), r.toString) // cosine null parity
@@ -74,7 +74,7 @@ class LshExpressionsSpec extends AnyFunSuite {
   }
 
   test("plan stays native: no ScalaUDF, batched scan") {
-    val p = emb.select(Similarity.signatures(col("embedding"), 8, 4).as("s"))
+    val p = emb.select(Natives.hyperplaneSigs(Seq(col("embedding")), 8, 4).as("s"))
       .queryExecution.executedPlan.toString
     assert(!p.contains("ScalaUDF"), p.take(1500))
     assert(p.contains("LshKernel.signatures("), p.take(1500))

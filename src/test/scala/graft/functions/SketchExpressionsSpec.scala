@@ -21,19 +21,19 @@ class SketchExpressionsSpec extends AnyFunSuite {
   test("native simhash_md5 == declarative md5 simhash on all documents + edge cases") {
     val cmp = docs.select(
       DedupReference.simhashMd5Declarative(col("text")).as("a"),
-      SketchFunctions.simhashMd5(col("text")).as("b"))
+      Natives.simhashMd5(Seq(col("text"))).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
     import spark.implicits._
     val edge = Seq("", "word", "a  b", " lead", "trail ", "a b c d e", "ünïcode tökens")
       .toDF("text")
     edge.select(
         DedupReference.simhashMd5Declarative(col("text")).as("a"),
-        SketchFunctions.simhashMd5(col("text")).as("b"))
+        Natives.simhashMd5(Seq(col("text"))).as("b"))
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1), r))
     // the value really is the top-60-bit md5 construction the DuckDB oracle
     // recomputes: check one token against Spark's own md5()
     val one = Seq("hello").toDF("text").select(
-      SketchFunctions.simhashMd5(col("text")).as("sh"),
+      Natives.simhashMd5(Seq(col("text"))).as("sh"),
       conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long").as("h")).head()
     // a single token votes its own bits: simhash == token hash
     assert(one.getLong(0) == one.getLong(1), one.toString)
@@ -42,7 +42,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
   test("native minhash_sig == declarative signature on all documents") {
     val cmp = docs.select(
       DedupReference.minhashSignatureDeclarative(DedupReference.wordShingles(col("text"), 3), 32).as("a"),
-      SketchFunctions.minhashSig(col("text"), 3, 32).as("b"))
+      Natives.minhashSig(Seq(col("text")), 3, 32).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
   }
 
@@ -50,7 +50,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
     for (n <- Seq(2, 3, 5)) {
       val cmp = docs.select(
         array_distinct(transform(DedupReference.wordShingles(col("text"), n), s => xxhash64(s))).as("a"),
-        SketchFunctions.shingleHashes(col("text"), n).as("b"))
+        Natives.shingleHashes(Seq(col("text")), n).as("b"))
       assert(cmp.where(col("a") =!= col("b")).count() == 0, s"n=$n")
     }
   }
@@ -62,18 +62,18 @@ class SketchExpressionsSpec extends AnyFunSuite {
     // values; h1/h2 derive from exactly the stored base hash)
     for ((n, k) <- Seq((3, 64), (3, 32), (5, 16))) {
       val cmp = docs.select(
-        SketchFunctions.minhashSig(col("text"), n, k).as("sig_a"),
-        SketchFunctions.minhashSigFromHashes(
-          SketchFunctions.shingleHashes(col("text"), n), k).as("sig_b"))
+        Natives.minhashSig(Seq(col("text")), n, k).as("sig_a"),
+        Natives.minhashSigFromHashes(
+          Seq(Natives.shingleHashes(Seq(col("text")), n)), k).as("sig_b"))
       assert(cmp.where(col("sig_a") =!= col("sig_b")).count() == 0, s"n=$n k=$k")
     }
     import spark.implicits._
     val edge = Seq("", "word", "a  b", " lead", "trail ", "a b c d e", "ünïcode tökens")
       .toDF("text")
     edge.select(
-        SketchFunctions.minhashSig(col("text"), 3, 16).as("sig_a"),
-        SketchFunctions.minhashSigFromHashes(
-          SketchFunctions.shingleHashes(col("text"), 3), 16).as("sig_b"))
+        Natives.minhashSig(Seq(col("text")), 3, 16).as("sig_a"),
+        Natives.minhashSigFromHashes(
+          Seq(Natives.shingleHashes(Seq(col("text")), 3)), 16).as("sig_b"))
       .collect().foreach { r =>
         assert(r.getSeq[Long](0) == r.getSeq[Long](1), r)
       }
@@ -83,14 +83,14 @@ class SketchExpressionsSpec extends AnyFunSuite {
     // all consecutive-doc pairs (distinct shingle-hash arrays, the real
     // verify input) plus crafted duplicate/disjoint/subset arrays
     val sh = docs.select(col("doc_id"),
-      SketchFunctions.shingleHashes(col("text"), 3).as("h"))
+      Natives.shingleHashes(Seq(col("text")), 3).as("h"))
     val pairs = sh.as("a").join(sh.as("b"),
       col("a.doc_id") + 1 === col("b.doc_id"))
       .select(col("a.h").as("ha"), col("b.h").as("hb"))
     val cmp = pairs.select(
       (size(array_intersect(col("ha"), col("hb"))).cast("double") /
         size(array_union(col("ha"), col("hb"))).cast("double")).as("decl"),
-      SketchFunctions.jaccardSim(col("ha"), col("hb")).as("nat"))
+      Natives.jaccardSim(Seq(col("ha"), col("hb"))).as("nat"))
     assert(cmp.count() > 0)
     assert(cmp.where(col("decl") =!= col("nat")).count() == 0)
 
@@ -106,7 +106,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
     edge.select(
         (size(array_intersect(col("ha"), col("hb"))).cast("double") /
           size(array_union(col("ha"), col("hb"))).cast("double")).as("decl"),
-        SketchFunctions.jaccardSim(col("ha"), col("hb")).as("nat"))
+        Natives.jaccardSim(Seq(col("ha"), col("hb"))).as("nat"))
       .collect().foreach(r => assert(r.getDouble(0) == r.getDouble(1), r))
 
     // null elements: NULL is one distinct set element, exactly as
@@ -120,7 +120,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
     nulls.select(
         (size(array_intersect(col("ha"), col("hb"))).cast("double") /
           size(array_union(col("ha"), col("hb"))).cast("double")).as("decl"),
-        SketchFunctions.jaccardSim(col("ha"), col("hb")).as("nat"))
+        Natives.jaccardSim(Seq(col("ha"), col("hb"))).as("nat"))
       .collect().foreach(r => assert(r.getDouble(0) == r.getDouble(1), r))
   }
 
@@ -128,7 +128,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val cmp = docs.select(
       graft.operators.TextAnalysisReference.qualityScoreDeclarative(col("text")).as("a"),
-      SketchFunctions.qualityScore(col("text")).as("b"))
+      Natives.qualityScore(Seq(col("text"))).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
     import spark.implicits._
     val edge = Seq(
@@ -138,7 +138,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
       .toDF("text")
     edge.select(
         graft.operators.TextAnalysisReference.qualityScoreDeclarative(col("text")).as("a"),
-        SketchFunctions.qualityScore(col("text")).as("b"))
+        Natives.qualityScore(Seq(col("text"))).as("b"))
       .collect().foreach(r => assert(r.getDouble(0) == r.getDouble(1), r))
   }
 
@@ -146,14 +146,14 @@ class SketchExpressionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val cmp = docs.select(
       graft.operators.TextAnalysisReference.bpeTokenEstimateDeclarative(col("text")).as("a"),
-      SketchFunctions.bpeEstimate(col("text")).as("b"))
+      Natives.bpeEstimate(Seq(col("text"))).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
     import spark.implicits._
     Seq("", "a", "abcd", "abcde", "ünïcödé tökens", "a  b", " x ", "😀😀😀😀😀")
       .toDF("text")
       .select(
         graft.operators.TextAnalysisReference.bpeTokenEstimateDeclarative(col("text")).as("a"),
-        SketchFunctions.bpeEstimate(col("text")).as("b"))
+        Natives.bpeEstimate(Seq(col("text"))).as("b"))
       .collect().foreach(r => assert(r.getLong(0) == r.getLong(1), r))
   }
 
@@ -162,39 +162,39 @@ class SketchExpressionsSpec extends AnyFunSuite {
     for ((size, stride) <- Seq((64, 48), (8, 8), (4, 2), (1, 1))) {
       val cmp = docs.select(
         graft.operators.TextAnalysisReference.tokenChunksDeclarative(col("text"), size, stride).as("a"),
-        SketchFunctions.tokenChunks(col("text"), size, stride).as("b"))
+        Natives.tokenChunks(Seq(col("text")), size, stride).as("b"))
       assert(cmp.where(col("a") =!= col("b")).count() == 0, s"size=$size stride=$stride")
     }
     import spark.implicits._
     val edge = Seq("", "one", "a b", "trail ", " lead", "a  b c").toDF("text")
     val cmp = edge.select(
       graft.operators.TextAnalysisReference.tokenChunksDeclarative(col("text"), 2, 2).as("a"),
-      SketchFunctions.tokenChunks(col("text"), 2, 2).as("b"))
+      Natives.tokenChunks(Seq(col("text")), 2, 2).as("b"))
     cmp.collect().foreach(r => assert(r.get(0) == r.get(1), r))
   }
 
   test("native fingerprint_md5 == declarative md5 chain on all documents + edge cases") {
     val cmp = docs.select(
       graft.operators.TextAnalysisReference.fingerprintMd5Declarative(col("text")).as("a"),
-      SketchFunctions.fingerprintMd5(col("text")).as("b"))
+      Natives.fingerprintMd5(Seq(col("text"))).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
     import spark.implicits._
     Seq("", "word", "a  b", " lead", "trail ", "ünïcode tökens")
       .toDF("text")
       .select(
         graft.operators.TextAnalysisReference.fingerprintMd5Declarative(col("text")).as("a"),
-        SketchFunctions.fingerprintMd5(col("text")).as("b"))
+        Natives.fingerprintMd5(Seq(col("text"))).as("b"))
       .collect().foreach(r => assert(r.getString(0) == r.getString(1), r))
     // pinned golden for the exact two-token chain (matches hashlib md5 fold)
     val g = Seq("hello world").toDF("text")
-      .select(SketchFunctions.fingerprintMd5(col("text"))).head().getString(0)
+      .select(Natives.fingerprintMd5(Seq(col("text")))).head().getString(0)
     assert(g == "df63fe575e5b30f5e7876be8d8e72df2", g)
   }
 
   test("native fingerprint64 == declarative hash-chain fold on all documents") {
     val cmp = docs.select(
       graft.operators.TextAnalysisReference.fingerprintDeclarative(col("text")).as("a"),
-      SketchFunctions.fingerprint64(col("text")).as("b"))
+      Natives.fingerprint64(Seq(col("text"))).as("b"))
     assert(cmp.where(col("a") =!= col("b")).count() == 0)
   }
 
@@ -205,9 +205,9 @@ class SketchExpressionsSpec extends AnyFunSuite {
       DedupReference.simhashDeclarative(col("text")).as("a"),
       Natives.simhash64(Seq(col("text"))).as("b"),
       DedupReference.minhashSignatureDeclarative(DedupReference.wordShingles(col("text"), 3), 16).as("ma"),
-      SketchFunctions.minhashSig(col("text"), 3, 16).as("mb"),
+      Natives.minhashSig(Seq(col("text")), 3, 16).as("mb"),
       graft.operators.TextAnalysisReference.fingerprintDeclarative(col("text")).as("fa"),
-      SketchFunctions.fingerprint64(col("text")).as("fb"))
+      Natives.fingerprint64(Seq(col("text"))).as("fb"))
     val rows = cmp.collect()
     rows.foreach { r =>
       assert(r.getLong(0) == r.getLong(1), r)
@@ -225,7 +225,7 @@ class SketchExpressionsSpec extends AnyFunSuite {
       "a  b a  b",             // empty tokens repeat too
       "t t t t t").toDF("text")
     val out = df.select(col("text"),
-      SketchFunctions.dedupSpans(col("text"), 2).as("native"),
+      Natives.dedupSpans(Seq(col("text")), 2).as("native"),
       expr("dedup_spans(text, 2)").as("sql")).collect()
     out.foreach(r => assert(r.getString(1) == r.getString(2), r))
     // repeats at 4 ("a b") and 5 ("b c") cover tokens 4..6 -> "e" survives

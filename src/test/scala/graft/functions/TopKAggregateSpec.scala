@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.SparkTestBase
-import graft.functions.TopKFunctions.topKByScore
 
 /** TopKByScore: the bounded per-group top-k aggregate that replaces the
   * row_number window (the window shuffles every scored row; the aggregate
@@ -29,7 +28,7 @@ class TopKAggregateSpec extends AnyFunSuite {
     for (parts <- Seq(1, 4, 13)) {
       val df = rows.toDF("g", "id", "score").repartition(parts)
       val viaAgg = explodeTop(
-          df.groupBy(col("g")).agg(topKByScore(col("score"), col("id"), 10).as("top")))
+          df.groupBy(col("g")).agg(Natives.topKByScore(Seq(col("score"), col("id")), 10).as("top")))
         .orderBy(col("g"), col("rank"))
         .collect().toSeq
       val w = Window.partitionBy(col("g")).orderBy(col("score").desc, col("id").asc)
@@ -46,7 +45,7 @@ class TopKAggregateSpec extends AnyFunSuite {
     val df = Seq((1L, 10L, 0.5), (1L, 10L, 0.5), (1L, 11L, 0.4), (1L, 12L, 0.3))
       .toDF("g", "id", "score").repartition(3)
     val top = explodeTop(
-      df.groupBy(col("g")).agg(topKByScore(col("score"), col("id"), 2).as("top"))).collect()
+      df.groupBy(col("g")).agg(Natives.topKByScore(Seq(col("score"), col("id")), 2).as("top"))).collect()
     assert(top.map(r => (r.getLong(1), r.getDouble(3))).toSeq ==
       Seq((10L, 0.5), (11L, 0.4)))
   }
@@ -54,7 +53,7 @@ class TopKAggregateSpec extends AnyFunSuite {
   test("groups smaller than k return all their rows, ordered") {
     val df = Seq((1L, 1L, 0.1), (1L, 2L, 0.9)).toDF("g", "id", "score")
     val top = explodeTop(
-      df.groupBy(col("g")).agg(topKByScore(col("score"), col("id"), 5).as("top"))).collect()
+      df.groupBy(col("g")).agg(Natives.topKByScore(Seq(col("score"), col("id")), 5).as("top"))).collect()
     assert(top.map(_.getLong(1)).toSeq == Seq(2L, 1L))
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Natives
 
 /** Test oracles for [[Dedup]]: the declarative higher-order-function
   * formulations the native sketch expressions must equal bit-for-bit
@@ -96,6 +97,6 @@ object DedupReference {
     Dedup.candidatesFromSigs(
       graft.exec.Exec.checkpoint(df.select(
         col(idCol).as("id"),
-        graft.functions.SketchFunctions.minhashSig(col(textCol), shingleWords, k).as("sig"))),
+        Natives.minhashSig(Seq(col(textCol)), shingleWords, k).as("sig"))),
       k, bands, maxBlock)
 }

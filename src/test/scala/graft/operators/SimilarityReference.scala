@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Test oracle: the interpreted higher-order-function formulations that the
-  * native [[Similarity.cosine]] and [[Similarity.signatures]] expressions
+  * native `cosine_sim` and `hyperplane_sigs` entries ([[graft.functions.Natives]])
   * must equal bit-for-bit (LshExpressionsSpec). Not used by any main code.
   */
 object SimilarityReference {
@@ -18,7 +18,7 @@ object SimilarityReference {
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** The interpreted-HOF formulation `Similarity.cosine` is verified against. */
+  /** The interpreted-HOF formulation `cosine_sim` is verified against. */
   def cosineDeclarative(a: Column, b: Column): Column =
     dot(a, b) / (l2norm(a) * l2norm(b))
 
@@ -40,7 +40,7 @@ object SimilarityReference {
       }),
       lit(0L), (acc, x) => acc + x)
 
-  /** The interpreted-HOF formulation `Similarity.signatures` is verified against. */
+  /** The interpreted-HOF formulation `hyperplane_sigs` is verified against. */
   def signaturesDeclarative(vec: Column, nBits: Int, nTables: Int): Column =
     array((0 until nTables).map(t => hyperplaneSignature(vec, nBits, t)): _*)
 }

@@ -22,6 +22,8 @@ code outside its own body (so plain recursion does not count) names it:
   file that takes `Obj.getClass` or `classOf[Obj]` (a kernel method invoked
   through reflection, e.g. `NativeFn(..., SketchKernel.getClass, "simhash")`).
 
+A `def name` line declares a name and references nothing, whoever owns it:
+another object's def of the same name does not reach this one.
 Comments are stripped first, and string literals count only as a whole:
 an error label such as "LanguageModel.bigramSurprisal" reaches nothing,
 while the `$x` / `${...}` parts of an interpolated string are code.
@@ -297,10 +299,10 @@ def arity(src, line, name):
 DECL_RE = re.compile(r"\bdef\s+$")
 
 
-def reaching_sites(sources, path, kind, owner, name, own, decls=True):
+def reaching_sites(sources, path, kind, owner, name, own):
     """The argument count of every reference to `name` outside the `own`
-    line spans of `path` (None where no argument list follows); with
-    `decls` false, `def name` declarations are not references."""
+    line spans of `path` (None where no argument list follows). A
+    `def name` declaration, of any owner, is not a reference."""
     bare = word(name)
     qualified = word(f"{owner}.{name}")
     sites = []
@@ -313,8 +315,8 @@ def reaching_sites(sources, path, kind, owner, name, own, decls=True):
             pattern = bare
         for m in pattern.finditer(src.code):
             k = bisect.bisect_right(src.starts, m.start()) - 1
-            if any(s <= k < e for s, e in skip) or (
-                    not decls and DECL_RE.search(src.code, src.starts[k], m.start())):
+            if (any(s <= k < e for s, e in skip)
+                    or DECL_RE.search(src.code, src.starts[k], m.start())):
                 continue
             args = arg_list(src.code, m.end())
             sites.append(None if args is None else len(args))
@@ -336,7 +338,7 @@ def unreached(sources, path, kind, owner, name, spans):
     for span in spans:
         lo, hi = arity(src, span[0], name)
         if not any(k is None or lo <= k <= hi
-                   for k in reaching_sites(sources, path, kind, owner, name, [span], decls=False)):
+                   for k in reaching_sites(sources, path, kind, owner, name, [span])):
             out.append(span)
     return out
 
