@@ -32,7 +32,17 @@ import graft.functions.Natives
   * curation stage runs over everything committed so far and lands as a
   * replace-style `curated` snapshot (quality/langid gates, exact +
   * near-dup dedup, token packing). A re-run over the same input is a
-  * no-op. With `--recrawl <previous crawl parquet>` the job extracts
+  * no-op, and over an unchanged input directory it starts no Spark job: a
+  * plain run (not `--recrawl`, not `synth:N`) first lists every file under
+  * the input root with the Hadoop `FileSystem`, and the documents batch it
+  * commits records a digest of that listing's (path, length, modification
+  * time) triples in its manifest entry. A later run whose listing a
+  * committed batch recorded prints the no-op summary and returns before it
+  * reads the input. The one assumption: a file with the same path, length
+  * and mtime holds the same bytes. Such a re-run does not repeat the
+  * null-url warning; the run that committed the batch printed it. Any
+  * other re-run takes the full resume diff.
+  * With `--recrawl <previous crawl parquet>` the job extracts
   * only urls whose content changed vs that snapshot plus anything never
   * committed — changed urls append a NEWER version row, and per-url
   * consumers read through `Resume.currentPerUrl`.
@@ -149,6 +159,25 @@ object Extract {
   private def run(a: Args, spark: SparkSession): Unit = {
     import spark.implicits._
 
+    val docsTable = new ParquetManifestTable(s"${a.outRoot}/documents", a.tableFormat)
+    val metricsTable = new ParquetManifestTable(s"${a.outRoot}/metrics", a.tableFormat)
+    def nothingToDo(): Unit =
+      println(s"""{"job":"graft-extract","pending":0,"committed":${docsTable.committedBatches.size},"note":"nothing to do: all input urls already committed"}""")
+
+    // the no-op memo: a plain resume over an input listing that a
+    // committed documents batch recorded has nothing pending (the table is
+    // append-only, and that batch committed every url the listed files
+    // held), so it returns before the read starts a Spark job. The listing
+    // is taken before the read; a batch records it only when the read
+    // consumed exactly the listed files
+    val listing =
+      if (a.input.startsWith("synth:") || a.recrawl != null) None
+      else Resume.listInput(spark, a.input)
+    if (listing.exists(l => docsTable.recordsInputListing(l.digest))) {
+      nothingToDo()
+      return
+    }
+
     val raw = if (a.input.startsWith("synth:")) null else spark.read.parquet(a.input)
     val input =
       if (raw == null)
@@ -156,9 +185,6 @@ object Extract {
       // a per-row password rides with its row through resume, the recrawl
       // semi-join and the duplicate-url dedup into the extraction
       else raw.select((crawlCols ++ Option(a.passwordColumn)).map(col): _*).as[CrawlRow]
-
-    val docsTable = new ParquetManifestTable(s"${a.outRoot}/documents", a.tableFormat)
-    val metricsTable = new ParquetManifestTable(s"${a.outRoot}/metrics", a.tableFormat)
 
     val pending0 =
       if (a.recrawl == null) Resume.pending(input, docsTable)
@@ -253,7 +279,7 @@ object Extract {
     if (nNull > 0)
       println(s"""{"job":"graft-extract","warn":"input has $nNull null-url rows; dropped (urls are the pipeline key)"}""")
     if (nPending == 0) {
-      println(s"""{"job":"graft-extract","pending":0,"committed":${docsTable.committedBatches.size},"note":"nothing to do: all input urls already committed"}""")
+      nothingToDo()
       return
     }
     // commit skips a known batch id (the idempotent retry), so reusing a
@@ -292,7 +318,8 @@ object Extract {
       includeEmbedded = a.includeEmbedded, passwordColumn = a.passwordColumn,
       metrics = partitionRows)
 
-    docsTable.commit(docs.toDF(), batchId, "ok_rows" -> count_if(col("ok")))
+    docsTable.commit(docs.toDF(), batchId, listing.filter(_.readBy(raw)).map(_.digest),
+      "ok_rows" -> count_if(col("ok")))
     metricsTable.commit(
       spark.createDataFrame(partitionRows.value.asScala.sortBy(_.getInt(0)).asJava,
           ExtractPipeline.PartitionMetricsSchema)

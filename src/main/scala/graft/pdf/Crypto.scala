@@ -60,7 +60,7 @@ object Crypto {
 }
 
 sealed trait Decryptor { def decrypt(data: Array[Byte]): Unit }
-object NoDecryptor extends Decryptor { def decrypt(data: Array[Byte]): Unit = () }
+object NoDecryptor extends Decryptor { override def decrypt(data: Array[Byte]): Unit = () }
 
 final class Rc4Decryptor(key: Array[Byte]) extends Decryptor {
   def decrypt(data: Array[Byte]): Unit = Crypto.rc4(key, data)

@@ -139,22 +139,24 @@ object Filters {
     if ((flg & 0x20) != 0) return data // FDICT unsupported without dictionary
     val inf = new Inflater()
     inf.setInput(data)
-    val out = new ArrayBuffer[Byte](data.length * 4)
-    val buf = new Array[Byte](8192)
+    // inflate straight into one growable array: out(0 until n) is the output
+    var out = new Array[Byte](math.max(data.length * 4, 8192))
+    var n = 0
     var failed = false
     try {
       var going = true
       while (going && !inf.finished()) {
-        val k = inf.inflate(buf)
-        if (k > 0) out ++= buf.view.slice(0, k)
+        if (n == out.length) out = java.util.Arrays.copyOf(out, Math.multiplyExact(out.length, 2))
+        val k = inf.inflate(out, n, out.length - n)
+        if (k > 0) n += k
         else going = false // needs more input / dictionary: treat as stream end
       }
     } catch { case _: DataFormatException => failed = true }
     inf.end()
     // Go: only a zero-bytes-decoded *error* falls back to raw input;
     // a valid empty stream decodes to empty (filters.go:221-224).
-    if (out.isEmpty && failed) return data
-    reversePredictor(out.toArray, parms)
+    if (n == 0 && failed) return data
+    reversePredictor(if (n == out.length) out else java.util.Arrays.copyOf(out, n), parms)
   }
 
   /** filters.go:230-253: /EarlyChange default 1 => TIFF-variant LZW;

@@ -215,10 +215,10 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
 
   /** One-or-more separators starting at i, then stage continuation.
     * stage 0: digits then separators then "obj"; stage 1: "obj". Returns the
-    * match end or -1. failMemo prunes repeated failing states. */
-  private def sepPlus(i: Int, stage: Int, failMemo: mutable.HashSet[Long]): Int = {
-    val key = (i.toLong << 2) | stage
-    if (failMemo.contains(key)) return -1
+    * match end or -1. failMemo prunes repeated failing states: bit i of
+    * `failMemo(stage)` marks position i failed at that stage. */
+  private def sepPlus(i: Int, stage: Int, failMemo: Array[java.util.BitSet]): Int = {
+    if (failMemo(stage).get(i)) return -1
     var r = -1
     if (i < len && isSepWs(data(i))) {
       // collapse a maximal whitespace run: interior stops cannot be followed
@@ -235,12 +235,12 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
         k -= 1
       }
     }
-    if (r < 0) failMemo += key
+    if (r < 0) failMemo(stage).set(i)
     r
   }
 
   /** After >=1 separators: prefer more separators, else the continuation. */
-  private def afterSep(j: Int, stage: Int, failMemo: mutable.HashSet[Long]): Int = {
+  private def afterSep(j: Int, stage: Int, failMemo: Array[java.util.BitSet]): Int = {
     val r = sepPlus(j, stage, failMemo)
     if (r >= 0) return r
     if (stage == 0) {
@@ -253,7 +253,7 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
   }
 
   /** Try the full header pattern anchored at `start`; returns end or -1. */
-  private def matchObjHeader(start: Int, failMemo: mutable.HashSet[Long]): Int = {
+  private def matchObjHeader(start: Int, failMemo: Array[java.util.BitSet]): Int = {
     val d = digitsEnd(start)
     if (d < 0) -1 else sepPlus(d, 0, failMemo)
   }
@@ -263,7 +263,7 @@ final class PdfParser(val data: Array[Byte], val output: DocSink) {
   private def findObjects(): mutable.LinkedHashMap[Int, XrefEntry] = {
     val objects = mutable.LinkedHashMap.empty[Int, XrefEntry]
     var i = 0
-    val failMemo = mutable.HashSet.empty[Long]
+    val failMemo = Array(new java.util.BitSet, new java.util.BitSet)
     while (i < len) {
       if (isDigit(data(i))) {
         val end = matchObjHeader(i, failMemo)

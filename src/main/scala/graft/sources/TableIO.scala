@@ -1,10 +1,11 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.fs.{FileStatus, Path => FsPath}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max_by, md5, struct}
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.json4s.{JInt, JObject}
+import org.json4s.{JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import scala.jdk.CollectionConverters._
 
@@ -25,7 +26,9 @@ import scala.jdk.CollectionConverters._
   * As in Delta Lake's log, each commit also records its batch's schema and
   * record counts, so readers never open data files to learn them: `counts`
   * names extra whole-number aggregates (e.g. `count_if(ok)`) recorded
-  * next to the row count.
+  * next to the row count. A batch may also record the digest of the input
+  * listing it was resumed from ([[Resume.InputListing]]), the per-commit
+  * state that lets a re-run over the same input skip the resume scan.
   */
 trait TableIO {
   def commit(df: DataFrame, batchId: String, counts: (String, Column)*): Unit
@@ -67,7 +70,15 @@ final class ParquetManifestTable(rootDir: String, format: String = "parquet") ex
     * batch's schema and its counts as one JSON object. The counts come from
     * an `Observation` that the write job itself fills, so recording them
     * costs no extra Spark job. */
-  def commit(df: DataFrame, batchId: String, counts: (String, Column)*): Unit = {
+  def commit(df: DataFrame, batchId: String, counts: (String, Column)*): Unit =
+    commit(df, batchId, None, counts: _*)
+
+  /** [[commit]] that also records `inputListing`, the digest of the input
+    * listing the batch was resumed from ([[Resume.InputListing]]), in the
+    * same manifest entry, for [[recordsInputListing]] to find. A batch
+    * that is already committed keeps its entry as it is. */
+  def commit(df: DataFrame, batchId: String, inputListing: Option[String],
+      counts: (String, Column)*): Unit = {
     require(!batchId.contains('/') && batchId.nonEmpty, s"bad batchId: $batchId")
     require(!counts.exists(_._1 == ParquetManifestTable.Rows),
       s"count name '${ParquetManifestTable.Rows}' is reserved for the row count")
@@ -89,8 +100,8 @@ final class ParquetManifestTable(rootDir: String, format: String = "parquet") ex
     Files.move(staged, committed, StandardCopyOption.ATOMIC_MOVE)
     val tmp = manifestDir.resolve(batchId + ".tmp")
     Files.writeString(tmp, compact(render(JObject(
-      "schema" -> parse(df.schema.json),
-      "counts" -> JObject(recorded.toList)))))
+      List("schema" -> parse(df.schema.json), "counts" -> JObject(recorded.toList)) ++
+        inputListing.map(ParquetManifestTable.InputListingField -> JString(_))))))
     Files.move(tmp, manifestDir.resolve(batchId + ".committed"), StandardCopyOption.ATOMIC_MOVE)
   }
 
@@ -101,28 +112,20 @@ final class ParquetManifestTable(rootDir: String, format: String = "parquet") ex
     finally walk.close()
   }
 
-  /** What a manifest entry recorded about its batch. An entry written
-    * before commit-time metadata holds only the batch id: no schema and no
-    * counts. */
-  private def entry(batchId: String): (Option[StructType], Map[String, Long]) = {
+  /** A manifest entry's JSON object; None for an entry written before
+    * commit-time metadata, which holds only the batch id. */
+  private def entry(batchId: String): Option[JValue] = {
     val text = Files.readString(manifestDir.resolve(batchId + ".committed"))
-    if (!text.startsWith("{")) (None, Map.empty)
-    else {
-      val json = parse(text)
-      val schema = DataType.fromJson(compact(render(json \ "schema"))).asInstanceOf[StructType]
-      val counts = json \ "counts" match {
-        case JObject(fields) => fields.collect { case (name, JInt(n)) => name -> n.toLong }.toMap
-        case _ => Map.empty[String, Long]
-      }
-      (Some(schema), counts)
-    }
+    if (text.startsWith("{")) Some(parse(text)) else None
   }
 
   /** Loads the given committed batches. When every one recorded the same
     * schema the reader gets it and infers nothing (schema inference is a
     * Spark job per read); otherwise it infers, as for old entries. */
   private def load(spark: SparkSession, batches: Seq[String]): DataFrame = {
-    val reader = batches.map(entry(_)._1).distinct match {
+    val schemas = batches.map(entry(_).map(json =>
+      DataType.fromJson(compact(render(json \ "schema"))).asInstanceOf[StructType]))
+    val reader = schemas.distinct match {
       case Seq(Some(schema)) => spark.read.format(format).schema(schema)
       case _ => spark.read.format(format)
     }
@@ -140,11 +143,19 @@ final class ParquetManifestTable(rootDir: String, format: String = "parquet") ex
     * summed; None when some entry recorded no counts (written before
     * commit-time metadata), so the caller knows to scan instead. */
   def committedCounts: Option[Map[String, Long]] = {
-    val perBatch = committedBatches.map(entry(_)._2)
+    val perBatch = committedBatches.map(entry(_).toList.flatMap(_ \ "counts" match {
+      case JObject(fields) => fields.collect { case (name, JInt(n)) => name -> n.toLong }
+      case _ => Nil
+    }).toMap)
     if (perBatch.exists(_.isEmpty)) None
     else Some(perBatch.map(_.keySet).reduceOption(_ intersect _).getOrElse(Set.empty)
       .map(name => name -> perBatch.map(_(name)).sum).toMap)
   }
+
+  /** Whether some committed batch recorded `digest` as its input listing
+    * ([[Resume.InputListing]]). Reads the manifest alone. */
+  def recordsInputListing(digest: String): Boolean =
+    committedBatches.exists(entry(_).exists(_ \ ParquetManifestTable.InputListingField == JString(digest)))
 
   /** The newest committed batch only — the read shape for REPLACE-style
     * tables (e.g. a curated snapshot recomputed per run), where `read`'s
@@ -178,6 +189,9 @@ object ParquetManifestTable {
 
   /** The count every commit records: the batch's row count. */
   val Rows = "rows"
+
+  /** The entry field that holds a batch's input-listing digest. */
+  private val InputListingField = "input_listing"
 }
 
 object Resume {
@@ -192,6 +206,56 @@ object Resume {
       val committedUrls = table.read(spark).select("url")
       input.join(committedUrls, Seq("url"), "left_anti").as[CrawlRow]
     }
+  }
+
+  /** The files under an input `root` as the Hadoop `FileSystem` lists
+    * them (recursively, hidden files included), and one `digest` of their
+    * sorted (qualified path, length, modification time) triples. Any
+    * added, removed, rewritten or touched file changes the digest. */
+  final case class InputListing(digest: String, root: FsPath, files: Seq[FsPath]) {
+    /** Whether `read`, a read of `root`, consumed exactly the listed files
+      * that Spark's hidden-file rule keeps: a name below the root that
+      * starts with `_` (and holds no `=`) or `.`, or ends with
+      * `._COPYING_`, hides its file, except `_metadata` and
+      * `_common_metadata`. A file added between the listing and the read
+      * makes the two differ. */
+    def readBy(read: DataFrame): Boolean = {
+      def hidden(name: String): Boolean =
+        ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+          name.endsWith("._COPYING_")) &&
+          !name.startsWith("_metadata") && !name.startsWith("_common_metadata")
+      // Spark names a file `file:///x` where the listing says `file:/x`
+      def key(u: java.net.URI) = (u.getScheme, Option(u.getAuthority).getOrElse(""), u.getPath)
+      val kept = files.filterNot(f => Iterator.iterate(f)(_.getParent)
+        .takeWhile(p => p != null && p != root).exists(p => hidden(p.getName)))
+      read.inputFiles.map(f => key(new java.net.URI(f))).toSet == kept.map(f => key(f.toUri)).toSet
+    }
+  }
+
+  /** Lists `input` ([[InputListing]]) without starting a Spark job; None
+    * when no file or directory has that name (e.g. a glob), which leaves
+    * the read to report or expand it. */
+  def listInput(spark: SparkSession, input: String): Option[InputListing] = {
+    val path = new FsPath(input)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    // listStatus, not listFiles: the LocatedFileStatus that listFiles
+    // builds asks for each file's permissions, which the local FileSystem
+    // reads by running a shell command per file
+    def under(p: FsPath): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) under(s.getPath) else Seq(s))
+    val statuses = try under(path) catch { case _: java.io.FileNotFoundException => return None }
+    val listed = statuses.map(s => (fs.makeQualified(s.getPath), s.getLen, s.getModificationTime))
+      .sortBy(_._1.toString)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val out = new java.io.DataOutputStream(
+      new java.security.DigestOutputStream(java.io.OutputStream.nullOutputStream(), md))
+    listed.foreach { case (p, len, mtime) =>
+      val name = p.toString.getBytes("UTF-8")
+      out.writeInt(name.length); out.write(name); out.writeLong(len); out.writeLong(mtime)
+    }
+    out.flush()
+    Some(InputListing(java.util.HexFormat.of().formatHex(md.digest()),
+      fs.makeQualified(path), listed.map(_._1)))
   }
 
   /** One row per url: the row with the greatest `key`, a struct that

@@ -774,4 +774,217 @@ class ExtractMainSpec extends AnyFunSuite {
     assert(toks.contains(urlId("test://kfs/b/article.html")),
       "the unrelated article must survive untouched")
   }
+
+
+  // ---- the no-op memo: a re-run over a recorded input listing ----
+
+  /** Runs `body`, returning its result and the number of Spark jobs that
+    * started while it ran. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.SparkContextBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.graftbridge.SparkContextBridge.drainListenerBus(sc)
+      (r, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every file under `dir`: relative path -> (length, mtime, md5 of its bytes). */
+  def treeSnapshot(dir: String): Map[String, (Long, Long, String)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { f =>
+      root.relativize(f).toString -> (java.nio.file.Files.size(f),
+        java.nio.file.Files.getLastModifiedTime(f).toMillis,
+        graft.pdf.Crypto.hex(graft.pdf.Crypto.md5(java.nio.file.Files.readAllBytes(f))))
+    }.toMap
+    finally walk.close()
+  }
+
+  def memoRows(from: Long, until: Long): Seq[graft.sources.CrawlRow] =
+    (from until until).map(CrawlCorpus.row(_, 7L))
+
+  /** A parquet input of crawl rows [0, 12) in two part files, committed by
+    * one run; the re-run over it hits the memo. */
+  def memoCommitted(): (String, String) = {
+    import spark.implicits._
+    val inDir = java.nio.file.Files.createTempDirectory("graft_memo_in").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_memo_out").toString
+    memoRows(0, 12).toDS().repartition(2).write.mode("overwrite").parquet(inDir)
+    Extract.main(Array(inDir, outDir, "--partitions", "2"))
+    val (summary, jobs) = jobsDuring(summaryOf(inDir, outDir, "--partitions", "2"))
+    assert(jobs == 0 && summary("pending") == 0 && summary("committed") == 1, (jobs, summary))
+    (inDir, outDir)
+  }
+
+  def partFiles(inDir: String): Seq[java.nio.file.Path] = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(inDir))
+    try ls.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.toString)
+    finally ls.close()
+  }
+
+  /** One single-file parquet of `rows`, written elsewhere. */
+  def parquetBytes(rows: Seq[graft.sources.CrawlRow]): Array[Byte] = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_part").toString
+    rows.toDS().coalesce(1).write.mode("overwrite").parquet(dir)
+    java.nio.file.Files.readAllBytes(partFiles(dir).head)
+  }
+
+  /** Runs `Extract` over a changed input and checks that it took the full
+    * resume diff (it started Spark jobs) and committed exactly the pending
+    * set a plain left_anti resume gives: the input's non-null urls that
+    * were not committed before, as one new batch, or no batch when none. */
+  def assertFullDiff(inDir: String, outDir: String, args: String*): Unit = {
+    val docs = new graft.sources.ParquetManifestTable(s"$outDir/documents")
+    val before = docs.committedBatches
+    val committedUrls = if (before.isEmpty) Set.empty[String]
+      else docs.read(spark).select("url").collect().map(_.getString(0)).toSet
+    val pending = spark.read.parquet(inDir).where(col("url").isNotNull).select("url")
+      .collect().map(_.getString(0)).toSet -- committedUrls
+    val (_, jobs) = jobsDuring(Extract.main((Seq(inDir, outDir, "--partitions", "2") ++ args).toArray))
+    assert(jobs > 0, "the run hit the memo over a changed input")
+    val added = docs.committedBatches.filterNot(before.contains)
+    if (pending.isEmpty) assert(added.isEmpty, added)
+    else {
+      assert(added.size == 1, added)
+      assert(docs.readBatch(spark, added.head).select("url").collect().map(_.getString(0)).sorted.toSeq ==
+        pending.toSeq.sorted)
+    }
+  }
+
+  test("no-op memo: a re-run over an unchanged input directory starts no Spark job and changes no output table") {
+    val inDir = java.nio.file.Files.createTempDirectory("graft_memo0_in").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft_memo0_out").toString
+    CrawlCorpus.crawl(spark, 12, 7L).toDF().write.mode("overwrite").parquet(inDir)
+    Extract.main(Array(inDir, outDir, "--sinks", "--link-graph", "--partitions", "2"))
+    val Seq(batch) = new graft.sources.ParquetManifestTable(s"$outDir/documents").committedBatches
+    assert((manifestEntry(s"$outDir/documents", batch) \ "input_listing")
+      .isInstanceOf[org.json4s.JString])
+    val outputs = treeSnapshot(outDir)
+    val input = treeSnapshot(inDir)
+    val (summary, jobs) = jobsDuring(
+      summaryOf(inDir, outDir, "--sinks", "--link-graph", "--partitions", "2"))
+    assert(jobs == 0, s"the re-run started $jobs Spark jobs")
+    assert(summary == Map("pending" -> 0L, "committed" -> 1L), summary)
+    assert(treeSnapshot(outDir) == outputs)
+    assert(treeSnapshot(inDir) == input)
+  }
+
+  test("no-op memo: an added, removed, rewritten or touched input file takes the full diff") {
+    val (inA, outA) = memoCommitted()
+    java.nio.file.Files.write(java.nio.file.Paths.get(inA, "part-added.parquet"),
+      parquetBytes(memoRows(12, 16)))
+    assertFullDiff(inA, outA)
+    // the batch that committed the added file recorded the grown listing
+    val (_, jobs) = jobsDuring(Extract.main(Array(inA, outA, "--partitions", "2")))
+    assert(jobs == 0)
+
+    val (inR, outR) = memoCommitted()
+    java.nio.file.Files.delete(partFiles(inR).head)
+    assertFullDiff(inR, outR)
+
+    // new bytes under the old path and mtime: the length tells them apart
+    val (inW, outW) = memoCommitted()
+    val part = partFiles(inW).head
+    val mtime = java.nio.file.Files.getLastModifiedTime(part)
+    val rewritten = parquetBytes(memoRows(0, 3) ++ memoRows(20, 23))
+    assert(rewritten.length != java.nio.file.Files.size(part))
+    java.nio.file.Files.write(part, rewritten)
+    java.nio.file.Files.setLastModifiedTime(part, mtime)
+    // the old bytes' Hadoop checksum file would fail the read
+    java.nio.file.Files.delete(part.resolveSibling(s".${part.getFileName}.crc"))
+    assertFullDiff(inW, outW)
+
+    // the same bytes with a new mtime
+    val (inT, outT) = memoCommitted()
+    val touched = partFiles(inT).head
+    java.nio.file.Files.setLastModifiedTime(touched, java.nio.file.attribute.FileTime.fromMillis(
+      java.nio.file.Files.getLastModifiedTime(touched).toMillis + 5000L))
+    assertFullDiff(inT, outT)
+    // the listing is restored: the memo hits again
+    java.nio.file.Files.setLastModifiedTime(touched, java.nio.file.attribute.FileTime.fromMillis(
+      java.nio.file.Files.getLastModifiedTime(touched).toMillis - 5000L))
+    assert(jobsDuring(Extract.main(Array(inT, outT, "--partitions", "2")))._2 == 0)
+  }
+
+  test("no-op memo: a rewritten _SUCCESS takes the full diff (the listing keeps hidden files)") {
+    val (inDir, outDir) = memoCommitted()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(inDir, "_SUCCESS"), "rewritten")
+    assertFullDiff(inDir, outDir)
+  }
+
+  test("no-op memo: --recrawl and synth:N never hit, and record no listing") {
+    val (inDir, outDir) = memoCommitted()
+    assertFullDiff(inDir, outDir, "--recrawl", inDir)
+    // a --recrawl commit records nothing: the plain re-run takes the full diff
+    val out2 = java.nio.file.Files.createTempDirectory("graft_memo_rc_out").toString
+    assertFullDiff(inDir, out2, "--recrawl", inDir)
+    val Seq(batch) = new graft.sources.ParquetManifestTable(s"$out2/documents").committedBatches
+    assert(manifestEntry(s"$out2/documents", batch) \ "input_listing" == org.json4s.JNothing)
+    assertFullDiff(inDir, out2)
+
+    val outS = java.nio.file.Files.createTempDirectory("graft_memo_synth_out").toString
+    Extract.main(Array("synth:6", outS, "--partitions", "2"))
+    val Seq(synthBatch) = new graft.sources.ParquetManifestTable(s"$outS/documents").committedBatches
+    assert(manifestEntry(s"$outS/documents", synthBatch) \ "input_listing" == org.json4s.JNothing)
+    val (summary, jobs) = jobsDuring(summaryOf("synth:6", outS, "--partitions", "2"))
+    assert(jobs > 0 && summary("pending") == 0, (jobs, summary))
+  }
+
+  test("no-op memo: a manifest entry without a listing never hits") {
+    import org.json4s.JObject
+    val (inDir, outDir) = memoCommitted()
+    val docs = new graft.sources.ParquetManifestTable(s"$outDir/documents")
+    docs.committedBatches.foreach { b =>
+      val JObject(fields) = manifestEntry(s"$outDir/documents", b)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/documents/_manifest/$b.committed"),
+        org.json4s.jackson.JsonMethods.compact(JObject(fields.filterNot(_._1 == "input_listing"))))
+    }
+    assertFullDiff(inDir, outDir)
+    // the entries keep their schema and counts
+    assert(docs.committedCounts.exists(_("rows") == 12L))
+  }
+
+  test("no-op memo: a commit skipped as already committed records nothing") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_skip").toString
+    val t = new graft.sources.ParquetManifestTable(dir)
+    t.commit(Seq(("a", 1)).toDF("url", "n"), "B")
+    val entry = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/_manifest/B.committed"))
+    t.commit(Seq(("b", 2)).toDF("url", "n"), "B", Some("digest"))
+    assert(java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/_manifest/B.committed")) == entry)
+    assert(!t.recordsInputListing("digest"))
+    t.commit(Seq(("b", 2)).toDF("url", "n"), "C", Some("digest"))
+    assert(t.recordsInputListing("digest") && !t.recordsInputListing("other"))
+  }
+
+  test("input listing: a read matches it until a file is added after the listing") {
+    import graft.sources.Resume
+    val inDir = java.nio.file.Files.createTempDirectory("graft_listing_in").toString
+    CrawlCorpus.crawl(spark, 6, 7L).toDF().repartition(2).write.mode("overwrite").parquet(inDir)
+    // a hidden file and a hidden directory: listed, never read
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(inDir, ".notes"), "x")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir, "_tmp"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(inDir, "_tmp", "part-x.parquet"),
+      parquetBytes(memoRows(40, 41)))
+    val listing = Resume.listInput(spark, inDir).get
+    // 2 parts, _SUCCESS, .notes and _tmp/part-x (the FileSystem hides its .crc files)
+    assert(listing.files.size == 5, listing.files)
+    assert(listing.readBy(spark.read.parquet(inDir)))
+    // a trailing slash lists the same files
+    assert(Resume.listInput(spark, inDir + "/").map(_.digest).contains(listing.digest))
+    java.nio.file.Files.write(java.nio.file.Paths.get(inDir, "part-late.parquet"),
+      parquetBytes(memoRows(30, 32)))
+    assert(!listing.readBy(spark.read.parquet(inDir)))
+    assert(!Resume.listInput(spark, inDir).map(_.digest).contains(listing.digest))
+    assert(Resume.listInput(spark, inDir + "/*.parquet").isEmpty)
+  }
 }

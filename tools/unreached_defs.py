@@ -27,6 +27,8 @@ another object's def of the same name does not reach this one.
 Comments are stripped first, and string literals count only as a whole:
 an error label such as "LanguageModel.bigramSurprisal" reaches nothing,
 while the `$x` / `${...}` parts of an interpolated string are code.
+A definition is audited wherever it opens a statement: at the start of
+a line, or after a `{` or a `;`, as in `object X { def y = 1 }`.
 Overloads of a def are told apart by argument count: a reference followed
 by an argument list of k top-level arguments reaches an overload only when
 its required parameter count <= k <= its total parameter count (defaults
@@ -65,7 +67,9 @@ KEEP = {
         "Java serialization calls it when an aggregate's entry is read on an executor",
 }
 
-DEF_RE = re.compile(r"^(\s*)((?:[\w\[\]]+\s+)*)(def|val|object|class|trait)\s+([A-Za-z_][A-Za-z0-9_]*)")
+# a definition that opens a statement: at a line start, or after `{` or `;`
+DEF_RE = re.compile(r"(?:^|(?<=[{;]))([ \t]*)((?:[\w\[\]]+[ \t]+)*)(def|val|object|class|trait)\s+"
+                    r"([A-Za-z_][A-Za-z0-9_]*)", re.M)
 IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 ALWAYS_REACHED = {"main", "apply", "unapply"}
 # the keyword nearest before a `{` says what the brace opens
@@ -77,7 +81,7 @@ def scrub(text):
     """Blank out comments (nested, as Scala allows) and the text of string
     literals, keeping line breaks so line numbers stay aligned. The `$x` and
     `${...}` parts of an interpolated string stay, since they are code.
-    Returns the scrubbed text and `(line index, literal)` for every plain
+    Returns the scrubbed text and `(offset, literal)` for every plain
     string literal."""
     out, literals = [], []
     i, n = 0, len(text)
@@ -139,7 +143,7 @@ def scrub(text):
                     j += 1
             raw = text[i + len(quote):j]
             if not interpolated:
-                literals.append((text.count("\n", 0, i), raw))
+                literals.append((i, raw))
             out.append(quote + "".join(body) + (quote if j < n else ""))
             i = j + len(quote)
         elif c == "'" and i + 2 < n and (text[i + 2] == "'" or text[i + 1] == "\\"):
@@ -167,10 +171,11 @@ def strip_parens(segment):
 
 
 def owners(code):
-    """For each line, the innermost brace scope open at its start:
-    ("object", name), ("template", name) for a class or trait, or None for
-    an anonymous class, a block or a def body."""
-    stack, at_line, start = [], [None], 0
+    """The innermost brace scope open at each offset, as `(offsets,
+    scopes)`: `scopes[j]` holds from `offsets[j]` to the next offset. A
+    scope is ("object", name), ("template", name) for a class or trait, or
+    None for an anonymous class, a block or a def body."""
+    stack, offsets, scopes, start = [], [0], [None], 0
     for i, ch in enumerate(code):
         if ch == "{":
             segment = strip_parens(code[start:i])
@@ -189,9 +194,29 @@ def owners(code):
             start = i + 1
         elif ch == ";":
             start = i + 1
-        elif ch == "\n":
-            at_line.append(stack[-1] if stack else None)
-    return at_line
+        else:
+            continue
+        offsets.append(i + 1)
+        scopes.append(stack[-1] if stack else None)
+    return offsets, scopes
+
+
+def statement_end(code, i):
+    """Offset of the end of the statement that starts at `i`: the first
+    `;` or line break outside brackets, or the bracket that closes the
+    enclosing one."""
+    depth = 0
+    for j in range(i, len(code)):
+        ch = code[j]
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            if not depth:
+                return j
+            depth -= 1
+        elif not depth and ch in ";\n":
+            return j
+    return len(code)
 
 
 def body_end(lines, start, indent):
@@ -235,13 +260,12 @@ class Source:
             for member in re.findall(r"(\w+)(?:\s*=>\s*\w+)?", sel):
                 self.imports.add((obj, member))
 
-    def hits(self, pattern, skip):
-        """Whether `pattern` matches a line outside the `skip` spans."""
-        for m in pattern.finditer(self.code):
-            k = bisect.bisect_right(self.starts, m.start()) - 1
-            if not any(s <= k < e for s, e in skip):
-                return True
-        return False
+    def line(self, offset):
+        return bisect.bisect_right(self.starts, offset) - 1
+
+    def scope_at(self, offset):
+        offsets, scopes = self.scope
+        return scopes[bisect.bisect_right(offsets, offset) - 1]
 
 
 def arg_list(code, i):
@@ -283,17 +307,16 @@ def arg_list(code, i):
     return [] if items == [""] or (len(items) == 1 and not items[0].strip()) else items
 
 
-def arity(src, line, name):
-    """(required, total) parameter counts of the def `name` declared on
-    `line` of `src`, from its first parameter list."""
-    start = src.starts[line]
+def arity(src, start, name):
+    """(required, total) parameter counts of the def `name` declared at
+    offset `start` of `src`, from its first parameter list."""
     m = re.compile(r"\bdef\s+" + re.escape(name) + r"(?![A-Za-z0-9_])").search(src.code, start)
     params = arg_list(src.code, m.end()) or []
-    total = len(params)
-    if params and params[-1].rstrip().endswith("*"):
-        total = float("inf")
     defaults = sum(1 for p in params if re.search(r"(?<![=<>!])=(?![=>])", strip_parens(p)))
-    return total - defaults if total != float("inf") else total - 1 - defaults, total
+    if params and params[-1].rstrip().endswith("*"):
+        # a varargs parameter may take no argument at all
+        return len(params) - 1 - defaults, float("inf")
+    return len(params) - defaults, len(params)
 
 
 DECL_RE = re.compile(r"\bdef\s+$")
@@ -301,7 +324,7 @@ DECL_RE = re.compile(r"\bdef\s+$")
 
 def reaching_sites(sources, path, kind, owner, name, own):
     """The argument count of every reference to `name` outside the `own`
-    line spans of `path` (None where no argument list follows). A
+    offset spans of `path` (None where no argument list follows). A
     `def name` declaration, of any owner, is not a reference."""
     bare = word(name)
     qualified = word(f"{owner}.{name}")
@@ -314,15 +337,14 @@ def reaching_sites(sources, path, kind, owner, name, own):
         else:
             pattern = bare
         for m in pattern.finditer(src.code):
-            k = bisect.bisect_right(src.starts, m.start()) - 1
-            if (any(s <= k < e for s, e in skip)
-                    or DECL_RE.search(src.code, src.starts[k], m.start())):
+            if (any(s <= m.start() < e for s, e in skip)
+                    or DECL_RE.search(src.code, src.starts[src.line(m.start())], m.start())):
                 continue
             args = arg_list(src.code, m.end())
             sites.append(None if args is None else len(args))
         if owner in src.reflected and any(
-                lit == name and not any(s <= k < e for s, e in skip)
-                for k, lit in src.literals):
+                lit == name and not any(s <= i < e for s, e in skip)
+                for i, lit in src.literals):
             sites.append(None)
     return sites
 
@@ -345,21 +367,25 @@ def unreached(sources, path, kind, owner, name, spans):
 
 def main():
     sources = [Source(p) for p in sorted(MAIN.rglob("*.scala")) + sorted(BENCH.rglob("*.scala"))]
-    groups = {}  # (path, owner kind, owner name, def name) -> [(line, body end)]
+    groups = {}  # (path, owner kind, owner name, def name) -> [(start, end) offsets]
     for src in sources:
         if not src.path.is_relative_to(MAIN):
             continue
-        for k, line in enumerate(src.lines):
-            m = DEF_RE.match(line)
-            if not m or {"override", "implicit"} & set(m.group(2).split()) \
-                    or m.group(4) in ALWAYS_REACHED:
+        for m in DEF_RE.finditer(src.code):
+            if {"override", "implicit"} & set(m.group(2).split()) or m.group(4) in ALWAYS_REACHED:
                 continue
-            kind, owner = src.scope[k] or (None, None)
+            kind, owner = src.scope_at(m.start(3)) or (None, None)
             # vals and objects are audited only as members of an object
             if m.group(3) in ("val", "object") and kind != "object":
                 continue
-            groups.setdefault((src.path, kind, owner, m.group(4)), []).append(
-                (k, body_end(src.lines, k, len(m.group(1)))))
+            k = src.line(m.start())
+            if src.starts[k] == m.start():
+                # a def that opens its line runs until the indentation ends it
+                end = body_end(src.lines, k, len(m.group(1)))
+                span = (m.start(), src.starts[end] if end < len(src.lines) else len(src.code))
+            else:
+                span = (m.start(), statement_end(src.code, m.start(3)))
+            groups.setdefault((src.path, kind, owner, m.group(4)), []).append(span)
 
     tests = {p: scrub(p.read_text())[0] for p in sorted(TEST.rglob("*.scala"))}
     listed = []
@@ -369,8 +395,9 @@ def main():
             continue
         label = f"{owner}.{name}" if owner else name
         users = [str(p.relative_to(ROOT)) for p, t in tests.items() if word(name).search(t)]
-        for k, _ in missed:
-            listed.append((str(path.relative_to(ROOT)), k + 1, label, users))
+        src = next(s for s in sources if s.path == path)
+        for start, _ in missed:
+            listed.append((str(path.relative_to(ROOT)), src.line(start) + 1, label, users))
 
     outside = 0
     for path, line, label, users in sorted(listed):
