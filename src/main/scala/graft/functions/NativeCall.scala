@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * fail analysis, not the job). */
 sealed trait Native {
   def name: String
-  def inputTypes: Seq[InputType]
+  def inputTypes: Seq[DataType]
   def paramTypes: Seq[DataType]
   protected def make(cols: Seq[Expression], params: Seq[Long]): Expression
 
@@ -113,8 +113,10 @@ trait Sketch {
 /** One native aggregate, declared once: `empty(params)` starts a group's
   * [[Sketch]], `fromBytes(params, bytes)` reads back one that `Sketch.bytes`
   * wrote, and `dataType(params)` is the type of `Sketch.result`. A row with
-  * a null input is skipped; the result is never null. */
-final case class NativeAgg(name: String, inputTypes: Seq[InputType],
+  * a null input is skipped; the result is never null. An entry ships to
+  * executors inside its aggregate, so its input types are plain `DataType`s,
+  * which serialize (a `TypeCollection` does not). */
+final case class NativeAgg(name: String, inputTypes: Seq[DataType],
     paramTypes: Seq[DataType], dataType: Seq[Long] => DataType, check: Seq[Long] => Unit,
     empty: Seq[Long] => Sketch, fromBytes: (Seq[Long], Array[Byte]) => Sketch) extends Native {
 
@@ -129,17 +131,6 @@ final case class NativeAgg(name: String, inputTypes: Seq[InputType],
   def apply(cols: Seq[Column], params: Long*): Column = {
     checkArity(cols.length, params.length)
     ColumnBridge.column(expr(cols.map(ColumnBridge.expression), params).toAggregateExpression())
-  }
-
-  // an entry ships to executors inside its aggregate; it crosses as its
-  // name and resolves to the same entry of the table there (input types
-  // are not serializable)
-  private def writeReplace(): AnyRef = new NativeAgg.ByName(name)
-}
-
-object NativeAgg {
-  private class ByName(name: String) extends Serializable {
-    private def readResolve(): AnyRef = Natives.aggregates.find(_.name == name).get
   }
 }
 
@@ -270,25 +261,13 @@ object Natives {
   private def kIn(name: String, lo: Long, hi: Long, label: String)(params: Seq[Long]): Unit =
     require(params.head >= lo && params.head <= hi,
       s"$name requires $label, got ${params.head}")
-  private val Integral = ColumnBridge.anyOf(LongType, IntegerType)
 
   val misraGries = NativeAgg("misra_gries", Seq(StringType), Seq(IntegerType),
     _ => MgBuffer.ResultType, kIn("misra_gries", 1, 1 << 22, "0 < k <= 2^22"),
     p => new MgBuffer(p.head.toInt), (p, b) => MgBuffer.fromBytes(p.head.toInt, b))
-  val hllDistinct = NativeAgg("hll_distinct", Seq(StringType), Seq(IntegerType),
-    _ => LongType, kIn("hll_distinct", 4, 18, "4 <= p <= 18"),
-    p => new HllBuffer(p.head.toInt), (p, b) => HllBuffer.fromBytes(p.head.toInt, b))
   val topKByScore = NativeAgg("topk_by_score", Seq(DoubleType, LongType), Seq(IntegerType),
     _ => TopKBuffer.ResultType, kIn("topk_by_score", 1, Int.MaxValue, "k > 0"),
     p => new TopKBuffer(p.head.toInt), (p, b) => TopKBuffer.fromBytes(p.head.toInt, b))
-  val approxQuantiles = NativeAgg("approx_quantiles", Seq(Integral), Seq(IntegerType),
-    _ => QuantileBuffer.QuantilesType, kIn("approx_quantiles", 8, 1 << 20, "8 <= k <= 2^20"),
-    p => new QuantileBuffer(p.head.toInt), (p, b) => QuantileBuffer.fromBytes(p.head.toInt, None, b))
-  /** `approx_ranks(v, k, probe)`: how many inputs are <= probe. */
-  val approxRanks = NativeAgg("approx_ranks", Seq(Integral), Seq(IntegerType, LongType),
-    p => QuantileBuffer.ranksType(p(1)), kIn("approx_ranks", 8, 1 << 20, "8 <= k <= 2^20"),
-    p => new QuantileBuffer(p.head.toInt, Some(p(1))),
-    (p, b) => QuantileBuffer.fromBytes(p.head.toInt, Some(p(1)), b))
   val bloomBuild = NativeAgg("bloom_build", Seq(StringType), Seq(IntegerType, IntegerType),
     _ => BinaryType, { case Seq(numBits, k) =>
       require(numBits >= 8 && numBits % 8 == 0 && numBits <= (1 << 30),
@@ -298,6 +277,5 @@ object Natives {
     p => new BloomAggBuffer(p(0).toInt, p(1).toInt),
     (p, b) => BloomAggBuffer.fromBytes(p(0).toInt, p(1).toInt, b))
 
-  val aggregates: Seq[NativeAgg] = Seq(misraGries, hllDistinct, topKByScore, approxQuantiles,
-    approxRanks, bloomBuild)
+  val aggregates: Seq[NativeAgg] = Seq(misraGries, topKByScore, bloomBuild)
 }

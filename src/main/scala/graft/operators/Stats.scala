@@ -83,8 +83,8 @@ object Stats {
         lit("exactQuantiles: group "), Exec.shown(col("g")),
         lit(" has "), col("__ndv").cast("string"),
         lit(s" distinct values (cap $maxDistinctValuesPerGroup); " +
-          "pass valueResolution to quantize, or use the approx_quantiles " +
-          "sketch for an unbounded value space")))
+          "pass valueResolution to quantize, or use Spark's kll_sketch_agg_bigint " +
+          "for an unbounded value space")))
       .drop("__ndv")
     // distinct v per (g, v) group => ROWS and RANGE frames agree; rows
     // keeps the Spark side aligned with the oracle's default range frame
@@ -94,9 +94,7 @@ object Stats {
     val cum = checked
       .withColumn("cum", sum(col("c")).over(wCum))
       .withColumn("n", sum(col("c")).over(wG))
-    // one shared formatter with the approx_quantiles sketch, so the exact
-    // and approximate operators name the same p identically
-    val names = ps.map(graft.functions.QuantileNames.pName)
+    val names = ps.map(pName)
     require(names.distinct.size == names.size, s"quantile names collide: $names")
     val picks: Seq[Column] = ps.zip(names).map { case (p, name) =>
       min(when(col("cum") >= ceil(col("n") * lit(p)), col("v"))).as(name)
@@ -109,6 +107,14 @@ object Stats {
       .observe(Exec.metricName("exact_quantiles"),
         max(col("__ndv")).as("max_distinct_values_per_group"))
       .drop("__ndv")
+  }
+
+  /** The column name of quantile p: `p<percent>` for a whole percent, else
+    * `p<basis points>bp` (p50 vs p50bp). "Whole" is a tolerance test, not an
+    * equality: 0.29 * 100 is 28.999... in doubles and must still name p29. */
+  private def pName(p: Double): String = {
+    val b = (p * 100).round
+    if (math.abs(b.toDouble - p * 100) < 1e-9) s"p$b" else s"p${(p * 10000).round}bp"
   }
 
   /** CORPUS-RELATIVE threshold gate (the FineWeb-style complement to

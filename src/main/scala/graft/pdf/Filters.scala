@@ -1,7 +1,6 @@
 package graft.pdf
 
 import java.util.zip.{DataFormatException, Inflater}
-import scala.collection.mutable.ArrayBuffer
 
 /** Stream decode filters, replicating /root/reference/pdf/filters.go
   * byte-for-byte, including its tolerant/failure semantics:
@@ -30,7 +29,7 @@ object Filters {
   /** filters.go:49-97: hex pairs, whitespace skipped, '>' EOD, odd final digit
     * padded with '0'; a pair containing a non-hex char is dropped entirely. */
   def asciiHexDecode(data: Array[Byte]): Array[Byte] = {
-    val out = new ArrayBuffer[Byte](data.length)
+    val out = new ByteBuf(data.length)
     var i = 0
     var done = false
     while (i < data.length && !done) {
@@ -63,7 +62,7 @@ object Filters {
     * (skipped mid-group), '~' EOD, whitespace/invalid bytes skipped, partial
     * group of n>=2 chars emits n-1 bytes (a single leftover char is dropped). */
   def ascii85Decode(data: Array[Byte]): Array[Byte] = {
-    val out = new ArrayBuffer[Byte](data.length)
+    val out = new ByteBuf(data.length)
     var v = 0L // uint32 arithmetic, keep in Long and mask
     var n = 0
     var i = 0
@@ -102,7 +101,7 @@ object Filters {
   /** filters.go:165-208: length byte L: 128=EOD; L<128 copy L+1 literals;
     * L>128 repeat next byte 257-L times; truncation tolerated. */
   def runLengthDecode(data: Array[Byte]): Array[Byte] = {
-    val out = new ArrayBuffer[Byte](data.length)
+    val out = new ByteBuf(data.length)
     var i = 0
     var done = false
     while (i < data.length && !done) {
@@ -112,8 +111,8 @@ object Filters {
         val len = length + 1
         i += 1
         if (i >= data.length) done = true
-        else if (i + len > data.length) { out ++= data.slice(i, data.length); done = true }
-        else { out ++= data.slice(i, i + len); i += len }
+        else if (i + len > data.length) { out.append(data, i, data.length); done = true }
+        else { out.append(data, i, i + len); i += len }
       } else {
         i += 1
         if (i >= data.length) done = true
@@ -139,24 +138,17 @@ object Filters {
     if ((flg & 0x20) != 0) return data // FDICT unsupported without dictionary
     val inf = new Inflater()
     inf.setInput(data)
-    // inflate straight into one growable array: out(0 until n) is the output
-    var out = new Array[Byte](math.max(data.length * 4, 8192))
-    var n = 0
+    val out = new ByteBuf(math.max(data.length * 4L, 8192L))
     var failed = false
     try {
-      var going = true
-      while (going && !inf.finished()) {
-        if (n == out.length) out = java.util.Arrays.copyOf(out, Math.multiplyExact(out.length, 2))
-        val k = inf.inflate(out, n, out.length - n)
-        if (k > 0) n += k
-        else going = false // needs more input / dictionary: treat as stream end
-      }
+      // a zero count means more input or a dictionary is needed: stream end
+      while (!inf.finished() && out.appendWith(inf.inflate) > 0) {}
     } catch { case _: DataFormatException => failed = true }
     inf.end()
     // Go: only a zero-bytes-decoded *error* falls back to raw input;
     // a valid empty stream decodes to empty (filters.go:221-224).
-    if (n == 0 && failed) return data
-    reversePredictor(if (n == out.length) out else java.util.Arrays.copyOf(out, n), parms)
+    if (out.length == 0 && failed) return data
+    reversePredictor(out.toArray, parms)
   }
 
   /** filters.go:230-253: /EarlyChange default 1 => TIFF-variant LZW;
@@ -207,7 +199,7 @@ object Filters {
     }
 
     if (predictor >= 10 && predictor <= 15) {
-      val out = new ArrayBuffer[Byte](data.length)
+      val out = new ByteBuf(data.length)
       val dRowWidth = rowWidth
       val pngRowWidth = rowWidth + 1
       var method = predictor - 10
@@ -222,7 +214,6 @@ object Filters {
           val left = if (dc > 0) out(dr + dc - 1) & 0xff else 0
           val up = if (dr + dc - dRowWidth >= 0) out(dr + dc - dRowWidth) & 0xff else 0
           method match {
-            case 0 => out += cur.toByte
             case 1 => out += ((cur + left) % 256).toByte
             case 2 => out += ((cur + up) % 256).toByte
             case 3 => out += ((cur + (left + up) / 2) % 256).toByte
@@ -237,7 +228,7 @@ object Filters {
                 else if (pu <= pul) up
                 else upLeft
               out += ((cur + pred) % 256).toByte
-            case _ => out += cur.toByte
+            case _ => out += cur.toByte // 0 (None) and unknown methods
           }
           c += 1
         }
@@ -285,6 +276,44 @@ object Filters {
   }
 }
 
+/** A growable byte array, the output of every filter: unboxed, unlike an
+  * `ArrayBuffer[Byte]`. `hint` is the initial capacity, clamped to the
+  * largest array the JVM allocates. */
+private[pdf] final class ByteBuf(hint: Long) {
+  private final val MaxLength = Int.MaxValue - 8
+  private var buf = new Array[Byte](math.min(math.max(hint, 16L), MaxLength.toLong).toInt)
+  private var n = 0
+
+  def length: Int = n
+  def apply(i: Int): Byte = if (i < n) buf(i) else throw new IndexOutOfBoundsException(s"$i of $n")
+  def +=(b: Byte): Unit = { room(1); buf(n) = b; n += 1 }
+
+  /** Appends `src(from until until)`. */
+  def append(src: Array[Byte], from: Int, until: Int): Unit = {
+    room(until - from)
+    System.arraycopy(src, from, buf, n, until - from)
+    n += until - from
+  }
+
+  /** Lets `fill(array, offset, space)` write up to `space` bytes at the end,
+    * growing first when full, and keeps the count it returns. */
+  def appendWith(fill: (Array[Byte], Int, Int) => Int): Int = {
+    room(1)
+    val k = fill(buf, n, buf.length - n)
+    if (k > 0) n += k
+    k
+  }
+
+  def toArray: Array[Byte] = if (n == buf.length) buf else java.util.Arrays.copyOf(buf, n)
+
+  // at least doubles, so appending m bytes costs O(m) copying in all
+  private def room(k: Int): Unit = if (k > buf.length - n) {
+    val need = n.toLong + k
+    if (need > MaxLength) throw new OutOfMemoryError(s"decoded stream over $MaxLength bytes")
+    buf = java.util.Arrays.copyOf(buf, math.min(math.max(need, buf.length * 2L), MaxLength.toLong).toInt)
+  }
+}
+
 /** Hand-written LZW decoder (the JDK has none), replicating Go's
   * compress/lzw (standard, late code-width change) and
   * golang.org/x/image/tiff/lzw (early change, the TIFF variant referenced by
@@ -301,7 +330,7 @@ object Lzw {
   def decode(data: Array[Byte], earlyChange: Boolean): Array[Byte] = {
     val clear = 1 << LitWidth // 256
     val eof = clear + 1 // 257
-    val out = new ArrayBuffer[Byte](data.length * 3)
+    val out = new ByteBuf(data.length * 3L)
     val suffix = new Array[Byte](1 << MaxWidth)
     val prefix = new Array[Int](1 << MaxWidth)
 
@@ -328,20 +357,7 @@ object Lzw {
       else {
         val code = ((bits >>> (nBits - width)) & ((1 << width) - 1)).toInt
         nBits -= width
-        if (code < clear) {
-          out += code.toByte
-          if (last != Invalid) {
-            suffix(hi) = code.toByte
-            prefix(hi) = last
-          }
-          last = code; hi += 1
-          if (hi >= overflow - (if (earlyChange) 1 else 0)) {
-            if (width == MaxWidth) {
-              last = Invalid
-              if (!earlyChange) hi -= 1
-            } else { width += 1; overflow = overflow << 1 }
-          }
-        } else if (code == clear) {
+        if (code == clear) {
           width = LitWidth + 1
           hi = eof
           overflow = 1 << width
@@ -349,6 +365,7 @@ object Lzw {
         } else if (code == eof) {
           done = true
         } else if (code <= hi) {
+          // a literal (< clear) expands to itself, a table code to its chain
           var c = code
           var n = 0
           if (code == hi && last != Invalid) {
@@ -382,6 +399,6 @@ object Lzw {
         }
       }
     }
-    if (out.isEmpty && errored) null else out.toArray
+    if (out.length == 0 && errored) null else out.toArray
   }
 }

@@ -52,6 +52,12 @@ class StatsSpec extends AnyFunSuite {
     }
     val msg = SparkTestBase.causeMessages(e).mkString("\n")
     assert(msg.contains("exactQuantiles") && msg.contains("hot") && msg.contains("500"))
+    // the message points at Spark's KLL sketch, which answers over the same frame
+    assert(msg.contains("kll_sketch_agg_bigint"), msg)
+    val median = df.agg(expr("kll_sketch_get_quantile_bigint(kll_sketch_agg_bigint(v), 0.5)"))
+      .head().getLong(0)
+    val rank = (1L to 500L).count(_ * 1000003L <= median)
+    assert(math.abs(rank - 250) <= 25, s"median $median has rank $rank of 500")
   }
 
   test("valueResolution quantizes to floor multiples (negatives included) and un-trips the cap") {

@@ -154,31 +154,6 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("QuantileBuffer: exact n, sorted-survivor ranks track targets under random merge splits") {
-    val rnd = new scala.util.Random(17)
-    for (trial <- 1 to 200) {
-      val n = 1000 + rnd.nextInt(5000)
-      val values = Array.fill(n)(rnd.nextInt(100000).toLong)
-      // random split into 1..8 sub-buffers, merged in random order
-      val parts = 1 + rnd.nextInt(8)
-      val bufs = Array.fill(parts)(new QuantileBuffer(128))
-      values.foreach(v => bufs(rnd.nextInt(parts)).insert(v))
-      val merged = bufs.reduce { (a, b) => a.mergeFrom(b); a }
-      assert(merged.n == n.toLong, s"trial=$trial")
-      val sorted = values.sorted
-      for (p <- Seq(0.5, 0.9)) {
-        val est = merged.quantiles(Seq(p)).head
-        val target = math.ceil(p * n).toLong
-        val lt = sorted.count(_ < est).toLong
-        val le = sorted.count(_ <= est).toLong
-        val err =
-          if (target > lt && target <= le) 0L
-          else math.min(math.abs(target - (lt + 1)), math.abs(target - le))
-        assert(err.toDouble / n <= 0.05, s"trial=$trial p=$p err=$err n=$n")
-      }
-    }
-  }
-
   test("MgBuffer: n exact, no overestimates, superset guarantee for any stream split") {
     val rnd = new scala.util.Random(13)
     val items = Array("a", "b", "c", "d", "e", "f", "g", "h", "i", "j")

@@ -30,10 +30,10 @@ class NativeAritySpec extends AnyFunSuite {
   test("aggregate calls run the same check; calls of the declared shape build") {
     assert(buildError(Natives.topKByScore(Seq(col("s")), 5)) ==
       "requirement failed: topk_by_score expects 3 argument(s), got 2")
-    assert(buildError(Natives.hllDistinct(Seq(col("t")))) ==
-      "requirement failed: hll_distinct expects 2 argument(s), got 1")
+    assert(buildError(Natives.bloomBuild(Seq(col("t")), 1024)) ==
+      "requirement failed: bloom_build expects 3 argument(s), got 2")
     Natives.minhashSig(Seq(col("t")), 3, 16)
     Natives.qualityScore(Seq(col("t")))
-    Natives.hllDistinct(Seq(col("t")), 12)
+    Natives.bloomBuild(Seq(col("t")), 1024, 3)
   }
 }

@@ -61,10 +61,6 @@ KEEP = {
         "reads back the replace-style tables that graft.Extract writes",
     "GraftExtensions":
         "Spark loads it by class name from the spark.sql.extensions setting",
-    "NativeAgg.writeReplace":
-        "Java serialization calls it when an aggregate's entry ships to executors",
-    "ByName.readResolve":
-        "Java serialization calls it when an aggregate's entry is read on an executor",
 }
 
 # a definition that opens a statement: at a line start, or after `{` or `;`
